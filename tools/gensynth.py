@@ -7,7 +7,8 @@ Fact tables (customer, orders, lineitem, events) are unioned 10x with
 key offsets that preserve the FK structure per copy; dimension tables
 (region, nation, supplier, part) and the text/vector tables are copied
 as-is, so relational queries see 6M lineitem rows / 1.5M orders / 1M
-events against unchanged dims. Drive with `graft.BenchOne <dstDir> ...`.
+events against unchanged dims. Time named queries on it with
+`SPARK_GRAFT_SF_DIR=<dstDir> SPARK_GRAFT_QUERIES=<q1,q2> sbt "runMain graft.Bench"`.
 """
 import sys
 import os
