@@ -1,7 +1,7 @@
 package graft.app
 
 import graft.{TableDef, Tables}
-import graft.operators.{BucketedSnapshots, Normalize, RenderQueries, SnapshotDiff}
+import graft.operators.{Normalize, RenderQueries, SnapshotDiff}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,18 +31,9 @@ final class DbDiffApp(
     maxConsoleRows: Int = 200,
     pinSnapshots: Boolean = false,
     feedDir: String = "",
-    merkleBuckets: Int = 0,
-    storeBuckets: Int = 0) {
+    merkleBuckets: Int = 0) extends AutoCloseable {
 
   import DbDiffApp.IterationResult
-
-  // the bucketed store IS a pinned snapshot (and prunes per-bucket itself);
-  // combining it with the other materialization modes would double-pay
-  require(storeBuckets == 0 || (!pinSnapshots && merkleBuckets == 0),
-    "storeBuckets is exclusive with pinSnapshots/merkleBuckets")
-
-  /** Catalog-name prefix for this instance's bucketed generations. */
-  private val storePrefix = s"graft_store_${DbDiffApp.instanceIds.incrementAndGet()}"
 
   /** One frame per table (S6). With `pinSnapshots` the frame is eagerly
     * MATERIALIZED to a per-snapshot parquet directory and read back: a lazy
@@ -55,32 +46,22 @@ final class DbDiffApp(
     * deletes a snapshot's directory as soon as the swap retires it — a
     * long-running loop holds at most two pinned snapshots on disk (RDD
     * `checkpoint()` would instead accumulate files for the life of the
-    * session). Leave false for immutable sources (parquet fixture dirs)
-    * where pinning is pure cost. */
-  private lazy val pinRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_snapshots")
+    * session), and [[close]] deletes the pin root with the last one.
+    * Leave false for immutable sources (parquet fixture dirs) where
+    * pinning is pure cost. */
+  private var pinRoot: Option[java.nio.file.Path] = None
   private var pinSeq = 0
 
   private def snapshotAll(): (Map[String, DataFrame], Option[java.nio.file.Path]) =
-    if (storeBuckets > 0) {
-      // STORE MODE: the snapshot lands normalized + hash-bucketed + sorted
-      // by `__key` ([[BucketedSnapshots.write]]) — the 100 TB layout where
-      // every later diff against any generation of the same table
-      // sort-merge-joins bucket-to-bucket with ZERO Exchange. The write is
-      // the pin (snapshot-at-time-T semantics, like pinSnapshots) and the
-      // co-location (no per-diff shuffle), bought once per snapshot.
-      pinSeq += 1
-      val dir = pinRoot.resolve(s"snap_$pinSeq")
-      val m = tables.map { t =>
-        BucketedSnapshots.write(source(t), t.pk, storeTable(t.name, pinSeq),
-          dir.resolve(t.name).toString, storeBuckets)
-        t.name -> spark.table(storeTable(t.name, pinSeq))
-      }.toMap
-      (m, Some(dir))
-    } else if (!pinSnapshots) (tables.map(t => t.name -> source(t)).toMap, None)
+    if (!pinSnapshots) (tables.map(t => t.name -> source(t)).toMap, None)
     else {
+      val root = pinRoot.getOrElse {
+        val r = java.nio.file.Files.createTempDirectory("graft_snapshots")
+        pinRoot = Some(r)
+        r
+      }
       pinSeq += 1
-      val dir = pinRoot.resolve(s"snap_$pinSeq")
+      val dir = root.resolve(s"snap_$pinSeq")
       val m = tables.map { t =>
         val path = dir.resolve(t.name).toString
         source(t).write.parquet(path)
@@ -88,9 +69,6 @@ final class DbDiffApp(
       }.toMap
       (m, Some(dir))
     }
-
-  private def storeTable(name: String, gen: Int): String =
-    s"${storePrefix}_${name}_gen$gen"
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
@@ -114,17 +92,15 @@ final class DbDiffApp(
   private var before: Map[String, DataFrame] = {
     val (m, pin) = snapshotAll(); beforePin = pin; m
   }
-  private var beforeGen: Int = pinSeq
-
-  /** Physical plans of the most recent iteration's diffs (store mode only)
-    * — lets the spec machine-assert the Exchange-free shape end to end. */
-  private[graft] var lastDiffPlans: Map[String, String] = Map.empty
-
-  /** Runs one BEFORE→AFTER→diff→report→swap iteration. Writes the styled
-    * HTML report to `outName` (empty = skip file), prints console diff lines,
-    * returns per-table changed-key counts. */
   private var iterSeq = 0
 
+  /** The pin root, once the first pinned snapshot has created it. */
+  private[graft] def pinRootDir: Option[java.nio.file.Path] = pinRoot
+
+  /** Runs one BEFORE→AFTER→diff→report→swap iteration. Writes the styled
+    * report to `outName` (empty = skip file; a `.xlsx` name selects the
+    * reference's workbook, anything else HTML), prints console diff lines,
+    * returns per-table changed-key counts. */
   def iterate(outName: String = ""): IterationResult = {
     iterSeq += 1
     val (after, afterPin) = snapshotAll()
@@ -134,26 +110,14 @@ final class DbDiffApp(
     // With merkleBuckets > 0 each table diffs behind the bucket-checksum
     // prune ([[SnapshotDiff.diffOneWinnerPruned]]): a mostly-unchanged lake
     // re-joins only its dirty buckets each cycle — the repeat-diff economics
-    // a standing loop actually needs (losslessness pinned by spec).
+    // a standing loop actually needs (losslessness pinned by spec). Dirty
+    // buckets land on the driver and prune via InSet, so a loop that never
+    // clears the Spark cache accumulates no persisted frames.
     val diffs: Seq[(TableDef, DataFrame)] = tables.map { t =>
-      t -> (if (storeBuckets > 0)
-        // both generations arrive hash-bucketed + sorted by `__key`, so the
-        // one-winner dedups and the full-outer join all plan with zero
-        // Exchange — the repeat-diff economics the standing loop needs
-        SnapshotDiff.diffNormalized(
-          SnapshotDiff.oneRowPerKey(before(t.name)),
-          SnapshotDiff.oneRowPerKey(after(t.name)))
-      else if (merkleBuckets > 0)
-        // the Eager variant: dirty buckets land on the driver (≤ merkleBuckets
-        // longs) and prune via InSet — a standing loop that never clears the
-        // Spark cache must not accumulate persisted frames per iteration
-        SnapshotDiff.diffOneWinnerPrunedEager(before(t.name), after(t.name), t.pk, merkleBuckets)
+      t -> (if (merkleBuckets > 0)
+        SnapshotDiff.diffOneWinnerPruned(before(t.name), after(t.name), t.pk, merkleBuckets)
       else SnapshotDiff.diffOneWinner(before(t.name), after(t.name), t.pk))
     }
-    if (storeBuckets > 0)
-      lastDiffPlans = diffs.map { case (t, d) =>
-        t.name -> d.queryExecution.executedPlan.toString
-      }.toMap
 
     // console renderer (S7) — reference prints while building the workbook
     var changed = Map.empty[String, Long]
@@ -200,11 +164,6 @@ final class DbDiffApp(
     // every action on the retired snapshot has run by now (console lines,
     // changed counts, report rows) — its pin directory is dead; delete it so
     // a long-running loop holds at most two pinned snapshots on disk
-    if (storeBuckets > 0) {
-      tables.foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS ${storeTable(t.name, beforeGen)}"))
-      beforeGen = pinSeq
-    }
     beforePin.foreach(deleteRecursively)
     beforePin = afterPin
     // same discipline for executor storage: any cache a diff variant
@@ -212,11 +171,13 @@ final class DbDiffApp(
     graft.CacheScope.releaseAll()
     IterationResult(changed, reportPath, feedPath)
   }
+
+  /** Deletes the pin root, and with it the last pinned snapshot. The app
+    * cannot iterate after this. */
+  override def close(): Unit = pinRoot.foreach(deleteRecursively)
 }
 
 object DbDiffApp {
-  private val instanceIds = new java.util.concurrent.atomic.AtomicInteger(0)
-
   final case class IterationResult(changedKeys: Map[String, Long],
       reportPath: Option[String], feedPath: Option[String] = None) {
     def totalChanged: Long = changedKeys.values.sum

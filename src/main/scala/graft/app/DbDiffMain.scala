@@ -29,12 +29,17 @@ object DbDiffMain {
     var conf = DbDiffConfig.DefaultConfigPath
     var outName = ReportSink.DefaultOutputName
     var demo = false
-    var merkle = 0
+    var merkleArg: Option[String] = None
     args.sliding(2, 1).toList.foreach {
       case Array("-conf", v)   => conf = v
       case Array("-o", v)      => outName = v
-      case Array("-merkle", v) => merkle = v.toInt
+      case Array("-merkle", v) => merkleArg = Some(v)
       case _                   =>
+    }
+    val merkle = merkleArg.fold(0) { v =>
+      val n = v.toIntOption.getOrElse(0)
+      require(n > 0, s"-merkle takes a positive bucket count, got '$v'")
+      n
     }
     if (args.contains("--demo")) demo = true
     // S10 behind a flag: the reference always spawns the OS viewer on
@@ -96,19 +101,25 @@ object DbDiffMain {
       if (open) r.reportPath.foreach(ReportSink.openInViewer(_))
     }
 
-    if (demo) {
-      mutated = true; runOnce()   // iteration 1: the scripted "operations"
-      runOnce()                   // iteration 2: nothing changed since swap
-    } else {
-      val stdin = scala.io.Source.stdin.getLines()
-      print("OK, Let's do some operations, THEN HIT ANY KEY! OR type 'q' or 'exit' to quit this tool.  ")
-      while (stdin.hasNext) {
-        val line = stdin.next()
-        if (line == "q" || line == "exit") { spark.stop(); return }
-        runOnce()
+    // every exit (`q`/`exit`, end of stdin, end of the demo) deletes the
+    // pinned snapshots and stops the session
+    try {
+      if (demo) {
+        mutated = true; runOnce()   // iteration 1: the scripted "operations"
+        runOnce()                   // iteration 2: nothing changed since swap
+      } else {
+        val stdin = scala.io.Source.stdin.getLines()
         print("OK, Let's do some operations, THEN HIT ANY KEY! OR type 'q' or 'exit' to quit this tool.  ")
+        while (stdin.hasNext) {
+          val line = stdin.next()
+          if (line == "q" || line == "exit") return
+          runOnce()
+          print("OK, Let's do some operations, THEN HIT ANY KEY! OR type 'q' or 'exit' to quit this tool.  ")
+        }
       }
+    } finally {
+      app.close()
+      spark.stop()
     }
-    spark.stop()
   }
 }

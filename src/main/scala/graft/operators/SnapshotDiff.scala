@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   * with both sides shuffled by key; broadcast-hash when one snapshot is
   * small) and nothing ever materializes on the driver. At 100 TB: both
   * snapshots shuffle-partition by `__key` hash — one shuffle each, no
-  * driver state, and if the lake bucket-stores snapshots by the same key the
-  * shuffle disappears entirely. Classification compares each side's packed
+  * driver state. Classification compares each side's packed
   * normalized row as ONE codegen'd string equality (r13 — see
   * [[classifyNormalized]] for the byte accounting); the positional
   * per-column compare runs only on UPDATED rows.
@@ -54,10 +53,8 @@ object SnapshotDiff {
     classifyNormalized(Normalize.withKey(before, pk), Normalize.withKey(after, pk))
 
   /** Same classification over already-normalized inputs (each: data columns
-    * stringified + `__key`). This is the entry point for pre-materialized
-    * snapshot stores — e.g. [[BucketedSnapshots]], where both sides are
-    * bucketed by `__key` and the join plans with ZERO shuffle. */
-  private[operators] def classifyNormalized(bn: DataFrame, an: DataFrame): DataFrame = {
+    * stringified + `__key`). */
+  private def classifyNormalized(bn: DataFrame, an: DataFrame): DataFrame = {
     val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
     // r13 (guide §2.3, shuffle fewer bytes): each side packs its normalized
     // columns into ONE U+0001-joined string before the exchange instead of
@@ -112,8 +109,8 @@ object SnapshotDiff {
     diffNormalized(Normalize.withKey(before, pk), Normalize.withKey(after, pk))
 
   /** Full diff over already-normalized snapshots (data columns stringified +
-    * `__key`) — used directly by pre-materialized stores. */
-  def diffNormalized(bn: DataFrame, an: DataFrame): DataFrame = {
+    * `__key`). */
+  private def diffNormalized(bn: DataFrame, an: DataFrame): DataFrame = {
     val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
     val j = classifyNormalized(bn, an)
     val status = col("diff_status")
@@ -180,15 +177,9 @@ object SnapshotDiff {
     * full-outer join as the diff (the classify branches explode in place
     * — no re-join per branch), so the scale budget is identical:
     * one shuffle per side. */
-  def scd2(before: DataFrame, after: DataFrame, pk: Seq[String]): DataFrame =
-    scd2Normalized(
-      oneRowPerKey(Normalize.withKey(before, pk)),
-      oneRowPerKey(Normalize.withKey(after, pk)))
-
-  /** [[scd2]] over already one-winner'd normalized snapshots — used by the
-    * bucketed store, where both inputs arrive hash-distributed on `__key`
-    * and the whole history build plans with zero Exchange. */
-  def scd2Normalized(bn: DataFrame, an: DataFrame): DataFrame = {
+  def scd2(before: DataFrame, after: DataFrame, pk: Seq[String]): DataFrame = {
+    val bn = oneRowPerKey(Normalize.withKey(before, pk))
+    val an = oneRowPerKey(Normalize.withKey(after, pk))
     val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
     val j = classifyNormalized(bn, an)
     val status = col("diff_status")
@@ -260,14 +251,8 @@ object SnapshotDiff {
     * normalize(B))` exactly, which the roundtrip oracle and property spec
     * pin. Scale shape: one key-hashed anti-join plus a union — the same
     * single-shuffle-per-side budget as the diff itself. */
-  def applyDiff(before: DataFrame, diffed: DataFrame, pk: Seq[String]): DataFrame =
-    applyDiffNormalized(oneRowPerKey(Normalize.withKey(before, pk)), diffed)
-
-  /** [[applyDiff]] over an already-normalized, already-deduplicated before
-    * snapshot — the entry point for pre-materialized stores
-    * ([[BucketedSnapshots.advance]]), where `bn`'s bucketed distribution
-    * makes the anti-join Exchange-free. */
-  def applyDiffNormalized(bn: DataFrame, diffed: DataFrame): DataFrame = {
+  def applyDiff(before: DataFrame, diffed: DataFrame, pk: Seq[String]): DataFrame = {
+    val bn = oneRowPerKey(Normalize.withKey(before, pk))
     val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
     val gone = diffed.filter(col("diff_status").isin(Deleted, Updated))
       .select(col(Normalize.KeyCol)).distinct()
@@ -281,8 +266,8 @@ object SnapshotDiff {
     * status, modified columns, side, md5 row fingerprint). Row payloads
     * travel as 32-byte fingerprints, so feed width is independent of table
     * schema — the shape a multi-table CDC export unions into one stream.
-    * Shared by the `diff_changefeed` harness query and the application
-    * loop's feed sink. */
+    * Used by the application loop's feed sink; the `diff_changefeed`
+    * harness query emits the same shape through [[feedCompact]]. */
   def feed(d: DataFrame, tableName: String, cols: Seq[String]): DataFrame =
     d.select(lit(tableName).as("table_name"), col(Normalize.KeyCol),
       col("diff_status"), col("modified_columns"), col("side"),
@@ -306,18 +291,6 @@ object SnapshotDiff {
     * BEFORE-then-AFTER emission — `diff_changefeed`'s oracle stays the
     * unchanged per-table wide-diff SQL. */
   def feedCompact(before: DataFrame, after: DataFrame, pk: Seq[String],
-      tableName: String, cols: Seq[String]): DataFrame =
-    feedCompactNormalized(Normalize.withKey(before, pk),
-      Normalize.withKey(after, pk), tableName, cols)
-
-  /** [[feedCompact]] over already-normalized snapshots (data columns
-    * stringified + `__key`) — the entry point for pre-materialized stores:
-    * with both sides bucketed by `__key` ([[BucketedSnapshots]]) the pack
-    * projection preserves the buckets' hash distribution, the full-outer
-    * join sort-merges bucket-to-bucket, and the feed projection adds no
-    * shuffle — the WHOLE multi-table changefeed export plans with zero
-    * Exchange (gated by `BucketedDiffSpec`). */
-  def feedCompactNormalized(bn: DataFrame, an: DataFrame,
       tableName: String, cols: Seq[String]): DataFrame = {
     // r13: delegates to [[classifyNormalized]]'s packed narrow-shuffle form
     // (one U+0001-joined string per side through the exchange — see its
@@ -325,7 +298,7 @@ object SnapshotDiff {
     // argument). The packed string is exactly the bytes the feed's md5
     // row_fp hashes, so emission applies md5 directly after the explode —
     // no per-row re-concatenation anywhere in the feed.
-    val j = classifyNormalized(bn, an)
+    val j = classifyNormalized(Normalize.withKey(before, pk), Normalize.withKey(after, pk))
     val status = col("diff_status")
     def sideRow(side: String, packed: Column): Column =
       struct(lit(side).as("side"), packed.as("packed"))
@@ -385,8 +358,7 @@ object SnapshotDiff {
     *
     * Untouched keys are dropped (the merge IS the change set). At 100 TB:
     * three shuffles of 32-byte fingerprints (one per snapshot), no row
-    * data in the joins, no driver state; the bucketed layout that makes
-    * two-way diffs Exchange-free applies unchanged. Keys must be unique
+    * data in the joins, no driver state. Keys must be unique
     * per snapshot (run the app loop's one-winner dedup first for
     * duplicate-key tables). */
   def threeWayMerge(base: DataFrame, left: DataFrame, right: DataFrame,
@@ -496,13 +468,18 @@ object SnapshotDiff {
       .select(col("bucket"))
   }
 
-  /** Shared prune scaffolding: normalize both sides and semi-join each
-    * against the broadcast dirty-bucket list. The dirty frame is persisted
-    * so the summary aggregation runs once, not once per side — the
-    * harness (Verify/Bench) clears caches between queries; a standing
-    * loop should use [[diffOneWinnerPrunedEager]], which caches nothing. */
-  private def merklePruned(before: DataFrame, after: DataFrame, pk: Seq[String],
-      nBuckets: Int): (DataFrame, DataFrame) = {
+  /** [[diff]] restricted to the dirty buckets of [[merkleSummary]] — the
+    * pruned repeat-diff. Lossless by construction: every changed key lands
+    * in a bucket whose count or checksum disagrees, so the pruned result
+    * EQUALS the full diff (the oracle pins exactly that). The dirty-bucket
+    * list is tiny (≤ nBuckets rows), so it broadcasts and each side prunes
+    * with a broadcast semi-join before any shuffle of row data. The dirty
+    * frame is persisted so the summary aggregation runs once, not once per
+    * side — the harness (Verify/Bench) clears caches between queries; a
+    * standing loop should use [[diffOneWinnerPruned]], which caches
+    * nothing. */
+  def merklePrunedDiff(before: DataFrame, after: DataFrame, pk: Seq[String],
+      nBuckets: Int): DataFrame = {
     val bn = Normalize.withKey(before, pk)
     val an = Normalize.withKey(after, pk)
     val dirty = merkleDirty128(bn, an, nBuckets)
@@ -511,19 +488,7 @@ object SnapshotDiff {
       df.withColumn("__bkt", bucketOf(col(Normalize.KeyCol), nBuckets))
         .join(broadcast(dirty), Seq("__bkt"), "left_semi")
         .drop("__bkt")
-    (prune(bn), prune(an))
-  }
-
-  /** [[diff]] restricted to the dirty buckets of [[merkleSummary]] — the
-    * pruned repeat-diff. Lossless by construction: every changed key lands
-    * in a bucket whose count or checksum disagrees, so the pruned result
-    * EQUALS the full diff (the oracle pins exactly that). The dirty-bucket
-    * list is tiny (≤ nBuckets rows), so it broadcasts and each side prunes
-    * with a broadcast semi-join before any shuffle of row data. */
-  def merklePrunedDiff(before: DataFrame, after: DataFrame, pk: Seq[String],
-      nBuckets: Int): DataFrame = {
-    val (bp, ap) = merklePruned(before, after, pk, nBuckets)
-    diffNormalized(bp, ap)
+    diffNormalized(prune(bn), prune(an))
   }
 
   /** Per-key single-row reduction of a one-winner diff: status plus the
@@ -586,21 +551,16 @@ object SnapshotDiff {
     * the bucket's full row multiset (and hence EVERY key's sub-multiset)
     * is unchanged — those keys cannot produce one-winner diff rows. The
     * dedup runs after the prune, so clean buckets skip the per-key
-    * aggregation too, not just the join. */
-  def diffOneWinnerPruned(before: DataFrame, after: DataFrame, pk: Seq[String],
-      nBuckets: Int): DataFrame = {
-    val (bp, ap) = merklePruned(before, after, pk, nBuckets)
-    diffNormalized(oneRowPerKey(bp), oneRowPerKey(ap))
-  }
-
-  /** [[diffOneWinnerPruned]] for STANDING loops: the dirty-bucket list is
-    * materialized to the driver eagerly (≤ nBuckets longs — the same size
-    * class as a broadcast-join build side) and pruned with a codegen'd
-    * `InSet` filter, so nothing is ever persisted — a loop that never
-    * clears caches cannot leak them. Eagerness is deliberate here: the
-    * caller is an application ITERATION (already full of actions), not a
+    * aggregation too, not just the join.
+    *
+    * Built for STANDING loops: the dirty-bucket list is materialized to
+    * the driver eagerly (≤ nBuckets longs — the same size class as a
+    * broadcast-join build side) and pruned with a codegen'd `InSet`
+    * filter, so nothing is ever persisted — a loop that never clears
+    * caches cannot leak them. Eagerness is deliberate here: the caller is
+    * an application ITERATION (already full of actions), not a
     * lazily-registered query. */
-  def diffOneWinnerPrunedEager(before: DataFrame, after: DataFrame, pk: Seq[String],
+  def diffOneWinnerPruned(before: DataFrame, after: DataFrame, pk: Seq[String],
       nBuckets: Int): DataFrame = {
     val bn = Normalize.withKey(before, pk)
     val an = Normalize.withKey(after, pk)

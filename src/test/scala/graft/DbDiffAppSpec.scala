@@ -1,8 +1,7 @@
 package graft
 
-import graft.app.{DbDiffApp, DbDiffConfig, ReportSink}
+import graft.app.{DbDiffApp, DbDiffConfig, DbDiffMain, ReportSink}
 import graft.operators.Mutations
-import org.apache.spark.sql.DataFrame
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDateTime
@@ -50,6 +49,15 @@ class DbDiffAppSpec extends SparkTestBase {
     assert(c.db.password == "p#ss")   // '#' inside quotes kept
     assert(c.db.user == "dont'tell")  // apostrophe is plain text, comment gone
     assert(c.db.name == "o#brien")    // single-quoted '#' kept
+  }
+
+  test("-merkle rejects a non-positive or non-numeric bucket count before any session starts") {
+    Seq("-4", "0", "abc").foreach { v =>
+      val e = intercept[IllegalArgumentException] {
+        DbDiffMain.main(Array("--demo", "-merkle", v))
+      }
+      assert(e.getMessage.contains("-merkle") && e.getMessage.contains(s"'$v'"))
+    }
   }
 
   test("S9: timestamped default filename; explicit name passes through") {
@@ -105,44 +113,6 @@ class DbDiffAppSpec extends SparkTestBase {
     assert(console.isEmpty)
     val html2 = Files.readString(Paths.get(out2))
     assert(!html2.contains("<table>"))
-  }
-
-  test("bucketed store mode: loop equals the plain loop and diffs Exchange-free") {
-    val tables = Seq(Tables.region, Tables.customer)
-    def mkSource(flag: () => Boolean): TableDef => DataFrame = t => {
-      val base = Tables.load(spark, Sf, t.name)
-      if (flag()) {
-        base.createOrReplaceTempView(t.name)
-        spark.sql(Mutations.afterSql(t.name))
-      } else base
-    }
-
-    var mutP = false
-    val consoleP = scala.collection.mutable.ArrayBuffer.empty[String]
-    val plainApp = new DbDiffApp(spark, tables, mkSource(() => mutP),
-      consoleP.append(_), maxConsoleRows = 10000)
-    var mutS = false
-    val consoleS = scala.collection.mutable.ArrayBuffer.empty[String]
-    val storeApp = new DbDiffApp(spark, tables, mkSource(() => mutS),
-      consoleS.append(_), maxConsoleRows = 10000, storeBuckets = 4)
-
-    mutP = true; mutS = true
-    val rP = plainApp.iterate()
-    val rS = storeApp.iterate()
-    // identical change sets AND identical console rendering, table by table
-    assert(rS.changedKeys == rP.changedKeys && rS.totalChanged > 0)
-    assert(consoleS.sorted == consoleP.sorted)
-    // the store-mode diff (one-winner dedups + full-outer join) consumed
-    // the bucketed layout: zero Exchange in every table's physical plan
-    assert(storeApp.lastDiffPlans.keySet == Set("region", "customer"))
-    storeApp.lastDiffPlans.foreach { case (t, plan) =>
-      assert(!plan.contains("Exchange"), s"$t store-mode diff shuffles:\n$plan")
-    }
-    // iteration 2: nothing changed since the swap → empty diff in store
-    // mode too (generation g diffs against generation g+1, both bucketed)
-    consoleS.clear()
-    val rS2 = storeApp.iterate()
-    assert(rS2.totalChanged == 0 && consoleS.isEmpty)
   }
 
   test("S8: -o out.xlsx writes the reference's styled workbook (modified-cell runs)") {

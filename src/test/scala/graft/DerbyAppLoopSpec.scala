@@ -59,5 +59,11 @@ class DerbyAppLoopSpec extends SparkTestBase {
 
     // iteration 3: swap happened, database quiet → empty diff again
     assert(app.iterate().totalChanged == 0)
+
+    // close() deletes the pin root together with the last pinned snapshot
+    val root = app.pinRootDir.get
+    assert(root.toFile.list().length == 1)
+    app.close()
+    assert(!java.nio.file.Files.exists(root))
   }
 }
