@@ -1,11 +1,14 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftshim.RddShim
+import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
-/** Release path for every cache the query library creates.
+/** Release path for every cache the query library creates, and the one
+  * store for artifacts a session shares across queries.
   *
   * Registry queries return LAZY frames: the caller (Verify's parquet write,
   * Bench's count, an embedding application) runs the action after the query
@@ -15,36 +18,50 @@ import scala.jdk.CollectionConverters._
   * with no owner accumulate executor storage across queries in any session
   * that doesn't happen to call `clearCache()`.
   *
-  * This object is the owner. Every cache an operator creates goes through
-  * one of:
+  * This object is the owner. Query-scope caches, released at the next
+  * [[releaseAll]], go through one of:
   *
   *   - [[cached]] — `persist()` + registration. For frames consumed more
   *     than once by the RETURNED plan (both sides of a self-join, the
   *     shingle frame feeding candidate generation and verification).
-  *     Storage is released at the next [[releaseAll]].
   *   - [[pinned]] — eager `localCheckpoint` + registration. For the static
   *     frame of an ITERATIVE operator (PageRank's edges⋈degrees, label
-  *     propagation's symmetric edges): the frame is computed once, now, and
-  *     downstream plans reference a compact in-memory leaf instead of
-  *     re-embedding the whole generator subtree. Without the truncation
-  *     every unrolled step ships the generator's full lineage in its task
-  *     binaries (~1 MB/stage for the simhash pipeline) and re-canonicalizes
-  *     it against the cache manager on every action — measurable planning
-  *     drag at 5 steps, pathological at 50. Checkpoint blocks bypass the
-  *     `CacheManager`, so release goes through [[RddShim]].
-  *   - [[adopt]] — registration only, for a frame the operator already
-  *     materialized under its own eager loop (connected components' final
-  *     labels).
+  *     propagation's symmetric edges, each connected-components round): the
+  *     frame is computed once, now, and downstream plans reference a compact
+  *     in-memory leaf instead of re-embedding the whole generator subtree.
+  *     Without the truncation every unrolled step ships the generator's full
+  *     lineage in its task binaries (~1 MB/stage for the simhash pipeline)
+  *     and re-canonicalizes it against the cache manager on every action —
+  *     measurable planning drag at 5 steps, pathological at 50. Checkpoint
+  *     blocks bypass the `CacheManager`, so release goes through [[RddShim]].
+  *
+  * Session-scope artifacts — pinned frames several queries share, fixture
+  * counts, the BM25 standing-index directory — live in ONE store
+  * ([[sessionArtifact]]; [[sessionPinned]], [[sessionPinnedAll]] and
+  * [[sessionCount]] wrap it):
+  *
+  *   - key: application id + the caller's name + the input directory, built
+  *     in one place, so a fresh SparkContext never sees another context's
+  *     entry;
+  *   - fingerprint: the sorted (path, length, mtime) of every file under
+  *     that directory; a lookup whose fingerprint differs is a miss, so
+  *     rewriting an input mid-session rebuilds instead of serving stale;
+  *   - liveness: each entry's own check (pinned frames: blocks still
+  *     stored; the BM25 index: its directory exists; counts: always);
+  *   - release: each entry's own action (pinned frames: [[releasePin]];
+  *     the BM25 index: delete its directory; counts: none), run when a
+  *     stale entry is replaced and at [[releaseSession]].
   *
   * Harness contract: [[releaseAll]] runs between queries (Bench attempts,
   * Verify's per-query loop, the dbdiff CLI's per-iteration cleanup,
-  * `CacheHygieneSpec`). Frames returned by a query are valid until then —
-  * a released plain cache silently recomputes, but a released CHECKPOINT
-  * frame cannot (its lineage is truncated), so run the action before the
-  * next release point. That is exactly the registry's usage pattern. A
-  * caller that must hold a frame across a release point can assert the
-  * contract explicitly with [[requireLive]] — it fails by name instead of
-  * with an opaque block-fetch error.
+  * `CacheHygieneSpec`), [[releaseSession]] at the end of a multi-query
+  * session. Frames returned by a query are valid until the next
+  * [[releaseAll]] — a released plain cache silently recomputes, but a
+  * released CHECKPOINT frame cannot (its lineage is truncated), so run the
+  * action before the next release point. That is exactly the registry's
+  * usage pattern. A caller that must hold a frame across a release point
+  * can assert the contract explicitly with [[requireLive]] — it fails by
+  * name instead of with an opaque block-fetch error.
   */
 object CacheScope {
   private val live = new ConcurrentLinkedQueue[() => Unit]()
@@ -91,77 +108,91 @@ object CacheScope {
     df
   }
 
-  private val sessionLive = new ConcurrentLinkedQueue[() => Unit]()
-  private val sessionMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[DataFrame]]()
+  /** One session-store entry: the artifact, the fingerprint of the input
+    * directory it was built from, and the entry's own liveness check and
+    * release action. */
+  private final case class Entry(value: Any, inputs: Seq[(String, Long, Long)],
+      live: () => Boolean, release: () => Unit)
+  private val store = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
-  /** Memoized eager pin that SURVIVES [[releaseAll]] — the standing-index
-    * tier, for a frame several registry queries in one session each need
-    * in full (the dedup survivor table: `dedup_survivors` and the
-    * curation capstone both consume the same component pass; recomputing
-    * it inside the capstone paid the whole simhash+CC chain twice per
-    * bench session). Keyed by the caller's key + the application id, so a
-    * fresh SparkContext never sees another context's truncated frame.
-    * Released only by [[releaseSession]] (end of a Bench/Verify/CLI run;
-    * JVM exit otherwise) — so frames held this way must be
-    * control-plane-sized relative to the corpus (the survivor table is
-    * three narrow columns, ~n rows). The compute block runs at most once
-    * per (key, session); losers of the race reuse the winner's frame. */
-  def sessionPinned(key: String, spark: org.apache.spark.sql.SparkSession)(
-      compute: => DataFrame): DataFrame =
-    sessionPinnedAll(key, spark)(Seq(compute)).head
-
-  /** [[sessionPinned]] for an artifact of several frames: one key, one
-    * compute block, so a miss on ANY frame recomputes all of them once
-    * and the served frames always come from the same run. */
-  def sessionPinnedAll(key: String, spark: org.apache.spark.sql.SparkSession)(
-      compute: => Seq[DataFrame]): Seq[DataFrame] = {
-    val k = spark.sparkContext.applicationId + ":" + key
-    // a memoized checkpoint whose blocks something ELSE unpersisted (a
-    // test harness force-clearing all persistent RDDs, an external
-    // catalog sweep) cannot recompute — its lineage is truncated. Detect
-    // via the leaf's storage level and recompute fresh instead of
-    // returning the corpse.
-    def blocksLive(dfs: Seq[DataFrame]): Boolean = dfs.forall(df => RddShim.leafRdd(df)
-      .forall(_.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE))
-    val existing = sessionMemo.get(k)
-    if (existing != null && blocksLive(existing)) existing
-    else sessionMemo.synchronized {
-      val again = sessionMemo.get(k)
-      if (again != null && blocksLive(again)) again
+  /** The session store: an artifact that SURVIVES [[releaseAll]], built at
+    * most once per (application, `name`, `dir`, files under `dir`).
+    * A lookup serves the stored value only if the fingerprint of `dir`
+    * still equals the one taken at build time and `live` still holds;
+    * otherwise it releases the stale entry and rebuilds. Lookups may nest
+    * (a build may look up another entry): the lock is reentrant. */
+  def sessionArtifact[T](name: String, dir: String, spark: SparkSession)(build: => T)(
+      live: T => Boolean, release: T => Unit): T = {
+    val k = s"${spark.sparkContext.applicationId}:$name:$dir"
+    val inputs = fingerprint(spark, dir)
+    def serves(e: Entry) = e != null && e.inputs == inputs && e.live()
+    val existing = store.get(k)
+    if (serves(existing)) existing.value.asInstanceOf[T]
+    else store.synchronized {
+      val again = store.get(k)
+      if (serves(again)) again.value.asInstanceOf[T]
       else {
-        if (again != null) again.foreach(releasePin) // stale run, never served again
-        val cps = compute.map { df =>
-          val cp = df.localCheckpoint(eager = true)
-          sessionLive.add(() => releasePin(cp))
-          cp
-        }
-        sessionMemo.put(k, cps)
-        cps
+        if (again != null) { store.remove(k); again.release() } // never served again
+        val v = build
+        store.put(k, Entry(v, inputs, () => live(v), () => release(v)))
+        v
       }
     }
   }
 
-  /** The session memo's keys for `spark`'s context, application id stripped. */
-  private[graft] def sessionKeys(spark: org.apache.spark.sql.SparkSession): Set[String] = {
+  /** Input identity of `dir`: the sorted (path, length, mtime) of every
+    * file under it, listed through the session's Hadoop `FileSystem` so
+    * any scheme works; empty if `dir` does not exist. */
+  private def fingerprint(spark: SparkSession, dir: String): Seq[(String, Long, Long)] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .flatMap(s => if (s.isDirectory) files(s.getPath) else Seq(s))
+    (if (fs.exists(root)) files(root) else Nil)
+      .map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sorted
+  }
+
+  /** A session-stored eager pin — for a frame several registry queries in
+    * one session each need in full (the dedup survivor table: both
+    * `dedup_survivors` and the curation capstone consume the same
+    * component pass). Frames held this way must be control-plane-sized
+    * relative to the corpus (the survivor table is three narrow columns,
+    * ~n rows). */
+  def sessionPinned(name: String, dir: String, spark: SparkSession)(
+      compute: => DataFrame): DataFrame =
+    sessionPinnedAll(name, dir, spark)(Seq(compute)).head
+
+  /** [[sessionPinned]] for an artifact of several frames: one key, one
+    * compute block, so a miss on ANY frame recomputes all of them once
+    * and the served frames always come from the same run. A frame whose
+    * blocks something else unpersisted (a harness force-clearing all
+    * persistent RDDs) cannot recompute — its lineage is truncated — so
+    * its storage level is the entry's liveness check. */
+  def sessionPinnedAll(name: String, dir: String, spark: SparkSession)(
+      compute: => Seq[DataFrame]): Seq[DataFrame] =
+    sessionArtifact(name, dir, spark)(compute.map(_.localCheckpoint(eager = true)))(
+      _.forall(df => RddShim.leafRdd(df).forall(_.getStorageLevel != StorageLevel.NONE)),
+      _.foreach(releasePin))
+
+  /** A session-stored driver-side count (fixture row counts and the
+    * auto-selection rungs' probes): always live, nothing to release. */
+  def sessionCount(name: String, dir: String, spark: SparkSession)(compute: => Long): Long =
+    sessionArtifact(name, dir, spark)(compute)(_ => true, _ => ())
+
+  /** The session store's keys for `spark`'s context, application id stripped. */
+  private[graft] def sessionKeys(spark: SparkSession): Set[String] = {
     val prefix = spark.sparkContext.applicationId + ":"
-    sessionMemo.keySet.asScala.toSet[String]
+    store.keySet.asScala.toSet[String]
       .collect { case k if k.startsWith(prefix) => k.stripPrefix(prefix) }
   }
 
-  /** Register an arbitrary cleanup to run at [[releaseSession]] — used by
-    * session-scoped standing DISK indexes (the BM25 serving index) to
-    * drop their temp directories when the session's memo is dropped. */
-  def onSessionRelease(f: () => Unit): Unit = { sessionLive.add(f); () }
-
-  /** Release every session-scoped pin and forget the memo. Harness
-    * contract: run at the END of a multi-query session ([[releaseAll]]
-    * runs BETWEEN queries and leaves session pins alone). Idempotent. */
-  def releaseSession(): Unit = {
-    sessionMemo.clear()
-    graft.Tables.clearCountMemo()
-    var f = sessionLive.poll()
-    while (f != null) { f(); f = sessionLive.poll() }
+  /** Release every session-store entry and forget it. Harness contract:
+    * run at the END of a multi-query session ([[releaseAll]] runs BETWEEN
+    * queries and leaves the store alone). Idempotent. */
+  def releaseSession(): Unit = store.synchronized {
+    val all = store.values.asScala.toList
+    store.clear()
+    all.foreach(_.release())
   }
 
   /** Immediately release ONE pinned frame, without waiting for
@@ -177,12 +208,6 @@ object CacheScope {
       releasedPins.add(rdd.id)
       rdd.unpersist(blocking = false); ()
     case None => df.unpersist(blocking = false); ()
-  }
-
-  /** Register an already-persisted frame for release at [[releaseAll]]. */
-  def adopt(df: DataFrame): DataFrame = {
-    live.add(() => { df.unpersist(blocking = false); () })
-    df
   }
 
   /** Release every registered cache. Safe to call at any point between

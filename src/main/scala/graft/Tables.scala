@@ -75,38 +75,12 @@ object Tables {
     }
   }
 
-  private val countMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Drop every memoized count. Called by [[CacheScope.releaseSession]]
-    * (the same end-of-session hook that drops the standing indexes) so a
-    * long-lived JVM hosting successive SparkContexts does not accumulate
-    * dead (appId, key) entries forever. */
-  private[graft] def clearCountMemo(): Unit = countMemo.clear()
-
-  /** Session-memoized driver-side count under a caller-chosen key: the
-    * auto-selection rungs (IVF geometry, blocking-key width, probe
-    * stride) each need COUNT(*) of a FIXTURE table, and a multi-query
-    * session (Bench's ~100-query sweep, Verify's loop, the CLI) was
-    * paying the same metadata-count job once per query. Fixture parquet
-    * is immutable for the life of a session, so the count is memoized per
-    * (application, key) — the same invalidation story as the
-    * [[CacheScope.sessionPinned]] standing indexes. Only use for frames
-    * whose row count cannot change within a session (fixture tables and
-    * pure per-row derivations of them). */
-  def memoCount(spark: SparkSession, key: String)(compute: => Long): Long = {
-    val k = spark.sparkContext.applicationId + ":" + key
-    val hit = countMemo.get(k)
-    if (hit != null) hit.longValue
-    else {
-      val v = compute
-      countMemo.put(k, java.lang.Long.valueOf(v))
-      v
-    }
-  }
-
-  /** Memoized COUNT(*) of a fixture table (parquet metadata count — one
-    * driver job on first use per session, zero after). */
+  /** COUNT(*) of a fixture table (parquet metadata count): the
+    * auto-selection rungs (IVF geometry, blocking-key width, probe stride)
+    * each need it, so it lives in the [[CacheScope]] session store keyed
+    * on the table's files — one driver job per session and version of
+    * the table, zero after. */
   def countOf(spark: SparkSession, sfDir: String, name: String): Long =
-    memoCount(spark, s"count:$sfDir:$name")(load(spark, sfDir, name).count())
+    CacheScope.sessionCount("count", s"$sfDir/$name.parquet", spark)(
+      load(spark, sfDir, name).count())
 }

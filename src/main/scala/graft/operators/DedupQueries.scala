@@ -680,7 +680,7 @@ object DedupQueries {
     * consumer's oracle replays the full chain, so the shared frame is
     * hash-gated per query. */
   def simhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    CacheScope.sessionPinned(s"simhash_pairs:$sfDir", spark) {
+    CacheScope.sessionPinned("simhash_pairs", sfDir, spark) {
       simhashPairsBuild(spark, sfDir)
     }
 
@@ -718,7 +718,7 @@ object DedupQueries {
     * the survivor decision list a 100 TB pipeline anti-joins against
     * daily. Three narrow columns: (doc_id, canonical_id, kept). */
   def survivorFrame(spark: SparkSession, sfDir: String): DataFrame =
-    CacheScope.sessionPinned(s"dedup_survivors:$sfDir", spark) {
+    CacheScope.sessionPinned("dedup_survivors", sfDir, spark) {
       val comps = GraphOps.connectedComponents(
         simhashPairs(spark, sfDir)
           .select(col("doc_a").as("src"), col("doc_b").as("dst")))

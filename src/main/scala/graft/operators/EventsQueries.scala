@@ -90,9 +90,9 @@ object EventsQueries {
   def changepoint(events: DataFrame, sortBudget: Long): DataFrame =
     changepoint(events, sortBudget, maxPerKey(events))
 
-  /** The crossover probe alone — registry entries memoize it per session
-    * via `Tables.memoCount` (the fixture's per-key histogram is as
-    * immutable as its row count). Coalesce guards the empty-frame case
+  /** The crossover probe alone — registry entries keep it in the
+    * [[CacheScope]] session store via `sessionCount`, rebuilt only
+    * when the fixture's files change. Coalesce guards the empty-frame case
     * (max over zero groups is NULL), defaulting to the plain branch. */
   def maxPerKey(events: DataFrame): Long =
     events.groupBy(col("event_type")).count()
@@ -193,7 +193,7 @@ object EventsQueries {
     "events_changepoint" -> ((spark, sfDir) => {
       val ev = Tables.load(spark, sfDir, "events")
       changepoint(ev, ChangepointSortBudget,
-        Tables.memoCount(spark, s"events_maxkey:$sfDir")(maxPerKey(ev)))
+        CacheScope.sessionCount("events_maxkey", sfDir, spark)(maxPerKey(ev)))
     }),
     // Tumbling 5-minute windows via the native window() operator; the
     // epoch-aligned start matches DuckDB's time_bucket.

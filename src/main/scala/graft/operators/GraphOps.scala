@@ -82,9 +82,8 @@ object GraphOps {
       iter += 1
     }
     require(converged, s"connectedComponents: no convergence in $maxIter rounds")
-    // the final labels frame backs the returned (lazy) result — it stays
-    // cached until the harness's next CacheScope.releaseAll()
-    CacheScope.adopt(labels)
+    // the final labels frame is the last round's pin: it backs the returned
+    // (lazy) result until the harness's next CacheScope.releaseAll()
     labels.select(col("id").as("doc_id"), col("label").as("component_id"))
   }
 

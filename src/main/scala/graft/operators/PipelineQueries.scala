@@ -703,7 +703,7 @@ object PipelineQueries {
     * the first consumer in a session pays the one corpus-sized bigram
     * pass. Oracle replays of every round hash-gate both consumers. */
   def doremiWeightFrame(spark: SparkSession, sfDir: String): DataFrame =
-    CacheScope.sessionPinned(s"doremi_weights:$sfDir", spark) {
+    CacheScope.sessionPinned("doremi_weights", sfDir, spark) {
       doremiWeightBuild(spark, sfDir)
     }
 
@@ -1309,7 +1309,7 @@ object PipelineQueries {
     * only) training run instead of a second extraction pass. */
   private def qcTrain(spark: SparkSession, sfDir: String,
       featShared: Option[DataFrame]): DataFrame =
-    CacheScope.sessionPinned(s"qc_weights:$sfDir", spark) {
+    CacheScope.sessionPinned("qc_weights", sfDir, spark) {
       val feat = featShared.getOrElse(
         CacheScope.pinned(qcFeatBuild(spark, sfDir)))
       var w = CacheScope.pinned(spark.range(QcFeatures + 1)

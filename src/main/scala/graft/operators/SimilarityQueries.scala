@@ -1460,7 +1460,7 @@ object SimilarityQueries {
     "ann_hybrid_rrf" -> ((spark, sfDir) => {
       val hybrid = hybridCorpus(spark, sfDir)
         .transform(CacheScope.cached) // both retrieval legs scan it
-      val n = Tables.memoCount(spark, s"hybrid:$sfDir")(hybrid.count())
+      val n = CacheScope.sessionCount("hybrid", sfDir, spark)(hybrid.count())
       if (n > IvfLabelPathMax) hybridIndexedRrf(hybrid, n)
       else hybridPlainRrf(hybrid, n)
     }),
@@ -1468,7 +1468,7 @@ object SimilarityQueries {
     // pattern as ann_ivf_sampled / ann_ivfadc_topk).
     "ann_hybrid_indexed" -> ((spark, sfDir) => {
       val hybrid = hybridCorpus(spark, sfDir).transform(CacheScope.cached)
-      hybridIndexedRrf(hybrid, Tables.memoCount(spark, s"hybrid:$sfDir")(hybrid.count()))
+      hybridIndexedRrf(hybrid, CacheScope.sessionCount("hybrid", sfDir, spark)(hybrid.count()))
     }),
     // Sign-LSH near-dup pairs — [[lshNearDupPairs]]. SCALE RUNG
     // (auto-selected, the IvfLabelPathMax ladder pattern): oracle scales
@@ -1482,7 +1482,7 @@ object SimilarityQueries {
     "ann_lsh_near_dup" -> ((spark, sfDir) => {
       Tables.load(spark, sfDir, "embeddings").createOrReplaceTempView("embeddings")
       val corpus = spark.sql(vecCorpusSql)
-      val n = Tables.memoCount(spark, s"veccorpus:$sfDir")(corpus.count())
+      val n = CacheScope.sessionCount("veccorpus", sfDir, spark)(corpus.count())
       lshNearDupPairs(corpus, if (n > IvfLabelPathMax) LshBands else 1)
     }),
     // Semantic drift diff over the embeddings table — see [[semanticDrift]].
@@ -1500,7 +1500,7 @@ object SimilarityQueries {
       Tables.load(spark, sfDir, "embeddings").createOrReplaceTempView("embeddings")
       val corpus = spark.sql(vecCorpusSql)
       semanticDupes(corpus,
-        Tables.memoCount(spark, s"veccorpus:$sfDir")(corpus.count()))
+        CacheScope.sessionCount("veccorpus", sfDir, spark)(corpus.count()))
     })
   )
 

@@ -274,32 +274,17 @@ object TextQueries {
     bm25TopkFrom(idx, stats, SimilarityQueries.probeStride(nDocs))
   }
 
-  /** Session-memoized standing-index directory for `text_bm25_indexed`:
-    * built at most once per (session, fixture) into a temp dir, deleted
-    * when the session's standing tier drops ([[CacheScope.releaseSession]]).
-    * Keyed by applicationId so a fresh SparkContext never reuses another
-    * context's directory. */
-  private val bm25IndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def bm25IndexFor(spark: SparkSession, sfDir: String): String = {
-    val k = spark.sparkContext.applicationId + ":" + sfDir
-    val existing = bm25IndexMemo.get(k)
-    if (existing != null) existing
-    else bm25IndexMemo.synchronized {
-      val again = bm25IndexMemo.get(k)
-      if (again != null) again
-      else {
-        val dir = java.nio.file.Files.createTempDirectory("graft_bm25_idx").toString
-        buildBm25Index(spark, sfDir, dir)
-        graft.CacheScope.onSessionRelease(() => {
-          bm25IndexMemo.remove(k)
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir)); ()
-        })
-        bm25IndexMemo.put(k, dir)
-        dir
-      }
-    }
-  }
+  /** Standing-index directory for `text_bm25_indexed`: built into a temp
+    * dir at most once per session and version of the fixture, held in the
+    * [[CacheScope]] session store (live while the directory exists; the
+    * store deletes it when the entry goes stale or the session ends). */
+  private def bm25IndexFor(spark: SparkSession, sfDir: String): String =
+    CacheScope.sessionArtifact("bm25_index", sfDir, spark) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_bm25_idx").toString
+      buildBm25Index(spark, sfDir, dir)
+      dir
+    }(dir => new java.io.File(dir).isDirectory,
+      dir => { org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir)); () })
 
   val queries: Map[String, Q] = Map(
     // Canonical text normalization — the first stage of every training
@@ -835,7 +820,7 @@ object TextQueries {
     * for every consumer (the unrolled-CTE oracle replays the rounds per
     * query, so any divergence fails the hash gate). */
   def bpeTrainShared(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val Seq(merges, syms) = CacheScope.sessionPinnedAll(s"bpe:$sfDir", spark) {
+    val Seq(merges, syms) = CacheScope.sessionPinnedAll("bpe", sfDir, spark) {
       val (m, s) = bpeTrain(spark, sfDir); Seq(m, s)
     }
     (merges, syms)

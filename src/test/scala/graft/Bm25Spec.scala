@@ -137,4 +137,29 @@ class Bm25Spec extends SparkTestBase {
     assert(!p.contains("CartesianProduct"), p.take(2000))
     CacheScope.releaseAll()
   }
+
+  test("standing index: one directory per session, deleted at releaseSession") {
+    // the index directory every input file of the served plan sits under
+    def indexDir(): java.io.File = {
+      val dirs = SparkEntry.queries("text_bm25_indexed")(spark, Sf).inputFiles.toSeq
+        .map(f => Iterator.iterate(new java.io.File(new java.net.URI(f)))(_.getParentFile)
+          .find(_.getName.startsWith("graft_bm25_idx")).get)
+        .distinct
+      assert(dirs.size == 1, dirs)
+      dirs.head
+    }
+    try {
+      CacheScope.releaseSession()
+      val first = indexDir()
+      CacheScope.releaseAll() // the between-queries point keeps the index
+      assert(indexDir() == first, "index rebuilt within one session")
+      CacheScope.releaseSession()
+      assert(!first.exists, s"$first survived releaseSession")
+      val fresh = indexDir()
+      assert(fresh != first && fresh.isDirectory)
+    } finally {
+      CacheScope.releaseSession()
+      CacheScope.releaseAll()
+    }
+  }
 }

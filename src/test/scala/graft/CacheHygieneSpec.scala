@@ -30,8 +30,8 @@ class CacheHygieneSpec extends SparkTestBase {
       "pipeline_doremi_weights", "text_bpe_fertility",
       // substring spans pin the positioned-gram frame for df count + joins
       "dedup_substring_spans",
-      // round 9: survivors + capstone SHARE one session-scoped survivor
-      // pin (the only legitimate releaseAll survivor — asserted below)
+      // round 9: survivors + capstone SHARE one session-store survivor
+      // pin (one of the releaseAll survivors asserted below)
       "dedup_survivors",
       // the capstone pins the kept-docs frame and runs the doremi trainer
       "pipeline_curation_e2e",
@@ -39,10 +39,10 @@ class CacheHygieneSpec extends SparkTestBase {
       "pipeline_quality_classifier")
     // neutralize anything earlier suites in this shared JVM left behind —
     // the assertion is about what THESE queries leave, not JVM history.
-    // releaseSession FIRST: it clears the session-pin memo, so the force
-    // unpersist below can't leave the memo pointing at a block-less
+    // releaseSession FIRST: it empties the session store, so the force
+    // unpersist below can't leave the store pointing at a block-less
     // checkpoint corpse (sessionPinned also self-heals via storage-level
-    // check, but the memo should start empty here regardless)
+    // check, but the store should start empty here regardless)
     CacheScope.releaseSession()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     spark.catalog.clearCache()
@@ -53,21 +53,24 @@ class CacheHygieneSpec extends SparkTestBase {
       CacheScope.releaseAll()
       spark.catalog.clearCache()
     }
-    // the legitimate releaseAll survivors are the standing
-    // CacheScope.sessionPinned artifacts these queries build: the survivor
-    // index (dedup_survivors + the capstone), the fitted classifier
-    // weights (batch classifier + streaming twin), the simhash dup-graph
-    // edge list (pairs/components/graph family), the DoReMi weight table
-    // (doremi + capstone) and the trained BPE tokenizer (served to all
-    // four text_bpe_* queries); everything else must be gone
-    val expectedKeys = Seq("dedup_survivors", "qc_weights", "simhash_pairs",
+    // the legitimate releaseAll survivors are the session-store entries
+    // these queries build. Frames: the survivor index (dedup_survivors +
+    // the capstone), the fitted classifier weights (batch classifier +
+    // streaming twin), the simhash dup-graph edge list (pairs/components/
+    // graph family), the DoReMi weight table (doremi + capstone) and the
+    // trained BPE tokenizer (served to all four text_bpe_* queries).
+    // Counts: the embeddings row count (ann_ivf_topk's geometry) and the
+    // near-dup vector corpus count (dedup_semantic). Everything else must
+    // be gone.
+    val frameKeys = Seq("dedup_survivors", "qc_weights", "simhash_pairs",
       "doremi_weights", "bpe").map(k => s"$k:$Sf").toSet
-    assert(CacheScope.sessionKeys(spark) == expectedKeys)
-    // one frame per key, except the tokenizer's two (merge table +
-    // segmentation table)
+    val countKeys = Set(s"count:$Sf/embeddings.parquet", s"veccorpus:$Sf")
+    assert(CacheScope.sessionKeys(spark) == frameKeys ++ countKeys)
+    // one frame per frame key, except the tokenizer's two (merge table +
+    // segmentation table); counts hold no storage
     val standing = spark.sparkContext.getPersistentRDDs
-    assert(standing.size == expectedKeys.size + 1,
-      s"expected ${expectedKeys.size + 1} session-pinned frames, found " +
+    assert(standing.size == frameKeys.size + 1,
+      s"expected ${frameKeys.size + 1} session-pinned frames, found " +
         s"${standing.size}: " +
         standing.values.map(r => s"${r.id}:${r.name}").mkString("; "))
     // session end releases the standing tier too
@@ -153,15 +156,56 @@ class CacheHygieneSpec extends SparkTestBase {
 
   test("fixture counts are memoized per session (one count job per table)") {
     var calls = 0
-    // unique key per invocation: the memo is process-global, so a fixed
-    // key would already be populated on a suite rerun in the same JVM
-    val key = s"test:memo:${System.nanoTime()}"
-    val a = Tables.memoCount(spark, key) { calls += 1; 42L }
-    val b = Tables.memoCount(spark, key) { calls += 1; 43L }
-    assert(a == 42L && b == 42L && calls == 1, "memoCount recomputed")
+    def count() = CacheScope.sessionCount("test_count", Sf, spark) { calls += 1; 41L + calls }
+    CacheScope.releaseSession()
+    assert(count() == 42L && count() == 42L && calls == 1, "sessionCount recomputed")
     // and the table-count entry point agrees with a direct count
     assert(Tables.countOf(spark, Sf, "embeddings") ==
       Tables.load(spark, Sf, "embeddings").count())
+    // a released session forgets the count
+    CacheScope.releaseSession()
+    assert(count() == 43L && calls == 2, "releaseSession kept the count")
+    CacheScope.releaseSession()
+  }
+
+  test("session artifacts rebuild when the files under their directory change") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.col
+    // temp copies only: the shared Sf fixture is never written
+    val dir = Files.createTempDirectory("graft_input_identity").toString
+    def copy(name: String): Unit = {
+      Files.copy(Paths.get(s"$Sf/$name.parquet"), Paths.get(s"$dir/$name.parquet")); ()
+    }
+    // overwrite the copy with a subset of the original's rows
+    def shrink(name: String, keep: org.apache.spark.sql.Column): Unit = {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/$name.parquet"))
+      Tables.load(spark, Sf, name).filter(keep).write.parquet(s"$dir/$name.parquet")
+    }
+    try {
+      CacheScope.releaseSession()
+      copy("nation")
+      val nAll = Tables.countOf(spark, dir, "nation")
+      assert(nAll == Tables.load(spark, Sf, "nation").count())
+      shrink("nation", col("n_nationkey") < 10)
+      val nFewer = Tables.load(spark, dir, "nation").count()
+      assert(nFewer < nAll)
+      assert(Tables.countOf(spark, dir, "nation") == nFewer, "stale fixture count served")
+
+      copy("documents")
+      val first = graft.operators.DedupQueries.survivorFrame(spark, dir)
+      val docsAll = first.count()
+      assert(docsAll == graft.operators.DedupQueries.corpus(spark, Sf).count())
+      shrink("documents", col("doc_id") % 2 === 0)
+      val docsFewer = graft.operators.DedupQueries.corpus(spark, dir).count()
+      assert(docsFewer < docsAll)
+      val second = graft.operators.DedupQueries.survivorFrame(spark, dir)
+      assert(!(second eq first), "stale survivor frame served")
+      assert(second.count() == docsFewer)
+    } finally {
+      CacheScope.releaseSession()
+      CacheScope.releaseAll()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
   }
 
   test("releaseAll is idempotent and safe with nothing registered") {
