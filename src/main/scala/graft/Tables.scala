@@ -50,8 +50,6 @@ object Tables {
   val diffable: Seq[TableDef] =
     Seq(region, nation, customer, supplier, part, orders, lineitem, events, documents)
 
-  def byName(name: String): TableDef = all.find(_.name == name).get
-
   /** Snapshot scan (reference S6, `extract_data.go:19-95`): one lazy
     * distributed DataFrame per table — never driver-materialized.
     *

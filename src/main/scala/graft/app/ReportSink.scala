@@ -19,12 +19,9 @@ import java.time.format.DateTimeFormatter
   * marking via `modified_columns`) while the per-row strings are computed
   * distributed ([[RenderQueries.htmlRows]], plain codegen projections).
   *
-  * Two sinks share those rows:
-  * - [[writeHtml]]: single styled file for the CLI, streamed through
-  *   `toLocalIterator` — constant driver memory, any diff size (the
-  *   reference materializes the whole workbook on the heap).
-  * - [[writeDistributed]]: the 100 TB path — rendered rows land as a text
-  *   dataset in the lake, one shard per partition, no driver involvement.
+  * [[writeHtml]] writes those rows as a single styled file for the CLI,
+  * streamed through `toLocalIterator` — constant driver memory, any diff
+  * size (the reference materializes the whole workbook on the heap).
   */
 object ReportSink {
   /** Default-name sentinel, `cmd/dbdiff/main.go:20` (xlsx → html). */
@@ -76,10 +73,6 @@ object ReportSink {
     out.write("</body></html>\n")
     written
   }
-
-  /** Scale path: rendered rows as a distributed text dataset. */
-  def writeDistributed(htmlRows: DataFrame, dir: String): Unit =
-    htmlRows.select(col("tr")).write.mode("overwrite").text(dir)
 
   // ---- S8 proper: the SpreadsheetML (.xlsx) workbook ---------------------
 

@@ -3,21 +3,26 @@ package graft.operators
 import graft.CacheScope
 import graft.Tables
 import graft.functions.{Hashing, PqCodec, QuantizedVec}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (`array<float>`, 64-dim).
   *
-  * Two paths, as a 100 TB design requires:
-  *   - `ann_cosine_topk`: brute-force cosine top-k for a probe set — the
-  *     exact baseline. The probe side is broadcast; scoring is one
-  *     codegen'd [[QuantizedVec.QuantizedDot]] per (probe, vector) pair
-  *     with no shuffle until the final per-probe top-k.
-  *   - `ann_lsh_near_dup`: random-hyperplane LSH — 16 sign bits per vector
-  *     (md5-derived ±1 planes, shared with the oracle) bucket the corpus;
-  *     only same-bucket pairs are verified. Collision probability for
-  *     unrelated vectors is ~2^-16, so candidate fan-out stays linear.
+  * Every top-k rung of the ANN ladder is a composition of three stages:
+  *   - a ROUTER picks (probe, neighbor) candidates for the probe batch
+  *     ([[probeBatch]]): the flat broadcast-probe scan ([[flatScan]],
+  *     every corpus vector), label IVF ([[labelRouted]]), sampled IVF
+  *     ([[sampledCandidates]]) or IMI ([[imiCandidates]]);
+  *   - an optional SHORTLIST scorer culls them in a compressed domain:
+  *     Matryoshka prefix cosine ([[prefixShortlist]]), sign-bit Hamming
+  *     ([[bqTopk]]) or PQ ADC ([[pqStages]]);
+  *   - a RERANK keeps the exact top-k per probe: cosine
+  *     ([[topkRerank]], [[flatCosineTopk]]) or L2 ([[pqRerank]]).
+  * Per-group ranking is one helper ([[topPer]]). Past [[IvfLabelPathMax]]
+  * vectors the auto-selecting names swap their flat or label router for
+  * the sampled one ([[bySize]]). `ann_lsh_near_dup` buckets the corpus by
+  * random-hyperplane sign signatures and verifies only same-bucket pairs.
   *
   * All scores derive from integer-quantized arithmetic (see
   * [[QuantizedVec]]) so Spark and DuckDB agree bit-for-bit.
@@ -239,8 +244,6 @@ object SimilarityQueries {
     }
   }
 
-  def planeRows: Seq[(Int, Int, Int)] = planeRowsN(NumPlanes)
-
   /** Bands for the scale rung of `ann_lsh_near_dup`: 6 independent 16-bit
     * signature bands (96 planes). The single 16-bit band measured 0.4525
     * pair recall at the sf10 decade (bench/SCALING.json note_r12) — per
@@ -262,10 +265,7 @@ object SimilarityQueries {
     val spark = corpus.sparkSession
     import spark.implicits._
     val planes = planeRowsN(bands * NumPlanes).toDF("p", "d", "s")
-    val qn = corpus.select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "v")))
-      .select(col("vec_id"), col("d"),
-        floor(col("v").cast("double") * QuantizedVec.DefaultScale + 0.5).cast("long").as("qv"))
-    val planeSums = qn.join(broadcast(planes), "d")
+    val planeSums = components(corpus, Seq("vec_id"), "qv").join(broadcast(planes), "d")
       .groupBy(col("vec_id"), col("p"))
       .agg(sum(col("s") * col("qv")).as("psum"))
     val sigs = planeSums
@@ -290,26 +290,111 @@ object SimilarityQueries {
       .filter(col("cos") >= 0.95)
   }
 
+  // ---- shared stages ---------------------------------------------------
+
+  /** (vec_id, embedding, nsq): the corpus with its quantized squared norm. */
   private def normed(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding"),
       QuantizedVec.qnormsq(col("embedding")).as("nsq"))
 
-  /** Quantized per-dimension components (vec_id, label, d, qv). */
-  private def quantizedComponents(raw: DataFrame): DataFrame =
-    raw.select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("d", "v")))
-      .select(col("vec_id"), col("label"), col("d"),
-        floor(col("v").cast("double") * QuantizedVec.DefaultScale + 0.5)
-          .cast("long").as("qv"))
+  /** (probe_id, p_emb, p_nsq): a [[normed]] frame as the probe side. */
+  private def asProbes(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
+      col("nsq").as("p_nsq"))
 
-  // ---- shared IVF stages (one definition; the inline query, the offline
+  /** floor(x · scale + 0.5) as BIGINT, the oracle's own quantization. */
+  private def quantized(x: Column): Column =
+    floor(x.cast("double") * QuantizedVec.DefaultScale + 0.5).cast("long")
+
+  /** Quantized per-dimension components: the `keys` columns, `d`, and the
+    * quantized component named `q`. */
+  private def components(df: DataFrame, keys: Seq[String], q: String): DataFrame =
+    df.select(keys.map(col) :+ posexplode(col("embedding")).as(Seq("d", "v")): _*)
+      .select(keys.map(col) ++ Seq(col("d"), quantized(col("v")).as(q)): _*)
+
+  /** Floor of a BIGINT column's group mean (exact while sums stay < 2^53,
+    * so the IEEE double division is correctly rounded in both engines). */
+  private def floorMean(x: Column): Column =
+    floor(sum(x).cast("double") / count(lit(1))).cast("long")
+
+  /** The probe batch: every [[probeStride]]-th vector of an n-vector corpus. */
+  private def probeBatch(df: DataFrame, n: Long): DataFrame =
+    df.filter(col("vec_id") % probeStride(n) === 0)
+
+  /** The first k rows of every `key` group under `order` (row_number, so
+    * the ordering's last term breaks ties). `rank` names the row number:
+    * an output column cast to BIGINT when `keepRank`, otherwise a scratch
+    * column dropped after the filter. */
+  private def topPer(df: DataFrame, key: String, k: Long, rank: String,
+      keepRank: Boolean)(order: Column*): DataFrame = {
+    val rn = row_number().over(Window.partitionBy(col(key)).orderBy(order: _*))
+    val top = df.withColumn(rank, if (keepRank) rn.cast("long") else rn)
+      .filter(col(rank) <= k)
+    if (keepRank) top else top.drop(rank)
+  }
+
+  /** (key, id) with the `id` of the best `score` per key, ties to the
+    * lowest id: a map-side-partial max(struct) aggregate, never a window
+    * over the scored frame. */
+  private def argmax(scored: DataFrame, key: String, score: String, id: String): DataFrame =
+    scored.groupBy(col(key))
+      .agg(max(struct(col(score), (-col(id)).as(s"neg$id"))).as("__m"))
+      .select(col(key), (-col(s"__m.neg$id")).as(id))
+
+  /** Router tail: each probe's lists × the lists' members (neighbor_id,
+    * `list`) → (probe_id, neighbor_id) candidates, the probe itself excluded. */
+  private def listCandidates(pLists: DataFrame, members: DataFrame, list: String): DataFrame =
+    pLists.join(members, list)
+      .filter(col("neighbor_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("neighbor_id"))
+
+  /** The flat router: the broadcast probe batch meets every corpus row (no
+    * shuffle before the scorer) and the corpus-sized stage emits only
+    * (probe_id, neighbor_id, extra..., score). */
+  private def flatScan(probes: DataFrame, corpus: DataFrame, score: Column,
+      extra: Column*): DataFrame =
+    broadcast(probes).join(corpus, col("vec_id") =!= col("probe_id"))
+      .select(Seq(col("probe_id"), col("vec_id").as("neighbor_id")) ++ extra :+ score: _*)
+
+  /** Scores routed (probe_id, neighbor_id) candidates: each side's
+    * features join on its id, `score` reads both. */
+  private def scorePairs(cand: DataFrame, probes: DataFrame, neighbors: DataFrame,
+      score: Column): DataFrame =
+    cand.join(probes, "probe_id").join(neighbors, "neighbor_id")
+      .select(col("probe_id"), col("neighbor_id"), score)
+
+  /** Rung dispatch: the indexed branch past [[IvfLabelPathMax]] vectors,
+    * the plain one at or below it. */
+  private def bySize[T](n: Long)(indexed: => T, plain: => T): T =
+    if (n > IvfLabelPathMax) indexed else plain
+
+  // ---- exact reranks ---------------------------------------------------
+
+  /** Exact cosine top-k over the flat router: the probe batch of
+    * `probesFrom` scored against every `corpus` vector. */
+  private def flatCosineTopk(probesFrom: DataFrame, corpus: DataFrame, n: Long,
+      k: Int, rank: String, extra: Column*): DataFrame =
+    topPer(flatScan(asProbes(probeBatch(probesFrom, n)), corpus,
+        QuantizedVec.qcosine(col("p_emb"), col("embedding"),
+          col("p_nsq"), col("nsq")).as("cos"), extra: _*),
+      "probe_id", k, rank, keepRank = true)(col("cos").desc, col("neighbor_id"))
+
+  /** Exact codegen rerank of (probe_id, neighbor_id) candidates + top-k. */
+  private def topkRerank(cand: DataFrame, emb: DataFrame, k: Int = TopK): DataFrame =
+    topPer(scorePairs(cand, asProbes(emb),
+        emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"),
+          col("nsq").as("n_nsq")),
+        QuantizedVec.qcosine(col("p_emb"), col("n_emb"),
+          col("p_nsq"), col("n_nsq")).as("cos")),
+      "probe_id", k, "rank", keepRank = true)(col("cos").desc, col("neighbor_id"))
+
+  // ---- label IVF router (one definition; the inline query, the offline
   // build, and the persisted-index query path all consume these, so the
   // centroid arithmetic and tiebreaks cannot drift apart) ---------------
 
   /** Per-label quantized-mean centroid table and its norms. */
   private def centroids(qn: DataFrame): (DataFrame, DataFrame) = {
-    val cq = qn.groupBy(col("label"), col("d"))
-      .agg(floor(sum(col("qv")).cast("double") / count(lit(1))).cast("long").as("qc"))
+    val cq = qn.groupBy(col("label"), col("d")).agg(floorMean(col("qv")).as("qc"))
     val cnorms = cq.groupBy(col("label")).agg(sum(col("qc") * col("qc")).as("cnsq"))
     (cq, cnorms)
   }
@@ -329,68 +414,22 @@ object SimilarityQueries {
           (sqrt(col("nsq").cast("double")) * sqrt(col("cnsq").cast("double")))).as("ccos"))
 
   /** Top-k clusters per vector by centroid cosine (label-asc tiebreak). */
-  private def topClusters(ascore: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("label"))
-    ascore.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).select(col("vec_id"), col("label"))
+  private def topClusters(ascore: DataFrame, k: Int): DataFrame =
+    topPer(ascore, "vec_id", k, "rn", keepRank = false)(col("ccos").desc, col("label"))
+      .select(col("vec_id"), col("label"))
+
+  /** Label-IVF rung tail: route each probe (`probeScores`, its centroid
+    * cosines) to its NProbe nearest labels, pull ONLY those labels'
+    * members through `assigned` (vec_id, label), exact-rerank. */
+  private def labelRouted(probeScores: DataFrame, assigned: DataFrame,
+      raw: DataFrame): DataFrame = {
+    val probeClusters = topClusters(probeScores, NProbe)
+      .select(col("vec_id").as("probe_id"), col("label"))
+    topkRerank(listCandidates(probeClusters,
+      assigned.select(col("vec_id").as("neighbor_id"), col("label")), "label"), normed(raw))
   }
 
-  /** Exact codegen rerank of (probe_id, neighbor_id) candidates + top-k. */
-  private def topkRerank(cand: DataFrame, emb: DataFrame, k: Int = TopK): DataFrame = {
-    val scored = cand
-      .join(emb.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-        col("nsq").as("p_nsq")), "probe_id")
-      .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"),
-        col("nsq").as("n_nsq")), "neighbor_id")
-      .select(col("probe_id"), col("neighbor_id"),
-        QuantizedVec.qcosine(col("p_emb"), col("n_emb"),
-          col("p_nsq"), col("n_nsq")).as("cos"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
-  /** Sampled-codebook IVF for corpora past the label axis ([[IvfLabelPathMax]]):
-    * the codebook is a deterministic 1-in-(n/K) sample of the corpus itself
-    * (standard sample-based IVF training; each sampled vector sits near its
-    * true cluster's mass), K = n / [[IvfListTarget]] lists. Assignment
-    * routes through the shared two-level [[twoLevelRouting]] pass
-    * (n × (√K + K/√K) cosines); probe routing scores the ~200-query batch
-    * flat against the K-row broadcast fine-cell table; then the same
-    * candidate equi-join and exact rerank as the label path, with the same
-    * (cos desc, id asc) tiebreaks. Candidates/probe = NProbe ×
-    * IvfListTarget, CONSTANT in n: the query total is linear where the
-    * fixed-K path was quadratic — and the assignment pass now survives the
-    * 10⁷-vector decade the flat n × K router could not. */
-  /** Exact brute-force cosine top-k over the stride probe batch — the
-    * deliberately-exact baseline `ann_cosine_topk` serves, factored out so
-    * `ann_recall_report` can score the routed sampled-IVF path against it
-    * in one plan. */
-  def exactCosineTopk(raw: DataFrame, nKnown: Long = -1L): DataFrame = {
-    val n = if (nKnown >= 0) nKnown else raw.count()
-    val emb = normed(raw)
-    val probes = emb.filter(col("vec_id") % probeStride(n) === 0)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-        col("nsq").as("p_nsq"))
-    val scored = broadcast(probes).join(emb, col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        QuantizedVec.qcosine(col("p_emb"), col("embedding"),
-          col("p_nsq"), col("nsq")).as("cos"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
-  }
-
-  def ivfSampledTopk(raw: DataFrame, nKnown: Long = -1L): DataFrame = {
-    val n = if (nKnown >= 0) nKnown else raw.count()
-    // routing (fine/coarse samples, v2c, assignment), probe scoring and
-    // the exact rerank all consume it: eager pin, per the shared-frame
-    // discipline
-    val emb = CacheScope.pinned(normed(raw))
-    topkRerank(sampledCandidates(emb, n), emb)
-  }
+  // ---- sampled-IVF and IMI routers ----------------------------------
 
   /** The two-level (inverted-multi-index) codebook build and vector
     * assignment SHARED BY THE WHOLE SAMPLED-IVF FAMILY — round 10's
@@ -446,6 +485,12 @@ object SimilarityQueries {
     val fine = emb.filter(col("vec_id") % s === 0)
       .select(col("vec_id").as("f"), col("embedding").as("f_emb"),
         col("nsq").as("f_nsq"))
+    // each vector's fine list: the argmax over its (vector, fine) pairs
+    def assignFine(pairs: DataFrame): DataFrame =
+      argmax(pairs.select(col("vec_id"), col("f"),
+          QuantizedVec.qcosine(col("embedding"), col("f_emb"),
+            col("nsq"), col("f_nsq")).as("fcos")), "vec_id", "fcos", "f")
+        .withColumnRenamed("vec_id", "neighbor_id")
     // CHEAP-GEOMETRY SHORT-CIRCUIT (auto-selected like [[IvfLabelPathMax]]):
     // below [[FlatAssignMax]] lists the coarse layer is pure overhead —
     // C = 4–6 cells over a 10–50-row codebook saves a handful of cosines
@@ -464,14 +509,7 @@ object SimilarityQueries {
       // degenerate single-cell v2c keeps the return contract; only the
       // IMI rung consumes v2c and it never takes this branch
       val v2c = emb.select(col("vec_id"), lit(0L).as("c"), lit(1.0).as("ccos"))
-      val assigned = emb.crossJoin(broadcast(fineCells))
-        .select(col("vec_id"), col("f"),
-          QuantizedVec.qcosine(col("embedding"), col("f_emb"),
-            col("nsq"), col("f_nsq")).as("fcos"))
-        .groupBy(col("vec_id"))
-        .agg(max(struct(col("fcos"), (-col("f")).as("negf"))).as("__m"))
-        .select(col("vec_id").as("neighbor_id"), (-col("__m.negf")).as("f"))
-      return (fineCells, v2c, assigned)
+      return (fineCells, v2c, assignFine(emb.crossJoin(broadcast(fineCells))))
     }
     val c = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong)
     val cf = math.max(1L, k / c)
@@ -479,13 +517,10 @@ object SimilarityQueries {
       .select(col("vec_id").as("c"), col("embedding").as("c_emb"),
         col("nsq").as("c_nsq"))
     // fine centroid → coarse cell: K × C cosines, both sides broadcast-tiny
-    val f2c = fine.crossJoin(broadcast(coarse))
+    val f2c = argmax(fine.crossJoin(broadcast(coarse))
       .select(col("f"), col("c"),
         QuantizedVec.qcosine(col("f_emb"), col("c_emb"),
-          col("f_nsq"), col("c_nsq")).as("ccos"))
-      .groupBy(col("f"))
-      .agg(max(struct(col("ccos"), (-col("c")).as("negc"))).as("__m"))
-      .select(col("f"), (-col("__m.negc")).as("c"))
+          col("f_nsq"), col("c_nsq")).as("ccos")), "f", "ccos", "c")
     // the broadcast fine-cell table downstream stages equi-join on c —
     // K rows, eager-pinned so consumers read a leaf instead of
     // re-embedding the K × C scoring subtree in their plans
@@ -499,132 +534,11 @@ object SimilarityQueries {
     val v2c = if (shareV2c) v2cRaw.transform(CacheScope.cached) else v2cRaw
     // top ImiAssignProbe coarse cells per vector (WindowGroupLimit keeps
     // the per-partition top-A before the vec_id shuffle)
-    val wV = Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("c"))
-    val vCells = v2c.withColumn("rn", row_number().over(wV))
-      .filter(col("rn") <= ImiAssignProbe).select(col("vec_id"), col("c"))
+    val vCells = topPer(v2c, "vec_id", ImiAssignProbe, "rn", keepRank = false)(
+      col("ccos").desc, col("c")).select(col("vec_id"), col("c"))
     // vector → fine list WITHIN its top-A coarse cells: n × ~A·K/C cosines
     // via the c equi-join against the broadcast fine-cell table
-    val assigned = emb.join(vCells, "vec_id")
-      .join(broadcast(fineCells), "c")
-      .select(col("vec_id"), col("f"),
-        QuantizedVec.qcosine(col("embedding"), col("f_emb"),
-          col("nsq"), col("f_nsq")).as("fcos"))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("fcos"), (-col("f")).as("negf"))).as("__m"))
-      .select(col("vec_id").as("neighbor_id"), (-col("__m.negf")).as("f"))
-    (fineCells, v2c, assigned)
-  }
-
-  /** SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
-    * web-scale through semantic deduplication", 2023): semantic near-dedup
-    * over the embedding column with CLUSTER-BOUNDED candidate generation —
-    * cluster the corpus, score pairwise cosine only WITHIN a cluster, and
-    * drop every vector whose similarity to a lower-id same-cluster vector
-    * reaches [[SemTau]]. The clustering is the exact fine-list assignment
-    * the IVF family runs ([[twoLevelRouting]] — coarse-then-fine,
-    * K = n / [[IvfListTarget]] lists), so expected cluster size — and
-    * with it per-vector candidate work — stays constant in n: the
-    * quadratic all-pairs stage never exists, the same banding discipline
-    * as every other dedup candidate generator. Returns one row
-    * per DROPPED vector with its keeper (min same-cluster id above
-    * threshold) and the strongest similarity that doomed it — the dedup
-    * decision list a 100 TB curation pipeline anti-joins against. */
-  def semanticDupes(raw: DataFrame, nKnown: Long = -1L): DataFrame = {
-    val n = if (nKnown >= 0) nKnown else raw.count()
-    // self-joined three ways (codebook sample, pair left, pair right):
-    // eager pin, per the shared-frame discipline
-    val emb = CacheScope.pinned(normed(raw))
-    val assigned = twoLevelRouting(emb, n, shareV2c = false)._3
-      .select(col("neighbor_id").as("vec_id"), col("f").as("cluster"))
-    val m = assigned.join(emb, "vec_id")
-    val pairs = m.select(col("cluster"), col("vec_id").as("vec_a"),
-        col("embedding").as("emb_a"), col("nsq").as("nsq_a"))
-      .join(m.select(col("cluster"), col("vec_id").as("vec_b"),
-        col("embedding").as("emb_b"), col("nsq").as("nsq_b")), Seq("cluster"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("cluster"), col("vec_a"), col("vec_b"),
-        QuantizedVec.qcosine(col("emb_a"), col("emb_b"),
-          col("nsq_a"), col("nsq_b")).as("cos"))
-      .filter(col("cos") >= SemTau)
-    pairs.groupBy(col("cluster"), col("vec_b"))
-      .agg(min(col("vec_a")).as("keeper_id"), max(col("cos")).as("max_cos"))
-      .select(col("vec_b").as("vec_id"), col("cluster"),
-        col("keeper_id"), col("max_cos"))
-  }
-
-  /** SEMANTIC DRIFT DIFF — the diff family (reference's 5-state keyed
-    * snapshot diff, `extract_data.go:161-184`) crossed with the embedding
-    * column: which rows changed, and of the UPDATED ones, which changed
-    * MEANINGFULLY — the CDC-for-RAG primitive ("which docs need
-    * re-embedding/re-indexing since the last index build" vs "which were
-    * cosmetic touches the index can skip"). The after-arm is the
-    * deterministic in-engine mutation convention every diff_* uses:
-    * deletes (`vec_id % 17 = 2`), SEMANTIC edits (dims rotated left
-    * [[DriftRot]] — an uncorrelated re-embedding), COSMETIC edits (every
-    * component × 1.01 — a renormalization, cosine-invariant), inserts
-    * (copies at +[[DriftInsertBand]]).
-    *
-    * Scale shape: ONE full-outer equi-join of the two quantized component
-    * frames on (vec_id, d) IS simultaneously the diff (presence/equality
-    * per key) and the drift score (dot + both norms accumulate in the
-    * same keyed aggregation) — there is no second corpus pass to fetch
-    * vectors for the delta, and the output is delta-sized (NOT_MODIFIED
-    * keys drop in the same aggregation's filter). Strictly fewer passes
-    * than diff-then-rejoin; plan-gated (no cartesian, no window, no
-    * corpus re-join after the diff). The fixture's after-arm mutation
-    * reads the parquet twice (mutated body + insert band union); in
-    * production the after side is the incoming snapshot — one scan each.
-    * Classification thresholds compare identical doubles in both engines
-    * ([[DriftTau]] sits far from both planted classes). */
-  /** The drift fixture's deterministic after-arm (the diff family's
-    * in-engine mutation convention): deletes, rotated SEMANTIC edits,
-    * rescaled COSMETIC edits, inserts. Shared by the batch diff and the
-    * streaming consumer twin so the two score the identical snapshot. */
-  def driftAfterArm(before: DataFrame): DataFrame = {
-    val dbl = expr("transform(embedding, v -> CAST(v AS DOUBLE))")
-    val rotated = expr(s"""transform(sequence(1, $Dim),
-      i -> CAST(element_at(embedding, CAST((i + ${DriftRot - 1}) % $Dim + 1 AS INT)) AS DOUBLE))""")
-    val scaled = expr("transform(embedding, v -> CAST(v AS DOUBLE) * CAST(1.01 AS DOUBLE))")
-    before.filter(col("vec_id") % 17 =!= 2)
-      .select(col("vec_id"),
-        when(col("vec_id") % 17 === 5, rotated)
-          .when(col("vec_id") % 17 === 11, scaled)
-          .otherwise(dbl).as("embedding"))
-      .unionByName(before.filter(col("vec_id") % 17 === 8)
-        .select((col("vec_id") + DriftInsertBand).as("vec_id"),
-          dbl.as("embedding")))
-  }
-
-  def semanticDrift(before: DataFrame): DataFrame = {
-    val after = driftAfterArm(before)
-    val bq = quantizedComponents(before.withColumn("label", lit(0))).drop("label")
-    val aq = quantizedComponents(after.withColumn("label", lit(0))).drop("label")
-    val j = bq.select(col("vec_id"), col("d"), col("qv").as("bqv"))
-      .join(aq.select(col("vec_id"), col("d"), col("qv").as("aqv")),
-        Seq("vec_id", "d"), "full_outer")
-    val g = j.groupBy(col("vec_id"))
-      .agg(count(col("bqv")).as("nb"), count(col("aqv")).as("na"),
-        sum(col("bqv") * col("aqv")).as("dot"),
-        sum(col("bqv") * col("bqv")).as("bn"),
-        sum(col("aqv") * col("aqv")).as("an"),
-        max(abs(col("bqv") - col("aqv"))).as("maxdiff"))
-    // nb =!= na catches a same-key row whose vectors differ ONLY in
-    // dimensionality (equal overlap ⇒ maxdiff = 0 but a component was
-    // added/removed) — unreachable at the fixed-Dim fixture, a real
-    // UPDATED for variable-length inputs. Mirrored in the oracle WHERE.
-    g.filter(col("nb") === 0 || col("na") === 0 || col("maxdiff") > 0 ||
-        col("nb") =!= col("na"))
-      .select(col("vec_id"),
-        when(col("nb") === 0, SnapshotDiff.Inserted)
-          .when(col("na") === 0, SnapshotDiff.Deleted)
-          .otherwise(SnapshotDiff.Updated).as("status"),
-        when(col("nb") > 0 && col("na") > 0,
-          col("dot").cast("double") /
-            (sqrt(col("bn").cast("double")) * sqrt(col("an").cast("double"))))
-          .as("cos"))
-      .withColumn("drift",
-        when(col("status") === SnapshotDiff.Updated,
-          when(col("cos") < DriftTau, "semantic").otherwise("cosmetic")))
+    (fineCells, v2c, assignFine(emb.join(vCells, "vec_id").join(broadcast(fineCells), "c")))
   }
 
   /** The sampled-IVF routing stage shared by [[ivfSampledTopk]],
@@ -642,22 +556,103 @@ object SimilarityQueries {
     * [[normed]], PINNED by the caller (six stages consume it). */
   private def sampledCandidates(emb: DataFrame, n: Long): DataFrame = {
     val (fineCells, _, assigned) = twoLevelRouting(emb, n, shareV2c = false)
-    val probes = emb.filter(col("vec_id") % probeStride(n) === 0)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-        col("nsq").as("p_nsq"))
-    val pscored = probes.crossJoin(broadcast(fineCells))
-      .select(col("probe_id"), col("f"),
-        QuantizedVec.qcosine(col("p_emb"), col("f_emb"),
-          col("p_nsq"), col("f_nsq")).as("fcos"))
-    val wP = Window.partitionBy(col("probe_id"))
-      .orderBy(col("fcos").desc, col("f"))
-    val pLists = pscored.withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= nprobeFor(fineListCount(n)))
-      .select(col("probe_id"), col("f"))
-    pLists.join(assigned, "f")
-      .filter(col("neighbor_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("neighbor_id"))
+    listCandidates(probeLists(
+      asProbes(probeBatch(emb, n)).crossJoin(broadcast(fineCells)), n), assigned, "f")
   }
+
+  /** Each probe's [[nprobeFor]] nearest fine lists (probe_id, f) from its
+    * (probe, fine-centroid) pairs, (cos desc, f asc). */
+  private def probeLists(pairs: DataFrame, n: Long): DataFrame =
+    topPer(pairs.select(col("probe_id"), col("f"),
+        QuantizedVec.qcosine(col("p_emb"), col("f_emb"),
+          col("p_nsq"), col("f_nsq")).as("fcos")),
+      "probe_id", nprobeFor(fineListCount(n)), "rn", keepRank = false)(
+      col("fcos").desc, col("f")).select(col("probe_id"), col("f"))
+
+  /** IMI router: assignment is the family-shared two-level pass; what is
+    * distinctive is the PROBE side — queries also route coarse-then-fine
+    * (top [[ImiCoarseProbe]] coarse cells, then the fine lists inside
+    * them) instead of scoring all K fine centroids flat, the full
+    * inverted-multi-index query shape (Babenko & Lempitsky, "The Inverted
+    * Multi-Index", CVPR 2012) for when even the probe batch's K-flat scan
+    * matters (huge K or per-query serving). `emb` is PINNED by the caller. */
+  private def imiCandidates(emb: DataFrame, n: Long): DataFrame = {
+    // v2c is cached because probe routing below re-reads it
+    val (fineCells, v2c, assigned) =
+      twoLevelRouting(emb, n, shareV2c = true, allowFlat = false)
+    val pCells = topPer(probeBatch(v2c, n), "vec_id", ImiCoarseProbe, "rn",
+        keepRank = false)(col("ccos").desc, col("c"))
+      .select(col("vec_id").as("probe_id"), col("c"))
+    listCandidates(probeLists(
+      pCells.join(broadcast(fineCells), "c").join(asProbes(emb), "probe_id"), n),
+      assigned, "f")
+  }
+
+  // ---- exact-rerank rungs: flat, sampled IVF, IMI ----------------------
+
+  /** Exact brute-force cosine top-k over the stride probe batch — the
+    * deliberately-exact baseline `ann_cosine_topk` serves, factored out so
+    * `ann_recall_report` can score the routed sampled-IVF path against it
+    * in one plan. */
+  def exactCosineTopk(raw: DataFrame, n: Long): DataFrame = {
+    val emb = normed(raw)
+    flatCosineTopk(emb, emb, n, TopK, "rank")
+  }
+
+  /** Sampled-codebook IVF for corpora past the label axis ([[IvfLabelPathMax]]):
+    * the codebook is a deterministic 1-in-(n/K) sample of the corpus itself
+    * (standard sample-based IVF training; each sampled vector sits near its
+    * true cluster's mass), K = n / [[IvfListTarget]] lists. Assignment
+    * routes through the shared two-level [[twoLevelRouting]] pass
+    * (n × (√K + K/√K) cosines); probe routing scores the ~200-query batch
+    * flat against the K-row broadcast fine-cell table; then the same
+    * candidate equi-join and exact rerank as the label path, with the same
+    * (cos desc, id asc) tiebreaks. Candidates/probe = NProbe ×
+    * IvfListTarget, CONSTANT in n: the query total is linear where the
+    * fixed-K path was quadratic — and the assignment pass now survives the
+    * 10⁷-vector decade the flat n × K router could not. */
+  def ivfSampledTopk(raw: DataFrame, n: Long): DataFrame = {
+    // routing (fine/coarse samples, v2c, assignment), probe scoring and
+    // the exact rerank all consume it: eager pin, per the shared-frame
+    // discipline
+    val emb = CacheScope.pinned(normed(raw))
+    topkRerank(sampledCandidates(emb, n), emb)
+  }
+
+  /** IMI-style fully-two-level rung: [[imiCandidates]] → exact rerank.
+    * Candidates and the exact rerank tail are the family's shared ones;
+    * every tiebreak is (cos desc, id asc). Exercised directly at oracle
+    * scales as `ann_imi_topk`; recall pinned by `IvfRecallSpec`. */
+  def imiTopk(raw: DataFrame, n: Long): DataFrame = {
+    // routing (three scoring stages) + rerank all reuse the normed corpus
+    val emb = CacheScope.pinned(normed(raw))
+    topkRerank(imiCandidates(emb, n), emb)
+  }
+
+  // ---- codebook training (PQ coding and k-means share both steps) -------
+
+  /** Hash-first seeding: the k vectors with the smallest hashHex(vec_id)
+    * (vec_id tiebreak; TakeOrdered, no global sort) numbered 0..k-1, as
+    * (__sv, c). */
+  private def seedCodes(raw: DataFrame, k: Int): DataFrame = {
+    val wC = Window.orderBy(col("__h"), col("vec_id")) // k rows only
+    raw.select(col("vec_id"))
+      .withColumn("__h", Hashing.hashHex(col("vec_id").cast("string")))
+      .orderBy(col("__h"), col("vec_id")).limit(k)
+      .withColumn("c", (row_number().over(wC) - 1).cast("long"))
+      .select(col("vec_id").as("__sv"), col("c"))
+  }
+
+  /** One Lloyd update of a (c, d, qc) codebook: each codeword becomes the
+    * floor-mean of its `members` (`code`, d, qv); a codeword with no
+    * members keeps its previous value. */
+  private def lloydUpdate(cb: DataFrame, members: DataFrame, code: String): DataFrame = {
+    val means = members.groupBy(col(code), col("d")).agg(floorMean(col("qv")).as("qm"))
+    cb.join(means.select(col(code).as("c"), col("d"), col("qm")), Seq("c", "d"), "left_outer")
+      .select(col("c"), col("d"), coalesce(col("qm"), col("qc")).as("qc"))
+  }
+
+  // ---- shortlist rungs: PQ ADC, Matryoshka prefix, sign-bit Hamming ---
 
   /** Collects a (c, d, qc) codebook frame — pqk × Dim rows, control-plane
     * sized (≤16k longs even at the k=256 ladder rung) — into the nested
@@ -707,18 +702,8 @@ object SimilarityQueries {
     // Components are exploded ONLY for bounded subsets (the pqk seed
     // vectors; the Lloyd training sample) — the corpus-wide n × Dim
     // component frame the round-10 formulation pinned no longer exists.
-    val seeds = raw.select(col("vec_id"))
-      .withColumn("__h", Hashing.hashHex(col("vec_id").cast("string")))
-      .orderBy(col("__h"), col("vec_id")).limit(pqk)
-    val wC = Window.orderBy(col("__h"), col("vec_id")) // pqk rows only
-    val seedCodes = seeds
-      .withColumn("c", (row_number().over(wC) - 1).cast("long"))
-      .select(col("vec_id").as("__sv"), col("c"))
-    val cb0 = raw.join(broadcast(seedCodes), col("vec_id") === col("__sv"))
-      .select(col("c"), posexplode(col("embedding")).as(Seq("d", "v")))
-      .select(col("c"), col("d"), // same quantization as quantizedComponents
-        floor(col("v").cast("double") * QuantizedVec.DefaultScale + 0.5)
-          .cast("long").as("qc")) // pqk × Dim rows
+    val cb0 = components( // pqk × Dim rows
+      raw.join(broadcast(seedCodes(raw, pqk)), col("vec_id") === col("__sv")), Seq("c"), "qc")
     val cb0Arr = collectCodebook(cb0, pqk)
     // ONE Lloyd refinement over the TRAINING SAMPLE (stride 1 = whole
     // corpus below the [[PqTrainPerCode]] budget): assign each sampled
@@ -731,14 +716,8 @@ object SimilarityQueries {
       .select(col("vec_id"),
         posexplode(PqCodec.pqEncode(col("embedding"), cb0Arr)).as(Seq("m", "code")))
       .select(col("vec_id"), col("m").cast("long").as("m"), col("code"))
-    val means = assign0
-      .join(quantizedComponents(train).drop("label"), "vec_id")
-      .filter(expr(s"d div ${Dim / PqM}") === col("m"))
-      .groupBy(col("code"), col("d"))
-      .agg(floor(sum(col("qv")).cast("double") / count(lit(1))).cast("long").as("qm"))
-    val cb = cb0
-      .join(means.select(col("code").as("c"), col("d"), col("qm")), Seq("c", "d"), "left_outer")
-      .select(col("c"), col("d"), coalesce(col("qm"), col("qc")).as("qc"))
+    val cb = lloydUpdate(cb0, assign0.join(components(train, Seq("vec_id"), "qv"), "vec_id")
+      .filter(expr(s"d div ${Dim / PqM}") === col("m")), "code")
     val cbArr = collectCodebook(cb, pqk)
     // the linear-in-n pass: narrow per-row argmin encode, no row explosion
     val enc = raw
@@ -746,7 +725,7 @@ object SimilarityQueries {
         posexplode(PqCodec.pqEncode(col("embedding"), cbArr)).as(Seq("em", "code")))
       .select(col("neighbor_id"), col("em").cast("long").as("em"), col("code"))
     // probe-batch ADC lookup tables: ~200 rows in, PqM × pqk entries each
-    val dt = raw.filter(col("vec_id") % probeStride(n) === 0)
+    val dt = probeBatch(raw, n)
       .select(col("vec_id").as("probe_id"),
         posexplode(PqCodec.pqDistTable(col("embedding"), cbArr)).as(Seq("pos", "dist2")))
       .select(col("probe_id"), expr(s"CAST(pos div $pqk AS BIGINT)").as("em"),
@@ -755,21 +734,20 @@ object SimilarityQueries {
     (dt, enc)
   }
 
-  /** Compressed-domain shortlist → exact rerank: the shared PQ tail (ADC
-    * culls to [[PqShortlist]] candidates per probe; only those pairs ever
-    * touch raw vectors again). The exact quantized L2 comes from the
+  /** Compressed-domain shortlist → exact rerank: the shared PQ tail. The
+    * looked-up (probe, neighbor, dist2) entries sum to ADC distances, ADC
+    * culls to [[pqShortlistFor]] candidates per probe, and only those pairs
+    * ever touch raw vectors again. The exact quantized L2 comes from the
     * codegen'd dot/norm primitives via Σ(qa−qb)² = |qa|² − 2·qa·qb + |qb|²
     * — exact long arithmetic, bit-identical to the per-dimension component
     * sum for the fixed-[[Dim]] corpus, with NO n × Dim component explosion:
     * the bounded shortlist (probes × width) broadcasts into two narrow
     * passes over the raw embedding arrays. */
-  private def pqRerank(adc: DataFrame, raw: DataFrame,
-      shortlistWidth: Int): DataFrame = {
-    val wS = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc"), col("neighbor_id"))
-    val shortlist = adc.withColumn("srank", row_number().over(wS))
-      .filter(col("srank") <= shortlistWidth)
-      .select(col("probe_id"), col("neighbor_id"))
+  private def pqRerank(adcTerms: DataFrame, raw: DataFrame, n: Long): DataFrame = {
+    val adc = adcTerms.groupBy(col("probe_id"), col("neighbor_id"))
+      .agg(sum(col("dist2")).as("adc"))
+    val shortlist = topPer(adc, "probe_id", pqShortlistFor(n), "srank", keepRank = false)(
+      col("adc"), col("neighbor_id")).select(col("probe_id"), col("neighbor_id"))
     val withProbeVec = raw
       .select(col("vec_id").as("probe_id"), col("embedding").as("__ea"))
       .join(broadcast(shortlist), "probe_id")
@@ -780,10 +758,16 @@ object SimilarityQueries {
         (QuantizedVec.qnormsq(col("__ea"))
           - lit(2L) * QuantizedVec.qdot(col("__ea"), col("__eb"))
           + QuantizedVec.qnormsq(col("__eb"))).as("l2"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("l2"), col("neighbor_id"))
-    exact.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
+    topPer(exact, "probe_id", TopK, "rank", keepRank = true)(col("l2"), col("neighbor_id"))
+  }
+
+  /** Plain PQ (the full-code ADC scan oracle scales run): every
+    * (neighbor, m) row meets each probe's broadcast lookup table — the
+    * n-sized side never shuffles. */
+  private def pqPlainTopk(raw: DataFrame, n: Long): DataFrame = {
+    val (dt, enc) = pqStages(raw, n)
+    pqRerank(enc.join(broadcast(dt), Seq("em", "code"))
+      .filter(col("neighbor_id") =!= col("probe_id")), raw, n)
   }
 
   /** IVFADC — the composition `ann_pq_topk`'s scaladoc documents as the
@@ -796,15 +780,48 @@ object SimilarityQueries {
     * two branches differ only in which (probe, neighbor) pairs ADC ever
     * scores. Auto-selected by `ann_pq_topk` above [[IvfLabelPathMax]];
     * exercised directly at oracle scales as `ann_ivfadc_topk`. */
-  def ivfAdcTopk(raw: DataFrame, nKnown: Long = -1L): DataFrame = {
-    val n = if (nKnown >= 0) nKnown else raw.count()
+  def ivfAdcTopk(raw: DataFrame, n: Long): DataFrame = {
     val cand = sampledCandidates(CacheScope.pinned(normed(raw)), n)
     val (dt, enc) = pqStages(raw, n)
-    val adc = cand.join(enc, "neighbor_id")
-      .join(broadcast(dt), Seq("probe_id", "em", "code"))
-      .groupBy(col("probe_id"), col("neighbor_id"))
-      .agg(sum(col("dist2")).as("adc"))
-    pqRerank(adc, raw, pqShortlistFor(n))
+    pqRerank(cand.join(enc, "neighbor_id")
+      .join(broadcast(dt), Seq("probe_id", "em", "code")), raw, n)
+  }
+
+  /** (vec_id, embedding, pnsq): the corpus with its [[MatPrefDim]]-dim
+    * prefix norm. */
+  private def prefixNormed(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), col("embedding"),
+      QuantizedVec.qnormsq(slice(col("embedding"), 1, MatPrefDim)).as("pnsq"))
+
+  /** (probe_id, p_pref, p_pnsq): a [[prefixNormed]] frame as the probe
+    * side. [[QuantizedVec.QuantizedDot]] scores over the common prefix of
+    * its two arrays, so the probe-side slice against the FULL neighbor
+    * vector computes the truncated dot with no second corpus copy. */
+  private def prefixProbes(pemb: DataFrame): DataFrame =
+    pemb.select(col("vec_id").as("probe_id"),
+      slice(col("embedding"), 1, MatPrefDim).as("p_pref"), col("pnsq").as("p_pnsq"))
+
+  /** Matryoshka shortlist: the [[MatShortlist]] best candidates per probe
+    * by prefix cosine `pcos`. */
+  private def prefixShortlist(scored: DataFrame): DataFrame =
+    topPer(scored, "probe_id", MatShortlist, "srank", keepRank = false)(
+      col("pcos").desc, col("neighbor_id")).select(col("probe_id"), col("neighbor_id"))
+
+  /** Plain (full-scan) Matryoshka path — the exact branch oracle scales
+    * run: the prefix cosine scores every (probe, vector) pair via the
+    * broadcast-probe join, then the shortlist reranks exact full-dim. */
+  private def matryoshkaPlainTopk(raw: DataFrame, n: Long): DataFrame = {
+    val pemb = prefixNormed(raw)
+    // the corpus-sized stage emits only (probe_id, neighbor_id, pcos):
+    // three narrow columns into the shortlist window (WindowGroupLimit
+    // keeps 50/probe per map partition BEFORE the shuffle). Carrying the
+    // vectors through instead measured 35.6 s at sf10 — a 30×-wider
+    // shuffle that made the "cheap" stage dearer than the exact scan.
+    val cand = prefixShortlist(flatScan(prefixProbes(probeBatch(pemb, n)), pemb,
+      QuantizedVec.qcosine(col("p_pref"), col("embedding"),
+        col("p_pnsq"), col("pnsq")).as("pcos")))
+    // exact full-dim rerank fetches vectors ONLY for the tiny shortlist
+    topkRerank(cand, normed(raw))
   }
 
   /** Matryoshka-over-IVF — the composition `ann_matryoshka_topk`'s
@@ -819,32 +836,18 @@ object SimilarityQueries {
     * is linear where the plain prefix scan was quadratic (probes ∝ n).
     * Auto-selected by `ann_matryoshka_topk` above [[IvfLabelPathMax]];
     * exercised directly at oracle scales as `ann_matryoshka_ivf`. */
-  /** Plain (full-scan) Matryoshka path — the exact branch oracle scales
-    * run: the prefix cosine scores every (probe, vector) pair via the
-    * broadcast-probe join, then the shortlist reranks exact full-dim. */
-  private def matryoshkaPlainTopk(raw: DataFrame, n: Long): DataFrame = {
-    val pemb = raw.select(col("vec_id"), col("embedding"),
-      QuantizedVec.qnormsq(slice(col("embedding"), 1, MatPrefDim)).as("pnsq"))
-    val probes = pemb.filter(col("vec_id") % probeStride(n) === 0)
-      .select(col("vec_id").as("probe_id"),
-        slice(col("embedding"), 1, MatPrefDim).as("p_pref"),
-        col("pnsq").as("p_pnsq"))
-    // the corpus-sized stage emits only (probe_id, neighbor_id, pcos):
-    // three narrow columns into the shortlist window (WindowGroupLimit
-    // keeps 50/probe per map partition BEFORE the shuffle). Carrying the
-    // vectors through instead measured 35.6 s at sf10 — a 30×-wider
-    // shuffle that made the "cheap" stage dearer than the exact scan.
-    val pscored = broadcast(probes).join(pemb, col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        QuantizedVec.qcosine(col("p_pref"), col("embedding"),
-          col("p_pnsq"), col("pnsq")).as("pcos"))
-    val wS = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pcos").desc, col("neighbor_id"))
-    val cand = pscored.withColumn("srank", row_number().over(wS))
-      .filter(col("srank") <= MatShortlist)
-      .select(col("probe_id"), col("neighbor_id"))
-    // exact full-dim rerank fetches vectors ONLY for the tiny shortlist
-    topkRerank(cand, normed(raw))
+  def matryoshkaIvfTopk(raw: DataFrame, n: Long): DataFrame = {
+    // consumed by routing (codebook sample + assignment), prefix scoring
+    // (both candidate sides) and the exact rerank: eager pin, per the
+    // shared-frame discipline
+    val emb = CacheScope.pinned(normed(raw))
+    val pn = prefixNormed(emb)
+    val cand = prefixShortlist(scorePairs(sampledCandidates(emb, n), prefixProbes(pn),
+      pn.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("n_emb"), col("pnsq").as("n_pnsq")),
+      QuantizedVec.qcosine(col("p_pref"), col("n_emb"),
+        col("p_pnsq"), col("n_pnsq")).as("pcos")))
+    topkRerank(cand, emb)
   }
 
   /** 1-bit binary-quantization signatures: each dimension's SIGN packed
@@ -884,20 +887,17 @@ object SimilarityQueries {
     * [[matryoshkaIvfTopk]] does — BQ replaces the prefix cosine as the
     * candidate scorer; the 8-byte signature is what lets that scan stay
     * in memory when raw vectors cannot. */
-  def bqTopk(raw: DataFrame, nKnown: Long = -1L): DataFrame = {
-    val n = if (nKnown >= 0) nKnown else raw.count()
+  def bqTopk(raw: DataFrame, n: Long): DataFrame = {
     val emb = CacheScope.pinned(normed(raw))
     val sigs = bqSignatures(emb)
-    val probes = sigs.filter(col("vec_id") % probeStride(n) === 0)
+    val probes = probeBatch(sigs, n)
       .select(col("vec_id").as("probe_id"), col("sig_lo").as("p_lo"),
         col("sig_hi").as("p_hi"))
     // deliberately NOT pinned: the popcount scan re-runs in ~the cost of
     // reading the 8-byte signatures (4.7 s at sf10), far under
     // checkpointing its 40M-row product
-    def hammed = broadcast(probes).join(sigs, col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        expr("bit_count(p_lo ^ sig_lo) + bit_count(p_hi ^ sig_hi)")
-          .cast("long").as("ham"))
+    def hammed = flatScan(probes, sigs,
+      expr("bit_count(p_lo ^ sig_lo) + bit_count(p_hi ^ sig_hi)").cast("long").as("ham"))
     // BOUNDED-DOMAIN TOP-K: Hamming over [[Dim]] bits takes only Dim+1
     // values, so the per-probe shortlist cutoff comes from a (probe, ham)
     // HISTOGRAM — one map-side-combinable aggregation of ≤ probes×(Dim+1)
@@ -913,83 +913,9 @@ object SimilarityQueries {
         Window.partitionBy(col("probe_id")).orderBy(col("ham"))))
       .filter(col("__cum") - col("c") < BqShortlist)
       .groupBy(col("probe_id")).agg(max(col("ham")).as("hcut"))
-    val wS = Window.partitionBy(col("probe_id"))
-      .orderBy(col("ham"), col("neighbor_id"))
-    val cand = hammed.join(broadcast(hcut), "probe_id")
-      .filter(col("ham") <= col("hcut"))
-      .withColumn("srank", row_number().over(wS))
-      .filter(col("srank") <= BqShortlist)
-      .select(col("probe_id"), col("neighbor_id"))
-    topkRerank(cand, emb)
-  }
-
-  def matryoshkaIvfTopk(raw: DataFrame, nKnown: Long = -1L): DataFrame = {
-    val n = if (nKnown >= 0) nKnown else raw.count()
-    // consumed by routing (codebook sample + assignment), prefix scoring
-    // (both candidate sides) and the exact rerank: eager pin, per the
-    // shared-frame discipline
-    val emb = CacheScope.pinned(normed(raw))
-    val cand = sampledCandidates(emb, n)
-    // prefix norms come from the sliced embedding; QuantizedDot scores
-    // over the common prefix of its two arrays, so the probe-side slice
-    // against the FULL neighbor vector computes the truncated dot with no
-    // second corpus copy (same trick as the plain path)
-    val pn = emb.select(col("vec_id"), col("embedding"),
-      QuantizedVec.qnormsq(slice(col("embedding"), 1, MatPrefDim)).as("pnsq"))
-    val pscored = cand
-      .join(pn.select(col("vec_id").as("probe_id"),
-        slice(col("embedding"), 1, MatPrefDim).as("p_pref"),
-        col("pnsq").as("p_pnsq")), "probe_id")
-      .join(pn.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("n_emb"), col("pnsq").as("n_pnsq")), "neighbor_id")
-      .select(col("probe_id"), col("neighbor_id"),
-        QuantizedVec.qcosine(col("p_pref"), col("n_emb"),
-          col("p_pnsq"), col("n_pnsq")).as("pcos"))
-    val wS = Window.partitionBy(col("probe_id"))
-      .orderBy(col("pcos").desc, col("neighbor_id"))
-    val short = pscored.withColumn("srank", row_number().over(wS))
-      .filter(col("srank") <= MatShortlist)
-      .select(col("probe_id"), col("neighbor_id"))
-    topkRerank(short, emb)
-  }
-
-  /** IMI-style fully-two-level rung: since round 10 the WHOLE family
-    * assigns through the shared [[twoLevelRouting]] pass; what remains
-    * distinctive here is the PROBE side — queries also route coarse-then-
-    * fine (top [[ImiCoarseProbe]] coarse cells, then the fine lists inside
-    * them) instead of scoring all K fine centroids flat, the full
-    * inverted-multi-index query shape (Babenko & Lempitsky, "The Inverted
-    * Multi-Index", CVPR 2012) for when even the probe batch's K-flat scan
-    * matters (huge K or per-query serving). Candidates and the exact
-    * rerank tail are the family's shared ones; every tiebreak is
-    * (cos desc, id asc). Exercised directly at oracle scales as
-    * `ann_imi_topk`; recall pinned by `IvfRecallSpec`. */
-  def imiTopk(raw: DataFrame, nKnown: Long = -1L): DataFrame = {
-    val n = if (nKnown >= 0) nKnown else raw.count()
-    // routing (three scoring stages) + rerank all reuse the normed corpus
-    val emb = CacheScope.pinned(normed(raw))
-    // the codebook build + assignment are the family-shared two-level
-    // pass; v2c is cached because probe routing below re-reads it
-    val (fineCells, v2c, assigned) =
-      twoLevelRouting(emb, n, shareV2c = true, allowFlat = false)
-    // probes: top ImiCoarseProbe coarse cells, then top NProbe fine lists
-    // inside them
-    val wC = Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("c"))
-    val pCells = v2c.filter(col("vec_id") % probeStride(n) === 0)
-      .withColumn("rn", row_number().over(wC)).filter(col("rn") <= ImiCoarseProbe)
-      .select(col("vec_id").as("probe_id"), col("c"))
-    val pFineScored = pCells.join(broadcast(fineCells), "c")
-      .join(emb.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-        col("nsq").as("p_nsq")), "probe_id")
-      .select(col("probe_id"), col("f"),
-        QuantizedVec.qcosine(col("p_emb"), col("f_emb"),
-          col("p_nsq"), col("f_nsq")).as("fcos"))
-    val wF = Window.partitionBy(col("probe_id")).orderBy(col("fcos").desc, col("f"))
-    val pLists = pFineScored.withColumn("rn", row_number().over(wF))
-      .filter(col("rn") <= nprobeFor(fineListCount(n)))
-      .select(col("probe_id"), col("f"))
-    val cand = pLists.join(assigned, "f")
-      .filter(col("neighbor_id") =!= col("probe_id"))
+    val cand = topPer(hammed.join(broadcast(hcut), "probe_id")
+        .filter(col("ham") <= col("hcut")), "probe_id", BqShortlist, "srank",
+        keepRank = false)(col("ham"), col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"))
     topkRerank(cand, emb)
   }
@@ -1003,6 +929,11 @@ object SimilarityQueries {
       .select(col("doc_id").as("id"), col("text"))
       .join(Tables.load(spark, sfDir, "embeddings")
         .select(col("vec_id").as("id"), col("embedding")), "id")
+
+  /** The hybrid corpus as a [[normed]] frame (id → vec_id). */
+  private def hybridNormed(hybrid: DataFrame): DataFrame =
+    hybrid.select(col("id").as("vec_id"), col("embedding"),
+      QuantizedVec.qnormsq(col("embedding")).as("nsq"))
 
   /** Lexical retrieval leg: df-capped inverted index (tokens with df ∈
     * [2,50] — bounded fan-out), shared-token counts, top-20 per probe.
@@ -1020,10 +951,8 @@ object SimilarityQueries {
       .filter(col("neighbor_id") =!= col("probe_id"))
       .groupBy(col("probe_id"), col("neighbor_id"))
       .agg(count(lit(1)).as("n_shared"))
-    val wT = Window.partitionBy(col("probe_id"))
-      .orderBy(col("n_shared").desc, col("neighbor_id"))
-    tcand.withColumn("text_rank", row_number().over(wT).cast("long"))
-      .filter(col("text_rank") <= 20)
+    topPer(tcand, "probe_id", 20, "text_rank", keepRank = true)(
+      col("n_shared").desc, col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"), col("text_rank"))
   }
 
@@ -1033,10 +962,8 @@ object SimilarityQueries {
       .withColumn("rrf",
         coalesce(lit(1.0) / (col("text_rank") + 60), lit(0.0)) +
           coalesce(lit(1.0) / (col("vec_rank") + 60), lit(0.0)))
-    val wF = Window.partitionBy(col("probe_id"))
-      .orderBy(col("rrf").desc, col("neighbor_id"))
-    fused.withColumn("rank", row_number().over(wF).cast("long"))
-      .filter(col("rank") <= TopK)
+    topPer(fused, "probe_id", TopK, "rank", keepRank = true)(
+      col("rrf").desc, col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"), col("text_rank"),
         col("vec_rank"), col("rrf"), col("rank"))
   }
@@ -1048,13 +975,9 @@ object SimilarityQueries {
     * the corpus, so per-probe cost is constant in n; the lexical leg is
     * the same df-capped inverted index (already corpus-bounded). Fusion
     * and every tiebreak are the shared [[rrfFuse]]. */
-  def hybridIndexedRrf(hybrid: DataFrame, nKnown: Long = -1L): DataFrame = {
-    val n = if (nKnown >= 0) nKnown else hybrid.count()
-    val stride = probeStride(n)
-    val trank = lexicalLeg(hybrid, stride)
-    val emb = CacheScope.pinned(
-      hybrid.select(col("id").as("vec_id"), col("embedding"),
-        QuantizedVec.qnormsq(col("embedding")).as("nsq")))
+  def hybridIndexedRrf(hybrid: DataFrame, n: Long): DataFrame = {
+    val trank = lexicalLeg(hybrid, probeStride(n))
+    val emb = CacheScope.pinned(hybridNormed(hybrid))
     val vrank = topkRerank(sampledCandidates(emb, n), emb, 20)
       .select(col("probe_id"), col("neighbor_id"), col("rank").as("vec_rank"))
     rrfFuse(trank, vrank)
@@ -1064,30 +987,124 @@ object SimilarityQueries {
     * scores every (probe, vector) pair with the broadcast-probe codegen
     * cosine. */
   private def hybridPlainRrf(hybrid: DataFrame, n: Long): DataFrame = {
-    val stride = probeStride(n)
-    val trank = lexicalLeg(hybrid, stride)
-    val nemb = hybrid.select(col("id").as("vec_id"), col("embedding"),
-      QuantizedVec.qnormsq(col("embedding")).as("nsq"))
-    val probes = nemb.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-        col("nsq").as("p_nsq"))
-    val scored = broadcast(probes).join(nemb, col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        QuantizedVec.qcosine(col("p_emb"), col("embedding"),
-          col("p_nsq"), col("nsq")).as("cos"))
-    val wV = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    val vrank = scored.withColumn("vec_rank", row_number().over(wV).cast("long"))
-      .filter(col("vec_rank") <= 20)
+    val nemb = hybridNormed(hybrid)
+    val vrank = flatCosineTopk(nemb, nemb, n, 20, "vec_rank")
       .select(col("probe_id"), col("neighbor_id"), col("vec_rank"))
-    rrfFuse(trank, vrank)
+    rrfFuse(lexicalLeg(hybrid, probeStride(n)), vrank)
   }
 
-  private def ivfCandidates(probeClusters: DataFrame, assigned: DataFrame): DataFrame =
-    probeClusters
-      .join(assigned.select(col("vec_id").as("neighbor_id"), col("label")), "label")
-      .filter(col("neighbor_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("neighbor_id"))
+  // ---- semantic dedup and drift ---------------------------------------
+
+  /** SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
+    * web-scale through semantic deduplication", 2023): semantic near-dedup
+    * over the embedding column with CLUSTER-BOUNDED candidate generation —
+    * cluster the corpus, score pairwise cosine only WITHIN a cluster, and
+    * drop every vector whose similarity to a lower-id same-cluster vector
+    * reaches [[SemTau]]. The clustering is the exact fine-list assignment
+    * the IVF family runs ([[twoLevelRouting]] — coarse-then-fine,
+    * K = n / [[IvfListTarget]] lists), so expected cluster size — and
+    * with it per-vector candidate work — stays constant in n: the
+    * quadratic all-pairs stage never exists, the same banding discipline
+    * as every other dedup candidate generator. Returns one row
+    * per DROPPED vector with its keeper (min same-cluster id above
+    * threshold) and the strongest similarity that doomed it — the dedup
+    * decision list a 100 TB curation pipeline anti-joins against. */
+  def semanticDupes(raw: DataFrame, n: Long): DataFrame = {
+    // self-joined three ways (codebook sample, pair left, pair right):
+    // eager pin, per the shared-frame discipline
+    val emb = CacheScope.pinned(normed(raw))
+    val assigned = twoLevelRouting(emb, n, shareV2c = false)._3
+      .select(col("neighbor_id").as("vec_id"), col("f").as("cluster"))
+    val m = assigned.join(emb, "vec_id")
+    val pairs = m.select(col("cluster"), col("vec_id").as("vec_a"),
+        col("embedding").as("emb_a"), col("nsq").as("nsq_a"))
+      .join(m.select(col("cluster"), col("vec_id").as("vec_b"),
+        col("embedding").as("emb_b"), col("nsq").as("nsq_b")), Seq("cluster"))
+      .filter(col("vec_a") < col("vec_b"))
+      .select(col("cluster"), col("vec_a"), col("vec_b"),
+        QuantizedVec.qcosine(col("emb_a"), col("emb_b"),
+          col("nsq_a"), col("nsq_b")).as("cos"))
+      .filter(col("cos") >= SemTau)
+    pairs.groupBy(col("cluster"), col("vec_b"))
+      .agg(min(col("vec_a")).as("keeper_id"), max(col("cos")).as("max_cos"))
+      .select(col("vec_b").as("vec_id"), col("cluster"),
+        col("keeper_id"), col("max_cos"))
+  }
+
+  /** The drift fixture's deterministic after-arm (the diff family's
+    * in-engine mutation convention): deletes, rotated SEMANTIC edits,
+    * rescaled COSMETIC edits, inserts. Shared by the batch diff and the
+    * streaming consumer twin so the two score the identical snapshot. */
+  def driftAfterArm(before: DataFrame): DataFrame = {
+    val dbl = expr("transform(embedding, v -> CAST(v AS DOUBLE))")
+    val rotated = expr(s"""transform(sequence(1, $Dim),
+      i -> CAST(element_at(embedding, CAST((i + ${DriftRot - 1}) % $Dim + 1 AS INT)) AS DOUBLE))""")
+    val scaled = expr("transform(embedding, v -> CAST(v AS DOUBLE) * CAST(1.01 AS DOUBLE))")
+    before.filter(col("vec_id") % 17 =!= 2)
+      .select(col("vec_id"),
+        when(col("vec_id") % 17 === 5, rotated)
+          .when(col("vec_id") % 17 === 11, scaled)
+          .otherwise(dbl).as("embedding"))
+      .unionByName(before.filter(col("vec_id") % 17 === 8)
+        .select((col("vec_id") + DriftInsertBand).as("vec_id"),
+          dbl.as("embedding")))
+  }
+
+  /** SEMANTIC DRIFT DIFF — the diff family (reference's 5-state keyed
+    * snapshot diff, `extract_data.go:161-184`) crossed with the embedding
+    * column: which rows changed, and of the UPDATED ones, which changed
+    * MEANINGFULLY — the CDC-for-RAG primitive ("which docs need
+    * re-embedding/re-indexing since the last index build" vs "which were
+    * cosmetic touches the index can skip"). The after-arm is the
+    * deterministic in-engine mutation convention every diff_* uses:
+    * deletes (`vec_id % 17 = 2`), SEMANTIC edits (dims rotated left
+    * [[DriftRot]] — an uncorrelated re-embedding), COSMETIC edits (every
+    * component × 1.01 — a renormalization, cosine-invariant), inserts
+    * (copies at +[[DriftInsertBand]]).
+    *
+    * Scale shape: ONE full-outer equi-join of the two quantized component
+    * frames on (vec_id, d) IS simultaneously the diff (presence/equality
+    * per key) and the drift score (dot + both norms accumulate in the
+    * same keyed aggregation) — there is no second corpus pass to fetch
+    * vectors for the delta, and the output is delta-sized (NOT_MODIFIED
+    * keys drop in the same aggregation's filter). Strictly fewer passes
+    * than diff-then-rejoin; plan-gated (no cartesian, no window, no
+    * corpus re-join after the diff). The fixture's after-arm mutation
+    * reads the parquet twice (mutated body + insert band union); in
+    * production the after side is the incoming snapshot — one scan each.
+    * Classification thresholds compare identical doubles in both engines
+    * ([[DriftTau]] sits far from both planted classes). */
+  def semanticDrift(before: DataFrame): DataFrame = {
+    val after = driftAfterArm(before)
+    val bq = components(before, Seq("vec_id"), "qv")
+    val aq = components(after, Seq("vec_id"), "qv")
+    val j = bq.select(col("vec_id"), col("d"), col("qv").as("bqv"))
+      .join(aq.select(col("vec_id"), col("d"), col("qv").as("aqv")),
+        Seq("vec_id", "d"), "full_outer")
+    val g = j.groupBy(col("vec_id"))
+      .agg(count(col("bqv")).as("nb"), count(col("aqv")).as("na"),
+        sum(col("bqv") * col("aqv")).as("dot"),
+        sum(col("bqv") * col("bqv")).as("bn"),
+        sum(col("aqv") * col("aqv")).as("an"),
+        max(abs(col("bqv") - col("aqv"))).as("maxdiff"))
+    // nb =!= na catches a same-key row whose vectors differ ONLY in
+    // dimensionality (equal overlap ⇒ maxdiff = 0 but a component was
+    // added/removed) — unreachable at the fixed-Dim fixture, a real
+    // UPDATED for variable-length inputs. Mirrored in the oracle WHERE.
+    g.filter(col("nb") === 0 || col("na") === 0 || col("maxdiff") > 0 ||
+        col("nb") =!= col("na"))
+      .select(col("vec_id"),
+        when(col("nb") === 0, SnapshotDiff.Inserted)
+          .when(col("na") === 0, SnapshotDiff.Deleted)
+          .otherwise(SnapshotDiff.Updated).as("status"),
+        when(col("nb") > 0 && col("na") > 0,
+          col("dot").cast("double") /
+            (sqrt(col("bn").cast("double")) * sqrt(col("an").cast("double"))))
+          .as("cos"))
+      .withColumn("drift",
+        when(col("status") === SnapshotDiff.Updated,
+          when(col("cos") < DriftTau, "semantic").otherwise("cosmetic")))
+  }
 
   // ---- k-means (Lloyd) -----------------------------------------------
 
@@ -1129,24 +1146,11 @@ object SimilarityQueries {
     // embeds the whole unrolled codebook lineage — a truncated leaf keeps
     // those plans and their task binaries flat, the same discipline as
     // GraphOps' static frames
-    val comp = CacheScope.pinned(
-      quantizedComponents(raw.withColumn("label", lit(0))).drop("label"))
-    val wC = Window.orderBy(col("__h"), col("vec_id"))
-    val seedCodes = raw.select(col("vec_id"))
-      .withColumn("__h", Hashing.hashHex(col("vec_id").cast("string")))
-      .orderBy(col("__h"), col("vec_id")).limit(k)
-      .withColumn("c", (row_number().over(wC) - 1).cast("long"))
-      .select(col("vec_id").as("__sv"), col("c"))
-    var cb = comp.join(broadcast(seedCodes), col("vec_id") === col("__sv"))
+    val comp = CacheScope.pinned(components(raw, Seq("vec_id"), "qv"))
+    val cb0 = comp.join(broadcast(seedCodes(raw, k)), col("vec_id") === col("__sv"))
       .select(col("c"), col("d"), col("qv").as("qc"))
-    (1 to iters).foreach { _ =>
-      val assign = kmArgmin(kmDist(comp, cb))
-      val means = assign.join(comp, "vec_id")
-        .groupBy(col("cluster"), col("d"))
-        .agg(floor(sum(col("qv")).cast("double") / count(lit(1))).cast("long").as("qm"))
-      cb = cb.join(means.select(col("cluster").as("c"), col("d"), col("qm")),
-          Seq("c", "d"), "left_outer")
-        .select(col("c"), col("d"), coalesce(col("qm"), col("qc")).as("qc"))
+    val cb = (1 to iters).foldLeft(cb0) { (cb, _) =>
+      lloydUpdate(cb, kmArgmin(kmDist(comp, cb)).join(comp, "vec_id"), "cluster")
     }
     kmArgmin(kmDist(comp, cb))
   }
@@ -1166,21 +1170,17 @@ object SimilarityQueries {
     * `ann_ivf_topk` runs; [[queryIvfIndex]] reproduces its results from
     * the persisted index, pinned by spec. */
   def buildIvfIndex(spark: SparkSession, sfDir: String, dir: String): Unit = {
-    val qn = quantizedComponents(Tables.load(spark, sfDir, "embeddings")).persist()
-    val (cq, cnorms) = centroids(qn)
-    val norms = vecNorms(qn)
-    val assigned = topClusters(centroidScores(qn.drop("label"), norms, cq, cnorms), 1)
-    cq.write.mode("overwrite").parquet(s"$dir/centroids")
-    cnorms.write.mode("overwrite").parquet(s"$dir/centroid_norms")
-    assigned.write.mode("overwrite").parquet(s"$dir/assignment")
-    qn.unpersist()
+    val qn = components(Tables.load(spark, sfDir, "embeddings"), Seq("vec_id", "label"), "qv")
+      .persist()
+    try {
+      val (cq, cnorms) = centroids(qn)
+      val assigned = topClusters(centroidScores(qn.drop("label"), vecNorms(qn), cq, cnorms), 1)
+      cq.write.mode("overwrite").parquet(s"$dir/centroids")
+      cnorms.write.mode("overwrite").parquet(s"$dir/centroid_norms")
+      assigned.write.mode("overwrite").parquet(s"$dir/assignment")
+    } finally qn.unpersist()
   }
 
-  /** Query path against a persisted IVF index: route each probe to its
-    * NProbe nearest centroids (probe components × the broadcast centroid
-    * table — tiny), pull ONLY those clusters' vectors through the
-    * assignment table, exact-rerank with the codegen dot. The corpus scan
-    * cost is NProbe/K of the lake; the index build never re-runs. */
   /** Incremental index maintenance: assign NEW vectors against the
     * PERSISTED centroids and append to the assignment table — no rebuild,
     * existing assignments untouched (centroids are fixed post-build: the
@@ -1192,22 +1192,24 @@ object SimilarityQueries {
   def appendToIvfIndex(spark: SparkSession, dir: String, newVecs: DataFrame): Unit = {
     val cq = spark.read.parquet(s"$dir/centroids")
     val cnorms = spark.read.parquet(s"$dir/centroid_norms")
-    val qn = quantizedComponents(newVecs)
+    val qn = components(newVecs, Seq("vec_id", "label"), "qv")
     val assigned = topClusters(centroidScores(qn.drop("label"), vecNorms(qn), cq, cnorms), 1)
     assigned.write.mode("append").parquet(s"$dir/assignment")
   }
 
+  /** Query path against a persisted IVF index: route each probe to its
+    * NProbe nearest centroids (probe components × the broadcast centroid
+    * table — tiny), pull ONLY those clusters' vectors through the
+    * assignment table, exact-rerank with the codegen dot. The corpus scan
+    * cost is NProbe/K of the lake; the index build never re-runs. */
   def queryIvfIndex(spark: SparkSession, sfDir: String, dir: String): DataFrame = {
     val raw = Tables.load(spark, sfDir, "embeddings")
     val cq = spark.read.parquet(s"$dir/centroids")
     val cnorms = spark.read.parquet(s"$dir/centroid_norms")
-    val assigned = spark.read.parquet(s"$dir/assignment")
-    val pqn = quantizedComponents(raw.filter(
-      col("vec_id") % probeStride(Tables.countOf(spark, sfDir, "embeddings")) === 0))
-      .drop("label")
-    val probeClusters = topClusters(centroidScores(pqn, vecNorms(pqn), cq, cnorms), NProbe)
-      .select(col("vec_id").as("probe_id"), col("label"))
-    topkRerank(ivfCandidates(probeClusters, assigned), normed(raw))
+    val pqn = components(probeBatch(raw, Tables.countOf(spark, sfDir, "embeddings")),
+      Seq("vec_id"), "qv")
+    labelRouted(centroidScores(pqn, vecNorms(pqn), cq, cnorms),
+      spark.read.parquet(s"$dir/assignment"), raw)
   }
 
   val queries: Map[String, Q] = Map(
@@ -1260,19 +1262,8 @@ object SimilarityQueries {
       val corpusF = raw.filter(col("label") % 3 === 0)
         .select(col("vec_id"), col("label"), col("embedding"),
           QuantizedVec.qnormsq(col("embedding")).as("nsq"))
-      val probes = normed(raw).filter(
-        col("vec_id") % probeStride(Tables.countOf(spark, sfDir, "embeddings")) === 0)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-          col("nsq").as("p_nsq"))
-      val scored = broadcast(probes)
-        .join(corpusF, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("label"),
-          QuantizedVec.qcosine(col("p_emb"), col("embedding"),
-            col("p_nsq"), col("nsq")).as("cos"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos").desc, col("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= TopK)
+      flatCosineTopk(normed(raw), corpusF, Tables.countOf(spark, sfDir, "embeddings"),
+        TopK, "rank", col("label"))
     }),
     // IVF-style ANN: the 100 TB path next to the brute-force baseline.
     // Index build = one deterministic centroid per `label` cluster (the
@@ -1297,25 +1288,19 @@ object SimilarityQueries {
     "ann_ivf_topk" -> ((spark, sfDir) => {
       val raw = Tables.load(spark, sfDir, "embeddings")
       val nVecs = Tables.countOf(spark, sfDir, "embeddings")
-      if (nVecs > IvfLabelPathMax) ivfSampledTopk(raw, nVecs)
-      else {
+      bySize(nVecs)(ivfSampledTopk(raw, nVecs), {
         // quantized components feed centroid build, assignment, and routing
-        val qn = quantizedComponents(raw).transform(CacheScope.cached)
+        val qn = components(raw, Seq("vec_id", "label"), "qv").transform(CacheScope.cached)
         // --- index build: per-label quantized mean, exact in both engines
         // (sum < 2^53 so the double division is correctly rounded IEEE)
         val (cq, cnorms) = centroids(qn)
-        val norms = vecNorms(qn)
         // --- assignment scores: nearest centroids via the d equi-join
         // (relational index build — the per-query hot path never does this)
-        val ascore = centroidScores(qn.drop("label"), norms, cq, cnorms)
+        val ascore = centroidScores(qn.drop("label"), vecNorms(qn), cq, cnorms)
           .transform(CacheScope.cached) // consumed twice (assignment + probe routing): score once
-        val assigned = topClusters(ascore, 1)
-        val probeClusters = topClusters(
-            ascore.filter(col("vec_id") % probeStride(nVecs) === 0), NProbe)
-          .select(col("vec_id").as("probe_id"), col("label"))
         // --- candidate gen (label equi-join) + exact codegen rerank
-        topkRerank(ivfCandidates(probeClusters, assigned), normed(raw))
-      }
+        labelRouted(probeBatch(ascore, nVecs), topClusters(ascore, 1), raw)
+      })
     }),
     // The sampled-codebook IVF rung EXERCISED DIRECTLY at oracle scales:
     // same ivfSampledTopk the auto-selected ann_ivf_topk serves with above
@@ -1356,8 +1341,7 @@ object SimilarityQueries {
     "ann_matryoshka_topk" -> ((spark, sfDir) => {
       val raw = Tables.load(spark, sfDir, "embeddings")
       val nVecs = Tables.countOf(spark, sfDir, "embeddings")
-      if (nVecs > IvfLabelPathMax) matryoshkaIvfTopk(raw, nVecs)
-      else matryoshkaPlainTopk(raw, nVecs)
+      bySize(nVecs)(matryoshkaIvfTopk(raw, nVecs), matryoshkaPlainTopk(raw, nVecs))
     }),
     // Binary-quantization rung — see [[bqTopk]]: 1 sign bit per dim (32×
     // memory compression, XOR+popcount candidate scoring), Hamming
@@ -1410,18 +1394,7 @@ object SimilarityQueries {
     "ann_pq_topk" -> ((spark, sfDir) => {
       val raw = Tables.load(spark, sfDir, "embeddings")
       val n = Tables.countOf(spark, sfDir, "embeddings")
-      if (n > IvfLabelPathMax) ivfAdcTopk(raw, n)
-      else {
-        val (dt, enc) = pqStages(raw, n)
-        // full-code scan: every (neighbor, m) row meets each probe's
-        // broadcast lookup table — the n-sized side never shuffles
-        val adc = enc
-          .join(broadcast(dt), Seq("em", "code"))
-          .filter(col("neighbor_id") =!= col("probe_id"))
-          .groupBy(col("probe_id"), col("neighbor_id"))
-          .agg(sum(col("dist2")).as("adc"))
-        pqRerank(adc, raw, pqShortlistFor(n))
-      }
+      bySize(n)(ivfAdcTopk(raw, n), pqPlainTopk(raw, n))
     }),
     // The IVFADC rung exercised directly at oracle scales (same pattern as
     // ann_ivf_sampled): the branch that serves ann_pq_topk past
@@ -1461,8 +1434,7 @@ object SimilarityQueries {
       val hybrid = hybridCorpus(spark, sfDir)
         .transform(CacheScope.cached) // both retrieval legs scan it
       val n = CacheScope.sessionCount("hybrid", sfDir, spark)(hybrid.count())
-      if (n > IvfLabelPathMax) hybridIndexedRrf(hybrid, n)
-      else hybridPlainRrf(hybrid, n)
+      bySize(n)(hybridIndexedRrf(hybrid, n), hybridPlainRrf(hybrid, n))
     }),
     // The indexed-hybrid rung exercised directly at oracle scales (same
     // pattern as ann_ivf_sampled / ann_ivfadc_topk).
@@ -1483,7 +1455,7 @@ object SimilarityQueries {
       Tables.load(spark, sfDir, "embeddings").createOrReplaceTempView("embeddings")
       val corpus = spark.sql(vecCorpusSql)
       val n = CacheScope.sessionCount("veccorpus", sfDir, spark)(corpus.count())
-      lshNearDupPairs(corpus, if (n > IvfLabelPathMax) LshBands else 1)
+      lshNearDupPairs(corpus, bySize(n)(LshBands, 1))
     }),
     // Semantic drift diff over the embeddings table — see [[semanticDrift]].
     "diff_semantic_drift" -> ((spark, sfDir) =>

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * SURVEY §7.4.1/3): the reference's map insert keeps one nondeterministic
   * winner per key (`extract_data.go:81`); this operator instead keeps every
   * pairing (join multiplicity) — deterministic and information-preserving,
-  * with [[statusCounts]]/[[report]] counting distinct keys. The fixture
+  * with [[statusCounts]] counting distinct keys. The fixture
   * lineitem table has 1,161 duplicate PK pairs, so this path is exercised
   * by the oracle gate, not just documented.
   */
@@ -570,12 +570,6 @@ object SnapshotDiff {
       df.filter(bucketOf(col(Normalize.KeyCol), nBuckets).isInCollection(dirty))
     diffNormalized(oneRowPerKey(prune(bn)), oneRowPerKey(prune(an)))
   }
-
-  /** Report aggregate: per-status logical change counts for one table's
-    * diff (UPDATED emits two physical rows per key — count keys once). */
-  def report(diffed: DataFrame): DataFrame =
-    diffed.groupBy(col("diff_status"))
-      .agg(countDistinct(col(Normalize.KeyCol)).as("n_keys"))
 
   /** Fast report path: per-status distinct-key counts straight off the
     * classification join — skips building, exploding and re-aggregating the

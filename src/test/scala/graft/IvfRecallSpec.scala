@@ -23,6 +23,16 @@ class IvfRecallSpec extends SparkTestBase {
     }
   }
 
+  test("buildIvfIndex releases its component cache when a write fails") {
+    spark.catalog.clearCache()
+    // a regular file where the index directory should be: the first write throws
+    val file = java.io.File.createTempFile("graft_ivf_file", ".bin")
+    try {
+      intercept[Exception](SimilarityQueries.buildIvfIndex(spark, Sf, file.getPath))
+      assert(spark.sharedState.cacheManager.isEmpty, "component frame left cached")
+    } finally file.delete()
+  }
+
   test("incremental append: new vectors land in their identical twin's cluster") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
     try {
@@ -62,7 +72,7 @@ class IvfRecallSpec extends SparkTestBase {
     val raw = Tables.load(spark, Sf, "embeddings")
     val exact = SimilarityQueries.queries("ann_cosine_topk")(spark, Sf)
       .select(col("probe_id"), col("neighbor_id"))
-    val sampled = SimilarityQueries.ivfSampledTopk(raw)
+    val sampled = SimilarityQueries.ivfSampledTopk(raw, raw.count())
       .select(col("probe_id"), col("neighbor_id"))
     val nExact = exact.count()
     val hit = exact.join(sampled, Seq("probe_id", "neighbor_id"), "left_semi").count()
@@ -74,7 +84,7 @@ class IvfRecallSpec extends SparkTestBase {
     // and it is the same function the registered oracle row exercises
     val viaRegistry = SparkEntry.queries("ann_ivf_sampled")(spark, Sf)
       .collect().map(_.toSeq).toSet
-    val direct = SimilarityQueries.ivfSampledTopk(raw).collect().map(_.toSeq).toSet
+    val direct = SimilarityQueries.ivfSampledTopk(raw, raw.count()).collect().map(_.toSeq).toSet
     assert(viaRegistry == direct && viaRegistry.nonEmpty)
   }
 
@@ -126,7 +136,7 @@ class IvfRecallSpec extends SparkTestBase {
     val raw = Tables.load(spark, Sf, "embeddings")
     val exact = SimilarityQueries.queries("ann_cosine_topk")(spark, Sf)
       .select(col("probe_id"), col("neighbor_id"))
-    val routed = SimilarityQueries.matryoshkaIvfTopk(raw)
+    val routed = SimilarityQueries.matryoshkaIvfTopk(raw, raw.count())
       .select(col("probe_id"), col("neighbor_id"))
     val nExact = exact.count()
     val hit = exact.join(routed, Seq("probe_id", "neighbor_id"), "left_semi").count()
@@ -138,7 +148,7 @@ class IvfRecallSpec extends SparkTestBase {
     // and it is the same function the registered oracle row exercises
     val viaRegistry = SparkEntry.queries("ann_matryoshka_ivf")(spark, Sf)
       .collect().map(_.toSeq).toSet
-    val direct = SimilarityQueries.matryoshkaIvfTopk(raw).collect().map(_.toSeq).toSet
+    val direct = SimilarityQueries.matryoshkaIvfTopk(raw, raw.count()).collect().map(_.toSeq).toSet
     assert(viaRegistry == direct && viaRegistry.nonEmpty)
   }
 
@@ -149,7 +159,7 @@ class IvfRecallSpec extends SparkTestBase {
     val raw = Tables.load(spark, Sf, "embeddings")
     val exact = SimilarityQueries.queries("ann_cosine_topk")(spark, Sf)
       .select(col("probe_id"), col("neighbor_id"))
-    val imi = SimilarityQueries.imiTopk(raw)
+    val imi = SimilarityQueries.imiTopk(raw, raw.count())
       .select(col("probe_id"), col("neighbor_id"))
     val nExact = exact.count()
     val hit = exact.join(imi, Seq("probe_id", "neighbor_id"), "left_semi").count()
@@ -160,7 +170,7 @@ class IvfRecallSpec extends SparkTestBase {
     // and it is the same function the registered oracle row exercises
     val viaRegistry = SparkEntry.queries("ann_imi_topk")(spark, Sf)
       .collect().map(_.toSeq).toSet
-    val direct = SimilarityQueries.imiTopk(raw).collect().map(_.toSeq).toSet
+    val direct = SimilarityQueries.imiTopk(raw, raw.count()).collect().map(_.toSeq).toSet
     assert(viaRegistry == direct && viaRegistry.nonEmpty)
   }
 

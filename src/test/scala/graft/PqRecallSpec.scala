@@ -57,7 +57,7 @@ class PqRecallSpec extends SparkTestBase {
     // looser bar than the full scan's)
     val raw = Tables.load(spark, Sf, "embeddings")
     val exact = exactL2TopK
-    val ivfadc = SimilarityQueries.ivfAdcTopk(raw)
+    val ivfadc = SimilarityQueries.ivfAdcTopk(raw, raw.count())
       .select(col("probe_id"), col("neighbor_id"))
     val nExact = exact.count()
     val hit = exact.join(ivfadc, Seq("probe_id", "neighbor_id"), "left_semi").count()
@@ -70,7 +70,7 @@ class PqRecallSpec extends SparkTestBase {
     // and it is the same function the registered oracle row exercises
     val viaRegistry = SparkEntry.queries("ann_ivfadc_topk")(spark, Sf)
       .collect().map(_.toSeq).toSet
-    val direct = SimilarityQueries.ivfAdcTopk(raw).collect().map(_.toSeq).toSet
+    val direct = SimilarityQueries.ivfAdcTopk(raw, raw.count()).collect().map(_.toSeq).toSet
     assert(viaRegistry == direct && viaRegistry.nonEmpty)
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.QuantizedVec
+import graft.operators.SimilarityQueries
 import org.apache.spark.sql.functions._
 
 /** The custom Catalyst expressions: codegen path vs a plain-Scala reference
@@ -39,6 +40,25 @@ class QuantizedVecSpec extends SparkTestBase {
     val df = Seq((Seq(1.25f, -1.25f), Seq(1.0f, 1.0f))).toDF("a", "b")
     val dot = df.select(QuantizedVec.qdot($"a", $"b", scale = 2.0)).as[Long].head()
     assert(dot == 3L * 2L + -2L * 2L) // q(1.25)=3, q(-1.25)=-2, q(1.0)=2
+  }
+
+  test("ann_filtered_topk equals a driver-side exact top-10 over the label % 3 = 0 corpus") {
+    val rows = Tables.load(spark, Sf, "embeddings")
+      .select(col("vec_id"), col("label"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getAs[Number](1).longValue, r.getSeq[Float](2)))
+    def cos(a: Seq[Float], b: Seq[Float]): Double =
+      refDot(a, b).toDouble / (math.sqrt(refNorm(a).toDouble) * math.sqrt(refNorm(b).toDouble))
+    val stride = SimilarityQueries.probeStride(rows.length.toLong)
+    val corpus = rows.filter(_._2 % 3 == 0)
+    val expected = rows.filter(_._1 % stride == 0).flatMap { case (p, _, pe) =>
+      corpus.filter(_._1 != p).map { case (v, _, e) => (v, cos(pe, e)) }
+        .sortBy { case (v, c) => (-c, v) }.take(SimilarityQueries.TopK)
+        .zipWithIndex.map { case ((v, _), i) => (p, v, i + 1L) }
+    }.toSet
+    val got = SparkEntry.queries("ann_filtered_topk")(spark, Sf)
+      .select(col("probe_id"), col("neighbor_id"), col("rank")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(rows.length == 500 && expected.nonEmpty && got == expected)
   }
 
   test("qcosine of identical vectors is 1.0") {
