@@ -9,7 +9,8 @@ import graft.TableDef
   * snapshots.
   */
 object DiffOracle {
-  private def norm(c: String): String = s"COALESCE(CAST($c AS VARCHAR), '<NULL>')"
+  private def norm(c: String): String =
+    s"COALESCE(CAST($c AS VARCHAR), '${Normalize.NullSentinel}')"
 
   /** Normalized-snapshot CTE body: stringify-all + NULL sentinel + `__key`
     * (mirrors [[Normalize.withKey]]). */
@@ -144,12 +145,12 @@ object DiffOracle {
   }
 
   /** Oracle twin of [[SnapshotDiff.merkleSummary]]: same 60-bit md5-derived
-    * row hashes, same exact (HUGEINT) sum reduced mod 10¹⁸, same
-    * hash-mod-bucket routing — dirty buckets only. */
+    * hashes of the [[RowCodec.packSql]] row, same exact (HUGEINT) sum
+    * reduced mod 10¹⁸, same hash-mod-bucket routing — dirty buckets only. */
   def merkleSummarySql(t: TableDef, afterSql: String, pk: Seq[String],
       nBuckets: Int): String = {
     import graft.functions.Hashing.hash64Sql
-    val rowH = hash64Sql(s"concat_ws(chr(1), ${t.cols.mkString(", ")})")
+    val rowH = hash64Sql(RowCodec.packSql(t.cols))
     def side(src: String, rowsName: String, sumName: String) =
       s"""SELECT ${hash64Sql("__key")} % $nBuckets AS bucket,
          |  COUNT(*) AS $rowsName,
@@ -210,12 +211,12 @@ object DiffOracle {
     diffSql(t, s"SELECT * FROM ${t.name}", t.pk)
 
   /** Oracle twin of [[SnapshotDiff.threeWayMerge]]: same fingerprint
-    * reduction (md5 over normalized columns, chr(1) separator) and the same
-    * presence/equality CASE over two chained FULL JOINs. */
+    * reduction ([[RowCodec.fingerprintSql]] over the normalized columns)
+    * and the same presence/equality CASE over two chained FULL JOINs. */
   def threeWaySql(t: TableDef, leftSql: String, rightSql: String, pk: Seq[String]): String = {
     def fpSel(src: String, out: String) =
       s"""SELECT concat(${pk.map(norm).mkString(", ")}) AS __key,
-         |  md5(concat_ws(chr(1), ${t.cols.map(norm).mkString(", ")})) AS $out
+         |  ${RowCodec.fingerprintSql(t.cols.map(norm))} AS $out
          |FROM $src""".stripMargin
     s"""WITH left_t AS (
        |$leftSql

@@ -240,8 +240,7 @@ object DiffQueries {
       "diff_changefeed" -> ((spark, sfDir) => {
         Tables.diffable.map { t =>
           SnapshotDiff.feedCompact(
-            Tables.load(spark, sfDir, t.name), after(spark, sfDir, t),
-            t.pk, t.name, t.cols)
+            Tables.load(spark, sfDir, t.name), after(spark, sfDir, t), t.pk, t.name)
         }.reduce(_.unionByName(_))
       }),
       // The same before→after transition consumed as a LIVE two-phase CDC
@@ -683,7 +682,7 @@ object DiffQueries {
       "diff_changefeed" -> Tables.diffable.map { t =>
         val inner = DiffOracle.diffSql(t, Mutations.afterSql(t.name), t.pk)
         s"""SELECT '${t.name}' AS table_name, __key, diff_status, modified_columns, side,
-           |  md5(concat_ws(chr(1), ${t.cols.mkString(", ")})) AS row_fp
+           |  ${RowCodec.fingerprintSql(t.cols)} AS row_fp
            |FROM (
            |$inner
            |) ${t.name}_feed""".stripMargin

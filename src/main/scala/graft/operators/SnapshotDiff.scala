@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * small) and nothing ever materializes on the driver. At 100 TB: both
   * snapshots shuffle-partition by `__key` hash — one shuffle each, no
   * driver state. Classification compares each side's packed
-  * normalized row as ONE codegen'd string equality (r13 — see
+  * normalized row ([[RowCodec]]) as ONE codegen'd string equality (r13 — see
   * [[classifyNormalized]] for the byte accounting); the positional
   * per-column compare runs only on UPDATED rows.
   *
@@ -45,38 +45,28 @@ object SnapshotDiff {
   val Updated = "UPDATED"
   val NotModified = "NOT_MODIFIED"
 
-  /** The classification join shared by [[diff]] and [[statusCounts]]:
-    * one row per key-pairing with `diff_status`, `modified_columns`, and
-    * both sides' PACKED normalized rows (`__b` / `__a` — one U+0001-joined
-    * string each; consumers re-split on emission). */
+  /** The classification join shared by [[diff]], [[feedCompact]] and
+    * [[statusCounts]]: one row per key-pairing with `diff_status`,
+    * `modified_columns`, and both sides' [[RowCodec.pack]]ed normalized
+    * rows (`__b` / `__a`; consumers unpack on emission). */
   private def classified(before: DataFrame, after: DataFrame, pk: Seq[String]): DataFrame =
     classifyNormalized(Normalize.withKey(before, pk), Normalize.withKey(after, pk))
 
   /** Same classification over already-normalized inputs (each: data columns
     * stringified + `__key`). */
   private def classifyNormalized(bn: DataFrame, an: DataFrame): DataFrame = {
-    val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
+    val cols = RowCodec.valueCols(bn)
     // r13 (guide §2.3, shuffle fewer bytes): each side packs its normalized
-    // columns into ONE U+0001-joined string before the exchange instead of
-    // shipping n individual string columns — every UnsafeRow field costs an
-    // 8-byte offset/size word on top of its bytes, so the packed row cuts
-    // the full-outer join's shuffle width ~35% on an 11-column lineitem
-    // row (and shrinks the sort-merge sort/spill rows identically).
-    // Separator injectivity (values never contain U+0001) is the SAME
-    // assumption every fingerprint in this file has always made (row_fp,
-    // merkle checksums, three-way fps are md5/hash64 over the identical
-    // concat); fixtures are audited clean at every SF. Under it:
-    //   - packed-string equality ⇔ the former element-wise compare, so
-    //     classification (F2) is unchanged — and becomes ONE codegen'd
-    //     string compare instead of an n-branch when-tree per row;
-    //   - split(packed) roundtrips the exact per-column values, so the
-    //     positional modified-column list (F1) and every consumer's
-    //     emission are unchanged. The interpreted zip_with/filter for F1
-    //     runs ONLY on UPDATED rows (CaseWhen branches evaluate lazily) —
-    //     the round-4 finding that killed the first packed form.
+    // columns into ONE string before the exchange instead of shipping n
+    // individual string columns — every UnsafeRow field costs an 8-byte
+    // offset/size word on top of its bytes, so the packed row cuts the
+    // full-outer join's shuffle width ~35% on an 11-column lineitem row
+    // (and shrinks the sort-merge sort/spill rows identically). Under the
+    // codec's separator assumption, packed-string equality is the
+    // element-wise compare, so classification (F2) is ONE codegen'd string
+    // compare instead of an n-branch when-tree per row.
     def pack(df: DataFrame, out: String): DataFrame =
-      df.select(col(Normalize.KeyCol),
-        concat_ws("\u0001", cols.map(col): _*).as(out))
+      df.select(col(Normalize.KeyCol), RowCodec.pack(cols).as(out))
     val j = pack(bn, "__b").join(pack(an, "__a"), Seq(Normalize.KeyCol), "full_outer")
 
     // Normalized values are never null, so a null packed side ⇔ the key
@@ -86,20 +76,40 @@ object SnapshotDiff {
       .when(col("__b") === col("__a"), NotModified)
       .otherwise(Updated)
 
-    // F1: positional comparison over the re-split values; comma-joined
-    // names of differing columns, in column order (ModifiedColumnIndex,
-    // extract_data.go:174-183). split(_, sep, -1) keeps trailing empties,
-    // so each side re-yields exactly cols.size values.
-    val names = array(cols.map(lit(_)): _*)
-    val neq = zip_with(split(col("__b"), "\\u0001", -1),
-      split(col("__a"), "\\u0001", -1), (bv, av) => bv =!= av)
-    val modList = concat_ws(",",
-      filter(zip_with(names, neq, (n, d) => when(d, n)), x => x.isNotNull))
-
+    // F1 runs ONLY on UPDATED rows (CaseWhen branches evaluate lazily) —
+    // the round-4 finding that killed the first packed form.
     j.withColumn("diff_status", status)
       .withColumn("modified_columns",
-        when(status === Updated, modList).otherwise(lit("")))
+        when(status === Updated, RowCodec.modifiedColumns(cols, col("__b"), col("__a")))
+          .otherwise(lit("")))
   }
+
+  /** Changed-row emission over [[classifyNormalized]]'s join, shared by
+    * [[diffNormalized]] and [[feedCompact]]: one row per emitted side,
+    * `(__key, diff_status, modified_columns, __r)` with `__r =
+    * struct(side, packed)`. UPDATED explodes into its before+after pair
+    * (the reference emits before first, `extract_data.go:226-228`; order is
+    * carried by `side`); NOT_MODIFIED explodes to zero rows (F3). `side`
+    * and `packed` stay in the struct so that each consumer reads them in
+    * its own final projection, after the explode. */
+  private def changedRows(j: DataFrame): DataFrame = {
+    val status = col("diff_status")
+    def sideRow(side: String, packed: String): Column =
+      struct(lit(side).as("side"), col(packed).as("packed"))
+    val rows = when(status === Inserted, array(sideRow("AFTER", "__a")))
+      .when(status === Deleted, array(sideRow("BEFORE", "__b")))
+      .when(status === Updated, array(sideRow("BEFORE", "__b"), sideRow("AFTER", "__a")))
+      .otherwise(array())
+    j.select(col(Normalize.KeyCol), status.as("diff_status"), col("modified_columns"),
+      explode(rows).as("__r"))
+  }
+
+  /** `df` with `__r.packed` unpacked into the named value columns, selected
+    * between `head` and `tail` — one codegen split per emitted row. */
+  private def unpacked(df: DataFrame, cols: Seq[String], head: Seq[Column],
+      tail: Seq[Column]): DataFrame =
+    df.withColumn("__vals", RowCodec.unpack(col("__r.packed")))
+      .select(head ++ cols.zipWithIndex.map { case (c, i) => col("__vals")(i).as(c) } ++ tail: _*)
 
   /** Full diff. `before`/`after` must share the same schema (the harness
     * always diffs two snapshots of one table; the reference's column-count-
@@ -110,40 +120,10 @@ object SnapshotDiff {
 
   /** Full diff over already-normalized snapshots (data columns stringified +
     * `__key`). */
-  private def diffNormalized(bn: DataFrame, an: DataFrame): DataFrame = {
-    val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
-    val j = classifyNormalized(bn, an)
-    val status = col("diff_status")
-    val modified = col("modified_columns")
-
-    // emitted structs carry the packed side string; the final projection
-    // re-splits it into the stringified columns — one codegen split per
-    // EMITTED row (changed rows only; NOT_MODIFIED explodes to zero rows,
-    // the F3 filter), where the pre-r13 form shipped every column of every
-    // joined row through the exchange.
-    def sideRow(side: String, packed: Column): Column =
-      struct(lit(side).as("side"), packed.as("packed"))
-
-    // Single-pass emission: UPDATED explodes into its before+after pair
-    // (reference emits before first, extract_data.go:226-228 — order is
-    // carried by `side`).
-    val rows = when(status === Inserted, array(sideRow("AFTER", col("__a"))))
-      .when(status === Deleted, array(sideRow("BEFORE", col("__b"))))
-      .when(status === Updated,
-        array(sideRow("BEFORE", col("__b")), sideRow("AFTER", col("__a"))))
-      .otherwise(array())
-
-    j.select(
-        col(Normalize.KeyCol),
-        status.as("diff_status"),
-        modified.as("modified_columns"),
-        explode(rows).as("__r"))
-      .withColumn("__vals", split(col("__r.packed"), "\\u0001", -1))
-      .select(
-        Seq(col(Normalize.KeyCol), col("diff_status"), col("modified_columns"),
-          col("__r.side").as("side")) ++
-          cols.zipWithIndex.map { case (c, i) => col("__vals")(i).as(c) }: _*)
-  }
+  private def diffNormalized(bn: DataFrame, an: DataFrame): DataFrame =
+    unpacked(changedRows(classifyNormalized(bn, an)), RowCodec.valueCols(bn),
+      Seq(col(Normalize.KeyCol), col("diff_status"), col("modified_columns"),
+        col("__r.side").as("side")), Nil)
 
   /** Reference map semantics (`extract_data.go:81`): ONE row per key — a Go
     * map insert keeps a nondeterministic winner among duplicate keys; here
@@ -156,7 +136,7 @@ object SnapshotDiff {
     * harness `diff_*` queries keep the information-preserving multiplicity
     * semantics instead. */
   def oneRowPerKey(normalized: DataFrame): DataFrame = {
-    val cols = normalized.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
+    val cols = RowCodec.valueCols(normalized)
     normalized.groupBy(col(Normalize.KeyCol))
       .agg(max(struct(cols.map(col): _*)).as("__r"))
       .select(col(Normalize.KeyCol) +: cols.map(c => col(s"__r.$c").as(c)): _*)
@@ -180,12 +160,10 @@ object SnapshotDiff {
   def scd2(before: DataFrame, after: DataFrame, pk: Seq[String]): DataFrame = {
     val bn = oneRowPerKey(Normalize.withKey(before, pk))
     val an = oneRowPerKey(Normalize.withKey(after, pk))
-    val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
     val j = classifyNormalized(bn, an)
     val status = col("diff_status")
-    // version structs carry the packed side string (classifyNormalized's
-    // r13 narrow-shuffle form); the final projection re-splits it — one
-    // codegen split per emitted history row
+    // version structs carry the packed side string; the final projection
+    // unpacks it
     def ver(packed: Column, from: Long, to: Option[Long]): Column =
       struct(packed.as("packed"),
         lit(from).as("valid_from"),
@@ -197,12 +175,9 @@ object SnapshotDiff {
       .when(status === Deleted, array(bClosed))
       .when(status === Updated, array(bClosed, aOpen))
       .otherwise(array(aOpen)) // INSERTED
-    j.select(col(Normalize.KeyCol), explode(rows).as("__r"))
-      .withColumn("__vals", split(col("__r.packed"), "\\u0001", -1))
-      .select(col(Normalize.KeyCol) +:
-        cols.zipWithIndex.map { case (c, i) => col("__vals")(i).as(c) } :+
-        col("__r.valid_from").as("valid_from") :+
-        col("__r.valid_to").as("valid_to"): _*)
+    unpacked(j.select(col(Normalize.KeyCol), explode(rows).as("__r")), RowCodec.valueCols(bn),
+      Seq(col(Normalize.KeyCol)),
+      Seq(col("__r.valid_from").as("valid_from"), col("__r.valid_to").as("valid_to")))
   }
 
   /** Multi-version SCD2: fold a whole ORDERED sequence of snapshots into
@@ -219,7 +194,7 @@ object SnapshotDiff {
   def scd2Chain(snapshots: Seq[DataFrame], pk: Seq[String]): DataFrame = {
     require(snapshots.size >= 2, "scd2Chain needs at least two snapshots")
     val normed = snapshots.map(s => oneRowPerKey(Normalize.withKey(s, pk)))
-    val cols = normed.head.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
+    val cols = RowCodec.valueCols(normed.head)
     val n = normed.size
     val tagged = normed.zipWithIndex
       .map { case (df, i) => df.withColumn("__v", lit(i.toLong)) }
@@ -253,7 +228,7 @@ object SnapshotDiff {
     * single-shuffle-per-side budget as the diff itself. */
   def applyDiff(before: DataFrame, diffed: DataFrame, pk: Seq[String]): DataFrame = {
     val bn = oneRowPerKey(Normalize.withKey(before, pk))
-    val cols = bn.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
+    val cols = RowCodec.valueCols(bn)
     val gone = diffed.filter(col("diff_status").isin(Deleted, Updated))
       .select(col(Normalize.KeyCol)).distinct()
     val kept = bn.join(gone, Seq(Normalize.KeyCol), "left_anti")
@@ -271,48 +246,29 @@ object SnapshotDiff {
   def feed(d: DataFrame, tableName: String, cols: Seq[String]): DataFrame =
     d.select(lit(tableName).as("table_name"), col(Normalize.KeyCol),
       col("diff_status"), col("modified_columns"), col("side"),
-      md5(concat_ws("\u0001", cols.map(col): _*)).as("row_fp"))
+      RowCodec.fingerprint(RowCodec.pack(cols)).as("row_fp"))
 
-  /** [[diff]]→[[feed]] fused over a PACKED row form — the multi-table
-    * changefeed's plan-cost fix. The wide diff compiles a per-column
-    * `when`-tree whose generated code is unique per table schema: unioning
-    * nine tables meant nine wide whole-stage-codegen plans compiled in one
-    * query, and at sf0.1 the driver's cost was planning/codegen, not data
-    * (round-3 finding). Here each table is first packed to the GENERIC
-    * shape `(__key, array<string> of normalized values)`, so the join, the
-    * positional compare (one `zip_with` instead of n_cols branches), the
-    * classification, and the feed projection are the SAME tiny plan — and
-    * the same generated classes, JIT-shared across all tables — with only
-    * the scan+pack projection differing per table.
+  /** [[diff]]→[[feed]] fused: [[changedRows]] plus the feed projection.
+    * Each side's row crosses the join as ONE packed string, and `row_fp`
+    * is the md5 of that string ([[RowCodec.fingerprint]]), so no emitted
+    * row is unpacked into columns and re-packed. Past the per-table scan
+    * and pack, every table's plan is the same narrow shape — the
+    * multi-table changefeed's plan-cost fix (round 3: unioning nine wide
+    * per-table diffs compiled nine distinct whole-stage-codegen plans).
     *
     * Semantics are exactly [[diff]]'s: same full-outer join on the derived
     * key (duplicate-key multiplicities preserved), same positional string
     * compare, same modified-column list in column order, same
-    * BEFORE-then-AFTER emission — `diff_changefeed`'s oracle stays the
-    * unchanged per-table wide-diff SQL. */
+    * BEFORE-then-AFTER emission; as a row multiset it equals
+    * `feed(diff(before, after, pk), tableName, cols)`, whose fingerprint
+    * re-packs the same values. `diff_changefeed`'s oracle is the
+    * per-table wide-diff SQL. */
   def feedCompact(before: DataFrame, after: DataFrame, pk: Seq[String],
-      tableName: String, cols: Seq[String]): DataFrame = {
-    // r13: delegates to [[classifyNormalized]]'s packed narrow-shuffle form
-    // (one U+0001-joined string per side through the exchange — see its
-    // scaladoc for the byte accounting and the separator-injectivity
-    // argument). The packed string is exactly the bytes the feed's md5
-    // row_fp hashes, so emission applies md5 directly after the explode —
-    // no per-row re-concatenation anywhere in the feed.
-    val j = classifyNormalized(Normalize.withKey(before, pk), Normalize.withKey(after, pk))
-    val status = col("diff_status")
-    def sideRow(side: String, packed: Column): Column =
-      struct(lit(side).as("side"), packed.as("packed"))
-    val rows = when(status === Inserted, array(sideRow("AFTER", col("__a"))))
-      .when(status === Deleted, array(sideRow("BEFORE", col("__b"))))
-      .when(status === Updated,
-        array(sideRow("BEFORE", col("__b")), sideRow("AFTER", col("__a"))))
-      .otherwise(array())
-    j.select(col(Normalize.KeyCol), status.as("diff_status"),
-        col("modified_columns"), explode(rows).as("__r"))
+      tableName: String): DataFrame =
+    changedRows(classified(before, after, pk))
       .select(lit(tableName).as("table_name"), col(Normalize.KeyCol),
         col("diff_status"), col("modified_columns"), col("__r.side").as("side"),
-        md5(col("__r.packed")).as("row_fp"))
-  }
+        RowCodec.fingerprint(col("__r.packed")).as("row_fp"))
 
   /** Diff across a schema change: the snapshots disagree on shape (columns
     * added and/or dropped between them). The reference's branch for this is
@@ -345,10 +301,10 @@ object SnapshotDiff {
   /** Three-way merge classification — the version-control operation over
     * snapshots: two branches (`left`, `right`) diverged from a common
     * `base`; classify every key by how the branches reconcile. Each
-    * snapshot reduces to (key, row-fingerprint) — md5 over the normalized
-    * columns joined with a U+0001 separator, so a whole row travels as 32
-    * bytes — then two full-outer joins on `__key` give the presence/
-    * equality pattern:
+    * snapshot reduces to (key, row-fingerprint) — the md5
+    * [[RowCodec.fingerprint]] of the packed normalized row, so a whole row
+    * travels as 32 bytes — then two full-outer joins on `__key` give the
+    * presence/equality pattern:
     *
     *   - `LEFT_CHANGE` / `RIGHT_CHANGE`: only one branch touched the key
     *     (update, delete, or insert) — the merge takes that branch;
@@ -366,9 +322,8 @@ object SnapshotDiff {
     val Absent = "<ABSENT>"
     def fp(df: DataFrame, out: String): DataFrame = {
       val n = Normalize.withKey(df, pk)
-      val cols = n.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
       n.select(col(Normalize.KeyCol),
-        md5(concat_ws("\u0001", cols.map(col): _*)).as(out))
+        RowCodec.fingerprint(RowCodec.pack(RowCodec.valueCols(n))).as(out))
     }
     val j = fp(base, "__b")
       .join(fp(left, "__l"), Seq(Normalize.KeyCol), "full_outer")
@@ -413,16 +368,14 @@ object SnapshotDiff {
     * Empty ⇔ snapshots are (checksum-)identical, so `diff(A, A)` prunes
     * to nothing before any join runs. */
   def merkleSummary(bn: DataFrame, an: DataFrame, nBuckets: Int): DataFrame = {
-    def side(df: DataFrame, rowsName: String, sumName: String): DataFrame = {
-      val cols = df.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq
+    def side(df: DataFrame, rowsName: String, sumName: String): DataFrame =
       df.select(
           bucketOf(col(Normalize.KeyCol), nBuckets).as("bucket"),
-          graft.functions.Hashing.hash64(concat_ws("\u0001", cols.map(col): _*))
+          graft.functions.Hashing.hash64(RowCodec.pack(RowCodec.valueCols(df)))
             .cast("decimal(38,0)").as("__h"))
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as(rowsName),
           (sum(col("__h")) % lit(1000000000000000000L)).cast("long").as(sumName))
-    }
     side(bn, "b_rows", "b_sum")
       .join(side(an, "a_rows", "a_sum"), Seq("bucket"), "full_outer")
       .select(col("bucket"),
@@ -437,25 +390,23 @@ object SnapshotDiff {
     pmod(graft.functions.Hashing.hash64(key), lit(nBuckets.toLong))
 
   /** The PRODUCTION checksum profile [[merkleSummary]]'s doc promises: the
-    * same bucket summary with a 128-bit checksum — TWO independent
-    * codegen'd xxhash64 lanes (the [[fusedReport]] fingerprint discipline:
-    * multi-column hashing folds each value in with its length, no
-    * separator string, no MessageDigest on the hot path), each lane an
-    * exact decimal sum reduced mod 10¹⁸ per bucket. Two 60-bit-sum lanes
-    * put a false-clean bucket at ~2⁻¹²⁰ — negligible at any lake size,
-    * where one lane's 2⁻⁶⁰ is not. These checksums never surface in an
-    * oracle-checked output (the pruned diff's oracle is the UNPRUNED
-    * diff), so no cross-engine hash parity constrains the choice —
+    * same bucket summary with a 128-bit checksum — the two xxhash64 lanes
+    * of [[RowCodec.fingerprint128]] (no MessageDigest on the hot path),
+    * each lane an exact decimal sum reduced mod 10¹⁸ per bucket. Two
+    * 60-bit-sum lanes put a false-clean bucket at ~2⁻¹²⁰ — negligible at
+    * any lake size, where one lane's 2⁻⁶⁰ is not. These checksums never
+    * surface in an oracle-checked output (the pruned diff's oracle is the
+    * UNPRUNED diff), so no cross-engine hash parity constrains the choice —
     * [[merkleSummary]] keeps the md5-derived single lane exactly so the
     * summary itself stays DuckDB-replayable (`diff_merkle_dirty`).
     * Returns dirty buckets only, as `bucket` plus per-side row counts. */
   def merkleDirty128(bn: DataFrame, an: DataFrame, nBuckets: Int): DataFrame = {
     def side(df: DataFrame, p: String): DataFrame = {
-      val cols = df.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq.map(col)
+      val (h1, h2) = RowCodec.fingerprint128(RowCodec.valueCols(df))
       df.select(
           bucketOf(col(Normalize.KeyCol), nBuckets).as("bucket"),
-          xxhash64(cols: _*).cast("decimal(38,0)").as("__h1"),
-          xxhash64(lit(1L) +: cols: _*).cast("decimal(38,0)").as("__h2"))
+          h1.cast("decimal(38,0)").as("__h1"),
+          h2.cast("decimal(38,0)").as("__h2"))
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as(s"${p}_rows"),
           (sum(col("__h1")) % lit(1000000000000000000L)).cast("long").as(s"${p}_s1"),
@@ -604,24 +555,20 @@ object SnapshotDiff {
   def fusedReport(sides: Seq[(String, DataFrame, DataFrame, Seq[String])]): DataFrame = {
     def fpSide(name: String, df: DataFrame, pk: Seq[String], side: Int): DataFrame = {
       val n = Normalize.withKey(df, pk)
-      val cols = n.columns.filterNot(_ == Normalize.KeyCol).toIndexedSeq.map(col)
-      // Row fingerprint = TWO independent codegen'd xxhash64 lanes (128
-      // bits total — collision odds stay negligible at any key count, like
-      // the md5 this replaces, but with no MessageDigest on the hot path
-      // and a fixed 16-byte struct instead of a 32-char hex string in the
-      // shuffle). Multi-column hashing folds each value in with its
-      // length, so adjacent columns can't alias ("ab","c" vs "a","bc") --
-      // no separator string is ever built. The oracle never sees this
+      // Row fingerprint = RowCodec.fingerprint128 (128 bits — collision
+      // odds stay negligible at any key count, like the md5 this replaces,
+      // but with no MessageDigest on the hot path and 16 bytes instead of
+      // a 32-char hex string in the shuffle). The oracle never sees this
       // fingerprint: it recomputes the report from full column compares,
       // so the hash choice is pinned by the report's result.
+      val (h1, h2) = RowCodec.fingerprint128(RowCodec.valueCols(n))
       // the two lanes stay FLAT longs (r14): min/max over a struct has no
       // fixed-size aggregation buffer, so the (table, key) rollup planned
       // as a SortAggregate — sorting the whole ~50-byte union on the group
       // key. Flat long lanes keep it a two-phase HashAggregate with
       // map-side combine ("2 SortAggregate → 0", plans/r14/diff_report_*).
       n.select(lit(name).as("table_name"), col(Normalize.KeyCol),
-        xxhash64(cols: _*).as("__h1"),
-        xxhash64(lit(1L) +: cols: _*).as("__h2"),
+        h1.as("__h1"), h2.as("__h2"),
         lit(side).as("__side"))
     }
     val unioned = sides.map { case (name, before, after, pk) =>

@@ -342,9 +342,10 @@ class PlanQualitySpec extends SparkTestBase {
     val p = plan("diff_changefeed")
     // the full-outer diff join survives (duplicate-key multiplicity)...
     assert(p.contains("FullOuter"), p.take(2000))
-    // ...but classification/compare happens on the packed arrays (one
-    // zip_with), never on per-column __b_/__a_ renames — that wide shape
-    // is exactly what cost 9 distinct codegen plans before feedCompact
+    // ...but classification compares one packed string per side, and F1
+    // is one zip_with over the two unpacked rows, never per-column
+    // __b_/__a_ renames — that wide shape is exactly what cost 9 distinct
+    // codegen plans before feedCompact
     assert(p.contains("zip_with"), p.take(2000))
     assert(!p.contains("__b_"), "wide per-column diff shape leaked back in")
   }
