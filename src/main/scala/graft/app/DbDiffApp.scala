@@ -41,33 +41,39 @@ final class DbDiffApp(
     * time and silently see the post-mutation state on both sides — the
     * reference materializes its before snapshot for exactly this reason
     * (`main.go:56-60`), into driver heap; here the pin is a distributed
-    * write, so snapshot-at-time-T semantics hold without any driver
-    * materialization. The app owns the pin directories, and [[iterate]]
-    * deletes a snapshot's directory as soon as the swap retires it — a
-    * long-running loop holds at most two pinned snapshots on disk (RDD
-    * `checkpoint()` would instead accumulate files for the life of the
-    * session), and [[close]] deletes the pin root with the last one.
-    * Leave false for immutable sources (parquet fixture dirs) where
-    * pinning is pure cost. */
+    * parquet write, so snapshot-at-time-T semantics hold without any driver
+    * materialization. Pins run concurrently, one Spark job per table, from
+    * a pool capped at `min(tables, defaultParallelism)` threads: a JDBC pin
+    * is a one-partition read, so more pins than cores would only queue.
+    * Like the reference's table-by-table scan, a snapshot promises no
+    * cross-table consistency. `source` itself is called on the caller's
+    * thread, so it need not be thread-safe. The app owns the pin
+    * directories, and [[iterate]] deletes a snapshot's directory as soon as
+    * the swap retires it — a long-running loop holds at most two pinned
+    * snapshots on disk — and [[close]] deletes the pin root with the last
+    * one. A snapshot whose pin fails leaves nothing behind: see
+    * [[DbDiffApp.pinAll]]. Leave false for immutable sources (parquet
+    * fixture dirs) where pinning is pure cost. */
   private var pinRoot: Option[java.nio.file.Path] = None
   private var pinSeq = 0
 
   private def snapshotAll(): (Map[String, DataFrame], Option[java.nio.file.Path]) =
     if (!pinSnapshots) (tables.map(t => t.name -> source(t)).toMap, None)
     else {
-      val root = pinRoot.getOrElse {
-        val r = java.nio.file.Files.createTempDirectory("graft_snapshots")
-        pinRoot = Some(r)
-        r
-      }
+      val fresh = pinRoot.isEmpty
+      val root = pinRoot.getOrElse(java.nio.file.Files.createTempDirectory("graft_snapshots"))
+      pinRoot = Some(root)
       pinSeq += 1
       val dir = root.resolve(s"snap_$pinSeq")
-      val m = tables.map { t =>
-        val path = dir.resolve(t.name).toString
-        source(t).write.parquet(path)
-        t.name -> spark.read.parquet(path)
-      }.toMap
-      (m, Some(dir))
+      try (DbDiffApp.pinAll(spark, tables.map(t => t.name -> source(t)), dir), Some(dir))
+      catch {
+        // a root this call created would otherwise outlive a failed
+        // constructor, which leaves no app to close()
+        case e: Throwable =>
+          if (fresh) { deleteRecursively(root); pinRoot = None }
+          else deleteRecursively(dir)
+          throw e
+      }
     }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
@@ -178,6 +184,44 @@ final class DbDiffApp(
 }
 
 object DbDiffApp {
+  /** Pins each `(name, frame)` to `dir/<name>` as parquet and reads it back
+    * with the schema it was written with, which skips Spark's parquet
+    * schema-inference job. Each pin is its own Spark job, submitted from a
+    * pool of `min(frames, defaultParallelism)` threads. Every pin has
+    * finished when this returns or throws; on failure the first error is
+    * rethrown with the others suppressed, and the caller owns `dir`. */
+  private[graft] def pinAll(spark: SparkSession, frames: Seq[(String, DataFrame)],
+      dir: java.nio.file.Path): Map[String, DataFrame] = {
+    val threads = math.max(1, math.min(frames.size, spark.sparkContext.defaultParallelism))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads, (r: Runnable) => {
+      val t = new Thread(r, "graft-pin")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val pins = frames.map { case (name, df) =>
+        val path = dir.resolve(name).toString
+        name -> pool.submit(new java.util.concurrent.Callable[DataFrame] {
+          def call(): DataFrame = {
+            df.write.parquet(path)
+            spark.read.schema(df.schema).parquet(path)
+          }
+        })
+      }
+      // wait for every pin before reporting any failure: the caller then
+      // deletes `dir`, which must not happen under a running write
+      val failures = pins.flatMap { case (_, f) =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+      pins.map { case (name, f) => name -> f.get() }.toMap
+    } finally pool.shutdown()
+  }
+
   final case class IterationResult(changedKeys: Map[String, Long],
       reportPath: Option[String], feedPath: Option[String] = None) {
     def totalChanged: Long = changedKeys.values.sum
@@ -188,9 +232,9 @@ object DbDiffApp {
     t => Tables.load(spark, dir, t.name)
 
   /** Source over a live JDBC database — the reference's actual deployment
-    * shape (`db_impl.go:20-61`): each snapshot re-scans the table, so
-    * whatever the operator changed in the database between iterations is
-    * what the next diff sees. */
+    * shape (`db_impl.go:20-61`): each snapshot re-scans the table, in one
+    * partition, so whatever the operator changed in the database between
+    * iterations is what the next diff sees. */
   def jdbcSource(spark: SparkSession, url: String, schema: String,
       props: Map[String, String] = Map.empty): TableDef => DataFrame =
     t => graft.sources.JdbcSnapshots.snapshot(
@@ -200,10 +244,11 @@ object DbDiffApp {
   /** Catalog-driven table discovery over JDBC (S3/S4): table list + PKs
     * from the live catalog, column lists from the scan schema, and the
     * reference's keyless fallback (S5, `dbutil.go:136-141`) — a table
-    * without a PK keys on all its columns. */
+    * without a PK keys on all its columns. Runs no Spark job: the catalog
+    * is driver-side SQL and a JDBC scan's schema resolves on the driver. */
   def jdbcTables(spark: SparkSession, dialect: String, url: String, schema: String,
       props: Map[String, String] = Map.empty): Seq[TableDef] =
-    graft.sources.JdbcSnapshots.catalog(spark, dialect, url, schema, props).map {
+    graft.sources.JdbcSnapshots.catalog(dialect, url, schema, props).map {
       case (name, pks) =>
         val cols = graft.sources.JdbcSnapshots
           .snapshot(spark, url,

@@ -62,8 +62,8 @@ object DbDiffMain {
     println("[INITIALIZING] Collecting Table Information ...")
 
     // live-database abstraction: JDBC configs catalog and scan the live
-    // database (with checkpoint-pinned snapshots — a lazy frame over a
-    // mutable table would see post-mutation state on both diff sides); in
+    // database (with snapshots pinned as parquet writes — a lazy frame over
+    // a mutable table would see post-mutation state on both diff sides); in
     // parquet demo mode a mutable overlay plays the operator's
     // UPDATE/INSERT/DELETE session
     var mutated = false

@@ -11,12 +11,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * container), but a user of the reference switching to this engine points
   * these readers at the same PostgreSQL/MySQL/SQL Server instance:
   *
-  *   - table list + PK discovery run the reference's own catalog SQL
-  *     through the JDBC source (the `information_schema` joins execute
-  *     inside the source DB, exactly as in the reference — SURVEY §2.3 J2);
-  *   - snapshot scans are partitioned on a numeric PK so a 1000-executor
-  *     cluster reads range-disjoint slices in parallel instead of the
-  *     reference's single-threaded full scan;
+  *   - table list + PK discovery run the reference's own catalog SQL on
+  *     one driver-side JDBC connection (the `information_schema` joins
+  *     execute inside the source DB, exactly as in the reference — SURVEY
+  *     §2.3 J2); the result is catalog-sized, so no Spark job runs;
+  *   - [[snapshot]] is a Spark JDBC scan. It can range-split on a numeric
+  *     column, but the app's `jdbcSource` reads each table in one
+  *     partition: the app's parallelism is across tables, one pin per
+  *     table running concurrently;
   *   - `Normalize`/`SnapshotDiff` then apply unchanged — the diff operator
   *     is source-agnostic.
   */
@@ -128,12 +130,34 @@ object JdbcSnapshots {
     else s + "." + table
   }
 
-  private def jdbc(spark: SparkSession, url: String, query: String,
-      props: Map[String, String]): DataFrame = {
-    val r = spark.read.format("jdbc")
-      .option("url", url).option("query", query)
-    props.foldLeft(r)((acc, kv) => acc.option(kv._1, kv._2)).load()
+  /** Runs `f` on one driver-side connection to `url`, closed afterwards. */
+  private def withConnection[A](url: String, props: Map[String, String])(
+      f: java.sql.Connection => A): A = {
+    val p = new java.util.Properties()
+    props.foreach { case (k, v) => p.setProperty(k, v) }
+    val conn = java.sql.DriverManager.getConnection(url, p)
+    try f(conn) finally conn.close()
   }
+
+  /** Every row of `rs` through `read`; the result set is closed even when
+    * a read throws. */
+  private def rows[A](rs: java.sql.ResultSet)(read: java.sql.ResultSet => A): Seq[A] =
+    try {
+      val buf = scala.collection.mutable.ArrayBuffer.empty[A]
+      while (rs.next()) buf += read(rs)
+      buf.toSeq
+    } finally rs.close()
+
+  /** The first column of every row `sql` returns, as strings. */
+  private def strings(conn: java.sql.Connection, sql: String): Seq[String] = {
+    val st = conn.createStatement()
+    try rows(st.executeQuery(sql))(_.getString(1)) finally st.close()
+  }
+
+  private def metadataPks(conn: java.sql.Connection, schema: String,
+      table: String): Seq[String] =
+    rows(conn.getMetaData.getPrimaryKeys(null, schema, table))(
+      r => (r.getShort("KEY_SEQ"), r.getString("COLUMN_NAME"))).sortBy(_._1).map(_._2)
 
   /** Dialect-independent PK discovery via the JDBC driver's own metadata
     * (`DatabaseMetaData.getPrimaryKeys`), ordered by KEY_SEQ — the same
@@ -143,35 +167,25 @@ object JdbcSnapshots {
     * fallback for any JDBC source. Driver-side, but catalog-sized (one
     * round-trip per table), like the reference's own catalog pass. */
   def pksViaMetadata(url: String, schema: String, table: String,
-      props: Map[String, String] = Map.empty): Seq[String] = {
-    val p = new java.util.Properties()
-    props.foreach { case (k, v) => p.setProperty(k, v) }
-    val conn = java.sql.DriverManager.getConnection(url, p)
-    try {
-      val rs = conn.getMetaData.getPrimaryKeys(null, schema, table)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Short, String)]
-      while (rs.next()) buf += ((rs.getShort("KEY_SEQ"), rs.getString("COLUMN_NAME")))
-      rs.close()
-      buf.sortBy(_._1).map(_._2).toSeq
-    } finally conn.close()
-  }
+      props: Map[String, String] = Map.empty): Seq[String] =
+    withConnection(url, props)(metadataPks(_, schema, table))
 
-  /** Catalog introspection: (table, pk columns) pairs. The PK-less fallback
-    * (all columns as key, `dbutil.go:136-141`) is applied by the caller via
-    * `TableDef.keyless` once the snapshot's schema is known. */
-  def catalog(spark: SparkSession, dialect: String, url: String, schema: String,
-      props: Map[String, String] = Map.empty): Seq[(String, Seq[String])] = {
-    val tables = jdbc(spark, url, tableListSql(dialect, schema), props)
-      .collect().map(_.getString(0)).toSeq
-    tables.map { t =>
-      val pks = dialect match {
-        case "derby" => pksViaMetadata(url, schema, t, props)
-        case _ => jdbc(spark, url, pkSql(dialect, t, schema), props)
-          .collect().map(_.getString(0)).toSeq
+  /** Catalog introspection: (table, pk columns) pairs, all on one
+    * driver-side connection — the table list and each table's PK query
+    * return catalog-sized results, so no Spark job runs. The PK-less
+    * fallback (all columns as key, `dbutil.go:136-141`) is applied by the
+    * caller via `TableDef.keyless` once the snapshot's schema is known. */
+  def catalog(dialect: String, url: String, schema: String,
+      props: Map[String, String] = Map.empty): Seq[(String, Seq[String])] =
+    withConnection(url, props) { conn =>
+      strings(conn, tableListSql(dialect, schema)).map { t =>
+        val pks = dialect match {
+          case "derby" => metadataPks(conn, schema, t)
+          case _ => strings(conn, pkSql(dialect, t, schema))
+        }
+        (t, pks)
       }
-      (t, pks)
     }
-  }
 
   /** Partitioned snapshot scan: range-parallel on a numeric PK when one is
     * known (`numPartitions` JDBC splits), else a single-partition read.
@@ -191,13 +205,4 @@ object JdbcSnapshots {
     }
     props.foldLeft(partitioned)((acc, kv) => acc.option(kv._1, kv._2)).load()
   }
-
-  /** Full multi-table snapshot, as `Map[table -> DataFrame]` — the lazy
-    * distributed analogue of the reference's `AllTableStore`. */
-  def snapshotAll(spark: SparkSession, url: String,
-      catalog: Seq[(String, Seq[String])], numPartitions: Int,
-      props: Map[String, String] = Map.empty): Map[String, (DataFrame, Seq[String])] =
-    catalog.map { case (t, pks) =>
-      t -> (snapshot(spark, url, t, None, None, numPartitions, props), pks)
-    }.toMap
 }

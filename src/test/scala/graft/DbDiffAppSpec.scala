@@ -305,4 +305,61 @@ class DbDiffAppSpec extends SparkTestBase {
     val r2 = pruned.iterate()
     assert(r2.totalChanged == 0)
   }
+
+  /** Region and nation from the fixture, with a way to break a snapshot:
+    * `broken` names the table whose source throws when called, `failing`
+    * the one whose frame fails while its pin is being written. */
+  private final class FlakySource {
+    var broken, failing = ""
+    var dropRegionZero = false
+    val tables = Seq(Tables.region, Tables.nation)
+    def apply(t: TableDef): org.apache.spark.sql.DataFrame = {
+      import org.apache.spark.sql.functions._
+      if (t.name == broken) throw new IllegalStateException(s"${t.name}: source down")
+      val base = Tables.load(spark, Sf, t.name)
+      if (t.name == failing) base.filter(assert_true(col(base.columns.head) < 0).isNull)
+      else if (t.name == "region" && dropRegionZero) base.filter(col("r_regionkey") =!= 0)
+      else base
+    }
+  }
+
+  test("a failed pin leaves only the before snapshot, and the next iteration diffs") {
+    val src = new FlakySource
+    val app = new DbDiffApp(spark, src.tables, src.apply, _ => (), maxConsoleRows = 0,
+      pinSnapshots = true)
+    val root = app.pinRootDir.get
+    def snapshots = root.toFile.list().toSet
+    try {
+      assert(snapshots == Set("snap_1"))
+      // the second table's source throws after the first table's source ran
+      src.broken = "nation"
+      intercept[IllegalStateException](app.iterate())
+      assert(snapshots == Set("snap_1"))
+      // the second table's pin fails while the first one's is written
+      src.broken = ""; src.failing = "nation"
+      intercept[Exception](app.iterate())
+      assert(snapshots == Set("snap_1"))
+      // a good snapshot diffs against the before snapshot that survived
+      src.failing = ""; src.dropRegionZero = true
+      val r = app.iterate()
+      assert(r.changedKeys == Map("region" -> 1L, "nation" -> 0L))
+      assert(snapshots.size == 1 && !snapshots("snap_1"))
+    } finally app.close()
+    assert(!Files.exists(root))
+  }
+
+  test("a constructor whose pin fails leaves no pin root behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def roots = tmp.list().filter(_.startsWith("graft_snapshots")).toSet
+    val before = roots
+    val src = new FlakySource
+    src.broken = "nation"
+    intercept[IllegalStateException](
+      new DbDiffApp(spark, src.tables, src.apply, _ => (), pinSnapshots = true))
+    assert(roots == before)
+    src.broken = ""; src.failing = "nation"
+    intercept[Exception](
+      new DbDiffApp(spark, src.tables, src.apply, _ => (), pinSnapshots = true))
+    assert(roots == before)
+  }
 }

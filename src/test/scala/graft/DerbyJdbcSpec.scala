@@ -1,17 +1,23 @@
 package graft
 
+import graft.app.DbDiffApp
 import graft.operators.SnapshotDiff
 import graft.sources.JdbcSnapshots
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Executes the JDBC source plumbing (SURVEY §2 S2/J2/F4) against an
   * embedded Derby database — the one dialect that can run inside this
   * container. The production dialects' information_schema SQL can't execute
   * here (no live PostgreSQL/MySQL/SQL Server), but every code path around
-  * it does: connection via `spark.read.format("jdbc")`, a real catalog
-  * query through the `query` option, driver-metadata PK discovery with
-  * KEY_SEQ ordering, the range-partitioned snapshot scan, and the full
-  * normalize→diff pipeline over JDBC-sourced frames. */
+  * it does: scans via `spark.read.format("jdbc")`, a real catalog query on
+  * one driver-side connection (no Spark job), driver-metadata PK discovery
+  * with KEY_SEQ ordering, the range-partitioned snapshot scan, the app's
+  * pin read-back schema, and the full normalize→diff pipeline over
+  * JDBC-sourced frames. */
 class DerbyJdbcSpec extends SparkTestBase {
 
   private val url = "jdbc:derby:memory:graftdb;create=true"
@@ -37,6 +43,36 @@ class DerbyJdbcSpec extends SparkTestBase {
     } finally conn.close()
   }
 
+  /** `f`'s result and the Spark jobs it submitted, counted by a listener
+    * on a job group of its own; a sentinel job in a second group marks the
+    * point where the listener has seen every job `f` ran. */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime}"
+    val jobs = new AtomicInteger()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-sentinel" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val r = f
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, TimeUnit.SECONDS))
+      (r, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("jdbcUrl builds the reference's connection-string shapes") {
     assert(JdbcSnapshots.jdbcUrl("postgresql", "h", "5432", "db") == "jdbc:postgresql://h:5432/db")
     assert(JdbcSnapshots.jdbcUrl("mysql", "h", "3306", "db") == "jdbc:mysql://h:3306/db")
@@ -47,11 +83,55 @@ class DerbyJdbcSpec extends SparkTestBase {
 
   test("catalog: table list via SYS catalog query + PKs via driver metadata") {
     seeded
-    val cat = JdbcSnapshots.catalog(spark, "derby", url, "APP")
+    val cat = JdbcSnapshots.catalog("derby", url, "APP")
     assert(cat.map(_._1) == Seq("ITEMS_AFTER", "ITEMS_BEFORE", "PAIRS"))
     assert(cat.toMap.apply("ITEMS_BEFORE") == Seq("ID"))
     // composite key order comes from KEY_SEQ, not column position
     assert(cat.toMap.apply("PAIRS") == Seq("B", "A"))
+  }
+
+  test("catalog and jdbcTables run no Spark job") {
+    seeded
+    // the probe does see a job when one runs
+    assert(jobsOf(spark.sparkContext.parallelize(1 to 4, 2).count())._2 == 1)
+    val (cat, catalogJobs) = jobsOf(JdbcSnapshots.catalog("derby", url, "APP"))
+    assert(cat.map(_._1) == Seq("ITEMS_AFTER", "ITEMS_BEFORE", "PAIRS"))
+    assert(catalogJobs == 0)
+    val (tables, tableJobs) = jobsOf(DbDiffApp.jdbcTables(spark, "derby", url, "APP"))
+    assert(tables.map(t => t.name -> t.pk) ==
+      Seq("ITEMS_AFTER" -> Seq("ID"), "ITEMS_BEFORE" -> Seq("ID"), "PAIRS" -> Seq("B", "A")))
+    assert(tableJobs == 0)
+  }
+
+  test("a pin reads back with the schema parquet inference would give, NULLs included") {
+    val typedUrl = "jdbc:derby:memory:graftpins;create=true"
+    System.setProperty("derby.system.home", "/tmp/derby")
+    val conn = java.sql.DriverManager.getConnection(typedUrl)
+    try {
+      val st = conn.createStatement()
+      st.execute("CREATE TABLE TYPED (ID BIGINT PRIMARY KEY, V VARCHAR(20), C CHAR(5), " +
+        "TS TIMESTAMP, D DATE, AMT DECIMAL(10,2), X DOUBLE, N INT)")
+      st.execute("INSERT INTO TYPED VALUES (1, 'alpha', 'ab', " +
+        "TIMESTAMP('2024-02-29 13:45:10.123456'), DATE('2024-02-29'), 1234.50, 0.25, 7)")
+      st.execute("INSERT INTO TYPED (ID) VALUES (2)") // every other column NULL
+      st.close()
+    } finally conn.close()
+
+    val src = DbDiffApp.jdbcSource(spark, typedUrl, "APP")(
+      TableDef("TYPED", Seq("ID", "V", "C", "TS", "D", "AMT", "X", "N"), Seq("ID")))
+    val dir = java.nio.file.Files.createTempDirectory("graft_pin_schema")
+    try {
+      val pinned = DbDiffApp.pinAll(spark, Seq("TYPED" -> src), dir)("TYPED")
+      val inferred = spark.read.parquet(dir.resolve("TYPED").toString)
+      assert(pinned.schema == inferred.schema)
+      assert(pinned.collect().toSet == inferred.collect().toSet)
+      assert(pinned.collect().toSet == src.collect().toSet)
+      assert(pinned.filter(col("ID") === 2).head().toSeq.tail.forall(_ == null))
+    } finally {
+      val s = java.nio.file.Files.walk(dir)
+      try s.sorted(java.util.Comparator.reverseOrder()).forEach(java.nio.file.Files.delete(_))
+      finally s.close()
+    }
   }
 
   test("range-partitioned snapshot scan produces the requested splits") {
