@@ -4,6 +4,7 @@ import graft.{TableDef, Tables}
 import graft.operators.{Normalize, RenderQueries, SnapshotDiff}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import java.io.{BufferedWriter, FileWriter}
 
@@ -35,57 +36,37 @@ final class DbDiffApp(
 
   import DbDiffApp.IterationResult
 
-  /** One frame per table (S6). With `pinSnapshots` the frame is eagerly
-    * MATERIALIZED to a per-snapshot parquet directory and read back: a lazy
-    * frame over a MUTABLE source (a live JDBC table) would re-scan at diff
-    * time and silently see the post-mutation state on both sides — the
-    * reference materializes its before snapshot for exactly this reason
-    * (`main.go:56-60`), into driver heap; here the pin is a distributed
-    * parquet write, so snapshot-at-time-T semantics hold without any driver
-    * materialization. Pins run concurrently, one Spark job per table, from
-    * a pool capped at `min(tables, defaultParallelism)` threads: a JDBC pin
-    * is a one-partition read, so more pins than cores would only queue.
-    * Like the reference's table-by-table scan, a snapshot promises no
-    * cross-table consistency. `source` itself is called on the caller's
-    * thread, so it need not be thread-safe. The app owns the pin
-    * directories, and [[iterate]] deletes a snapshot's directory as soon as
-    * the swap retires it — a long-running loop holds at most two pinned
-    * snapshots on disk — and [[close]] deletes the pin root with the last
-    * one. A snapshot whose pin fails leaves nothing behind: see
-    * [[DbDiffApp.pinAll]]. Leave false for immutable sources (parquet
-    * fixture dirs) where pinning is pure cost. */
-  private var pinRoot: Option[java.nio.file.Path] = None
-  private var pinSeq = 0
-
-  private def snapshotAll(): (Map[String, DataFrame], Option[java.nio.file.Path]) =
-    if (!pinSnapshots) (tables.map(t => t.name -> source(t)).toMap, None)
-    else {
-      val fresh = pinRoot.isEmpty
-      val root = pinRoot.getOrElse(java.nio.file.Files.createTempDirectory("graft_snapshots"))
-      pinRoot = Some(root)
-      pinSeq += 1
-      val dir = root.resolve(s"snap_$pinSeq")
-      try (DbDiffApp.pinAll(spark, tables.map(t => t.name -> source(t)), dir), Some(dir))
-      catch {
-        // a root this call created would otherwise outlive a failed
-        // constructor, which leaves no app to close()
-        case e: Throwable =>
-          if (fresh) { deleteRecursively(root); pinRoot = None }
-          else deleteRecursively(dir)
-          throw e
-      }
-    }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      // Files.walk holds open directory handles — close the stream before
-      // deleting, or the long-running loop leaks one fd per iteration
-      val s = java.nio.file.Files.walk(p)
-      val all = try s.iterator().asScala.toSeq finally s.close()
-      all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+  /** One frame per table (S6). With `pinSnapshots` each frame is pinned as
+    * a DISK_ONLY local checkpoint: a lazy frame over a MUTABLE source (a live
+    * JDBC table) would re-scan at diff time and silently see the
+    * post-mutation state on both sides — the reference materializes its
+    * before snapshot for exactly this reason (`main.go:56-60`), into driver
+    * heap; here the pin is a distributed checkpoint on executor local disks
+    * (`spark.local.dir`), off the heap, with its lineage cut off, so a diff
+    * never re-reads the source. The cost of that cut: a lost executor fails
+    * the next action on the snapshot instead of recomputing it, and under
+    * dynamic allocation an executor holding pins stays alive only while
+    * `spark.dynamicAllocation.cachedExecutorIdleTimeout` keeps its default
+    * (infinite). Pins run concurrently, one Spark job per table, from a pool
+    * capped at `min(tables, defaultParallelism)` threads: a JDBC pin is a
+    * one-partition read, so more pins than cores would only queue. Like the
+    * reference's table-by-table scan, a snapshot promises no cross-table
+    * consistency. `source` itself is called on the caller's thread, so it
+    * need not be thread-safe. The app owns its pins, not [[graft.CacheScope]]
+    * (whose `releaseAll` ends every iteration and would drop the live before
+    * snapshot): [[iterate]] releases a snapshot as soon as the swap retires
+    * it — a long-running loop holds at most two pinned snapshots — and
+    * [[close]] releases the last one. A snapshot whose pin fails leaves
+    * nothing behind: see [[DbDiffApp.pinAll]]. Leave false for immutable
+    * sources (parquet fixture dirs) where pinning is pure cost. */
+  private def snapshotAll(): Map[String, DataFrame] = {
+    val frames = tables.map(t => t.name -> source(t))
+    if (pinSnapshots) DbDiffApp.pinAll(spark, frames) else frames.toMap
   }
+
+  /** Drops a snapshot's pinned blocks; an unpinned snapshot holds none. */
+  private def release(snap: Map[String, DataFrame]): Unit =
+    if (pinSnapshots) snap.values.foreach(graft.CacheScope.releasePin)
 
   /** Total record count across tables — the reference prints this per
     * snapshot (`main.go:59,76`). One distributed count per table, unioned
@@ -94,14 +75,11 @@ final class DbDiffApp(
     snap.values.map(_.agg(count(lit(1)).as("n"))).reduce(_.unionAll(_))
       .agg(sum(col("n")).as("total")).head().getLong(0)
 
-  private var beforePin: Option[java.nio.file.Path] = None
-  private var before: Map[String, DataFrame] = {
-    val (m, pin) = snapshotAll(); beforePin = pin; m
-  }
+  private var before: Map[String, DataFrame] = snapshotAll()
   private var iterSeq = 0
 
-  /** The pin root, once the first pinned snapshot has created it. */
-  private[graft] def pinRootDir: Option[java.nio.file.Path] = pinRoot
+  /** The snapshot the next iteration diffs against. */
+  private[graft] def beforeSnapshot: Map[String, DataFrame] = before
 
   /** Runs one BEFORE→AFTER→diff→report→swap iteration. Writes the styled
     * report to `outName` (empty = skip file; a `.xlsx` name selects the
@@ -109,8 +87,22 @@ final class DbDiffApp(
     * returns per-table changed-key counts. */
   def iterate(outName: String = ""): IterationResult = {
     iterSeq += 1
-    val (after, afterPin) = snapshotAll()
+    val after = snapshotAll()
+    val result = try diffAndReport(after, outName)
+    catch { case e: Throwable => release(after); throw e }
+    val retired = before
+    before = after // the swap, `main.go:83`
+    // every action on the retired snapshot has run by now (console lines,
+    // changed counts, report rows) — release its pins so a long-running
+    // loop holds at most two pinned snapshots
+    release(retired)
+    // same discipline for executor storage: any cache a diff variant
+    // registered this iteration is released before the next one starts
+    graft.CacheScope.releaseAll()
+    result
+  }
 
+  private def diffAndReport(after: Map[String, DataFrame], outName: String): IterationResult = {
     // one-winner mode: the reference keeps one map entry per key, so its
     // loop's diff(A, A) = ∅ holds even for duplicate-PK tables — ours must too.
     // With merkleBuckets > 0 each table diffs behind the bucket-checksum
@@ -166,32 +158,22 @@ final class DbDiffApp(
       Some(outName)
     } else None
 
-    before = after // the swap, `main.go:83`
-    // every action on the retired snapshot has run by now (console lines,
-    // changed counts, report rows) — its pin directory is dead; delete it so
-    // a long-running loop holds at most two pinned snapshots on disk
-    beforePin.foreach(deleteRecursively)
-    beforePin = afterPin
-    // same discipline for executor storage: any cache a diff variant
-    // registered this iteration is released before the next one starts
-    graft.CacheScope.releaseAll()
     IterationResult(changed, reportPath, feedPath)
   }
 
-  /** Deletes the pin root, and with it the last pinned snapshot. The app
-    * cannot iterate after this. */
-  override def close(): Unit = pinRoot.foreach(deleteRecursively)
+  /** Releases the pins of the last snapshot. The app cannot iterate after
+    * this. */
+  override def close(): Unit = release(before)
 }
 
 object DbDiffApp {
-  /** Pins each `(name, frame)` to `dir/<name>` as parquet and reads it back
-    * with the schema it was written with, which skips Spark's parquet
-    * schema-inference job. Each pin is its own Spark job, submitted from a
-    * pool of `min(frames, defaultParallelism)` threads. Every pin has
-    * finished when this returns or throws; on failure the first error is
-    * rethrown with the others suppressed, and the caller owns `dir`. */
-  private[graft] def pinAll(spark: SparkSession, frames: Seq[(String, DataFrame)],
-      dir: java.nio.file.Path): Map[String, DataFrame] = {
+  /** Pins each `(name, frame)` as a DISK_ONLY local checkpoint. Each pin is
+    * its own Spark job, submitted from a pool of
+    * `min(frames, defaultParallelism)` threads. Every pin has finished when
+    * this returns or throws; on failure the pins that succeeded are
+    * released and the first error is rethrown with the others suppressed. */
+  private[graft] def pinAll(spark: SparkSession,
+      frames: Seq[(String, DataFrame)]): Map[String, DataFrame] = {
     val threads = math.max(1, math.min(frames.size, spark.sparkContext.defaultParallelism))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads, (r: Runnable) => {
       val t = new Thread(r, "graft-pin")
@@ -200,26 +182,35 @@ object DbDiffApp {
     })
     try {
       val pins = frames.map { case (name, df) =>
-        val path = dir.resolve(name).toString
         name -> pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          def call(): DataFrame = {
-            df.write.parquet(path)
-            spark.read.schema(df.schema).parquet(path)
-          }
+          def call(): DataFrame = pin(df)
         })
       }
-      // wait for every pin before reporting any failure: the caller then
-      // deletes `dir`, which must not happen under a running write
-      val failures = pins.flatMap { case (_, f) =>
-        try { f.get(); None }
-        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      // wait for every pin before reporting any failure: a pin still running
+      // would escape the release below
+      val done = pins.map { case (name, f) =>
+        name -> (try Right(f.get())
+        catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) })
       }
+      val failures = done.collect { case (_, Left(e)) => e }
       failures.headOption.foreach { first =>
+        done.foreach { case (_, r) => r.foreach(graft.CacheScope.releasePin) }
         failures.tail.foreach(first.addSuppressed)
         throw first
       }
-      pins.map { case (name, f) => name -> f.get() }.toMap
+      done.collect { case (name, Right(df)) => name -> df }.toMap
     } finally pool.shutdown()
+  }
+
+  /** One pin: a lazy DISK_ONLY local checkpoint, materialized by a `noop`
+    * write — one Spark job, as the eager form runs. Unlike the eager form,
+    * which persists its RDD before the job and returns no frame when the
+    * job fails, this keeps a handle on a failed pin's partly stored RDD and
+    * releases it. */
+  private def pin(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
+    try { cp.write.format("noop").mode("overwrite").save(); cp }
+    catch { case e: Throwable => graft.CacheScope.releasePin(cp); throw e }
   }
 
   final case class IterationResult(changedKeys: Map[String, Long],

@@ -101,8 +101,8 @@ object DbDiffMain {
       if (open) r.reportPath.foreach(ReportSink.openInViewer(_))
     }
 
-    // every exit (`q`/`exit`, end of stdin, end of the demo) deletes the
-    // pinned snapshots and stops the session
+    // every exit (`q`/`exit`, end of stdin, end of the demo) releases the
+    // pinned snapshots' checkpoint blocks and stops the session
     try {
       if (demo) {
         mutated = true; runOnce()   // iteration 1: the scripted "operations"

@@ -2,6 +2,7 @@ package graft
 
 import graft.app.{DbDiffApp, DbDiffConfig, DbDiffMain, ReportSink}
 import graft.operators.Mutations
+import org.apache.spark.sql.graftshim.RddShim
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDateTime
@@ -308,7 +309,7 @@ class DbDiffAppSpec extends SparkTestBase {
 
   /** Region and nation from the fixture, with a way to break a snapshot:
     * `broken` names the table whose source throws when called, `failing`
-    * the one whose frame fails while its pin is being written. */
+    * the one whose frame fails while its pin is being stored. */
   private final class FlakySource {
     var broken, failing = ""
     var dropRegionZero = false
@@ -323,43 +324,63 @@ class DbDiffAppSpec extends SparkTestBase {
     }
   }
 
+  /** Ids of the RDDs the session holds persisted. */
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Ids of a snapshot's pinned RDDs. */
+  private def pinIds(snap: Map[String, org.apache.spark.sql.DataFrame]): Set[Int] =
+    snap.values.flatMap(RddShim.leafRdd).map(_.id).toSet
+
   test("a failed pin leaves only the before snapshot, and the next iteration diffs") {
     val src = new FlakySource
+    val outside = persisted
     val app = new DbDiffApp(spark, src.tables, src.apply, _ => (), maxConsoleRows = 0,
       pinSnapshots = true)
-    val root = app.pinRootDir.get
-    def snapshots = root.toFile.list().toSet
+    def appPins = persisted -- outside
     try {
-      assert(snapshots == Set("snap_1"))
+      val first = app.beforeSnapshot
+      assert(pinIds(first).size == 2 && appPins == pinIds(first))
       // the second table's source throws after the first table's source ran
       src.broken = "nation"
       intercept[IllegalStateException](app.iterate())
-      assert(snapshots == Set("snap_1"))
-      // the second table's pin fails while the first one's is written
+      assert(appPins == pinIds(first))
+      // the second table's pin fails while the first one's is stored
       src.broken = ""; src.failing = "nation"
       intercept[Exception](app.iterate())
-      assert(snapshots == Set("snap_1"))
+      assert(appPins == pinIds(first))
       // a good snapshot diffs against the before snapshot that survived
       src.failing = ""; src.dropRegionZero = true
       val r = app.iterate()
       assert(r.changedKeys == Map("region" -> 1L, "nation" -> 0L))
-      assert(snapshots.size == 1 && !snapshots("snap_1"))
+      // the swap released the retired snapshot, and a late use of it fails
+      // by name
+      val second = app.beforeSnapshot
+      assert(pinIds(second).size == 2 && appPins == pinIds(second))
+      val late = intercept[IllegalStateException](CacheScope.requireLive(first("region")))
+      assert(late.getMessage.contains("frame used after CacheScope.releaseAll"))
+      // the iteration ended with CacheScope.releaseAll(), which must not
+      // touch the app's own pins: the new before snapshot is still stored
+      assert(second.values.forall(df => RddShim.leafRdd(df).exists(
+        _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)))
+      // a report that cannot be written releases the after snapshot too
+      val notADir = Files.createTempFile("graft_report", ".html")
+      try intercept[java.io.IOException](app.iterate(notADir.resolve("r.html").toString))
+      finally Files.delete(notADir)
+      assert(appPins == pinIds(second))
     } finally app.close()
-    assert(!Files.exists(root))
+    assert(appPins.isEmpty)
   }
 
-  test("a constructor whose pin fails leaves no pin root behind") {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def roots = tmp.list().filter(_.startsWith("graft_snapshots")).toSet
-    val before = roots
+  test("a constructor whose pin fails leaves no persisted RDD behind") {
+    val outside = persisted
     val src = new FlakySource
     src.broken = "nation"
     intercept[IllegalStateException](
       new DbDiffApp(spark, src.tables, src.apply, _ => (), pinSnapshots = true))
-    assert(roots == before)
+    assert(persisted -- outside == Set.empty)
     src.broken = ""; src.failing = "nation"
     intercept[Exception](
       new DbDiffApp(spark, src.tables, src.apply, _ => (), pinSnapshots = true))
-    assert(roots == before)
+    assert(persisted -- outside == Set.empty)
   }
 }

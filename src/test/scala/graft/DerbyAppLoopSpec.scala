@@ -35,6 +35,8 @@ class DerbyAppLoopSpec extends SparkTestBase {
     assert(tables.find(_.name == "NOTES").get.pk == Seq("TXT", "SEV")) // keyless fallback
 
     val console = scala.collection.mutable.ArrayBuffer[String]()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val outside = persisted
     val app = new DbDiffApp(spark, tables, DbDiffApp.jdbcSource(spark, url, "APP"),
       consoleOut = console += _, pinSnapshots = true)
 
@@ -60,10 +62,11 @@ class DerbyAppLoopSpec extends SparkTestBase {
     // iteration 3: swap happened, database quiet → empty diff again
     assert(app.iterate().totalChanged == 0)
 
-    // close() deletes the pin root together with the last pinned snapshot
-    val root = app.pinRootDir.get
-    assert(root.toFile.list().length == 1)
+    // close() releases the last snapshot's pins: no app pin stays persisted
+    val pins = app.beforeSnapshot.values
+      .flatMap(org.apache.spark.sql.graftshim.RddShim.leafRdd).map(_.id).toSet
+    assert(pins.size == 2 && persisted -- outside == pins)
     app.close()
-    assert(!java.nio.file.Files.exists(root))
+    assert((persisted -- outside).isEmpty)
   }
 }

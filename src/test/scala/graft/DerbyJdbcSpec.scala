@@ -16,8 +16,8 @@ import java.util.concurrent.atomic.AtomicInteger
   * it does: scans via `spark.read.format("jdbc")`, a real catalog query on
   * one driver-side connection (no Spark job), driver-metadata PK discovery
   * with KEY_SEQ ordering, the range-partitioned snapshot scan, the app's
-  * pin read-back schema, and the full normalize→diff pipeline over
-  * JDBC-sourced frames. */
+  * snapshot pin (isolated from later DML), and the full normalize→diff
+  * pipeline over JDBC-sourced frames. */
 class DerbyJdbcSpec extends SparkTestBase {
 
   private val url = "jdbc:derby:memory:graftdb;create=true"
@@ -103,35 +103,48 @@ class DerbyJdbcSpec extends SparkTestBase {
     assert(tableJobs == 0)
   }
 
-  test("a pin reads back with the schema parquet inference would give, NULLs included") {
+  test("a pin holds the pre-mutation rows, schema and NULLs, off the JDBC relation") {
     val typedUrl = "jdbc:derby:memory:graftpins;create=true"
     System.setProperty("derby.system.home", "/tmp/derby")
-    val conn = java.sql.DriverManager.getConnection(typedUrl)
-    try {
-      val st = conn.createStatement()
-      st.execute("CREATE TABLE TYPED (ID BIGINT PRIMARY KEY, V VARCHAR(20), C CHAR(5), " +
-        "TS TIMESTAMP, D DATE, AMT DECIMAL(10,2), X DOUBLE, N INT)")
-      st.execute("INSERT INTO TYPED VALUES (1, 'alpha', 'ab', " +
-        "TIMESTAMP('2024-02-29 13:45:10.123456'), DATE('2024-02-29'), 1234.50, 0.25, 7)")
-      st.execute("INSERT INTO TYPED (ID) VALUES (2)") // every other column NULL
-      st.close()
-    } finally conn.close()
+    def sql(statements: String*): Unit = {
+      val conn = java.sql.DriverManager.getConnection(typedUrl)
+      try {
+        val st = conn.createStatement()
+        statements.foreach(st.execute)
+        st.close()
+      } finally conn.close()
+    }
+    sql("CREATE TABLE TYPED (ID BIGINT PRIMARY KEY, V VARCHAR(20), C CHAR(5), " +
+        "TS TIMESTAMP, D DATE, AMT DECIMAL(10,2), X DOUBLE, N INT)",
+      "INSERT INTO TYPED VALUES (1, 'alpha', 'ab', " +
+        "TIMESTAMP('2024-02-29 13:45:10.123456'), DATE('2024-02-29'), 1234.50, 0.25, 7)",
+      "INSERT INTO TYPED (ID) VALUES (2)", // every other column NULL
+      "INSERT INTO TYPED (ID, V) VALUES (3, 'gamma')")
 
     val src = DbDiffApp.jdbcSource(spark, typedUrl, "APP")(
       TableDef("TYPED", Seq("ID", "V", "C", "TS", "D", "AMT", "X", "N"), Seq("ID")))
-    val dir = java.nio.file.Files.createTempDirectory("graft_pin_schema")
+    val atPin = src.collect().toSet
+    val pinned = DbDiffApp.pinAll(spark, Seq("TYPED" -> src))("TYPED")
     try {
-      val pinned = DbDiffApp.pinAll(spark, Seq("TYPED" -> src), dir)("TYPED")
-      val inferred = spark.read.parquet(dir.resolve("TYPED").toString)
-      assert(pinned.schema == inferred.schema)
-      assert(pinned.collect().toSet == inferred.collect().toSet)
-      assert(pinned.collect().toSet == src.collect().toSet)
+      sql("UPDATE TYPED SET V = 'beta', N = 8 WHERE ID = 1",
+        "DELETE FROM TYPED WHERE ID = 3",
+        "INSERT INTO TYPED (ID, V) VALUES (4, 'delta')")
+      // the live table moved on; the pin did not
+      assert(src.collect().toSet != atPin)
+      assert(pinned.schema == src.schema)
+      assert(pinned.collect().toSet == atPin)
       assert(pinned.filter(col("ID") === 2).head().toSeq.tail.forall(_ == null))
-    } finally {
-      val s = java.nio.file.Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder()).forEach(java.nio.file.Files.delete(_))
-      finally s.close()
-    }
+      val leaf = org.apache.spark.sql.graftshim.RddShim.leafRdd(pinned)
+      assert(leaf.map(_.getStorageLevel) ==
+        Some(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+      def jdbcLeaves(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.analyzed.collectLeaves().collect {
+          case l: org.apache.spark.sql.execution.datasources.LogicalRelation
+            if l.relation.getClass.getSimpleName == "JDBCRelation" => l
+        }
+      assert(jdbcLeaves(src).nonEmpty)
+      assert(jdbcLeaves(pinned).isEmpty)
+    } finally CacheScope.releasePin(pinned)
   }
 
   test("range-partitioned snapshot scan produces the requested splits") {
