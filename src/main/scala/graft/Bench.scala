@@ -64,11 +64,11 @@ object Bench {
       attemptSeq += 1
       val group = s"$name#$attemptSeq"
       // drop any cached frames (persist()ed dedup intermediates AND
-      // checkpointed graph frames, which bypass the CacheManager) so every
-      // attempt pays the full plan cost — best-of-2 must not measure a
-      // warm cache left by the previous attempt
+      // checkpointed graph frames, which bypass the CacheManager; every
+      // one goes through CacheScope) so every attempt pays the full plan
+      // cost — best-of-2 must not measure a warm cache left by the
+      // previous attempt
       CacheScope.releaseAll()
-      spark.catalog.clearCache()
       quiesce(150)
       val t0 = System.nanoTime()
       val f = Future {

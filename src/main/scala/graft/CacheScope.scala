@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftshim.RddShim
@@ -24,16 +24,25 @@ import scala.jdk.CollectionConverters._
   *   - [[cached]] — `persist()` + registration. For frames consumed more
   *     than once by the RETURNED plan (both sides of a self-join, the
   *     shingle frame feeding candidate generation and verification).
-  *   - [[pinned]] — eager `localCheckpoint` + registration. For the static
-  *     frame of an ITERATIVE operator (PageRank's edges⋈degrees, label
-  *     propagation's symmetric edges, each connected-components round): the
-  *     frame is computed once, now, and downstream plans reference a compact
-  *     in-memory leaf instead of re-embedding the whole generator subtree.
-  *     Without the truncation every unrolled step ships the generator's full
-  *     lineage in its task binaries (~1 MB/stage for the simhash pipeline)
-  *     and re-canonicalizes it against the cache manager on every action —
+  *   - [[pinned]] — [[pin]] + registration. For the static frame of an
+  *     ITERATIVE operator (PageRank's edges⋈degrees, label propagation's
+  *     symmetric edges, each connected-components round): the frame is
+  *     computed once, now, and downstream plans reference a compact leaf
+  *     instead of re-embedding the whole generator subtree. Without the
+  *     truncation every unrolled step ships the generator's full lineage in
+  *     its task binaries (~1 MB/stage for the simhash pipeline) and
+  *     re-canonicalizes it against the cache manager on every action —
   *     measurable planning drag at 5 steps, pathological at 50. Checkpoint
   *     blocks bypass the `CacheManager`, so release goes through [[RddShim]].
+  *
+  * Every local checkpoint in the engine is made by [[pin]] (one frame, on
+  * the caller's thread) or [[pinAll]] (several, concurrently); a pin whose
+  * job fails releases its own blocks before the error propagates, so a
+  * failed pin leaves nothing persisted and nothing registered. Callers
+  * that own their pins (the dbdiff loop's snapshots) call these directly.
+  * A persist that only spans a build — a generator read by the pin or the
+  * group of writes that consume it — goes through [[persisting]], which
+  * unpersists when the build returns or throws.
   *
   * Session-scope artifacts — pinned frames several queries share, fixture
   * counts, the BM25 standing-index directory — live in ONE store
@@ -86,11 +95,51 @@ object CacheScope {
   }
 
   /** Compute `df` once, NOW, and return a lineage-truncated frame over the
-    * materialized partitions; blocks released at the next [[releaseAll]]. */
+    * materialized partitions; blocks released at the next [[releaseAll]].
+    * Registered only once the pin has succeeded. */
   def pinned(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(eager = true)
+    val cp = pin(df)
     live.add(() => releasePin(cp))
     cp
+  }
+
+  /** The one pin primitive: an eager local checkpoint of `df` at `level`
+    * (one Spark job), which, unlike Spark's own eager form, releases the
+    * RDD it persisted and rethrows when that job fails
+    * ([[RddShim.localCheckpoint]]). The caller owns the returned pin
+    * (release it with [[releasePin]]). */
+  def pin(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
+    RddShim.localCheckpoint(df, level)
+
+  /** [[pin]] for several frames at once: each pin is its own Spark job,
+    * submitted from a pool of `min(frames, defaultParallelism)` threads.
+    * Every pin has finished when this returns or throws; on failure the
+    * pins that succeeded are released and the first error is rethrown with
+    * the others suppressed. Returns the pins in `frames`' order,
+    * unregistered: the caller owns them. */
+  def pinAll(frames: Seq[DataFrame], level: StorageLevel): Seq[DataFrame] = {
+    val cores = frames.headOption.fold(1)(_.sparkSession.sparkContext.defaultParallelism)
+    val pool = Executors.newFixedThreadPool(math.max(1, math.min(frames.size, cores)))
+    // wait for every pin before reporting any failure: a pin still running
+    // would escape the release below
+    val done = try frames.map(df => pool.submit(new Callable[DataFrame] { def call() = pin(df, level) }))
+      .map(f => try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) })
+    finally pool.shutdown()
+    val failures = done.collect { case Left(e) => e }
+    failures.headOption.foreach { first =>
+      done.foreach(_.foreach(releasePin))
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+    done.collect { case Right(df) => df }
+  }
+
+  /** Loan a `persist()`ed `df` to `use` — a build that reads one generator
+    * several times (a pin, a group of writes) — and unpersist it when
+    * `use` returns or throws. */
+  def persisting[T](df: DataFrame)(use: DataFrame => T): T = {
+    val p = df.persist()
+    try use(p) finally { p.unpersist(blocking = false); () }
   }
 
   /** Fail fast, by name, if `df`'s plan references a pinned frame that a
@@ -152,7 +201,7 @@ object CacheScope {
       .map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sorted
   }
 
-  /** A session-stored eager pin — for a frame several registry queries in
+  /** A session-stored pin — for a frame several registry queries in
     * one session each need in full (the dedup survivor table: both
     * `dedup_survivors` and the curation capstone consume the same
     * component pass). Frames held this way must be control-plane-sized
@@ -164,13 +213,15 @@ object CacheScope {
 
   /** [[sessionPinned]] for an artifact of several frames: one key, one
     * compute block, so a miss on ANY frame recomputes all of them once
-    * and the served frames always come from the same run. A frame whose
-    * blocks something else unpersisted (a harness force-clearing all
-    * persistent RDDs) cannot recompute — its lineage is truncated — so
-    * its storage level is the entry's liveness check. */
+    * and the served frames always come from the same run. The frames are
+    * pinned by [[pinAll]], so if any pin fails none stays stored and no
+    * entry is made: the next lookup rebuilds. A frame whose blocks
+    * something else unpersisted (a harness force-clearing all persistent
+    * RDDs) cannot recompute — its lineage is truncated — so its storage
+    * level is the entry's liveness check. */
   def sessionPinnedAll(name: String, dir: String, spark: SparkSession)(
       compute: => Seq[DataFrame]): Seq[DataFrame] =
-    sessionArtifact(name, dir, spark)(compute.map(_.localCheckpoint(eager = true)))(
+    sessionArtifact(name, dir, spark)(pinAll(compute, StorageLevel.MEMORY_AND_DISK))(
       _.forall(df => RddShim.leafRdd(df).forall(_.getStorageLevel != StorageLevel.NONE)),
       _.foreach(releasePin))
 

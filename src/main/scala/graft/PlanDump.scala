@@ -32,7 +32,6 @@ object PlanDump {
         // queries may pin caches while building (IVF indexes, dedup
         // intermediates); release so ~110 plans in one session stay light
         CacheScope.releaseAll()
-        spark.catalog.clearCache()
       }
     }
     CacheScope.releaseSession()

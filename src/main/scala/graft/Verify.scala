@@ -19,9 +19,9 @@ object Verify {
       }
       // queries cache intermediates (dedup/IVF persists, graph checkpoint
       // blocks); release them so ~180 queries in one session don't
-      // accumulate storage
+      // accumulate storage. Every persist in the engine goes through
+      // CacheScope, so this leaves the CacheManager empty too.
       CacheScope.releaseAll()
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -47,8 +47,9 @@ final class DbDiffApp(
     * the next action on the snapshot instead of recomputing it, and under
     * dynamic allocation an executor holding pins stays alive only while
     * `spark.dynamicAllocation.cachedExecutorIdleTimeout` keeps its default
-    * (infinite). Pins run concurrently, one Spark job per table, from a pool
-    * capped at `min(tables, defaultParallelism)` threads: a JDBC pin is a
+    * (infinite). Pins run concurrently through [[graft.CacheScope.pinAll]],
+    * one Spark job per table, from a pool capped at
+    * `min(tables, defaultParallelism)` threads: a JDBC pin is a
     * one-partition read, so more pins than cores would only queue. Like the
     * reference's table-by-table scan, a snapshot promises no cross-table
     * consistency. `source` itself is called on the caller's thread, so it
@@ -57,11 +58,13 @@ final class DbDiffApp(
     * snapshot): [[iterate]] releases a snapshot as soon as the swap retires
     * it — a long-running loop holds at most two pinned snapshots — and
     * [[close]] releases the last one. A snapshot whose pin fails leaves
-    * nothing behind: see [[DbDiffApp.pinAll]]. Leave false for immutable
-    * sources (parquet fixture dirs) where pinning is pure cost. */
+    * nothing behind: `pinAll` releases the pins that succeeded before it
+    * rethrows. Leave false for immutable sources (parquet fixture dirs)
+    * where pinning is pure cost. */
   private def snapshotAll(): Map[String, DataFrame] = {
-    val frames = tables.map(t => t.name -> source(t))
-    if (pinSnapshots) DbDiffApp.pinAll(spark, frames) else frames.toMap
+    val frames = tables.map(source)
+    tables.map(_.name).zip(
+      if (pinSnapshots) graft.CacheScope.pinAll(frames, StorageLevel.DISK_ONLY) else frames).toMap
   }
 
   /** Drops a snapshot's pinned blocks; an unpinned snapshot holds none. */
@@ -167,52 +170,6 @@ final class DbDiffApp(
 }
 
 object DbDiffApp {
-  /** Pins each `(name, frame)` as a DISK_ONLY local checkpoint. Each pin is
-    * its own Spark job, submitted from a pool of
-    * `min(frames, defaultParallelism)` threads. Every pin has finished when
-    * this returns or throws; on failure the pins that succeeded are
-    * released and the first error is rethrown with the others suppressed. */
-  private[graft] def pinAll(spark: SparkSession,
-      frames: Seq[(String, DataFrame)]): Map[String, DataFrame] = {
-    val threads = math.max(1, math.min(frames.size, spark.sparkContext.defaultParallelism))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads, (r: Runnable) => {
-      val t = new Thread(r, "graft-pin")
-      t.setDaemon(true)
-      t
-    })
-    try {
-      val pins = frames.map { case (name, df) =>
-        name -> pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          def call(): DataFrame = pin(df)
-        })
-      }
-      // wait for every pin before reporting any failure: a pin still running
-      // would escape the release below
-      val done = pins.map { case (name, f) =>
-        name -> (try Right(f.get())
-        catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) })
-      }
-      val failures = done.collect { case (_, Left(e)) => e }
-      failures.headOption.foreach { first =>
-        done.foreach { case (_, r) => r.foreach(graft.CacheScope.releasePin) }
-        failures.tail.foreach(first.addSuppressed)
-        throw first
-      }
-      done.collect { case (name, Right(df)) => name -> df }.toMap
-    } finally pool.shutdown()
-  }
-
-  /** One pin: a lazy DISK_ONLY local checkpoint, materialized by a `noop`
-    * write — one Spark job, as the eager form runs. Unlike the eager form,
-    * which persists its RDD before the job and returns no frame when the
-    * job fails, this keeps a handle on a failed pin's partly stored RDD and
-    * releases it. */
-  private def pin(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
-    try { cp.write.format("noop").mode("overwrite").save(); cp }
-    catch { case e: Throwable => graft.CacheScope.releasePin(cp); throw e }
-  }
-
   final case class IterationResult(changedKeys: Map[String, Long],
       reportPath: Option[String], feedPath: Option[String] = None) {
     def totalChanged: Long = changedKeys.values.sum

@@ -30,17 +30,18 @@ object GraphOps {
     * component — a deterministic labeling, independent of partitioning and
     * round count. Fails loudly if `maxIter` rounds don't converge. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    // pin the (possibly expensive) edge generator while the symmetric union
-    // materializes — it's referenced twice, and the eager checkpoint means
-    // every later round reads a compact leaf instead of re-embedding (and
+    // persist the (possibly expensive) edge generator while the symmetric
+    // union materializes — it's referenced twice, and the pin means every
+    // later round reads a compact leaf instead of re-embedding (and
     // re-shipping, in each stage's task binary) the generator's lineage
-    val e0 = edges.select(col("src"), col("dst")).persist()
-    val sym = CacheScope.pinned(e0.select(col("src"), col("dst"))
-      .union(e0.select(col("dst").as("src"), col("src").as("dst"))))
-    e0.unpersist(blocking = false)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .persist()
+    val sym = CacheScope.persisting(edges.select(col("src"), col("dst"))) { e0 =>
+      CacheScope.pinned(e0.select(col("src"), col("dst"))
+        .union(e0.select(col("dst").as("src"), col("src").as("dst"))))
+    }
+    // round 0's labels: persisted (round 1 reads them three times), then
+    // released with the other retired rounds below
+    var labels = CacheScope.cached(sym.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -67,16 +68,18 @@ object GraphOps {
       // subtree copies by round k. A pin-every-5 cadence measured 82 s at
       // sf10 (10–25 s per checkpoint replan, growing analysis cost in the
       // rounds between); pinning each round keeps every plan one round
-      // deep — 0.1 s per pin, 16 s total, identical labels. The eager
-      // checkpoint is also the round's only materialization: the
-      // convergence count below reads the leaf.
+      // deep — 0.1 s per pin, 16 s total, identical labels. The pin is
+      // also the round's only materialization: the convergence count below
+      // reads the leaf.
       val next = CacheScope.pinned(
         labels.select(col("id"), col("label")).union(neigh).union(hop)
           .groupBy(col("id")).agg(min(col("label")).as("label")))
       val changed = next
         .join(labels.select(col("id"), col("label").as("__old")), Seq("id"))
         .filter(col("label") =!= col("__old")).count()
-      labels.unpersist() // no-op on pinned ancestors (owned by CacheScope)
+      // the retired round is dead once `changed` is counted: release it
+      // now, so at most two label tables are stored at once
+      CacheScope.releasePin(labels)
       labels = next
       converged = changed == 0
       iter += 1
@@ -95,20 +98,20 @@ object GraphOps {
     * against hub-vertex quadratic blow-up in distributed triangle
     * counting. Returns one row (n_vertices, n_edges, n_triangles). */
   def triangleStats(pairs: DataFrame): DataFrame = {
-    val p = pairs.select(col("doc_a"), col("doc_b")).persist()
-    val deg = p.select(col("doc_a").as("id")).union(p.select(col("doc_b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
     val aLower = col("da") < col("db") ||
       (col("da") === col("db") && col("doc_a") < col("doc_b"))
-    // eagerly materialize the oriented edge list (three legs of the
-    // triangle join scan it), then the pair generator can be released:
-    // every downstream count derives from `e` (one row per unique pair)
-    val e = CacheScope.pinned(p
-      .join(deg.select(col("id").as("doc_a"), col("deg").as("da")), "doc_a")
-      .join(deg.select(col("id").as("doc_b"), col("deg").as("db")), "doc_b")
-      .select(when(aLower, col("doc_a")).otherwise(col("doc_b")).as("src"),
-        when(aLower, col("doc_b")).otherwise(col("doc_a")).as("dst")))
-    p.unpersist(blocking = false)
+    // pin the oriented edge list now (three legs of the triangle join scan
+    // it), then the pair generator can be released: every downstream count
+    // derives from `e` (one row per unique pair)
+    val e = CacheScope.persisting(pairs.select(col("doc_a"), col("doc_b"))) { p =>
+      val deg = p.select(col("doc_a").as("id")).union(p.select(col("doc_b").as("id")))
+        .groupBy(col("id")).agg(count(lit(1)).as("deg"))
+      CacheScope.pinned(p
+        .join(deg.select(col("id").as("doc_a"), col("deg").as("da")), "doc_a")
+        .join(deg.select(col("id").as("doc_b"), col("deg").as("db")), "doc_b")
+        .select(when(aLower, col("doc_a")).otherwise(col("doc_b")).as("src"),
+          when(aLower, col("doc_b")).otherwise(col("doc_a")).as("dst")))
+    }
     val tri = e.select(col("src").as("a"), col("dst").as("b"))
       .join(e.select(col("src").as("b"), col("dst").as("c")), "b")
       .join(e.select(col("src").as("a"), col("dst").as("c")), Seq("a", "c"))
@@ -204,16 +207,16 @@ object GraphOps {
     // the pair generator (banded near-dup candidates) is the expensive
     // input and is referenced twice below (edge side + degree side of the
     // union) — pin it so building the static frame runs it ONCE
-    val p = pairs.select(col("doc_a"), col("doc_b")).persist()
-    val sym = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    // each step scans edges-with-degree once; the eager checkpoint
-    // computes the static frame NOW (so the generator cache can be
-    // dropped immediately) and truncates its lineage, keeping the
-    // unrolled steps' plans and task binaries small
-    val edgesDeg = CacheScope.pinned(sym
-      .join(sym.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
-    p.unpersist(blocking = false)
+    // each step scans edges-with-degree once; the pin computes the static
+    // frame NOW (so the generator cache can be dropped immediately) and
+    // truncates its lineage, keeping the unrolled steps' plans and task
+    // binaries small
+    val edgesDeg = CacheScope.persisting(pairs.select(col("doc_a"), col("doc_b"))) { p =>
+      val sym = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      CacheScope.pinned(sym
+        .join(sym.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
+    }
     var scores = edgesDeg.select(col("src").as("id")).distinct()
       .withColumn("score", lit(1000000L))
     (1 to iters).foreach { _ =>
@@ -255,15 +258,15 @@ object GraphOps {
     * aggregation — no sort-based window in the loop. */
   def labelPropagation(pairs: DataFrame, iters: Int = LpIters): DataFrame = {
     // the pair generator (banded near-dup candidates) is referenced twice
-    // by the symmetric union — pin it so it runs once; the eager
-    // checkpoint (every round scans it) truncates lineage so the unrolled
-    // rounds plan against a compact leaf, and the generator cache is
-    // dropped as soon as the edges are materialized
-    val p = pairs.select(col("doc_a"), col("doc_b")).persist()
-    val sym = CacheScope.pinned(
-      p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
-    p.unpersist(blocking = false)
+    // by the symmetric union — persist it so it runs once; the pin (every
+    // round scans it) truncates lineage so the unrolled rounds plan against
+    // a compact leaf, and the generator cache is dropped as soon as the
+    // edges are materialized
+    val sym = CacheScope.persisting(pairs.select(col("doc_a"), col("doc_b"))) { p =>
+      CacheScope.pinned(
+        p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+          .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+    }
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
     (1 to iters).foreach { _ =>

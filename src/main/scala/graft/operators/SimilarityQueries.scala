@@ -1170,15 +1170,14 @@ object SimilarityQueries {
     * `ann_ivf_topk` runs; [[queryIvfIndex]] reproduces its results from
     * the persisted index, pinned by spec. */
   def buildIvfIndex(spark: SparkSession, sfDir: String, dir: String): Unit = {
-    val qn = components(Tables.load(spark, sfDir, "embeddings"), Seq("vec_id", "label"), "qv")
-      .persist()
-    try {
+    CacheScope.persisting(
+        components(Tables.load(spark, sfDir, "embeddings"), Seq("vec_id", "label"), "qv")) { qn =>
       val (cq, cnorms) = centroids(qn)
       val assigned = topClusters(centroidScores(qn.drop("label"), vecNorms(qn), cq, cnorms), 1)
       cq.write.mode("overwrite").parquet(s"$dir/centroids")
       cnorms.write.mode("overwrite").parquet(s"$dir/centroid_norms")
       assigned.write.mode("overwrite").parquet(s"$dir/assignment")
-    } finally qn.unpersist()
+    }
   }
 
   /** Incremental index maintenance: assign NEW vectors against the

@@ -229,16 +229,15 @@ object TextQueries {
 
   private def writeBm25Segment(docs: DataFrame, dir: String, first: Boolean): Unit = {
     val mode = if (first) "overwrite" else "append"
-    val post = bm25Postings(docs).persist()
-    post.write.mode(mode).parquet(s"$dir/postings")
-    post.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .write.mode(mode).parquet(s"$dir/df")
-    post.select(col("doc_id"), col("dl")).dropDuplicates("doc_id")
-      .agg(coalesce(sum(col("dl")), lit(0L)).as("ts"))
-      .crossJoin(docs.agg(count(lit(1)).as("n_docs")))
-      .write.mode(mode).parquet(s"$dir/stats")
-    post.unpersist()
-    ()
+    CacheScope.persisting(bm25Postings(docs)) { post =>
+      post.write.mode(mode).parquet(s"$dir/postings")
+      post.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+        .write.mode(mode).parquet(s"$dir/df")
+      post.select(col("doc_id"), col("dl")).dropDuplicates("doc_id")
+        .agg(coalesce(sum(col("dl")), lit(0L)).as("ts"))
+        .crossJoin(docs.agg(count(lit(1)).as("n_docs")))
+        .write.mode(mode).parquet(s"$dir/stats")
+    }
   }
 
   /** Fold the append-only df/stats segments back to one segment each

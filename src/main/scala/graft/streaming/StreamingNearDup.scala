@@ -142,8 +142,8 @@ object StreamingNearDup {
       try q.processAllAvailable() finally q.stop()
       // the sunk candidate set (distinct: a pair co-bucketed in k bands
       // surfaces k times, exactly like the batch self-join pre-distinct)
-      // feeds the batch verify; the pin (eager localCheckpoint, registered
-      // for releaseAll) materializes it before the temp dir disappears
+      // feeds the batch verify; the pin (CacheScope.pinned, registered for
+      // releaseAll) materializes it before the temp dir disappears
       val cand = spark.read.parquet(outDir)
         .select(col("doc_a"), col("doc_b")).distinct()
         .transform(graft.CacheScope.pinned)

@@ -213,6 +213,83 @@ class CacheHygieneSpec extends SparkTestBase {
     CacheScope.releaseAll()
   }
 
+  /** Ids of the RDDs the session holds persisted. */
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** `0 until n` as an id column that fails inside its job from `failFrom` on. */
+  private def ids(n: Long, failFrom: Long = Long.MaxValue) = {
+    import org.apache.spark.sql.functions.{assert_true, col, lit}
+    spark.range(n).toDF().filter(assert_true(col("id") < lit(failFrom)).isNull)
+  }
+
+  test("a pin whose job fails leaves no persisted RDD behind") {
+    val outside = persisted
+    intercept[Exception](CacheScope.pinned(ids(100, failFrom = 50)))
+    assert(persisted == outside)
+    CacheScope.releaseAll()
+  }
+
+  test("a session artifact whose second pin fails stores nothing; the next lookup rebuilds") {
+    CacheScope.releaseSession()
+    val outside = persisted
+    var builds = 0
+    def lookup(failFrom: Long) = CacheScope.sessionPinnedAll("failing_pair", Sf, spark) {
+      builds += 1
+      Seq(ids(10), ids(10, failFrom))
+    }
+    intercept[Exception](lookup(failFrom = 5))
+    assert(persisted == outside)
+    assert(!CacheScope.sessionKeys(spark).contains(s"failing_pair:$Sf"))
+    val Seq(a, b) = lookup(failFrom = Long.MaxValue)
+    assert(builds == 2 && a.count() == 10 && b.count() == 10)
+    assert(CacheScope.sessionKeys(spark).contains(s"failing_pair:$Sf"))
+    CacheScope.releaseSession()
+    assert(persisted == outside)
+  }
+
+  test("registry pins are stored MEMORY_AND_DISK") {
+    import org.apache.spark.sql.graftshim.RddShim
+    import org.apache.spark.storage.StorageLevel
+    CacheScope.releaseSession()
+    val Seq(session) = CacheScope.sessionPinnedAll("level", Sf, spark)(Seq(ids(5)))
+    Seq(CacheScope.pinned(ids(10)), session).foreach { df =>
+      assert(RddShim.leafRdd(df).map(_.getStorageLevel) == Some(StorageLevel.MEMORY_AND_DISK))
+    }
+    CacheScope.releaseSession()
+    CacheScope.releaseAll()
+  }
+
+  test("connectedComponents keeps only its edges and final labels stored") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftshim.RddShim
+    // a 16-vertex chain: pointer doubling needs 5 rounds plus a quiet one
+    val chain = spark.range(15).select(col("id").as("src"), (col("id") + 1).as("dst"))
+    intercept[IllegalArgumentException](graft.operators.GraphOps.connectedComponents(chain, 2))
+    CacheScope.releaseAll()
+    val outside = persisted
+    val cc = graft.operators.GraphOps.connectedComponents(chain)
+    val left = persisted -- outside
+    // the symmetric edge pin and the last round's labels, which back `cc`
+    assert(left.size == 2, s"expected 2 persisted RDDs, found ${left.size}")
+    assert(RddShim.allLeafRdds(cc).map(_.id).toSet.subsetOf(left))
+    assert(cc.filter(col("component_id") =!= 0).count() == 0 && cc.count() == 16)
+    CacheScope.releaseAll()
+    assert(persisted == outside)
+  }
+
+  test("localCheckpoint( and .persist( appear in src/main only in CacheScope and its Spark shim") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val hits = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(Files.isRegularFile(_))
+      .filter { p =>
+        val text = Files.readString(p)
+        text.contains("localCheckpoint(") || text.contains(".persist(")
+      }
+      .map(_.getFileName.toString).toList.sorted
+    assert(hits == List("CacheScope.scala", "RddShim.scala"))
+  }
+
   test("requireLive names a pinned frame used after releaseAll") {
     import spark.implicits._
     val pinnedFrame = CacheScope.pinned(Seq(1, 2, 3).toDF("v"))

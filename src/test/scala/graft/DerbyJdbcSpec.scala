@@ -124,7 +124,7 @@ class DerbyJdbcSpec extends SparkTestBase {
     val src = DbDiffApp.jdbcSource(spark, typedUrl, "APP")(
       TableDef("TYPED", Seq("ID", "V", "C", "TS", "D", "AMT", "X", "N"), Seq("ID")))
     val atPin = src.collect().toSet
-    val pinned = DbDiffApp.pinAll(spark, Seq("TYPED" -> src))("TYPED")
+    val Seq(pinned) = CacheScope.pinAll(Seq(src), org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
       sql("UPDATE TYPED SET V = 'beta', N = 8 WHERE ID = 1",
         "DELETE FROM TYPED WHERE ID = 3",
