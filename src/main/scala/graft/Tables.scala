@@ -59,9 +59,28 @@ object Tables {
     * Lakes written by other engines often carry TIMESTAMP_NTZ instead;
     * normalize that to session-local TIMESTAMP too (the session is pinned
     * UTC, so the cast is a re-tag, not a value change). */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    normalized(spark, name)(_.read.parquet(s"$sfDir/$name.parquet"))
+
+  /** [[load]] as a file-source stream over the same rows, for the
+    * streaming twins. The file stream source requires a directory: a
+    * single-file fixture (the sf* fixtures' layout) streams its parent directory
+    * with a name filter, a directory fixture (ScaleUp's layout) streams
+    * directly. */
+  def stream(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    normalized(spark, name) { s =>
+      val path = s"$sfDir/$name.parquet"
+      val reader = s.readStream.schema(s.read.parquet(path).schema)
+      if (new java.io.File(path).isDirectory) reader.parquet(path)
+      else reader.option("pathGlobFilter", s"$name.parquet").parquet(sfDir)
+    }
+
+  /** `read` under the nanos-as-long conf, with the events `ts` column
+    * normalized to microsecond TIMESTAMP (see [[load]]). */
+  private def normalized(spark: SparkSession, name: String)(
+      read: SparkSession => DataFrame): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = read(spark)
     if (name != "events") df
     else df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

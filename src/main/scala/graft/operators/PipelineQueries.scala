@@ -744,9 +744,12 @@ object PipelineQueries {
             s"w * greatest(1, $DoremiEgBase + $DoremiEta * (loss - mix))" +
               s" div $DoremiEgBase").as("wr"))
         val tot = raw.agg(sum(col("wr")).as("wtot"))
+        val prev = w
         w = CacheScope.pinned(raw.crossJoin(broadcast(tot))
           .select(col("source"),
             expr(s"wr * $DoremiWeightScale div wtot").as("w")))
+        // the retired round is dead once the new pin has materialized
+        CacheScope.releasePin(prev)
       }
       loss.select(col("source"), col("n_occ"), col("loss"))
         .join(w.select(col("source"), col("w")), "source")
@@ -1321,8 +1324,11 @@ object PipelineQueries {
             qcScores(feat, w).filter(col("y") * col("s") <= 0L).select(col("doc_id")),
             "doc_id")
           .groupBy(col("j")).agg(sum(col("y") * col("x")).as("dw"))
+        val prev = w
         w = CacheScope.pinned(w.join(upd, Seq("j"), "left_outer")
           .select(col("j"), (col("w") + coalesce(col("dw"), lit(0L))).as("w")))
+        // the retired round is dead once the new pin has materialized
+        CacheScope.releasePin(prev)
       }
       w
     }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * The reference's interactive before/after loop is a manually-triggered
   * micro-batch over mutable external state (SURVEY §2.9); its idiomatic
   * scale-out form is a continuous pipeline: `readStream` → watermarked
-  * windowed aggregation / keyed session state → `writeStream`. The column
+  * windowed aggregation / keyed session state → streaming sink. The column
   * logic matches the batch operators in
   * [[graft.operators.EventsQueries]], so the DuckDB-oracle-checked batch
   * results pin the streaming semantics too.
@@ -120,28 +120,16 @@ object EventStreams {
   /** Convenience: run [[clickViewJoin]] over a bounded parquet-backed
     * stream to completion (both sides read the same directory). */
   def runClickViewJoinOnce(spark: SparkSession, eventsDir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val stream = spark.readStream.schema(schema).parquet(eventsDir)
-    val q = clickViewJoin(stream)
-      .writeStream.outputMode(OutputMode.Append).format("memory")
-      .queryName("graft_click_view").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table("graft_click_view")
-  }
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    StreamRun.memory(clickViewJoin(spark.readStream.schema(schema).parquet(eventsDir)),
+      OutputMode.Append, "click_view")
 
   /** Convenience: run [[tumblingCounts]] over a bounded parquet-backed
     * stream to completion and return the result (used by tests/demos —
     * `availableNow` processes the whole input then stops). */
-  def runTumblingOnce(spark: SparkSession, eventsDir: String, schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val stream = spark.readStream.schema(schema).parquet(eventsDir)
-    val q = tumblingCounts(stream)
-      .writeStream.outputMode(OutputMode.Complete).format("memory")
-      .queryName("graft_tumbling").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table("graft_tumbling")
-  }
+  def runTumblingOnce(spark: SparkSession, eventsDir: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    StreamRun.memory(tumblingCounts(spark.readStream.schema(schema).parquet(eventsDir)),
+      OutputMode.Complete, "tumbling")
 
   /** Streaming bottom-k sample quantiles: the sketch's merge is a set
     * union + trim — associative, commutative, AND idempotent-under-
@@ -176,15 +164,9 @@ object EventStreams {
     * stream to completion. */
   def runSeasonalAnomalyOnce(spark: SparkSession, eventsDir: String,
       schema: org.apache.spark.sql.types.StructType, baseline: DataFrame,
-      thresholdMicro: Long): DataFrame = {
-    val stream = spark.readStream.schema(schema).parquet(eventsDir)
-    val q = seasonalAnomaly(stream, baseline, thresholdMicro)
-      .writeStream.outputMode(OutputMode.Append).format("memory")
-      .queryName("graft_seasonal_anomaly").start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table("graft_seasonal_anomaly")
-  }
+      thresholdMicro: Long): DataFrame =
+    StreamRun.memory(seasonalAnomaly(spark.readStream.schema(schema).parquet(eventsDir),
+      baseline, thresholdMicro), OutputMode.Append, "seasonal_anomaly")
 
   def sampleQuantiles(events: DataFrame, k: Int): DataFrame =
     events.groupBy(col("event_type"))
@@ -193,8 +175,6 @@ object EventStreams {
       .select(col("event_type"), size(col("samp")).as("m"),
         element_at(col("samp"),
           (floor(lit(0.5) * (size(col("samp")) - 1)) + 1).cast("int")).as("p50"))
-
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** [[tumblingCounts]] as a real Structured Streaming query over the raw
     * fixture parquet, run to completion — see [[runWindowedRawOnce]]. */
@@ -219,40 +199,14 @@ object EventStreams {
     runWindowedRawOnce(spark, sfDir, slidingCounts, "sliding")
 
   /** Run a windowed streaming aggregation straight off the raw fixture
-    * parquet (nanos-ts normalization inlined, mirroring
-    * [[graft.Tables.load]]) and return the final Complete-mode table —
+    * parquet ([[graft.Tables.stream]], so the nanos-`ts` normalization is
+    * [[graft.Tables.load]]'s) and return the final Complete-mode table —
     * Complete mode keeps every window in the state store, so the result
     * equals the batch aggregation exactly: DuckDB-oracle-checkable AND
     * bench-timeable (source listing + micro-batch planning + state-store
-    * path end-to-end). Query names are uniquified per call so a
-    * watchdog-cancelled attempt's still-draining stream can never collide
-    * with a retry. */
+    * path end-to-end). */
   private def runWindowedRawOnce(spark: SparkSession, sfDir: String,
-      agg: DataFrame => DataFrame, label: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$sfDir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    // the file stream source requires a DIRECTORY: driver fixtures are
-    // single files, so stream the parent dir with a name filter; generated
-    // scale-up fixtures are directories and stream directly
-    val raw =
-      if (new java.io.File(path).isDirectory)
-        spark.readStream.schema(schema).parquet(path)
-      else
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(sfDir)
-    val ev = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
-    val name = s"graft_stream_${label}_${runSeq.incrementAndGet()}"
-    val q = agg(ev)
-      .writeStream.outputMode(OutputMode.Complete).format("memory")
-      .queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
-  }
+      agg: DataFrame => DataFrame, label: String): DataFrame =
+    StreamRun.memory(agg(graft.Tables.stream(spark, sfDir, "events")),
+      OutputMode.Complete, s"stream_$label")
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** The trained quality classifier as a CONTINUOUS scoring stage — the
   * deployment shape of the FineWeb-Edu/CCNet filter: the model trains
@@ -17,12 +15,9 @@ import org.apache.spark.sql.streaming.OutputMode
   *
   * At 100 TB-a-day ingest this is the stage that scores documents as they
   * arrive at scan speed; the trainer reruns offline on whatever cadence
-  * the teacher labels refresh. Temp dir and checkpoint are per-call and
-  * deleted on exit (the [[StreamingDiff.runCdc]] discipline).
+  * the teacher labels refresh. The sink runs under [[StreamRun]].
   */
 object StreamingClassifier {
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Train in batch, score the documents fixture as a structured stream
     * into a parquet sink, fold the sunk decisions into the per-source
     * confusion — identical to the batch `pipeline_quality_classifier`
@@ -34,43 +29,18 @@ object StreamingClassifier {
     // query; a memo hit never touches the corpus. No releaseAll here: the
     // CacheScope contract reserves it for BETWEEN-queries points, and a
     // caller holding another registry frame across this query must not
-    // have its blocks swept mid-query (the trainer's own per-round pins
-    // are released at the harness's next between-queries releaseAll).
+    // have its blocks swept mid-query (the trainer's feature pin and last
+    // round's weights are released at the harness's next releaseAll).
     val wFrame = graft.operators.PipelineQueries.qcWeights(spark, sfDir)
     val weights = {
       val m = wFrame.collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
       Array.tabulate(graft.operators.PipelineQueries.QcFeatures.toInt + 1)(
         j => m.getOrElse(j, 0L))
     }
-    val path = s"$sfDir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    val raw =
-      if (new java.io.File(path).isDirectory)
-        spark.readStream.schema(schema).parquet(path)
-      else
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-    val root = java.nio.file.Files.createTempDirectory("graft_qclf_").toString
-    val (outDir, ckptDir) = (s"$root/decisions", s"$root/ckpt")
-    try {
-      val q = graft.operators.PipelineQueries.qcDecide(raw, weights)
-        .writeStream.outputMode(OutputMode.Append)
-        .queryName(s"quality_classifier_${runSeq.incrementAndGet()}")
-        .format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckptDir)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val local = graft.operators.PipelineQueries
-        .qcConfusion(spark.read.parquet(outDir))
+    StreamRun.parquet(graft.operators.PipelineQueries.qcDecide(
+        graft.Tables.stream(spark, sfDir, "documents"), weights), "quality_classifier") {
+      decisions => graft.operators.PipelineQueries.qcConfusion(decisions)
         .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
-      local.toDF("source", "n_docs", "n_pred_keep", "n_true_keep",
-        "n_agree", "accuracy_ppm")
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
-          .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-    }
+    }.toDF("source", "n_docs", "n_pred_keep", "n_true_keep", "n_agree", "accuracy_ppm")
   }
 }

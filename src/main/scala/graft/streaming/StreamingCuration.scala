@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** The quality-rule cascade as a CONTINUOUS curation stage.
   *
@@ -15,51 +14,20 @@ import org.apache.spark.sql.streaming.OutputMode
   *
   * Data stays distributed end to end: the decision rows land in the file
   * sink (never a driver-side memory sink); only the ≤5-row per-reason
-  * funnel crosses to the driver. Temp dir and checkpoint are per-call and
-  * deleted on exit, so a watchdog-cancelled attempt can never collide with
-  * a retry (the [[StreamingDiff.runCdc]] discipline).
+  * funnel crosses to the driver. The sink runs under [[StreamRun]].
   */
 object StreamingCuration {
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Run the cascade over the raw documents fixture as a structured stream
     * into a parquet sink, then fold the sunk decisions into the curation
     * FUNNEL (reason → docs, tokens) — identical to aggregating the batch
     * cascade, which is exactly what the oracle does. */
   def runCascadeFunnelOnce(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val path = s"$sfDir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    // the file stream source requires a DIRECTORY: driver fixtures are
-    // single files, so stream the parent dir with a name filter; generated
-    // scale-up fixtures are directories and stream directly
-    val raw =
-      if (new java.io.File(path).isDirectory)
-        spark.readStream.schema(schema).parquet(path)
-      else
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-    val root = java.nio.file.Files.createTempDirectory("graft_cascade_").toString
-    val (outDir, ckptDir) = (s"$root/decisions", s"$root/ckpt")
-    try {
-      val q = graft.operators.PipelineQueries.cascadeOver(raw)
-        .writeStream.outputMode(OutputMode.Append)
-        .queryName(s"cascade_funnel_${runSeq.incrementAndGet()}")
-        .format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckptDir)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val localFunnel = spark.read.parquet(outDir)
-        .groupBy(col("reason"))
+    StreamRun.parquet(graft.operators.PipelineQueries.cascadeOver(
+        graft.Tables.stream(spark, sfDir, "documents")), "cascade_funnel") {
+      _.groupBy(col("reason"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("total_tokens"))
         .as[(String, Long, Long)].collect().toSeq
-      localFunnel.toDF("reason", "n_docs", "total_tokens")
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
-          .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-    }
+    }.toDF("reason", "n_docs", "total_tokens")
   }
 }

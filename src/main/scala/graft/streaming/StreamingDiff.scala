@@ -100,9 +100,8 @@ object StreamingDiff {
     * GB-scale, one INSERTED per orders row), and the only driver
     * materialization is the ≤4-row (status, side) count table returned.
     * Orders' PK is unique in the fixture (last-row-per-key state equals
-    * batch multiplicity semantics only then). The temp dir and checkpoint
-    * are per-call and deleted on exit, so a watchdog-cancelled attempt can
-    * never collide with — or leak driver/disk state into — a retry. */
+    * batch multiplicity semantics only then). The changelog, sink and
+    * checkpoint live under one [[StreamRun]] temp root. */
   def runCdc(spark: org.apache.spark.sql.SparkSession, sfDir: String,
       restartBetweenPhases: Boolean): DataFrame = {
     import spark.implicits._
@@ -111,25 +110,17 @@ object StreamingDiff {
       graft.Tables.load(spark, sfDir, t.name), t.pk)
     val an = graft.operators.Normalize.withKey(
       graft.operators.DiffQueries.after(spark, sfDir, t), t.pk)
-    val root = java.nio.file.Files.createTempDirectory("graft_cdc_").toString
-    val (srcDir, outDir, ckptDir) = (s"$root/changelog", s"$root/events", s"$root/ckpt")
     val key = col(graft.operators.Normalize.KeyCol).as("key")
     val colsArr = array(t.cols.map(col): _*)
-    try {
+    StreamRun(spark, "cdc") { run =>
+      val srcDir = run.dir("changelog")
       bn.select(key, colsArr.as("cols"), lit(false).as("tombstone"))
         .write.mode("overwrite").parquet(srcDir)
       val schema = spark.read.parquet(srcDir).schema
-      def start() = diffStream(
-          spark.readStream.schema(schema).parquet(srcDir).as[KeyedRow], t.cols)
-        .toDF()
-        .writeStream.outputMode(OutputMode.Append)
-        .format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckptDir)
-        .start()
-      var q = start()
-      try {
-        q.processAllAvailable() // phase 1: initial load
-        if (restartBetweenPhases) { q.stop(); q = start() } // resume from ckpt
+      run.parquetSink(diffStream(
+          spark.readStream.schema(schema).parquet(srcDir).as[KeyedRow], t.cols).toDF()) { sink =>
+        sink.drain() // phase 1: initial load
+        if (restartBetweenPhases) sink.restart() // resume from ckpt
         an.select(key, colsArr.as("cols"), lit(false).as("tombstone"))
           .union(bn.select(col(graft.operators.Normalize.KeyCol))
             .join(an.select(col(graft.operators.Normalize.KeyCol)),
@@ -137,21 +128,15 @@ object StreamingDiff {
             .select(key, lit(null).cast(schema("cols").dataType).as("cols"),
               lit(true).as("tombstone")))
           .write.mode("append").parquet(srcDir)
-        q.processAllAvailable() // phase 2: the mutation batch
-      } finally q.stop()
+        sink.drain() // phase 2: the mutation batch
+      }
       // distributed count of the sunk events, then only ≤4 rows cross to
       // the driver — the returned frame owns no temp-dir or sink state
-      val localCounts = spark.read.parquet(outDir)
+      val localCounts = run.sunk
         .groupBy(col("diff_status"), col("side"))
         .agg(count(lit(1)).as("n_events"))
         .as[(String, String, Long)].collect().toSeq
       localCounts.toDF("diff_status", "side", "n_events")
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
-          .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
     }
   }
 

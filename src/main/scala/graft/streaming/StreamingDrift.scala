@@ -36,8 +36,6 @@ import graft.operators.DiffQueries
   * (the `stream_neardup` one-oracle-gates-both convention).
   */
 object StreamingDrift {
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `Mutations.afterSql("orders")` restricted to the two monitored
     * columns, as stateless per-row fan-out on the stream: %10=3 rows are
     * deleted (filter), %10=4 rows carry the 'X' status + repriced total
@@ -66,22 +64,11 @@ object StreamingDrift {
     * streaming histogram (Complete mode, control-plane-sized), then join
     * the static before-histogram and emit the batch drift table. */
   def runDistDriftOnce(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = s"$sfDir/orders.parquet"
-    val schema = spark.read.parquet(path).schema
-    val raw =
-      if (new java.io.File(path).isDirectory)
-        spark.readStream.schema(schema).parquet(path)
-      else
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "orders.parquet").parquet(sfDir)
-    val name = s"graft_drift_${runSeq.incrementAndGet()}"
-    val hist = DiffQueries.ordersDriftBuckets(afterStatusPrice(raw))
-      .groupBy(col("col_name"), col("bucket"))
-      .agg(count(lit(1)).as("after_n"))
-    val q = hist.writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val afterHist = spark.table(name)
+    val afterHist = StreamRun.memory(
+      DiffQueries.ordersDriftBuckets(afterStatusPrice(graft.Tables.stream(spark, sfDir, "orders")))
+        .groupBy(col("col_name"), col("bucket"))
+        .agg(count(lit(1)).as("after_n")),
+      OutputMode.Complete, "drift")
     val beforeHist = DiffQueries
       .ordersDriftBuckets(graft.Tables.load(spark, sfDir, "orders"))
       .groupBy(col("col_name"), col("bucket"))

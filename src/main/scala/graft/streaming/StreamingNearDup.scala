@@ -33,15 +33,12 @@ import graft.operators.DedupQueries
   * pairs through the batch exact-Jaccard verify, so the final table is
   * the batch operator's answer exactly — one oracle gates both.
   *
-  * Sink/checkpoint hygiene follows [[StreamingDiff.runCdc]]: parquet file
-  * sink (never a driver-heap memory sink), per-run temp dirs deleted on
-  * exit, so a watchdog-cancelled attempt can never collide with a retry.
+  * The pairs land in a parquet file sink (never a driver-heap memory
+  * sink) run under [[StreamRun]].
   */
 object StreamingNearDup {
   final case class BandRow(bucket: String, doc_id: Long)
   final case class CandPair(doc_a: Long, doc_b: Long)
-
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The dedup corpus's synthetic "new arrivals" derived STATELESSLY on the
     * stream: every 50th document fans out to itself, an exact copy
@@ -120,42 +117,18 @@ object StreamingNearDup {
     * `dedup_minhash_lsh`, hash-gated by the same oracle. */
   def runOnce(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val path = s"$sfDir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    val raw =
-      if (new java.io.File(path).isDirectory)
-        spark.readStream.schema(schema).parquet(path)
-      else
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-    val root = java.nio.file.Files.createTempDirectory("graft_neardup_").toString
-    val (outDir, ckptDir) = (s"$root/pairs", s"$root/ckpt")
-    try {
-      val pairs = candPairs(
-        statelessBands(withDelta(raw)).as[BandRow])
-      val q = pairs.toDF()
-        .writeStream.outputMode(OutputMode.Append)
-        .queryName(s"neardup_${runSeq.incrementAndGet()}")
-        .format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckptDir)
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    val pairs = candPairs(
+      statelessBands(withDelta(graft.Tables.stream(spark, sfDir, "documents"))).as[BandRow])
+    StreamRun.parquet(pairs.toDF(), "neardup") { sunk =>
       // the sunk candidate set (distinct: a pair co-bucketed in k bands
       // surfaces k times, exactly like the batch self-join pre-distinct)
       // feeds the batch verify; the pin (CacheScope.pinned, registered for
       // releaseAll) materializes it before the temp dir disappears
-      val cand = spark.read.parquet(outDir)
-        .select(col("doc_a"), col("doc_b")).distinct()
+      val cand = sunk.select(col("doc_a"), col("doc_b")).distinct()
         .transform(graft.CacheScope.pinned)
       val shh = DedupQueries.shingleHashes(DedupQueries.corpus(spark, sfDir))
         .transform(graft.CacheScope.pinned)
       DedupQueries.jaccard(cand, shh, 0.4)
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
-          .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
     }
   }
 }

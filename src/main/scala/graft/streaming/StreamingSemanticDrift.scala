@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 import graft.functions.QuantizedVec
 import graft.operators.{SimilarityQueries, SnapshotDiff}
@@ -31,13 +30,12 @@ import graft.operators.{SimilarityQueries, SnapshotDiff}
   *     the consumer's contract is the arrival-visible subset: its own
   *     oracle row replays the batch chain minus the DELETED branch.
   *
-  * Temp dir and checkpoint are per-call and deleted on exit (the
-  * [[StreamingDiff.runCdc]] discipline); the result is eagerly pinned
-  * before cleanup so the returned frame is distributed, not collected
-  * (the drift table is delta-sized — it grows with the corpus).
+  * The feed, sink and checkpoint live under one [[StreamRun]] temp root;
+  * the result is eagerly pinned before the root is deleted, so the
+  * returned frame is distributed, not collected (the drift table is
+  * delta-sized — it grows with the corpus).
   */
 object StreamingSemanticDrift {
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Quantized integer array of a vector column — the same per-element
     * floor(v·scale + 0.5) the batch component explode applies. */
@@ -48,9 +46,8 @@ object StreamingSemanticDrift {
   def runDriftOnce(spark: SparkSession, sfDir: String): DataFrame = {
     val before = graft.Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val root = java.nio.file.Files.createTempDirectory("graft_sdrift_").toString
-    val (feedDir, outDir, ckptDir) = (s"$root/after", s"$root/out", s"$root/ckpt")
-    try {
+    StreamRun(spark, "semantic_drift") { run =>
+      val feedDir = run.dir("after")
       // the "arriving" snapshot, landed as files — in production this is
       // the upstream embedding job's output directory
       SimilarityQueries.driftAfterArm(before)
@@ -82,22 +79,11 @@ object StreamingSemanticDrift {
           when(col("status") === SnapshotDiff.Updated,
             when(col("cos") < SimilarityQueries.DriftTau, "semantic")
               .otherwise("cosmetic")))
-      val q = scored.writeStream.outputMode(OutputMode.Append)
-        .queryName(s"semantic_drift_${runSeq.incrementAndGet()}")
-        .format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckptDir)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // pin (eager checkpoint) so the frame survives the temp-dir cleanup
-      // below as distributed blocks — never a driver collect
-      graft.CacheScope.pinned(spark.read.parquet(outDir)
+      run.parquetSink(scored)(_.drain())
+      // pin (eager checkpoint) so the frame survives the temp-root cleanup
+      // as distributed blocks — never a driver collect
+      graft.CacheScope.pinned(run.sunk
         .select(col("vec_id"), col("status"), col("cos"), col("drift")))
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
-          .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
     }
   }
 }

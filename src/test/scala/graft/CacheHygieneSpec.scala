@@ -277,6 +277,26 @@ class CacheHygieneSpec extends SparkTestBase {
     assert(persisted == outside)
   }
 
+  test("iterative weight trainers keep only their last round's weights stored") {
+    import graft.operators.PipelineQueries
+    CacheScope.releaseSession()
+    CacheScope.releaseAll()
+    val outside = persisted
+    PipelineQueries.doremiWeightFrame(spark, Sf)
+    val doremi = persisted -- outside
+    // the bigram cache, the loss pin, the last of the DoremiRounds + 1
+    // weight pins, and the session pin
+    assert(doremi.size == 4, s"doremi: expected 4 persisted RDDs, found ${doremi.size}")
+    PipelineQueries.qcWeights(spark, Sf)
+    val qc = persisted -- outside -- doremi
+    // the feature pin, the last of the QcRounds + 1 weight pins, and the
+    // session pin
+    assert(qc.size == 3, s"qc: expected 3 persisted RDDs, found ${qc.size}")
+    CacheScope.releaseAll()
+    CacheScope.releaseSession()
+    assert(persisted == outside)
+  }
+
   test("localCheckpoint( and .persist( appear in src/main only in CacheScope and its Spark shim") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
