@@ -31,7 +31,6 @@ final class DbDiffApp(
     consoleOut: String => Unit = println,
     maxConsoleRows: Int = 200,
     pinSnapshots: Boolean = false,
-    feedDir: String = "",
     merkleBuckets: Int = 0) extends AutoCloseable {
 
   import DbDiffApp.IterationResult
@@ -71,15 +70,7 @@ final class DbDiffApp(
   private def release(snap: Map[String, DataFrame]): Unit =
     if (pinSnapshots) snap.values.foreach(graft.CacheScope.releasePin)
 
-  /** Total record count across tables — the reference prints this per
-    * snapshot (`main.go:59,76`). One distributed count per table, unioned
-    * into a single job; no rows reach the driver. */
-  def totalCount(snap: Map[String, DataFrame]): Long =
-    snap.values.map(_.agg(count(lit(1)).as("n"))).reduce(_.unionAll(_))
-      .agg(sum(col("n")).as("total")).head().getLong(0)
-
   private var before: Map[String, DataFrame] = snapshotAll()
-  private var iterSeq = 0
 
   /** The snapshot the next iteration diffs against. */
   private[graft] def beforeSnapshot: Map[String, DataFrame] = before
@@ -89,7 +80,6 @@ final class DbDiffApp(
     * reference's workbook, anything else HTML), prints console diff lines,
     * returns per-table changed-key counts. */
   def iterate(outName: String = ""): IterationResult = {
-    iterSeq += 1
     val after = snapshotAll()
     val result = try diffAndReport(after, outName)
     catch { case e: Throwable => release(after); throw e }
@@ -129,19 +119,6 @@ final class DbDiffApp(
       changed += t.name -> d.select(col(Normalize.KeyCol)).distinct().count()
     }
 
-    // change-feed sink: the iteration's whole change set as ONE fixed-width
-    // parquet stream (table, key, status, modified columns, side, md5 row
-    // fingerprint) — what a downstream CDC consumer tails, next to the
-    // human-facing console/HTML sinks. Feed width is schema-independent,
-    // so one sink serves every table at any width.
-    val feedPath = if (feedDir.nonEmpty) {
-      val p = s"$feedDir/iter_$iterSeq"
-      diffs.map { case (t, d) => SnapshotDiff.feed(d, t.name, t.cols) }
-        .reduce(_.unionByName(_))
-        .write.mode("overwrite").parquet(p)
-      Some(p)
-    } else None
-
     // styled report (S8) for tables with changes: `-o x.xlsx` selects the
     // reference's actual workbook format, anything else the HTML twin
     val reportPath = if (outName.nonEmpty) {
@@ -161,7 +138,7 @@ final class DbDiffApp(
       Some(outName)
     } else None
 
-    IterationResult(changed, reportPath, feedPath)
+    IterationResult(changed, reportPath)
   }
 
   /** Releases the pins of the last snapshot. The app cannot iterate after
@@ -171,7 +148,7 @@ final class DbDiffApp(
 
 object DbDiffApp {
   final case class IterationResult(changedKeys: Map[String, Long],
-      reportPath: Option[String], feedPath: Option[String] = None) {
+      reportPath: Option[String]) {
     def totalChanged: Long = changedKeys.values.sum
   }
 
@@ -186,8 +163,7 @@ object DbDiffApp {
   def jdbcSource(spark: SparkSession, url: String, schema: String,
       props: Map[String, String] = Map.empty): TableDef => DataFrame =
     t => graft.sources.JdbcSnapshots.snapshot(
-      spark, url, graft.sources.JdbcSnapshots.qualifiedTable(schema, t.name),
-      None, None, 1, props)
+      spark, url, graft.sources.JdbcSnapshots.qualifiedTable(schema, t.name), props)
 
   /** Catalog-driven table discovery over JDBC (S3/S4): table list + PKs
     * from the live catalog, column lists from the scan schema, and the
@@ -200,8 +176,7 @@ object DbDiffApp {
       case (name, pks) =>
         val cols = graft.sources.JdbcSnapshots
           .snapshot(spark, url,
-            graft.sources.JdbcSnapshots.qualifiedTable(schema, name),
-            None, None, 1, props)
+            graft.sources.JdbcSnapshots.qualifiedTable(schema, name), props)
           .columns.toSeq
         TableDef(name, cols, if (pks.nonEmpty) pks else cols)
     }

@@ -62,35 +62,16 @@ object EventsQueries {
   /** Single-task window-sort budget (rows): the point where one key's
     * entire ordered history stops being a job a single task should sort,
     * and [[changepoint]] switches from the plain per-type window to the
-    * [[SkewWindow]]-style prefix-sum decomposition. The round-5
+    * chunked prefix-sum decomposition ([[changepointSkew]]). The round-5
     * measurement put the crossover well above the harness's 2M rows/type
     * at sf10 (the decomposition's ~6 full-data shuffles cost 2× the 5-way
     * sort there), so the budget is set a decade above that; at 100 TB one
     * hot key blows any budget and the skew branch is the only plan that
-    * finishes. Overridable for harness experiments. */
-  val ChangepointSortBudget: Long =
-    sys.env.get("GRAFT_WINDOW_SORT_BUDGET").map(_.toLong).getOrElse(20000000L)
+    * finishes. A fixed constant: callers that need another crossover pass
+    * their own budget to [[changepoint]]. */
+  val ChangepointSortBudget: Long = 20000000L
 
-  /** Offline changepoint detection per event type over (event_type, ts,
-    * event_id, value): the split index t maximizing the |prefix mean −
-    * suffix mean| gap — see the `events_changepoint` entry for the exact-
-    * arithmetic design.
-    *
-    * AUTO-SELECTED plan: a cheap per-key count probe (one columnar scan of
-    * `event_type`, collecting one row — the same class of stats AQE reads)
-    * picks the plain per-type window while the largest key fits the
-    * single-task sort budget, and the chunked prefix-sum decomposition
-    * beyond it. Both branches are bit-equal by construction (shared typed
-    * scorer; `EventsSkewSpec` pins equality), so the switch is a pure
-    * physical-plan decision — exactly the judgment AQE makes for skewed
-    * joins but does not yet make for skewed windows. */
-  def changepoint(events: DataFrame): DataFrame =
-    changepoint(events, ChangepointSortBudget)
-
-  def changepoint(events: DataFrame, sortBudget: Long): DataFrame =
-    changepoint(events, sortBudget, maxPerKey(events))
-
-  /** The crossover probe alone — registry entries keep it in the
+  /** The crossover probe of [[changepoint]] — registry entries keep it in the
     * [[CacheScope]] session store via `sessionCount`, rebuilt only
     * when the fixture's files change. Coalesce guards the empty-frame case
     * (max over zero groups is NULL), defaulting to the plain branch. */
@@ -98,6 +79,20 @@ object EventsQueries {
     events.groupBy(col("event_type")).count()
       .agg(coalesce(max(col("count")), lit(0L))).head().getLong(0)
 
+  /** Offline changepoint detection per event type over (event_type, ts,
+    * event_id, value): the split index t maximizing the |prefix mean −
+    * suffix mean| gap — see the `events_changepoint` entry for the exact-
+    * arithmetic design.
+    *
+    * AUTO-SELECTED plan: a cheap per-key count probe ([[maxPerKey]], one
+    * columnar scan of `event_type`, collecting one row — the same class of
+    * stats AQE reads) gives `maxKnown`, the largest key's row count. The
+    * plain per-type window runs while it fits `sortBudget`, and the
+    * chunked prefix-sum decomposition beyond it. Both branches are
+    * bit-equal by construction (shared typed scorer; `EventsSkewSpec` pins
+    * equality), so the switch is a pure physical-plan decision — exactly
+    * the judgment AQE makes for skewed joins but does not yet make for
+    * skewed windows. */
   def changepoint(events: DataFrame, sortBudget: Long, maxKnown: Long): DataFrame =
     if (maxKnown <= sortBudget) changepointPlain(events)
     else changepointSkew(events)
@@ -144,14 +139,15 @@ object EventsQueries {
       .withColumn("sn", sum(d18(col("vi"))).over(wAll)))
   }
 
-  /** Skew branch: [[SkewWindow]]-style prefix-sum decomposition. Each
-    * type's timeline splits into day chunks (monotone in the (ts,
-    * event_id) order); the running count t and running sum st compute
-    * within (type, day) — parallelism = type × day, partition size ≤ the
-    * busiest single day — plus a per-chunk offset cumulated over the
-    * SMALL (type, day) frame; n / sn are one aggregate row per type,
-    * joined back. Exact integer/decimal arithmetic end to end makes the
-    * decomposition bit-equal to the plain window. */
+  /** Skew branch: a prefix-sum decomposition of the running window, so no
+    * window partition holds a whole type's history. Each type's timeline
+    * splits into day chunks (monotone in the (ts, event_id) order); the
+    * running count t and running sum st compute within (type, day) —
+    * parallelism = type × day, partition size ≤ the busiest single day —
+    * plus a per-chunk offset cumulated over the SMALL (type, day) frame;
+    * n / sn are one aggregate row per type, joined back. Exact
+    * integer/decimal arithmetic end to end makes the decomposition
+    * bit-equal to the plain window. */
   def changepointSkew(events: DataFrame): DataFrame = {
     val base = eventsVi(events).withColumn("__chunk", date_trunc("day", col("ts")))
     val w1o = Window.partitionBy(col("event_type"), col("__chunk"))
@@ -508,10 +504,9 @@ object EventsQueries {
         .agg(count(lit(1)).as("n_events"), sum(col("k")).as("sum_k"),
           max(col("k")).as("max_k"))),
     // Per-user time-interval join: every (click, view-from-the-same-user-
-    // within-the-preceding-6-hours) pair — the batch twin of the
-    // stream-stream join in [[graft.streaming.EventStreams.clickViewJoin]].
-    // Planned by [[RangeJoin.bucketized]] with user_id as an extra equi-key
-    // (bucket width = the interval length, so each view interval spans ≤ 2
+    // within-the-preceding-6-hours) pair. Planned by
+    // [[RangeJoin.bucketized]] with user_id as an extra equi-key (bucket
+    // width = the interval length, so each view interval spans ≤ 2
     // buckets): one (user, bucket)-keyed equi-join instead of a
     // nested-loop over time predicates.
     "events_interval_join" -> ((spark, sfDir) => {
@@ -738,21 +733,14 @@ object EventsQueries {
     })
   )
 
-  /** (type, day, hour-of-day, micro-unit value) bucketing shared by the
-    * seasonal-forecast family — batch backtest, offline baseline build,
-    * and the streaming anomaly scorer all derive from the same columns. */
+  /** (type, day, hour-of-day, micro-unit value) bucketing of the
+    * seasonal-forecast backtest: its train/test cut, baseline and test
+    * side derive from the same columns. */
   def seasonalBucketed(events: DataFrame): DataFrame = events.select(
     col("*"),
     expr("CAST(datediff(ts, DATE'2024-01-01') AS BIGINT)").as("day"),
     expr("(unix_micros(ts) div 3600000000) % 24").as("hod"),
     expr("CAST(floor(value * 1000000 + 0.5) AS BIGINT)").as("q"))
-
-  /** Per-(type, hour-of-day) floor-division mean over ALL given events —
-    * the offline-trained baseline the streaming scorer joins against. */
-  def seasonalBaseline(events: DataFrame): DataFrame =
-    seasonalBucketed(events)
-      .groupBy(col("event_type"), col("hod"))
-      .agg(expr("SUM(q) DIV COUNT(1)").as("forecast_micro"))
 
   private val sessionizeSql: String =
     s"""SELECT *, CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id

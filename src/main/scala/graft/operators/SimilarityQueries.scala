@@ -1180,22 +1180,6 @@ object SimilarityQueries {
     }
   }
 
-  /** Incremental index maintenance: assign NEW vectors against the
-    * PERSISTED centroids and append to the assignment table — no rebuild,
-    * existing assignments untouched (centroids are fixed post-build: the
-    * standard IVF maintenance contract; periodic re-clustering is a fresh
-    * [[buildIvfIndex]]). Work is O(new × centroids) regardless of corpus
-    * size, so a 100 TB index absorbs a daily delta without ever rescoring
-    * the corpus. Same shared stages as build/query, so the arithmetic and
-    * tiebreaks cannot drift. */
-  def appendToIvfIndex(spark: SparkSession, dir: String, newVecs: DataFrame): Unit = {
-    val cq = spark.read.parquet(s"$dir/centroids")
-    val cnorms = spark.read.parquet(s"$dir/centroid_norms")
-    val qn = components(newVecs, Seq("vec_id", "label"), "qv")
-    val assigned = topClusters(centroidScores(qn.drop("label"), vecNorms(qn), cq, cnorms), 1)
-    assigned.write.mode("append").parquet(s"$dir/assignment")
-  }
-
   /** Query path against a persisted IVF index: route each probe to its
     * NProbe nearest centroids (probe components × the broadcast centroid
     * table — tiny), pull ONLY those clusters' vectors through the

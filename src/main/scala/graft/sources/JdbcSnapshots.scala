@@ -15,10 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     one driver-side JDBC connection (the `information_schema` joins
   *     execute inside the source DB, exactly as in the reference — SURVEY
   *     §2.3 J2); the result is catalog-sized, so no Spark job runs;
-  *   - [[snapshot]] is a Spark JDBC scan. It can range-split on a numeric
-  *     column, but the app's `jdbcSource` reads each table in one
-  *     partition: the app's parallelism is across tables, one pin per
-  *     table running concurrently;
+  *   - [[snapshot]] is a one-partition Spark JDBC scan: the app's
+  *     parallelism is across tables, one pin per table running
+  *     concurrently;
   *   - `Normalize`/`SnapshotDiff` then apply unchanged — the diff operator
   *     is source-agnostic.
   */
@@ -154,21 +153,15 @@ object JdbcSnapshots {
     try rows(st.executeQuery(sql))(_.getString(1)) finally st.close()
   }
 
+  /** PK discovery via the JDBC driver's own metadata
+    * (`DatabaseMetaData.getPrimaryKeys`), ordered by KEY_SEQ — the same
+    * ordinal-position ordering the information_schema queries produce. Used
+    * for Derby, whose PK catalog isn't reachable through plain SQL (it
+    * exposes its index descriptors as opaque objects). */
   private def metadataPks(conn: java.sql.Connection, schema: String,
       table: String): Seq[String] =
     rows(conn.getMetaData.getPrimaryKeys(null, schema, table))(
       r => (r.getShort("KEY_SEQ"), r.getString("COLUMN_NAME"))).sortBy(_._1).map(_._2)
-
-  /** Dialect-independent PK discovery via the JDBC driver's own metadata
-    * (`DatabaseMetaData.getPrimaryKeys`), ordered by KEY_SEQ — the same
-    * ordinal-position ordering the information_schema queries produce. Used
-    * for dialects whose PK catalog isn't reachable through plain SQL (Derby
-    * exposes its index descriptors as opaque objects), and available as a
-    * fallback for any JDBC source. Driver-side, but catalog-sized (one
-    * round-trip per table), like the reference's own catalog pass. */
-  def pksViaMetadata(url: String, schema: String, table: String,
-      props: Map[String, String] = Map.empty): Seq[String] =
-    withConnection(url, props)(metadataPks(_, schema, table))
 
   /** Catalog introspection: (table, pk columns) pairs, all on one
     * driver-side connection — the table list and each table's PK query
@@ -187,22 +180,12 @@ object JdbcSnapshots {
       }
     }
 
-  /** Partitioned snapshot scan: range-parallel on a numeric PK when one is
-    * known (`numPartitions` JDBC splits), else a single-partition read.
-    * The reference's ORDER BY pk (`extract_data.go:31-42`) is dropped —
-    * semantically inert for the diff (SURVEY §2.6 O1). */
+  /** Single-partition snapshot scan of `table`; `props` pass through as
+    * JDBC reader options (credentials, driver). The reference's ORDER BY pk
+    * (`extract_data.go:31-42`) is dropped — semantically inert for the
+    * diff (SURVEY §2.6 O1). */
   def snapshot(spark: SparkSession, url: String, table: String,
-      partitionCol: Option[String], bounds: Option[(Long, Long)], numPartitions: Int,
-      props: Map[String, String] = Map.empty): DataFrame = {
-    val base = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", table)
-    val partitioned = (partitionCol, bounds) match {
-      case (Some(c), Some((lo, hi))) =>
-        base.option("partitionColumn", c)
-          .option("lowerBound", lo).option("upperBound", hi)
-          .option("numPartitions", numPartitions)
-      case _ => base
-    }
-    props.foldLeft(partitioned)((acc, kv) => acc.option(kv._1, kv._2)).load()
-  }
+      props: Map[String, String] = Map.empty): DataFrame =
+    spark.read.format("jdbc").option("url", url).option("dbtable", table)
+      .options(props).load()
 }

@@ -7,8 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** The run policy of every streaming query the library runs to
-  * completion: the registry's `stream_*` twins and the test-facing
-  * `run*Once` conveniences.
+  * completion: the registry's `stream_*` twins.
   *
   *   - A run owns a fresh temp root (staged feeds, sinks, checkpoints),
   *     deleted when the run returns or throws, so a watchdog-cancelled

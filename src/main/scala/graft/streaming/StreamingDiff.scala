@@ -139,32 +139,4 @@ object StreamingDiff {
       localCounts.toDF("diff_status", "side", "n_events")
     }
   }
-
-  /** Streaming twin of the batch incremental aggregate
-    * ([[graft.operators.DiffQueries]] `diff_incremental_agg`): a grouped
-    * count/sum kept continuously current by folding the differ's own
-    * [[DiffEvent]] changelog — AFTER-side rows add, BEFORE-side rows
-    * subtract, so an update that moves a row between groups decrements the
-    * old group and increments the new one in the same micro-batch.
-    *
-    * Spark-first: this is a NATIVE streaming aggregation (state handled by
-    * the engine, map-side partial merge, one shuffle on the group key), not
-    * hand-rolled `GroupState`. Sums accumulate in exact decimal, so results
-    * are independent of event interleaving across micro-batches. Groups
-    * whose live count reaches 0 report n_rows = 0 (complete-mode output
-    * cannot retract a group); consumers filter n_rows > 0, as the batch
-    * operator does. */
-  def incrementalAgg(events: Dataset[DiffEvent], colNames: Seq[String],
-      groupCol: String, valueCol: String): DataFrame = {
-    val gi = colNames.indexOf(groupCol)
-    val vi = colNames.indexOf(valueCol)
-    require(gi >= 0 && vi >= 0, s"unknown column: $groupCol/$valueCol not in $colNames")
-    val w = when(col("side") === "AFTER", lit(1L)).otherwise(lit(-1L))
-    events.toDF()
-      .select(col("cols")(gi).as(groupCol), w.as("__w"),
-        (w * col("cols")(vi).cast("decimal(38,4)")).cast("decimal(38,4)").as("__wv"))
-      .groupBy(col(groupCol))
-      .agg(sum(col("__w")).as("n_rows"),
-        sum(col("__wv")).cast("decimal(38,4)").as("sum_val"))
-  }
 }

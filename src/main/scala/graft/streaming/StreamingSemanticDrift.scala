@@ -47,13 +47,13 @@ object StreamingSemanticDrift {
     val before = graft.Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     StreamRun(spark, "semantic_drift") { run =>
-      val feedDir = run.dir("after")
+      val arrivalDir = run.dir("after")
       // the "arriving" snapshot, landed as files — in production this is
       // the upstream embedding job's output directory
       SimilarityQueries.driftAfterArm(before)
-        .write.mode("overwrite").parquet(feedDir)
-      val schema = spark.read.parquet(feedDir).schema
-      val arrivals = spark.readStream.schema(schema).parquet(feedDir)
+        .write.mode("overwrite").parquet(arrivalDir)
+      val schema = spark.read.parquet(arrivalDir).schema
+      val arrivals = spark.readStream.schema(schema).parquet(arrivalDir)
       // b_present marks row EXISTENCE on the before side — branching on
       // bq.isNull would conflate "no before row" with "before row whose
       // embedding is NULL" (the latter is an UPDATE, not an INSERT)

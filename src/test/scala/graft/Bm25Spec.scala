@@ -99,8 +99,8 @@ class Bm25Spec extends SparkTestBase {
 
   test("persisted index: build + append == full rebuild, query parity with inline") {
     val docs = Tables.load(spark, Sf, "documents")
-    val dirFull = java.nio.file.Files.createTempDirectory("graft_bm25_full").toString
-    val dirInc = java.nio.file.Files.createTempDirectory("graft_bm25_inc").toString
+    val dirFull = tempDir("graft_bm25_full")
+    val dirInc = tempDir("graft_bm25_inc")
     try {
       // full build vs base-build + two delta appends over a 3-way split
       TextQueries.buildBm25Index(spark, Sf, dirFull)
@@ -117,11 +117,7 @@ class Bm25Spec extends SparkTestBase {
       // inline parity: the serving path reproduces text_bm25_topk exactly
       val inline = out.collect().map(_.toSeq).toSet
       assert(full == inline)
-    } finally {
-      Seq(dirFull, dirInc).foreach(d =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
-      CacheScope.releaseAll()
-    }
+    } finally CacheScope.releaseAll()
   }
 
   test("indexed query plan: no corpus rescan, probe side broadcast") {

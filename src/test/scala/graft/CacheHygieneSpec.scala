@@ -172,7 +172,7 @@ class CacheHygieneSpec extends SparkTestBase {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.functions.col
     // temp copies only: the shared Sf fixture is never written
-    val dir = Files.createTempDirectory("graft_input_identity").toString
+    val dir = tempDir("graft_input_identity")
     def copy(name: String): Unit = {
       Files.copy(Paths.get(s"$Sf/$name.parquet"), Paths.get(s"$dir/$name.parquet")); ()
     }
@@ -204,7 +204,6 @@ class CacheHygieneSpec extends SparkTestBase {
     } finally {
       CacheScope.releaseSession()
       CacheScope.releaseAll()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
 

@@ -82,11 +82,9 @@ class DbDiffAppSpec extends SparkTestBase {
     val console = scala.collection.mutable.ArrayBuffer.empty[String]
     val app = new DbDiffApp(spark, tables, source, console.append(_), maxConsoleRows = 10000)
 
-    assert(app.totalCount(tables.map(t => t.name -> source(t)).toMap) > 0)
-
     // iteration 1: the "user operations" happen, then the diff sees them
     mutated = true
-    val out1 = Files.createTempFile("dbdiff", ".html").toString
+    val out1 = s"${tempDir("graft_dbdiff")}/report.html"
     val r1 = app.iterate(out1)
     assert(r1.totalChanged > 0)
     assert(r1.changedKeys.keySet == Set("region", "customer"))
@@ -108,7 +106,7 @@ class DbDiffAppSpec extends SparkTestBase {
 
     // iteration 2: nothing changed since the swap → empty diff, empty report
     console.clear()
-    val out2 = Files.createTempFile("dbdiff", ".html").toString
+    val out2 = s"${tempDir("graft_dbdiff")}/report.html"
     val r2 = app.iterate(out2)
     assert(r2.totalChanged == 0)
     assert(console.isEmpty)
@@ -128,7 +126,7 @@ class DbDiffAppSpec extends SparkTestBase {
     }
     val app = new DbDiffApp(spark, tables, source, _ => (), maxConsoleRows = 0)
     mutated = true
-    val out = Files.createTempFile("dbdiff", ".xlsx").toString
+    val out = s"${tempDir("graft_dbdiff")}/report.xlsx"
     val r = app.iterate(out)
     assert(r.totalChanged > 0 && r.reportPath.contains(out))
 
@@ -188,78 +186,6 @@ class DbDiffAppSpec extends SparkTestBase {
     // a failing launcher is contained (the reference log.Fatalf's here)
     assert(!ReportSink.openInViewer("r.xlsx", "linux",
       _ => throw new java.io.IOException("no viewer")))
-  }
-
-  test("change-feed sink: iteration writes one fixed-width feed; counts match the diffs") {
-    val tables = Seq(Tables.region, Tables.customer)
-    var mutated = false
-    val source = (t: TableDef) => {
-      val base = Tables.load(spark, Sf, t.name)
-      if (mutated) {
-        base.createOrReplaceTempView(t.name)
-        spark.sql(Mutations.afterSql(t.name))
-      } else base
-    }
-    val feedDir = Files.createTempDirectory("graft_feed").toString
-    val app = new DbDiffApp(spark, tables, source, _ => (), feedDir = feedDir)
-
-    mutated = true
-    val r1 = app.iterate()
-    assert(r1.feedPath.contains(s"$feedDir/iter_1"))
-    val feed = spark.read.parquet(r1.feedPath.get)
-    assert(feed.columns.toSeq ==
-      Seq("table_name", "__key", "diff_status", "modified_columns", "side", "row_fp"))
-    // one feed row per physical diff row (UPDATED keys contribute two)
-    import org.apache.spark.sql.functions.col
-    val perTable = feed.groupBy(col("table_name")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(perTable.keySet == Set("region", "customer") && perTable.values.forall(_ > 0))
-    // fingerprints are md5 hex — fixed width regardless of table schema
-    assert(feed.select(col("row_fp")).collect().forall(_.getString(0).length == 32))
-
-    // iteration 2: no changes → feed exists but is empty
-    val r2 = app.iterate()
-    assert(spark.read.parquet(r2.feedPath.get).isEmpty)
-  }
-
-  test("streaming feed consumer: status counts converge to the batch report") {
-    import graft.operators.SnapshotDiff
-    import graft.streaming.FeedConsumer
-    import org.apache.spark.sql.functions.{col, lit}
-    val tables = Seq(Tables.region, Tables.customer)
-    var mutated = false
-    val source = (t: TableDef) => {
-      val base = Tables.load(spark, Sf, t.name)
-      if (mutated) {
-        base.createOrReplaceTempView(t.name)
-        spark.sql(Mutations.afterSql(t.name))
-      } else base
-    }
-    val feedDir = Files.createTempDirectory("graft_feed2").toString
-    val app = new DbDiffApp(spark, tables, source, _ => (), feedDir = feedDir)
-    mutated = true
-    app.iterate() // writes iter_1
-    app.iterate() // writes the empty iter_2
-
-    val q = FeedConsumer.statusCounts(FeedConsumer.readFeed(spark, s"$feedDir/iter_*"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_feedcounts").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("graft_feedcounts")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-
-    // batch oracle: one-winner statusCounts per table (the app's diff mode)
-    val batch = tables.flatMap { t =>
-      val before = Tables.load(spark, Sf, t.name)
-      before.createOrReplaceTempView(t.name)
-      val after = spark.sql(Mutations.afterSql(t.name))
-      val d = SnapshotDiff.diffOneWinner(before, after, t.pk)
-      d.groupBy(col("diff_status"))
-        .agg(org.apache.spark.sql.functions.countDistinct(col("__key")).as("n"))
-        .collect().map(r => (t.name, r.getString(0), r.getLong(1)))
-    }.toSet
-    assert(streamed == batch && streamed.nonEmpty)
   }
 
   test("UPDATED pair renders BEFORE above AFTER for the same key") {

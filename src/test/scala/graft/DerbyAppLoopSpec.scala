@@ -50,7 +50,7 @@ class DerbyAppLoopSpec extends SparkTestBase {
       "INSERT INTO ITEMS VALUES (4, 'four', 40)",
       "UPDATE NOTES SET SEV = 5 WHERE TXT = 'hello'")
 
-    val out = java.nio.file.Files.createTempDirectory("graft_app").resolve("report.html")
+    val out = java.nio.file.Paths.get(tempDir("graft_app"), "report.html")
     val r2 = app.iterate(out.toString)
     assert(r2.changedKeys("ITEMS") == 3) // update + delete + insert
     assert(r2.changedKeys("NOTES") == 2) // keyless update = delete + insert keys

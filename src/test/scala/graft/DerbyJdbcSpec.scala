@@ -15,9 +15,8 @@ import java.util.concurrent.atomic.AtomicInteger
   * here (no live PostgreSQL/MySQL/SQL Server), but every code path around
   * it does: scans via `spark.read.format("jdbc")`, a real catalog query on
   * one driver-side connection (no Spark job), driver-metadata PK discovery
-  * with KEY_SEQ ordering, the range-partitioned snapshot scan, the app's
-  * snapshot pin (isolated from later DML), and the full normalize→diff
-  * pipeline over JDBC-sourced frames. */
+  * with KEY_SEQ ordering, the app's snapshot pin (isolated from later
+  * DML), and the full normalize→diff pipeline over JDBC-sourced frames. */
 class DerbyJdbcSpec extends SparkTestBase {
 
   private val url = "jdbc:derby:memory:graftdb;create=true"
@@ -147,20 +146,11 @@ class DerbyJdbcSpec extends SparkTestBase {
     } finally CacheScope.releasePin(pinned)
   }
 
-  test("range-partitioned snapshot scan produces the requested splits") {
-    seeded
-    val df = JdbcSnapshots.snapshot(spark, url, "APP.ITEMS_BEFORE",
-      Some("ID"), Some((1L, 101L)), numPartitions = 4)
-    assert(df.rdd.getNumPartitions == 4)
-    assert(df.count() == 100)
-    assert(df.agg(sum(col("VAL"))).head().getLong(0) == (1 to 100).map(_ * 10).sum)
-  }
-
   test("full diff over JDBC-sourced snapshots") {
     seeded
-    val before = JdbcSnapshots.snapshot(spark, url, "APP.ITEMS_BEFORE", None, None, 1)
-    val after = JdbcSnapshots.snapshot(spark, url, "APP.ITEMS_AFTER", None, None, 1)
-    val pk = JdbcSnapshots.pksViaMetadata(url, "APP", "ITEMS_BEFORE")
+    val before = JdbcSnapshots.snapshot(spark, url, "APP.ITEMS_BEFORE")
+    val after = JdbcSnapshots.snapshot(spark, url, "APP.ITEMS_AFTER")
+    val pk = JdbcSnapshots.catalog("derby", url, "APP").toMap.apply("ITEMS_BEFORE")
 
     val counts = SnapshotDiff.statusCounts(before, after, pk)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

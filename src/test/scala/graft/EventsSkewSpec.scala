@@ -17,15 +17,17 @@ class EventsSkewSpec extends SparkTestBase {
   test("changepoint: empty input yields an empty result, not a probe crash") {
     val events = Tables.load(spark, Sf, "events")
     val empty = events.filter(org.apache.spark.sql.functions.lit(false))
-    assert(EventsQueries.changepoint(empty).count() == 0L)
+    assert(EventsQueries.changepoint(empty, EventsQueries.ChangepointSortBudget,
+      EventsQueries.maxPerKey(empty)).count() == 0L)
   }
 
   test("changepoint: per-key count probe auto-selects the branch") {
     val events = Tables.load(spark, Sf, "events")
     // a tiny budget forces the decomposition (its plan joins the chunk
     // offsets back); a huge budget keeps the join-free plain window
-    val tiny = EventsQueries.changepoint(events, 1L)
-    val big = EventsQueries.changepoint(events, Long.MaxValue)
+    val maxKnown = EventsQueries.maxPerKey(events)
+    val tiny = EventsQueries.changepoint(events, 1L, maxKnown)
+    val big = EventsQueries.changepoint(events, Long.MaxValue, maxKnown)
     assert(tiny.queryExecution.optimizedPlan.toString.contains("Join"))
     assert(!big.queryExecution.optimizedPlan.toString.contains("Join"))
     assert(tiny.collect().map(_.toSeq).toSet == big.collect().map(_.toSeq).toSet)

@@ -127,7 +127,8 @@ class GraphSketchSpec extends SparkTestBase {
       ("const", java.sql.Timestamp.valueOf(f"2024-01-01 01:00:${i % 60}%02d"),
         (100 + i).toLong, 7.5))
     val ev = (step ++ const).toDF("event_type", "ts", "event_id", "value")
-    val byType = EventsQueries.changepoint(ev).collect()
+    val byType = EventsQueries.changepoint(ev, EventsQueries.ChangepointSortBudget,
+        EventsQueries.maxPerKey(ev)).collect()
       .map(r => r.getString(0) -> ((r.getLong(r.fieldIndex("split_idx")),
         r.getDouble(r.fieldIndex("mean_gap"))))).toMap
     assert(byType("step")._1 == 20L)

@@ -10,17 +10,13 @@ class IvfRecallSpec extends SparkTestBase {
 
   test("persisted IVF index: query path reproduces the inline ann_ivf_topk exactly") {
     import graft.operators.SimilarityQueries
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
-    try {
-      SimilarityQueries.buildIvfIndex(spark, Sf, dir)
-      val fromIndex = SimilarityQueries.queryIvfIndex(spark, Sf, dir)
-        .collect().map(_.toSeq).toSet
-      val inline = SparkEntry.queries("ann_ivf_topk")(spark, Sf)
-        .collect().map(_.toSeq).toSet
-      assert(fromIndex == inline && fromIndex.nonEmpty)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    val dir = tempDir("graft_ivf_idx")
+    SimilarityQueries.buildIvfIndex(spark, Sf, dir)
+    val fromIndex = SimilarityQueries.queryIvfIndex(spark, Sf, dir)
+      .collect().map(_.toSeq).toSet
+    val inline = SparkEntry.queries("ann_ivf_topk")(spark, Sf)
+      .collect().map(_.toSeq).toSet
+    assert(fromIndex == inline && fromIndex.nonEmpty)
   }
 
   test("buildIvfIndex releases its component cache when a write fails") {
@@ -31,31 +27,6 @@ class IvfRecallSpec extends SparkTestBase {
       intercept[Exception](SimilarityQueries.buildIvfIndex(spark, Sf, file.getPath))
       assert(spark.sharedState.cacheManager.isEmpty, "component frame left cached")
     } finally file.delete()
-  }
-
-  test("incremental append: new vectors land in their identical twin's cluster") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
-    try {
-      SimilarityQueries.buildIvfIndex(spark, Sf, dir)
-      val emb = Tables.load(spark, Sf, "embeddings")
-      val baseCount = spark.read.parquet(s"$dir/assignment").count()
-      // "new" vectors: exact copies of a sample, under fresh ids — their
-      // assignment must equal their twin's (fixed centroids, deterministic
-      // scoring and tiebreaks)
-      val newVecs = emb.filter(col("vec_id") % 97 === 1)
-        .withColumn("vec_id", col("vec_id") + 1000000L)
-      SimilarityQueries.appendToIvfIndex(spark, dir, newVecs)
-      val assigned = spark.read.parquet(s"$dir/assignment")
-      assert(assigned.count() == baseCount + newVecs.count())
-      val fresh = assigned.filter(col("vec_id") >= 1000000L)
-        .select((col("vec_id") - 1000000L).as("vec_id"), col("label").as("new_label"))
-      val twins = assigned.filter(col("vec_id") < 1000000L)
-      val mismatches = fresh.join(twins, "vec_id")
-        .filter(col("new_label") =!= col("label")).count()
-      assert(fresh.count() > 0 && mismatches == 0)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
   }
 
   test("ann_ivf_topk plans with no broadcast nested-loop join") {

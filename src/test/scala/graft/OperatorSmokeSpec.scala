@@ -46,20 +46,16 @@ class OperatorSmokeSpec extends SparkTestBase {
     // which no adjacent pair exists — the trainer must emit exactly that
     // one merge and stop (mirroring the oracle's ORDER BY … LIMIT 1 over
     // an empty frame = no row), never an all-NULL row per leftover round
-    val dir = java.nio.file.Files.createTempDirectory("bpe-degenerate").toString
-    try {
-      Seq((0L, "ab ab ab", "en", "web", 8L))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val m = SparkEntry.queries("text_bpe_merges")(spark, dir).collect()
-      assert(m.length == 1, m.mkString("; "))
-      assert(m.head.getAs[String]("left_sym") == "a" &&
-        m.head.getAs[String]("right_sym") == "b" &&
-        m.head.getAs[String]("merged") == "ab" &&
-        m.head.getAs[Long]("pair_count") == 3L)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    val dir = tempDir("bpe-degenerate")
+    Seq((0L, "ab ab ab", "en", "web", 8L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val m = SparkEntry.queries("text_bpe_merges")(spark, dir).collect()
+    assert(m.length == 1, m.mkString("; "))
+    assert(m.head.getAs[String]("left_sym") == "a" &&
+      m.head.getAs[String]("right_sym") == "b" &&
+      m.head.getAs[String]("merged") == "ab" &&
+      m.head.getAs[Long]("pair_count") == 3L)
   }
 
   test("bpe decode round-trips every trained segmentation to its word") {

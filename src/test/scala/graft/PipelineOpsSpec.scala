@@ -118,58 +118,50 @@ class PipelineOpsSpec extends SparkTestBase {
     // above every alien, because the aliens' buckets have zero target mass
     // (smoothed ratio 1/(raw+1)) while A-buckets carry the full target
     // count. Dominance like this is invariant to the hash bucketing.
-    val dir = java.nio.file.Files.createTempDirectory("dsir-domains").toString
-    try {
-      val vocabA = "alpha beta gamma delta epsilon zeta"
-      val vocabB = "omega psi chi phi upsilon tau"
-      val docs =
-        (0L to 9L).map(i => (i, vocabA, "en", "src0", 36L)) ++     // target
-          (10L to 14L).map(i => (i, vocabA, "en", "src9", 36L)) ++ // impostors
-          (15L to 19L).map(i => (i, vocabB, "en", "src9", 36L))    // aliens
-      docs.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val rows = SparkEntry.queries("pipeline_dsir_select")(spark, dir).collect()
-      val byId = rows.map(r => r.getAs[Long]("doc_id") -> r).toMap
-      val aScore = (0L to 14L).map(byId(_).getAs[Double]("score"))
-      val bScore = (15L to 19L).map(byId(_).getAs[Double]("score"))
-      assert(aScore.min > bScore.max,
-        s"A-speakers ${aScore.min} must outrank aliens ${bScore.max}")
-      // identical text ⇒ identical score regardless of source membership
-      assert(aScore.distinct.length == 1 && bScore.distinct.length == 1)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    val dir = tempDir("dsir-domains")
+    val vocabA = "alpha beta gamma delta epsilon zeta"
+    val vocabB = "omega psi chi phi upsilon tau"
+    val docs =
+      (0L to 9L).map(i => (i, vocabA, "en", "src0", 36L)) ++     // target
+        (10L to 14L).map(i => (i, vocabA, "en", "src9", 36L)) ++ // impostors
+        (15L to 19L).map(i => (i, vocabB, "en", "src9", 36L))    // aliens
+    docs.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val rows = SparkEntry.queries("pipeline_dsir_select")(spark, dir).collect()
+    val byId = rows.map(r => r.getAs[Long]("doc_id") -> r).toMap
+    val aScore = (0L to 14L).map(byId(_).getAs[Double]("score"))
+    val bScore = (15L to 19L).map(byId(_).getAs[Double]("score"))
+    assert(aScore.min > bScore.max,
+      s"A-speakers ${aScore.min} must outrank aliens ${bScore.max}")
+    // identical text ⇒ identical score regardless of source membership
+    assert(aScore.distinct.length == 1 && bScore.distinct.length == 1)
   }
 
   test("filter cascade: each rule fires, and the FIRST failing rule wins the reason") {
-    val dir = java.nio.file.Files.createTempDirectory("cascade").toString
-    try {
-      val repeats = Array.fill(12)("rep word one two five").mkString(" ")
-      val docs = Seq(
-        (0L, "tiny doc here", "en", "src0", 13L),                       // too_short
-        (1L, "aa bb cc " + Array.fill(9)("xy").mkString(" "), "en", "src0", 9L), // mean len 2 < 3
-        (2L, "extraordinarily sesquipedalian vocabularies " +
-          "overrepresented disproportionately hereabouts", "en", "src0", 90L),   // mean len > 10
-        (3L, "the " + repeats, "en", "src0", 60L),                      // repetition
-        (4L, "alpha beta gamma delta epsilon zeta eta theta iota " +
-          "kappa lambda mu nu xi omicron pi rho sigma tau upsilon", "en", "src0", 60L), // stopword
-        (5L, "the quick brown fox jumps over a lazy dog near water", "en", "src0", 52L), // kept
-        // fails word_length AND stopword: word_length (earlier rule) must win
-        (6L, "zz qq ww ee rr tt yy uu ii oo", "en", "src0", 29L))
-      docs.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val rows = SparkEntry.queries("pipeline_filter_cascade")(spark, dir).collect()
-      val reason = rows.map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("reason")).toMap
-      assert(reason(0L) == "too_short")
-      assert(reason(1L) == "word_length" && reason(2L) == "word_length")
-      assert(reason(3L) == "repetition")
-      assert(reason(4L) == "stopword")
-      assert(reason(5L) == "kept")
-      assert(reason(6L) == "word_length", "earlier rule must take the attribution")
-      rows.foreach(r => assert(r.getAs[Boolean]("keep") == (r.getAs[String]("reason") == "kept")))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    val dir = tempDir("cascade")
+    val repeats = Array.fill(12)("rep word one two five").mkString(" ")
+    val docs = Seq(
+      (0L, "tiny doc here", "en", "src0", 13L),                       // too_short
+      (1L, "aa bb cc " + Array.fill(9)("xy").mkString(" "), "en", "src0", 9L), // mean len 2 < 3
+      (2L, "extraordinarily sesquipedalian vocabularies " +
+        "overrepresented disproportionately hereabouts", "en", "src0", 90L),   // mean len > 10
+      (3L, "the " + repeats, "en", "src0", 60L),                      // repetition
+      (4L, "alpha beta gamma delta epsilon zeta eta theta iota " +
+        "kappa lambda mu nu xi omicron pi rho sigma tau upsilon", "en", "src0", 60L), // stopword
+      (5L, "the quick brown fox jumps over a lazy dog near water", "en", "src0", 52L), // kept
+      // fails word_length AND stopword: word_length (earlier rule) must win
+      (6L, "zz qq ww ee rr tt yy uu ii oo", "en", "src0", 29L))
+    docs.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val rows = SparkEntry.queries("pipeline_filter_cascade")(spark, dir).collect()
+    val reason = rows.map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("reason")).toMap
+    assert(reason(0L) == "too_short")
+    assert(reason(1L) == "word_length" && reason(2L) == "word_length")
+    assert(reason(3L) == "repetition")
+    assert(reason(4L) == "stopword")
+    assert(reason(5L) == "kept")
+    assert(reason(6L) == "word_length", "earlier rule must take the attribution")
+    rows.foreach(r => assert(r.getAs[Boolean]("keep") == (r.getAs[String]("reason") == "kept")))
   }
 
   test("quality classifier: student agrees with the cascade teacher on most docs") {
@@ -218,27 +210,23 @@ class PipelineOpsSpec extends SparkTestBase {
     // waterfilling into its mixed regime — tiny capped at C epochs, the
     // head language soaking up the remainder
     val C = graft.operators.PipelineQueries.UniMaxEpochCap
-    val dir = java.nio.file.Files.createTempDirectory("unimax-skew").toString
-    try {
-      val docs =
-        Seq((0L, "small words only", "xx", "web", 16L)) ++
-          (1L to 40L).map(i => (i, "big corpus language repeated tokens here", "en", "web", 40L))
-      docs.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val rows = SparkEntry.queries("pipeline_unimax_mix")(spark, dir).collect()
-      val byLang = rows.map(r => r.getAs[String]("lang") -> r).toMap
-      // xx: 3 tokens vs budget 2×(3+240)=486, fair share 243 ≫ 9 = C×3 → capped
-      assert(byLang("xx").getAs[Long]("alloc_tokens") ==
-        C * byLang("xx").getAs[Long]("n_tokens"))
-      assert(byLang("xx").getAs[Double]("epochs") == C.toDouble)
-      // en: gets everything the capped language left
-      assert(byLang("en").getAs[Long]("alloc_tokens") <
-        C * byLang("en").getAs[Long]("n_tokens"))
-      val budget = 2L * rows.map(_.getAs[Long]("n_tokens")).sum
-      assert(rows.map(_.getAs[Long]("alloc_tokens")).sum == budget)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    val dir = tempDir("unimax-skew")
+    val docs =
+      Seq((0L, "small words only", "xx", "web", 16L)) ++
+        (1L to 40L).map(i => (i, "big corpus language repeated tokens here", "en", "web", 40L))
+    docs.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val rows = SparkEntry.queries("pipeline_unimax_mix")(spark, dir).collect()
+    val byLang = rows.map(r => r.getAs[String]("lang") -> r).toMap
+    // xx: 3 tokens vs budget 2×(3+240)=486, fair share 243 ≫ 9 = C×3 → capped
+    assert(byLang("xx").getAs[Long]("alloc_tokens") ==
+      C * byLang("xx").getAs[Long]("n_tokens"))
+    assert(byLang("xx").getAs[Double]("epochs") == C.toDouble)
+    // en: gets everything the capped language left
+    assert(byLang("en").getAs[Long]("alloc_tokens") <
+      C * byLang("en").getAs[Long]("n_tokens"))
+    val budget = 2L * rows.map(_.getAs[Long]("n_tokens")).sum
+    assert(rows.map(_.getAs[Long]("alloc_tokens")).sum == budget)
   }
 
   test("prefix filtering loses no pair: result equals all-shingle-join Jaccard at t=0.5") {

@@ -144,26 +144,22 @@ class PlanQualitySpec extends SparkTestBase {
   test("hive-partitioned layout: a lang predicate prunes partitions at planning time") {
     // the write path a 100 TB corpus would use: partition the files by the
     // filter column, so a reader touches only matching directories
-    val dir = java.nio.file.Files.createTempDirectory("graft_part_").toString
-    try {
-      Tables.load(spark, Sf, "documents")
-        .write.mode("overwrite").partitionBy("lang").parquet(dir)
-      val langs = Tables.load(spark, Sf, "documents")
-        .select("lang").distinct().count()
-      assert(langs > 1) // pruning must have something to prune
-      val df = spark.read.parquet(dir).filter(org.apache.spark.sql.functions.col("lang") === "en")
-      val p = df.queryExecution.executedPlan.toString
-      val scan = p.linesIterator.find(_.contains("FileScan")).getOrElse("")
-      assert(scan.contains("PartitionFilters: [isnotnull(lang"), scan)
-      // and only the en partition's files are read
-      val pruned = df.queryExecution.executedPlan.collectLeaves().collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.partitionCount
-      }
-      assert(pruned.contains(1), s"expected 1 selected partition, got $pruned")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    val dir = tempDir("graft_part_")
+    Tables.load(spark, Sf, "documents")
+      .write.mode("overwrite").partitionBy("lang").parquet(dir)
+    val langs = Tables.load(spark, Sf, "documents")
+      .select("lang").distinct().count()
+    assert(langs > 1) // pruning must have something to prune
+    val df = spark.read.parquet(dir).filter(org.apache.spark.sql.functions.col("lang") === "en")
+    val p = df.queryExecution.executedPlan.toString
+    val scan = p.linesIterator.find(_.contains("FileScan")).getOrElse("")
+    assert(scan.contains("PartitionFilters: [isnotnull(lang"), scan)
+    // and only the en partition's files are read
+    val pruned = df.queryExecution.executedPlan.collectLeaves().collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.selectedPartitions.partitionCount
     }
+    assert(pruned.contains(1), s"expected 1 selected partition, got $pruned")
   }
 
   test("merkle-pruned diff: dirty-bucket list broadcasts into semi joins") {

@@ -23,20 +23,14 @@ class Round14OpsSpec extends SparkTestBase {
 
   private def trainOn(texts: Seq[String])(
       f: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r14_bpe_").toString
-    try {
-      val rows = texts.zipWithIndex.map { case (t, i) =>
-        (i.toLong, t, "en", "src", t.length.toLong)
-      }
-      import spark.implicits._
-      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      f(dir)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
-        .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
+    val dir = tempDir("graft_r14_bpe_")
+    val rows = texts.zipWithIndex.map { case (t, i) =>
+      (i.toLong, t, "en", "src", t.length.toLong)
     }
+    import spark.implicits._
+    rows.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    f(dir)
   }
 
   test("greedy overlap resolution on degenerate repeats (aaaa/aaa)") {

@@ -120,35 +120,6 @@ class Round3OperatorsSpec extends SparkTestBase {
     assert(rebuilt == expected && rebuilt.nonEmpty)
   }
 
-  test("two-phase skew window equals the single-partition running sum, bit for bit") {
-    import graft.operators.SkewWindow
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.load(spark, Sf, "events")
-    val chunk = expr("CAST(datediff(ts, DATE'2024-01-01') AS BIGINT)") // day bucket
-    val twoPhase = SkewWindow.runningSum(
-        e, col("user_id"), chunk, Seq(col("ts"), col("event_id")),
-        col("value"), "running")
-      .select(col("event_id"), col("running"))
-      .as[(Long, java.math.BigDecimal)].collect().toMap
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(chunk, col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val plain = e
-      .withColumn("running", sum(col("value").cast("decimal(38,4)")).over(w)
-        .cast("decimal(38,4)"))
-      .select(col("event_id"), col("running"))
-      .as[(Long, java.math.BigDecimal)].collect().toMap
-    assert(twoPhase.size == plain.size && twoPhase.nonEmpty)
-    assert(twoPhase == plain)
-    // and no window partition in the two-phase plan spans a whole key:
-    // phase 1 partitions by (key, chunk), phase 2 runs over the chunk
-    // totals only
-    val p = SkewWindow.runningSum(e, col("user_id"), chunk,
-      Seq(col("ts"), col("event_id")), col("value"), "running")
-      .queryExecution.optimizedPlan.toString
-    assert(p.contains("__sw_chunk"), p.take(1500))
-  }
-
   test("incremental aggregate fold equals a direct recompute over the after snapshot") {
     import graft.operators.DiffQueries
     val folded = SparkEntry.queries("diff_incremental_agg")(spark, Sf)

@@ -11,26 +11,22 @@ class SourceFormatsSpec extends SparkTestBase {
   import graft.operators.{DiffQueries, SnapshotDiff}
 
   private def roundTrip(fmt: String): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_$fmt").toString
-    try {
-      val t = Tables.nation
-      val parquetDf = Tables.load(spark, Sf, t.name)
-      parquetDf.write.mode("overwrite").format(fmt)
-        .option("header", "true").save(dir)
-      // read back through the SAME schema (CSV/JSON carry no types)
-      val back = spark.read.format(fmt)
-        .option("header", "true").schema(parquetDf.schema).load(dir)
-      assert(back.collect().map(_.toSeq).toSet == parquetDf.collect().map(_.toSeq).toSet)
-      // and the diff operator runs over it bit-identically
-      val after = DiffQueries.after(spark, Sf, t)
-      val viaParquet = SnapshotDiff.diff(parquetDf, after, t.pk)
-        .collect().map(_.toSeq).toSet
-      val viaFmt = SnapshotDiff.diff(back, after, t.pk)
-        .collect().map(_.toSeq).toSet
-      assert(viaFmt == viaParquet && viaFmt.nonEmpty)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    val dir = tempDir(s"graft_$fmt")
+    val t = Tables.nation
+    val parquetDf = Tables.load(spark, Sf, t.name)
+    parquetDf.write.mode("overwrite").format(fmt)
+      .option("header", "true").save(dir)
+    // read back through the SAME schema (CSV/JSON carry no types)
+    val back = spark.read.format(fmt)
+      .option("header", "true").schema(parquetDf.schema).load(dir)
+    assert(back.collect().map(_.toSeq).toSet == parquetDf.collect().map(_.toSeq).toSet)
+    // and the diff operator runs over it bit-identically
+    val after = DiffQueries.after(spark, Sf, t)
+    val viaParquet = SnapshotDiff.diff(parquetDf, after, t.pk)
+      .collect().map(_.toSeq).toSet
+    val viaFmt = SnapshotDiff.diff(back, after, t.pk)
+      .collect().map(_.toSeq).toSet
+    assert(viaFmt == viaParquet && viaFmt.nonEmpty)
   }
 
   test("CSV source round-trips and diffs identically to parquet")(roundTrip("csv"))
@@ -38,15 +34,11 @@ class SourceFormatsSpec extends SparkTestBase {
   test("ORC source round-trips and diffs identically to parquet")(roundTrip("orc"))
 
   test("JSON-lines with schema inference recovers the long/string columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsoninfer").toString
-    try {
-      Tables.load(spark, Sf, "region").write.mode("overwrite").json(dir)
-      val inferred = spark.read.json(dir)
-      assert(inferred.schema("r_regionkey").dataType.typeName == "long")
-      assert(inferred.schema("r_name").dataType.typeName == "string")
-      assert(inferred.count() == Tables.load(spark, Sf, "region").count())
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    val dir = tempDir("graft_jsoninfer")
+    Tables.load(spark, Sf, "region").write.mode("overwrite").json(dir)
+    val inferred = spark.read.json(dir)
+    assert(inferred.schema("r_regionkey").dataType.typeName == "long")
+    assert(inferred.schema("r_name").dataType.typeName == "string")
+    assert(inferred.count() == Tables.load(spark, Sf, "region").count())
   }
 }

@@ -1,12 +1,36 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession per suite. */
-trait SparkTestBase extends AnyFunSuite {
+/** One shared local SparkSession per suite. Staging directories from
+  * [[tempDir]] and the `graft_` temp views the suite's memory sinks left
+  * are removed after the suite. */
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val Sf = "/root/testdata/sf0.001"
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A fresh directory under the JVM temp dir (name prefix `prefix`),
+    * deleted after the suite. */
+  def tempDir(prefix: String): String = synchronized {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs += dir
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try {
+      tempDirs.foreach(FileUtils.deleteQuietly)
+      SparkSession.getDefaultSession.foreach { s =>
+        s.catalog.listTables().collect()
+          .filter(t => t.isTemporary && t.name.startsWith("graft_"))
+          .foreach(t => s.catalog.dropTempView(t.name))
+      }
+    } finally super.afterAll()
 }
 
 object SparkTestBase {

@@ -40,15 +40,10 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming tumbling counts == batch tumbling counts") {
-    val batchEvents = Tables.load(spark, Sf, "events")
     val batch = EventsQueries.queries("events_tumbling")(spark, Sf)
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-
-    // stream source needs a directory; stage the micros-normalized events
-    // (nanos handling itself is covered by Tables.load + the batch oracle)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_in")
-    batchEvents.write.mode("overwrite").parquet(dir.toString)
-    val streamed = EventStreams.runTumblingOnce(spark, dir.toString, batchEvents.schema)
+    // the shipped twin streams the raw fixture through Tables.stream
+    val streamed = EventStreams.runTumblingRawOnce(spark, Sf)
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
     assert(streamed == batch)
   }
@@ -63,9 +58,9 @@ class StreamingSpec extends SparkTestBase {
     val batch = graft.operators.SketchQueries.cmsSketch(toks)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_cms_in")
-    docs.write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(docs.schema).parquet(dir.toString)
+    val dir = tempDir("graft_cms_in")
+    docs.write.mode("overwrite").parquet(dir)
+    val stream = spark.readStream.schema(docs.schema).parquet(dir)
       .select(explode(graft.functions.Hashing.tokens(col("text"))).as("term"))
     val q = graft.operators.SketchQueries.cmsSketch(stream)
       .writeStream.outputMode(OutputMode.Complete)
@@ -74,36 +69,6 @@ class StreamingSpec extends SparkTestBase {
     q.stop()
     val streamed = spark.table("graft_cms_stream")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed == batch && batch.nonEmpty)
-  }
-
-  test("stream-static seasonal anomaly == batch scorer over the same input") {
-    val batchEvents = Tables.load(spark, Sf, "events")
-    val baseline = graft.operators.EventsQueries.seasonalBaseline(batchEvents).persist()
-    val threshold = 50000000L // 50 value units in micro-units
-    // the same stateless scorer executed as a plain batch query...
-    val batch = EventStreams.seasonalAnomaly(batchEvents, baseline, threshold)
-      .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
-    // ...must equal its STREAMING execution over the same rows
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom_in")
-    batchEvents.write.mode("overwrite").parquet(dir.toString)
-    val streamed = EventStreams.runSeasonalAnomalyOnce(spark, dir.toString,
-        batchEvents.schema, baseline, threshold)
-      .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
-    assert(streamed == batch && batch.nonEmpty)
-    baseline.unpersist()
-  }
-
-  test("stream-stream interval join == oracle-checked batch interval join") {
-    val batchEvents = Tables.load(spark, Sf, "events")
-    val batch = EventsQueries.queries("events_interval_join")(spark, Sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssj_in")
-    batchEvents.write.mode("overwrite").parquet(dir.toString)
-    val streamed = EventStreams
-      .runClickViewJoinOnce(spark, dir.toString, batchEvents.schema)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(streamed == batch && batch.nonEmpty)
   }
 
@@ -137,94 +102,5 @@ class StreamingSpec extends SparkTestBase {
     // the late row was dropped: the first finalized window counts 3, not 4
     assert(rows(firstWindow) == 3L, rows.toString)
     assert(!rows.valuesIterator.contains(4L), rows.toString)
-  }
-
-  test("streaming CEP pattern match emits exactly the batch clean-conversion set") {
-    // batch truth: users counted by the oracle-checked events_pattern_match
-    val e = Tables.load(spark, Sf, "events")
-    val su = e.filter(col("event_type") === "signup")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("t_signup"))
-    val er = e.filter(col("event_type") === "error")
-      .join(su, "user_id").filter(col("ts") > col("t_signup"))
-      .groupBy(col("user_id")).agg(min(col("ts")).as("t_err"))
-    val batchClean = e.filter(col("event_type") === "purchase")
-      .join(su.join(er, Seq("user_id"), "left_outer"), "user_id")
-      .filter(col("ts") > col("t_signup") &&
-        (col("t_err").isNull || col("ts") < col("t_err")))
-      .select("user_id").distinct().as[Long].collect().toSet
-
-    val evs = e.select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
-      .as[EventStreams.PEv].collect().sortBy(v => (v.ts_us, v.user_id))
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[EventStreams.PEv]
-    val q = EventStreams.patternMatch(input.toDS())
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("graft_cep").start()
-    val (first, second) = evs.splitAt(evs.length / 2)
-    input.addData(first.toIndexedSeq)
-    q.processAllAvailable()
-    input.addData(second.toIndexedSeq)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("graft_cep").as[Long].collect()
-    assert(streamed.length == streamed.distinct.length) // emit-once per user
-    assert(streamed.toSet == batchClean && batchClean.nonEmpty)
-  }
-
-  test("stateful streaming sessionization == batch sessionization") {
-    val batch = EventsQueries.queries("events_sessionize")(spark, Sf)
-      .collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id")) ->
-        r.getAs[Long]("session_id")).toMap
-
-    val evs = Tables.load(spark, Sf, "events")
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
-      .as[EventStreams.Ev].collect().sortBy(e => (e.ts_us, e.event_id))
-
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[EventStreams.Ev]
-    val q = EventStreams.sessionize(input.toDS())
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("graft_sessions").start()
-    // feed in two event-time-ordered micro-batches to exercise state carry
-    val (first, second) = evs.splitAt(evs.length / 2)
-    input.addData(first.toIndexedSeq)
-    q.processAllAvailable()
-    input.addData(second.toIndexedSeq)
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.table("graft_sessions").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id")) ->
-        r.getAs[Long]("session_id")).toMap
-    assert(streamed == batch)
-  }
-
-  test("streaming bottom-k sample quantiles converge to the batch sketch exactly") {
-    val k = 64
-    val batchEvents = Tables.load(spark, Sf, "events")
-    val batch = EventStreams.sampleQuantiles(batchEvents, k)
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSet
-
-    // feed the events in three chunks: the O(k) sketch state folds each
-    // micro-batch into the standing sample; determinism makes the final
-    // table independent of the chunking
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String, Double)]
-    val df = input.toDS().toDF("event_id", "event_type", "value")
-    val q = EventStreams.sampleQuantiles(df, k)
-      .writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName("graft_samp").start()
-    val rows = batchEvents.select("event_id", "event_type", "value")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-    try {
-      rows.grouped(math.max(1, rows.length / 3)).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = spark.table("graft_samp")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSet
-    assert(streamed == batch && batch.nonEmpty)
   }
 }
