@@ -1,12 +1,11 @@
 package graft.app
 
 import graft.{TableDef, Tables}
-import graft.operators.{Normalize, RenderQueries, SnapshotDiff}
+import graft.operators.SnapshotDiff
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import java.io.{BufferedWriter, FileWriter}
+import java.io.{BufferedOutputStream, FileOutputStream, OutputStream}
 
 /** The reference application's end-to-end loop (`cmd/dbdiff/main.go:23-98`):
   * collect a *before* snapshot of every table, wait for the operator to do
@@ -75,10 +74,10 @@ final class DbDiffApp(
   /** The snapshot the next iteration diffs against. */
   private[graft] def beforeSnapshot: Map[String, DataFrame] = before
 
-  /** Runs one BEFORE→AFTER→diff→report→swap iteration. Writes the styled
-    * report to `outName` (empty = skip file; a `.xlsx` name selects the
-    * reference's workbook, anything else HTML), prints console diff lines,
-    * returns per-table changed-key counts. */
+  /** Runs one BEFORE→AFTER→diff→report→swap iteration. Prints console diff
+    * lines, writes the styled workbook to `outName` (empty = no file) and
+    * returns per-table changed-key counts, all from one pass over each
+    * table's diff ([[ReportSink.writeIteration]]). */
   def iterate(outName: String = ""): IterationResult = {
     val after = snapshotAll()
     val result = try diffAndReport(after, outName)
@@ -110,35 +109,15 @@ final class DbDiffApp(
       else SnapshotDiff.diffOneWinner(before(t.name), after(t.name), t.pk))
     }
 
-    // console renderer (S7) — reference prints while building the workbook
-    var changed = Map.empty[String, Long]
-    diffs.foreach { case (t, d) =>
-      val n = ReportSink.printConsole(
-        RenderQueries.consoleLines(d, t.cols), consoleOut, maxConsoleRows)
-      if (n > 0) consoleOut(s"===${t.name}=== ($n rows shown)")
-      changed += t.name -> d.select(col(Normalize.KeyCol)).distinct().count()
-    }
-
-    // styled report (S8) for tables with changes: `-o x.xlsx` selects the
-    // reference's actual workbook format, anything else the HTML twin
-    val reportPath = if (outName.nonEmpty) {
-      if (outName.endsWith(".xlsx")) {
-        val sections = diffs.collect { case (t, d) if changed(t.name) > 0 =>
-          t -> RenderQueries.xlsxCells(d, t.cols)
-        }
-        val os = new java.io.BufferedOutputStream(new java.io.FileOutputStream(outName))
-        try ReportSink.writeXlsx(sections, os) finally os.close()
-      } else {
-        val sections = diffs.collect { case (t, d) if changed(t.name) > 0 =>
-          t -> RenderQueries.htmlRows(d, t.cols)
-        }
-        val w = new BufferedWriter(new FileWriter(outName))
-        try ReportSink.writeHtml(sections, w) finally w.close()
-      }
-      Some(outName)
-    } else None
-
-    IterationResult(changed, reportPath)
+    // console lines (S7), changed-key counts and the workbook (S8) come
+    // from one walk per table, as the reference prints each row while it
+    // writes it (`main.go:204-246`)
+    val out: OutputStream =
+      if (outName.isEmpty) OutputStream.nullOutputStream()
+      else new BufferedOutputStream(new FileOutputStream(outName))
+    val changed = try ReportSink.writeIteration(diffs, out, consoleOut, maxConsoleRows)
+    finally out.close()
+    IterationResult(changed, Some(outName).filter(_.nonEmpty))
   }
 
   /** Releases the pins of the last snapshot. The app cannot iterate after

@@ -10,13 +10,15 @@ import java.time.LocalDateTime
   *
   * {{{
   * spark-submit --class graft.app.DbDiffMain ... [-conf configuration.yaml]
-  *   [-o out.html] [-merkle 4096] [--demo]
+  *   [-o out.xlsx] [-merkle 4096] [--demo] [-open]
   * }}}
   *
   * Flow, matching `main.go:23-98`: load config (S1) → catalog the tables →
   * BEFORE snapshot → wait for the operator's keypress → AFTER snapshot →
-  * diff → console lines (S7) + styled HTML report (S8, timestamped filename
-  * S9) → swap → repeat, until `q`/`exit`.
+  * diff → console lines (S7) + styled workbook (S8, timestamped filename
+  * S9) → swap → repeat, until `q`/`exit`. Like the reference's Go `flag`
+  * parsing (`main.go:25-32`), an unknown argument or a flag without its
+  * value is an error, raised before any session starts.
   *
   * `--demo` replaces the stdin wait with two scripted iterations against the
   * fixture lake: iteration 1 applies the harness mutation set (the "user
@@ -28,24 +30,30 @@ object DbDiffMain {
   def main(args: Array[String]): Unit = {
     var conf = DbDiffConfig.DefaultConfigPath
     var outName = ReportSink.DefaultOutputName
-    var demo = false
     var merkleArg: Option[String] = None
-    args.sliding(2, 1).toList.foreach {
-      case Array("-conf", v)   => conf = v
-      case Array("-o", v)      => outName = v
-      case Array("-merkle", v) => merkleArg = Some(v)
-      case _                   =>
+    var demo = false
+    // S10 behind a flag: the reference always spawns the OS viewer on
+    // macOS/Windows (main.go:261-269); a Spark deployment is usually
+    // headless, so spawning is opt-in
+    var open = false
+    @scala.annotation.tailrec
+    def parse(rest: List[String]): Unit = rest match {
+      case Nil =>
+      case "-conf" :: v :: tail => conf = v; parse(tail)
+      case "-o" :: v :: tail => outName = v; parse(tail)
+      case "-merkle" :: v :: tail => merkleArg = Some(v); parse(tail)
+      case "--demo" :: tail => demo = true; parse(tail)
+      case "-open" :: tail => open = true; parse(tail)
+      case (f @ ("-conf" | "-o" | "-merkle")) :: Nil =>
+        throw new IllegalArgumentException(s"$f needs a value")
+      case a :: _ => throw new IllegalArgumentException(s"unknown argument '$a'")
     }
+    parse(args.toList)
     val merkle = merkleArg.fold(0) { v =>
       val n = v.toIntOption.getOrElse(0)
       require(n > 0, s"-merkle takes a positive bucket count, got '$v'")
       n
     }
-    if (args.contains("--demo")) demo = true
-    // S10 behind a flag: the reference always spawns the OS viewer on
-    // macOS/Windows (main.go:261-269); a Spark deployment is usually
-    // headless, so spawning is opt-in
-    val open = args.contains("-open")
 
     val config =
       if (demo && !java.nio.file.Files.exists(java.nio.file.Paths.get(conf)))

@@ -5,79 +5,41 @@ import graft.operators.{Normalize, RenderQueries}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import java.io.Writer
+import java.io.OutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
-/** S8/S9: the styled diff report and its timestamped filename.
+/** S7/S8/S9: the console lines, the styled workbook and its timestamped
+  * filename.
   *
-  * The reference renders one Excel block per changed table — an orange
-  * table-name row, a green header row (`(diff)` + column names), then one
-  * styled row per changed record with modified cells highlighted
-  * (`cmd/dbdiff/main.go:157-254`). Excel is a driver-memory sink; the HTML
-  * twin here keeps the exact information (status cell, per-cell `mod`
-  * marking via `modified_columns`) while the per-row strings are computed
-  * distributed ([[RenderQueries.htmlRows]], plain codegen projections).
-  *
-  * [[writeHtml]] writes those rows as a single styled file for the CLI,
-  * streamed through `toLocalIterator` — constant driver memory, any diff
-  * size (the reference materializes the whole workbook on the heap).
+  * The reference builds each iteration's output in one walk over the diff:
+  * it prints each changed row while it writes that row into the workbook
+  * — an orange table-name row, a green header row (`(diff)` + column
+  * names), then one styled row per changed record with modified cells
+  * highlighted (`cmd/dbdiff/main.go:157-254`). [[writeIteration]] does the
+  * same per table: the per-row strings are computed distributed
+  * ([[RenderQueries.consoleLine]], [[RenderQueries.xlsxCellRun]]), sorted
+  * once, and streamed through `toLocalIterator` — constant driver memory,
+  * any diff size, where the reference materializes the whole workbook on
+  * the heap.
   */
 object ReportSink {
-  /** Default-name sentinel, `cmd/dbdiff/main.go:20` (xlsx → html). */
-  val DefaultOutputName = "dbdiff_yyyymmdd_hhmmss.html"
+  /** Default-name sentinel, `cmd/dbdiff/main.go:20`. */
+  val DefaultOutputName = "dbdiff_yyyymmdd_hhmmss.xlsx"
 
   /** S9 (`main.go:273-282`): the sentinel becomes a timestamped name; an
     * explicit name passes through. */
   def generateOutFilename(specified: String, now: LocalDateTime): String =
     if (specified == DefaultOutputName)
-      "dbdiff_" + now.format(DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")) + ".html"
+      "dbdiff_" + now.format(DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")) + ".xlsx"
     else specified
-
-  private val style =
-    """<style>
-      |table{border-collapse:collapse}td,th{border:1px solid #000;padding:2px 6px}
-      |td.mod{background:#ff0;border:1px solid #f00}
-      |th{background:#92d050}.tname{background:#ffc000}
-      |</style>""".stripMargin
-
-  /** Deterministic row order for the file: by key, BEFORE before AFTER for
-    * an UPDATED pair (the reference emits before-then-after,
-    * `extract_data.go:226-228`). */
-  private def ordered(htmlRows: DataFrame): DataFrame =
-    htmlRows.orderBy(col(Normalize.KeyCol), col("side").desc)
-
-  /** Writes one styled report. `sections` pairs each changed table with its
-    * rendered rows ([[RenderQueries.htmlRows]] output); tables with no
-    * changes are skipped like the reference (`main.go:160-163`). Returns the
-    * number of data rows written. */
-  def writeHtml(sections: Seq[(TableDef, DataFrame)], out: Writer): Long = {
-    var written = 0L
-    out.write(s"<html><head>$style</head><body>\n")
-    sections.foreach { case (t, rows) =>
-      var headerDone = false
-      val it = ordered(rows).select(col("tr")).toLocalIterator()
-      while (it.hasNext) {
-        if (!headerDone) {
-          // table-name + header rows (`main.go:167-196`)
-          out.write(s"""<table>\n<tr><td class="tname">TableName</td><td>${t.name}</td></tr>\n""")
-          out.write(t.cols.map(c => s"<th>$c</th>").mkString("<tr><th>(diff)</th>", "", "</tr>\n"))
-          headerDone = true
-        }
-        out.write(it.next().getString(0))
-        out.write("\n")
-        written += 1
-      }
-      if (headerDone) out.write("</table>\n<br/><br/>\n")
-    }
-    out.write("</body></html>\n")
-    written
-  }
 
   // ---- S8 proper: the SpreadsheetML (.xlsx) workbook ---------------------
 
   private def xmlEsc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+      .replaceAll(RenderQueries.NonXmlChars, "\uFFFD")
 
   /** `xl/styles.xml` — the reference's four cell styles
     * (`cmd/dbdiff/main.go:116-155`), by cellXfs index:
@@ -139,23 +101,34 @@ object ReportSink {
       """<Relationship Id="rId2" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/styles" Target="styles.xml"/>""" +
       "</Relationships>"
 
-  /** S8 proper: one styled .xlsx workbook, zero dependencies — xlsx IS a
-    * zip of XML parts, written here with `java.util.zip`. Layout matches
-    * the reference sheet exactly (`cmd/dbdiff/main.go:100-258`): tables
-    * stacked on Sheet1 from B2 with a 2-row margin, per table an orange
-    * TableName row, a green bordered header row (`(diff)` + column names),
-    * then one row per changed record whose modified cells carry the
-    * yellow/red style. Cell runs arrive pre-rendered and DISTRIBUTED
-    * ([[RenderQueries.xlsxCells]]); assembly streams through
-    * `toLocalIterator` like [[writeHtml]] — constant driver memory where
-    * the reference materializes the whole workbook on the heap. Returns
-    * the number of data rows written. */
-  def writeXlsx(sections: Seq[(TableDef, DataFrame)], out: java.io.OutputStream): Long = {
+  /** One iteration's output, one driver pass per table: each table's diff
+    * rows are projected to `(__key, side, console line, cell run)`, sorted
+    * by key with BEFORE above AFTER for an UPDATED pair (the reference
+    * emits before-then-after, `extract_data.go:226-228`), and walked once
+    * through `toLocalIterator`. In that walk the driver
+    *  - prints the first `maxConsoleRows` console lines (S7), then
+    *    `... (truncated at N rows)`, then `===T=== (n rows shown)` — the
+    *    reference prints every changed row (`main.go:204-231`); unbounded
+    *    stdout is exactly what breaks at scale, so the cap is explicit;
+    *  - counts the table's changed keys as `__key` changes in the sorted
+    *    stream;
+    *  - writes the row into the workbook on `out` (S8).
+    *
+    * The workbook is the reference sheet exactly (`main.go:100-258`),
+    * zero dependencies — xlsx IS a zip of XML parts, written here with
+    * `java.util.zip`: tables stacked on Sheet1 from B2 with a 2-row margin,
+    * per changed table an orange TableName row, a green bordered header
+    * row (`(diff)` + column names), then one row per changed record whose
+    * modified cells carry the yellow/red style. Tables with no changes get
+    * no block, like the reference (`main.go:160-163`). Returns each
+    * table's changed-key count. */
+  def writeIteration(diffs: Seq[(TableDef, DataFrame)], out: OutputStream,
+      console: String => Unit, maxConsoleRows: Int): Map[String, Long] = {
     import java.util.zip.{ZipEntry, ZipOutputStream}
-    val zip = new ZipOutputStream(out, java.nio.charset.StandardCharsets.UTF_8)
+    val zip = new ZipOutputStream(out, UTF_8)
     def part(name: String, content: String): Unit = {
       zip.putNextEntry(new ZipEntry(name))
-      zip.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      zip.write(content.getBytes(UTF_8))
       zip.closeEntry()
     }
     part("[Content_Types].xml", contentTypesXml)
@@ -165,39 +138,48 @@ object ReportSink {
     part("xl/styles.xml", stylesXml)
 
     zip.putNextEntry(new ZipEntry("xl/worksheets/sheet1.xml"))
-    val w = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(zip, java.nio.charset.StandardCharsets.UTF_8))
+    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(zip, UTF_8))
     def cell(style: String, text: String): String =
       (if (style.isEmpty) "<c t=\"inlineStr\">" else s"""<c t="inlineStr" s="$style">""") +
         s"<is><t>${xmlEsc(text)}</t></is></c>"
     w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
     w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""")
     w.write("""<cols><col min="2" max="2" width="15" customWidth="1"/></cols><sheetData>""")
-    var written = 0L
     var ri = 2 // DiffResultOffsetForRow, `main.go:101`
-    sections.foreach { case (t, rows) =>
-      var headerDone = false
-      val it = ordered(rows.withColumnRenamed("xc", "tr")).select(col("tr")).toLocalIterator()
+    val changed = diffs.map { case (t, d) =>
+      val it = d.select(col(Normalize.KeyCol), col("side"),
+          RenderQueries.consoleLine(t.cols).as("line"), RenderQueries.xlsxCellRun(t.cols).as("xc"))
+        .orderBy(col(Normalize.KeyCol), col("side").desc)
+        .toLocalIterator()
+      var rows, keys = 0L
+      var lastKey: String = null
       while (it.hasNext) {
-        if (!headerDone) {
+        val r = it.next()
+        if (rows == 0) {
+          // table-name + header rows (`main.go:167-196`)
           w.write(s"""<row r="$ri"><c/>${cell("1", "TableName")}${cell("", t.name)}</row>""")
           ri += 1
           w.write(s"""<row r="$ri"><c/>${cell("2", "(diff)")}""" +
             t.cols.map(c => cell("2", c)).mkString + "</row>")
           ri += 1
-          headerDone = true
         }
-        w.write(s"""<row r="$ri">"""); w.write(it.next().getString(0)); w.write("</row>")
+        if (rows < maxConsoleRows) console(r.getString(2))
+        else if (rows == maxConsoleRows) console(s"... (truncated at $maxConsoleRows rows)")
+        if (r.getString(0) != lastKey) { keys += 1; lastKey = r.getString(0) }
+        w.write(s"""<row r="$ri">"""); w.write(r.getString(3)); w.write("</row>")
         ri += 1
-        written += 1
+        rows += 1
       }
-      if (headerDone) ri += 2 // DiffResultMargin, `main.go:103,256`
-    }
+      val shown = math.min(rows, maxConsoleRows)
+      if (shown > 0) console(s"===${t.name}=== ($shown rows shown)")
+      if (rows > 0) ri += 2 // DiffResultMargin, `main.go:103,256`
+      t.name -> keys
+    }.toMap
     w.write("</sheetData></worksheet>")
     w.flush()
     zip.closeEntry()
     zip.finish()
-    written
+    changed
   }
 
   /** S10 (`cmd/dbdiff/main.go:261-269`): hand the written report to the
@@ -216,16 +198,5 @@ object ReportSink {
       else if (os.contains("linux")) Some(Seq("xdg-open", path))
       else None
     cmd.exists { c => try { launch(c); true } catch { case _: Throwable => false } }
-  }
-
-  /** S7 console sink: streams renderer lines to `out`, at most `maxRows`
-    * (the reference prints every changed row, `main.go:204-231` — unbounded
-    * stdout is exactly what breaks at scale, so the cap is explicit). */
-  def printConsole(lines: DataFrame, out: String => Unit, maxRows: Int): Long = {
-    val it = ordered(lines.withColumnRenamed("line", "tr")).select(col("tr")).toLocalIterator()
-    var n = 0L
-    while (it.hasNext && n < maxRows) { out(it.next().getString(0)); n += 1 }
-    if (it.hasNext) out(s"... (truncated at $maxRows rows)")
-    n
   }
 }

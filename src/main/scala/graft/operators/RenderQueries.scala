@@ -12,16 +12,20 @@ import org.apache.spark.sql.functions._
   *   — a fixed-width status label (`cmd/dbdiff/main.go:204-231`) followed by
   *   the row's debug string `([col:val][col:val]...)`
   *   (`extract_data.go:135-147`, `RowObject.String`).
-  * - Styled report (S8 analogue): the reference writes an Excel sheet where
-  *   modified cells get a highlight style keyed off `ModifiedColumnIndex`
-  *   (`cmd/dbdiff/main.go:235-243`). Excel isn't a lake-scale sink; the same
-  *   information renders as one HTML `<tr>` per row with `class="mod"` on
-  *   exactly the modified cells, driven by `modified_columns`.
+  * - Styled report (S8): the reference writes an Excel sheet where modified
+  *   cells get a highlight style keyed off `ModifiedColumnIndex`
+  *   (`cmd/dbdiff/main.go:235-243`). [[xlsxCellRun]] renders each row's
+  *   SpreadsheetML cell run with that style on exactly the cells named in
+  *   `modified_columns`; [[htmlRows]] is the same classification as one
+  *   HTML `<tr>` per row, kept as an oracle-checked query
+  *   (`render_html_customer`).
   *
-  * Both renderers are plain `concat`/`when` expression trees — they stay in
+  * All renderers are plain `concat`/`when` expression trees — they stay in
   * whole-stage codegen, add no shuffle on top of the diff, and scale to any
-  * row count (the *assembly* into a terminal stream or a single .html file
-  * is the sink's concern — [[graft.app.ReportSink]]).
+  * row count. [[consoleLine]] and [[xlsxCellRun]] are the column
+  * expressions the application's report pass projects side by side
+  * ([[graft.app.ReportSink.writeIteration]]), so one sorted walk over the
+  * diff prints the console and streams the workbook.
   */
 object RenderQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -48,15 +52,18 @@ object RenderQueries {
         cols.flatMap(c => Seq(lit(s"[$c:"), col(c), lit("]"))) :+
         lit(")"): _*)
 
-  /** Console renderer: one `(__key, side, line)` row per diff row. */
-  def consoleLines(diffed: DataFrame, cols: Seq[String]): DataFrame = {
+  /** A diff row's console line: status label, `": "`, row string. */
+  def consoleLine(cols: Seq[String]): Column = {
     val label = when(col("diff_status") === SnapshotDiff.Inserted, InsertedLabel)
       .when(col("diff_status") === SnapshotDiff.Deleted, DeletedLabel)
       .when(col("side") === "BEFORE", UpdBeforeLabel)
       .otherwise(UpdAfterLabel)
-    diffed.select(col(Normalize.KeyCol), col("side"),
-      concat(label, lit(": "), rowString(cols)).as("line"))
+    concat(label, lit(": "), rowString(cols))
   }
+
+  /** Console renderer: one `(__key, side, line)` row per diff row. */
+  def consoleLines(diffed: DataFrame, cols: Seq[String]): DataFrame =
+    diffed.select(col(Normalize.KeyCol), col("side"), consoleLine(cols).as("line"))
 
   /** Minimal HTML text escape (shared subset: nested `replace`). */
   private def esc(c: Column): Column =
@@ -77,20 +84,26 @@ object RenderQueries {
         .as("tr"))
   }
 
-  /** Excel-sheet renderer — the reference's ACTUAL S8 sink
-    * (`cmd/dbdiff/main.go:204-246`): one `(__key, side, xc)` row per diff
-    * row, `xc` = the row's SpreadsheetML cell run as inline-string `<c>`
-    * elements — style `s="3"` (black thin border) on the status cell and
-    * unmodified cells, `s="4"` (yellow fill, red border) on exactly the
-    * cells named in `modified_columns`, mirroring the reference's
+  /** Code points outside XML 1.0's `Char` production (C0 controls other
+    * than tab, LF and CR; lone surrogates; U+FFFE/U+FFFF). No XML parser
+    * accepts them, so the workbook writes U+FFFD in their place, as Go's
+    * `encoding/xml` escaping does. */
+  val NonXmlChars = "[^\\t\\n\\r\\x{20}-\\x{D7FF}\\x{E000}-\\x{FFFD}\\x{10000}-\\x{10FFFF}]"
+
+  /** A diff row's SpreadsheetML cell run — the reference's S8 sink
+    * (`cmd/dbdiff/main.go:204-246`) as inline-string `<c>` elements:
+    * style `s="3"` (black thin border) on the status cell and unmodified
+    * cells, `s="4"` (yellow fill, red border) on exactly the cells named
+    * in `modified_columns`, mirroring the reference's
     * modCellStyle/unmodCellStyle split keyed off `ModifiedColumnIndex`
-    * (`main.go:235-243`). Same classification expression as [[htmlRows]];
-    * same distributed-projection scale shape. Cells carry no `r=`
-    * coordinate (OOXML lays r-less cells out sequentially), so the run is
-    * position-independent: [[graft.app.ReportSink.writeXlsx]] wraps it in
-    * `<row r="...">` while streaming, and the leading `<c/>` pads column A
-    * (the reference's 2-column offset, `main.go:101-102`). */
-  def xlsxCells(diffed: DataFrame, cols: Seq[String]): DataFrame = {
+    * (`main.go:235-243`). Same classification expression as [[htmlRows]].
+    * Cells carry no `r=` coordinate (OOXML lays r-less cells out
+    * sequentially), so the run is position-independent: the report pass
+    * wraps it in `<row r="...">` while streaming, and the leading `<c/>`
+    * pads column A (the reference's 2-column offset, `main.go:101-102`).
+    * One `regexp_replace` over the whole run maps [[NonXmlChars]] to
+    * U+FFFD; the markup itself holds none. */
+  def xlsxCellRun(cols: Seq[String]): Column = {
     val mods = split(col("modified_columns"), ",")
     val cells = cols.map { c =>
       val open = when(array_contains(mods, c), lit("<c t=\"inlineStr\" s=\"4\"><is><t>"))
@@ -99,8 +112,7 @@ object RenderQueries {
     }
     val statusC = concat(lit("<c t=\"inlineStr\" s=\"3\"><is><t>"), esc(statusCell),
       lit("</t></is></c>"))
-    diffed.select(col(Normalize.KeyCol), col("side"),
-      concat(lit("<c/>") +: statusC +: cells: _*).as("xc"))
+    regexp_replace(concat(lit("<c/>") +: statusC +: cells: _*), NonXmlChars, "\uFFFD")
   }
 
   val queries: Map[String, Q] = Map(

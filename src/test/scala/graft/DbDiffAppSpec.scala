@@ -1,16 +1,38 @@
 package graft
 
 import graft.app.{DbDiffApp, DbDiffConfig, DbDiffMain, ReportSink}
-import graft.operators.Mutations
+import graft.operators.{Mutations, Normalize, SnapshotDiff}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.FullOuter
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftshim.RddShim
+import org.apache.spark.sql.util.QueryExecutionListener
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
 import java.time.LocalDateTime
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end parity with the reference application loop
   * (`cmd/dbdiff/main.go:23-98`): config → snapshot → operations → diff →
   * console + styled report → swap → next iteration sees no changes. */
 class DbDiffAppSpec extends SparkTestBase {
+  import DbDiffAppSpec.sheetXml
+
+  /** A source over the fixture that serves `Mutations.afterSql` once
+    * `mutated` is set: the operator's "do some work" step. */
+  private final class MutatingSource {
+    var mutated = false
+    def apply(t: TableDef): org.apache.spark.sql.DataFrame = {
+      val base = Tables.load(spark, Sf, t.name)
+      if (mutated) {
+        base.createOrReplaceTempView(t.name)
+        spark.sql(Mutations.afterSql(t.name))
+      } else base
+    }
+  }
 
   test("S1: parses the reference's normal config shape") {
     val c = DbDiffConfig.parse(
@@ -61,30 +83,35 @@ class DbDiffAppSpec extends SparkTestBase {
     }
   }
 
+  test("DbDiffMain rejects an unknown argument or a flag without its value before any session starts") {
+    Seq(
+      Seq("--demo", "-merkel", "64") -> "'-merkel'",
+      Seq("--demo", "-o") -> "-o needs a value",
+      Seq("-merkle") -> "-merkle needs a value",
+      Seq("--demo", "--open") -> "'--open'"
+    ).foreach { case (args, named) =>
+      val e = intercept[IllegalArgumentException](DbDiffMain.main(args.toArray))
+      assert(e.getMessage.contains(named), e.getMessage)
+    }
+  }
+
   test("S9: timestamped default filename; explicit name passes through") {
     val t = LocalDateTime.of(2026, 8, 12, 13, 4, 5)
     assert(ReportSink.generateOutFilename(ReportSink.DefaultOutputName, t)
-      == "dbdiff_20260812_130405.html")
-    assert(ReportSink.generateOutFilename("x.html", t) == "x.html")
+      == "dbdiff_20260812_130405.xlsx")
+    assert(ReportSink.generateOutFilename("x.xlsx", t) == "x.xlsx")
   }
 
   test("loop twice with swap: first iteration reports, second is empty") {
     val tables = Seq(Tables.region, Tables.customer)
-    var mutated = false
-    val source = (t: TableDef) => {
-      val base = Tables.load(spark, Sf, t.name)
-      if (mutated) {
-        base.createOrReplaceTempView(t.name)
-        spark.sql(Mutations.afterSql(t.name))
-      } else base
-    }
+    val source = new MutatingSource
 
     val console = scala.collection.mutable.ArrayBuffer.empty[String]
-    val app = new DbDiffApp(spark, tables, source, console.append(_), maxConsoleRows = 10000)
+    val app = new DbDiffApp(spark, tables, source.apply, console.append(_), maxConsoleRows = 10000)
 
     // iteration 1: the "user operations" happen, then the diff sees them
-    mutated = true
-    val out1 = s"${tempDir("graft_dbdiff")}/report.html"
+    source.mutated = true
+    val out1 = s"${tempDir("graft_dbdiff")}/report.xlsx"
     val r1 = app.iterate(out1)
     assert(r1.totalChanged > 0)
     assert(r1.changedKeys.keySet == Set("region", "customer"))
@@ -97,35 +124,129 @@ class DbDiffAppSpec extends SparkTestBase {
     // row debug string shape `([col:val]...)` (extract_data.go:135-147)
     assert(console.exists(_.contains("[r_regionkey:")))
 
-    // styled report: section per changed table, modified cells marked
-    val html1 = Files.readString(Paths.get(out1))
-    assert(html1.contains("<td>region</td>") && html1.contains("<td>customer</td>"))
-    assert(html1.contains("<td class=\"mod\">"))
-    assert(html1.contains("<th>(diff)</th>"))
-    assert(html1.contains("UPD BEFORE") && html1.contains("UPD  AFTER"))
+    // styled workbook: section per changed table, modified cells marked
+    val sheet1 = sheetXml(out1)
+    assert(sheet1.contains("s=\"1\"><is><t>TableName</t></is>"))
+    assert(sheet1.contains("<is><t>region</t></is>") && sheet1.contains("<is><t>customer</t></is>"))
+    assert(sheet1.contains("s=\"4\"><is><t>"))
+    assert(sheet1.contains("s=\"2\"><is><t>(diff)</t></is>"))
+    assert(sheet1.contains("<is><t>UPD BEFORE</t></is>") && sheet1.contains("<is><t>UPD  AFTER</t></is>"))
 
     // iteration 2: nothing changed since the swap → empty diff, empty report
     console.clear()
-    val out2 = s"${tempDir("graft_dbdiff")}/report.html"
+    val out2 = s"${tempDir("graft_dbdiff")}/report.xlsx"
     val r2 = app.iterate(out2)
     assert(r2.totalChanged == 0)
     assert(console.isEmpty)
-    val html2 = Files.readString(Paths.get(out2))
-    assert(!html2.contains("<table>"))
+    assert(!sheetXml(out2).contains("TableName"))
+  }
+
+  test("console truncates at maxConsoleRows; changed keys and workbook rows stay whole") {
+    val t = Tables.region
+    val source = new MutatingSource
+    val console = scala.collection.mutable.ArrayBuffer.empty[String]
+    val app = new DbDiffApp(spark, Seq(t), source.apply, console.append(_), maxConsoleRows = 2)
+    source.mutated = true
+    val out = s"${tempDir("graft_dbdiff")}/report.xlsx"
+    val r = app.iterate(out)
+
+    // the diff the app ran, rendered and ordered on the driver: by key,
+    // BEFORE above AFTER
+    val d = SnapshotDiff.diffOneWinner(Tables.load(spark, Sf, t.name), source(t), t.pk)
+    val lines = graft.operators.RenderQueries.consoleLines(d, t.cols).collect()
+      .map(row => (row.getString(0), row.getString(1), row.getString(2)))
+      .sortBy { case (k, side, _) => (k, side != "BEFORE") }.map(_._3).toSeq
+    assert(lines.length > 2)
+    assert(lines.take(2).map(_.take(16)) == Seq("UPDATED[Before] ", "UPDATED[After ] "))
+    assert(console.toSeq ==
+      lines.take(2) ++ Seq("... (truncated at 2 rows)", "===region=== (2 rows shown)"))
+    assert(r.changedKeys == Map("region" -> d.select(Normalize.KeyCol).distinct().count()))
+    // every diff row is in the workbook: the rows past the table-name and
+    // header rows
+    assert("<row r=".r.findAllMatchIn(sheetXml(out)).size == 2 + lines.length)
+  }
+
+  test("a value with a control character reaches the workbook as U+FFFD, and the sheet parses") {
+    // U+0001 is the row codec's separator (RowCodecSpec), so the bell is
+    // the control character here; the emoji is a surrogate pair that must
+    // pass through
+    import spark.implicits._
+    val t = TableDef("bells", Seq("id", "txt"), Seq("id"))
+    var rung = false
+    val source = (_: TableDef) =>
+      (Seq((1, "plain")) ++ (if (rung) Seq((2, "ding\u0007dong"), (3, "\uD83D\uDE00")) else Nil))
+        .toDF("id", "txt")
+    val app = new DbDiffApp(spark, Seq(t), source, _ => ())
+    rung = true
+    val out = s"${tempDir("graft_dbdiff")}/report.xlsx"
+    assert(app.iterate(out).changedKeys == Map("bells" -> 2L))
+    val doc = javax.xml.parsers.DocumentBuilderFactory.newInstance().newDocumentBuilder()
+      .parse(new java.io.ByteArrayInputStream(sheetXml(out).getBytes(UTF_8)))
+    val ts = doc.getElementsByTagName("t")
+    val texts = (0 until ts.getLength).map(ts.item(_).getTextContent)
+    assert(texts.contains("ding\uFFFDdong") && texts.contains("\uD83D\uDE00"), texts)
+  }
+
+  /** `f`'s result and, per table, the full-outer joins on `__key` that the
+    * query executions run by `f` planned; an execution belongs to the table
+    * whose first column its plan reads. */
+  private def keyJoinsOf[A](tables: Seq[TableDef])(f: => A): (A, Map[String, Int]) = {
+    val plans = new ConcurrentLinkedQueue[LogicalPlan]()
+    val executions = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // a job in the sentinel group reaches the listener bus's shared queue
+    // after every execution `f` ended
+    val sentinel = s"key-joins-${System.nanoTime}"
+    val flushed = new CountDownLatch(1)
+    val flush = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == sentinel))
+          flushed.countDown()
+    }
+    val sc = spark.sparkContext
+    spark.listenerManager.register(executions)
+    sc.addSparkListener(flush)
+    val result = try {
+      val r = f
+      sc.setJobGroup(sentinel, "flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, TimeUnit.SECONDS))
+      r
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(flush)
+      spark.listenerManager.unregister(executions)
+    }
+    def keyJoins(p: LogicalPlan): Int = p.collect {
+      case j: Join if j.joinType == FullOuter &&
+        j.condition.exists(_.references.exists(_.name == Normalize.KeyCol)) => j
+    }.size
+    result -> tables.map { t =>
+      t.name -> plans.asScala.filter(_.toString.contains(s"${t.cols.head}#")).map(keyJoins).sum
+    }.toMap
+  }
+
+  test("one iterate(out) executes each table's diff join on __key once") {
+    val tables = Seq(Tables.region, Tables.customer)
+    Seq(0, 64).foreach { buckets =>
+      val source = new MutatingSource
+      val app = new DbDiffApp(spark, tables, source.apply, _ => (), merkleBuckets = buckets)
+      source.mutated = true
+      val out = s"${tempDir("graft_dbdiff")}/report.xlsx"
+      val (r, joins) = keyJoinsOf(tables)(app.iterate(out))
+      assert(r.changedKeys.values.forall(_ > 0))
+      assert(joins == Map("region" -> 1, "customer" -> 1), s"merkleBuckets = $buckets")
+    }
   }
 
   test("S8: -o out.xlsx writes the reference's styled workbook (modified-cell runs)") {
     val tables = Seq(Tables.region, Tables.customer)
-    var mutated = false
-    val source = (t: TableDef) => {
-      val base = Tables.load(spark, Sf, t.name)
-      if (mutated) {
-        base.createOrReplaceTempView(t.name)
-        spark.sql(Mutations.afterSql(t.name))
-      } else base
-    }
-    val app = new DbDiffApp(spark, tables, source, _ => (), maxConsoleRows = 0)
-    mutated = true
+    val source = new MutatingSource
+    val app = new DbDiffApp(spark, tables, source.apply, _ => (), maxConsoleRows = 0)
+    source.mutated = true
     val out = s"${tempDir("graft_dbdiff")}/report.xlsx"
     val r = app.iterate(out)
     assert(r.totalChanged > 0 && r.reportPath.contains(out))
@@ -192,13 +313,11 @@ class DbDiffAppSpec extends SparkTestBase {
     val t = Tables.region
     Tables.load(spark, Sf, t.name).createOrReplaceTempView(t.name)
     val after = spark.sql(Mutations.afterSql(t.name))
-    val d = graft.operators.SnapshotDiff.diff(Tables.load(spark, Sf, t.name), after, t.pk)
-    val lines = graft.operators.RenderQueries.consoleLines(d, t.cols)
+    val d = SnapshotDiff.diff(Tables.load(spark, Sf, t.name), after, t.pk)
 
-    val sw = new java.io.StringWriter()
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    ReportSink.printConsole(lines, buf.append(_), 10000)
-    sw.close()
+    ReportSink.writeIteration(Seq(t -> d), java.io.OutputStream.nullOutputStream(),
+      buf.append(_), 10000)
     val upd = buf.filter(_.startsWith("UPDATED"))
     assert(upd.nonEmpty && upd.length % 2 == 0)
     upd.grouped(2).foreach { pair =>
@@ -210,18 +329,11 @@ class DbDiffAppSpec extends SparkTestBase {
   test("merkle-pruned app loop matches the plain loop's changed counts") {
     // lineitem included: duplicate PKs exercise prune+one-winner composition
     val tables = Seq(Tables.part, Tables.lineitem)
-    var mutated = false
-    val source = (t: TableDef) => {
-      val base = Tables.load(spark, Sf, t.name)
-      if (mutated) {
-        base.createOrReplaceTempView(t.name)
-        spark.sql(Mutations.afterSql(t.name))
-      } else base
-    }
-    val plain = new DbDiffApp(spark, tables, source, _ => (), maxConsoleRows = 0)
-    val pruned = new DbDiffApp(spark, tables, source, _ => (), maxConsoleRows = 0,
+    val source = new MutatingSource
+    val plain = new DbDiffApp(spark, tables, source.apply, _ => (), maxConsoleRows = 0)
+    val pruned = new DbDiffApp(spark, tables, source.apply, _ => (), maxConsoleRows = 0,
       merkleBuckets = 512)
-    mutated = true
+    source.mutated = true
     val rPlain = plain.iterate()
     // reset both apps' before to the unmutated fixture for a fair comparison:
     // fresh pruned app sees the same before (sources are deterministic)
@@ -289,8 +401,8 @@ class DbDiffAppSpec extends SparkTestBase {
       assert(second.values.forall(df => RddShim.leafRdd(df).exists(
         _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)))
       // a report that cannot be written releases the after snapshot too
-      val notADir = Files.createTempFile("graft_report", ".html")
-      try intercept[java.io.IOException](app.iterate(notADir.resolve("r.html").toString))
+      val notADir = Files.createTempFile("graft_report", ".xlsx")
+      try intercept[java.io.IOException](app.iterate(notADir.resolve("r.xlsx").toString))
       finally Files.delete(notADir)
       assert(appPins == pinIds(second))
     } finally app.close()
@@ -308,5 +420,14 @@ class DbDiffAppSpec extends SparkTestBase {
     intercept[Exception](
       new DbDiffApp(spark, src.tables, src.apply, _ => (), pinSnapshots = true))
     assert(persisted -- outside == Set.empty)
+  }
+}
+
+object DbDiffAppSpec {
+  /** The worksheet part of an .xlsx report. */
+  def sheetXml(xlsx: String): String = {
+    val zf = new java.util.zip.ZipFile(xlsx)
+    try new String(zf.getInputStream(zf.getEntry("xl/worksheets/sheet1.xml")).readAllBytes(), UTF_8)
+    finally zf.close()
   }
 }

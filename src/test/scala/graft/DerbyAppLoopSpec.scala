@@ -21,7 +21,6 @@ class DerbyAppLoopSpec extends SparkTestBase {
   }
 
   test("catalog → before → mutate → diff → report → swap, twice") {
-    System.setProperty("derby.system.home", "/tmp/derby")
     sql(
       "CREATE TABLE ITEMS (ID INT PRIMARY KEY, NAME VARCHAR(50), VAL INT)",
       // no PK: exercises the keyless all-columns fallback (S5)
@@ -50,14 +49,15 @@ class DerbyAppLoopSpec extends SparkTestBase {
       "INSERT INTO ITEMS VALUES (4, 'four', 40)",
       "UPDATE NOTES SET SEV = 5 WHERE TXT = 'hello'")
 
-    val out = java.nio.file.Paths.get(tempDir("graft_app"), "report.html")
+    val out = java.nio.file.Paths.get(tempDir("graft_app"), "report.xlsx")
     val r2 = app.iterate(out.toString)
     assert(r2.changedKeys("ITEMS") == 3) // update + delete + insert
     assert(r2.changedKeys("NOTES") == 2) // keyless update = delete + insert keys
     assert(console.exists(_.contains("===ITEMS===")))
-    val html = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
-    assert(html.contains("ITEMS") && html.contains("NOTES"))
-    assert(html.contains("99")) // the updated value made it into the report
+    val sheet = DbDiffAppSpec.sheetXml(out.toString)
+    assert(sheet.contains("<is><t>ITEMS</t></is>") && sheet.contains("<is><t>NOTES</t></is>"))
+    // the updated value made it into the report, as a modified cell
+    assert(sheet.contains("s=\"4\"><is><t>99</t></is>"))
 
     // iteration 3: swap happened, database quiet → empty diff again
     assert(app.iterate().totalChanged == 0)

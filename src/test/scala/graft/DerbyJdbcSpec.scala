@@ -22,7 +22,6 @@ class DerbyJdbcSpec extends SparkTestBase {
   private val url = "jdbc:derby:memory:graftdb;create=true"
 
   private lazy val seeded: Unit = {
-    System.setProperty("derby.system.home", "/tmp/derby")
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()
@@ -104,7 +103,6 @@ class DerbyJdbcSpec extends SparkTestBase {
 
   test("a pin holds the pre-mutation rows, schema and NULLs, off the JDBC relation") {
     val typedUrl = "jdbc:derby:memory:graftpins;create=true"
-    System.setProperty("derby.system.home", "/tmp/derby")
     def sql(statements: String*): Unit = {
       val conn = java.sql.DriverManager.getConnection(typedUrl)
       try {
