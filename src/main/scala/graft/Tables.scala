@@ -4,17 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Static catalog for the parquet test fixtures.
   *
-  * Mirrors the reference's catalog introspection surface
-  * (`/root/reference/dbutil.go:9-38` table list, `dbutil.go:41-146` PK map,
-  * `dbutil.go:148-166` all-columns fallback for PK-less tables) as a static
-  * `Seq[TableDef]`: with parquet the schema comes from the file footer, so
-  * no catalog queries are needed — only the primary-key metadata, which a
-  * file-based lake has to declare out of band anyway.
+  * Mirrors the reference's catalog introspection surface (`dbutil.go:9-38`
+  * table list, `dbutil.go:41-146` PK map) as a static `Seq[TableDef]`. A
+  * PK-less table keys on all its columns (`dbutil.go:148-166`): the static
+  * `diff_region_keyless` passes `region.cols`, and `DbDiffApp.jdbcTables`
+  * falls back the same way on a live catalog. With parquet the schema
+  * comes from the file footer, so no catalog queries are needed — only the
+  * primary-key metadata, which a file-based lake has to declare out of
+  * band anyway.
   */
-final case class TableDef(name: String, cols: Seq[String], pk: Seq[String]) {
-  /** Reference fallback path (`dbutil.go:136-141`): no PK → all columns key. */
-  def keyless: TableDef = copy(pk = cols)
-}
+final case class TableDef(name: String, cols: Seq[String], pk: Seq[String])
 
 object Tables {
   val region   = TableDef("region", Seq("r_regionkey", "r_name"), Seq("r_regionkey"))

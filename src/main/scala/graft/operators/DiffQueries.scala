@@ -318,7 +318,8 @@ object DiffQueries {
       }),
       // Part 2: the full diff restricted to dirty buckets. Lossless pruning —
       // the oracle is the UNPRUNED full diff, so any key escaping its bucket
-      // or any checksum false-negative fails the hash gate.
+      // or any checksum false-negative fails the hash gate. Building the
+      // frame runs one eager summary job (the dirty list goes to the driver).
       "diff_merkle_pruned" -> ((spark, sfDir) => {
         val t = Tables.part
         SnapshotDiff.merklePrunedDiff(

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -45,7 +44,7 @@ object SnapshotDiff {
   val Updated = "UPDATED"
   val NotModified = "NOT_MODIFIED"
 
-  /** The classification join shared by [[diff]], [[feedCompact]] and
+  /** [[classifyNormalized]] over raw snapshots, for [[feedCompact]] and
     * [[statusCounts]]: one row per key-pairing with `diff_status`,
     * `modified_columns`, and both sides' [[RowCodec.pack]]ed normalized
     * rows (`__b` / `__a`; consumers unpack on emission). */
@@ -180,43 +179,6 @@ object SnapshotDiff {
       Seq(col("__r.valid_from").as("valid_from"), col("__r.valid_to").as("valid_to")))
   }
 
-  /** Multi-version SCD2: fold a whole ORDERED sequence of snapshots into
-    * validity intervals in ONE declarative plan (not an iterative driver
-    * loop): union all normalized versions tagged with their ordinal, then
-    * per key detect run starts (value changed vs the previous version, or
-    * the key was absent in between) with a lag window, and aggregate each
-    * run to [first_version, end). A run that survives to the last version
-    * stays open (valid_to NULL); a key deleted and re-inserted produces
-    * two disjoint intervals. Scale shape: one union-wide shuffle on
-    * `__key` shared by the window and the run aggregation — cost is
-    * independent of the number of versions beyond the data volume itself.
-    * Consistency with the pairwise [[scd2]] is pinned by spec. */
-  def scd2Chain(snapshots: Seq[DataFrame], pk: Seq[String]): DataFrame = {
-    require(snapshots.size >= 2, "scd2Chain needs at least two snapshots")
-    val normed = snapshots.map(s => oneRowPerKey(Normalize.withKey(s, pk)))
-    val cols = RowCodec.valueCols(normed.head)
-    val n = normed.size
-    val tagged = normed.zipWithIndex
-      .map { case (df, i) => df.withColumn("__v", lit(i.toLong)) }
-      .reduce(_.unionByName(_))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(Normalize.KeyCol)).orderBy(col("__v"))
-    val run = w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val rowStruct = struct(cols.map(col): _*)
-    val prevRow = lag(rowStruct, 1).over(w)
-    val prevV = lag(col("__v"), 1).over(w)
-    val isStart = prevRow.isNull || prevV =!= col("__v") - 1 || prevRow =!= rowStruct
-    tagged
-      .withColumn("__start", when(isStart, 1L).otherwise(0L))
-      .withColumn("__run", sum(col("__start")).over(run))
-      .groupBy(col(Normalize.KeyCol) +: col("__run") +: cols.map(col): _*)
-      .agg(min(col("__v")).as("valid_from"), max(col("__v")).as("__last_v"))
-      .select(col(Normalize.KeyCol) +: cols.map(col) :+
-        col("valid_from") :+
-        when(col("__last_v") === (n - 1).toLong, lit(null).cast("long"))
-          .otherwise(col("__last_v") + 1L).as("valid_to"): _*)
-  }
-
   /** MERGE (the write-back direction the reference lacks): reconstruct the
     * after snapshot from `before` + a [[diffOneWinner]] diff. Keys marked
     * DELETED or UPDATED drop their before row (one anti-join), then the
@@ -241,8 +203,8 @@ object SnapshotDiff {
     * status, modified columns, side, md5 row fingerprint). Row payloads
     * travel as 32-byte fingerprints, so feed width is independent of table
     * schema — the shape a multi-table CDC export unions into one stream.
-    * Used by the application loop's feed sink; the `diff_changefeed`
-    * harness query emits the same shape through [[feedCompact]]. */
+    * The unfused reference for [[feedCompact]], which the `diff_changefeed`
+    * harness query runs and `RowCodecSpec` compares against this. */
   def feed(d: DataFrame, tableName: String, cols: Seq[String]): DataFrame =
     d.select(lit(tableName).as("table_name"), col(Normalize.KeyCol),
       col("diff_status"), col("modified_columns"), col("side"),
@@ -344,103 +306,116 @@ object SnapshotDiff {
       .filter(col("merge_status") =!= "UNCHANGED")
   }
 
-  /** Merkle-style bucket summary — the repeat-diff accelerator for very
-    * large snapshots. Each side reduces to `nBuckets` fixed-width rows:
-    * bucket = hash(`__key`) mod nBuckets, and per bucket a row count plus
-    * an ORDER-INDEPENDENT checksum (exact decimal sum of 60-bit row
-    * hashes, reduced mod 10¹⁸ — commutative, so partition order and
-    * parallelism can't perturb it). A bucket whose (count, checksum) pair
-    * agrees on both sides provably holds no net change worth scanning*;
-    * only disagreeing ("dirty") buckets need the full-outer-join pass.
-    *
-    * At 100 TB this is the difference between re-joining the whole lake on
-    * every diff cycle and re-joining only the touched fraction: the
-    * summary pass is a narrow projection + one map-side-combined
-    * aggregation per side (no join of row data at all), its output is
-    * KB-sized regardless of input size, and the subsequent pruned diff
-    * joins only dirty-bucket rows. (*modulo 60-bit-hash-sum collisions —
-    * the standard anti-entropy trade, cf. Merkle-tree replica repair.
-    * [[merkleDirty128]] IS the production profile: 128 checksum bits via
-    * two xxhash64 lanes; this md5-derived single-lane variant exists so
-    * the summary itself stays DuckDB-replayable, `diff_merkle_dirty`.)
-    *
-    * Output (dirty buckets only): `bucket, b_rows, a_rows, b_sum, a_sum`.
-    * Empty ⇔ snapshots are (checksum-)identical, so `diff(A, A)` prunes
-    * to nothing before any join runs. */
-  def merkleSummary(bn: DataFrame, an: DataFrame, nBuckets: Int): DataFrame = {
-    def side(df: DataFrame, rowsName: String, sumName: String): DataFrame =
-      df.select(
-          bucketOf(col(Normalize.KeyCol), nBuckets).as("bucket"),
-          graft.functions.Hashing.hash64(RowCodec.pack(RowCodec.valueCols(df)))
-            .cast("decimal(38,0)").as("__h"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as(rowsName),
-          (sum(col("__h")) % lit(1000000000000000000L)).cast("long").as(sumName))
-    side(bn, "b_rows", "b_sum")
-      .join(side(an, "a_rows", "a_sum"), Seq("bucket"), "full_outer")
-      .select(col("bucket"),
-        coalesce(col("b_rows"), lit(0L)).as("b_rows"),
-        coalesce(col("a_rows"), lit(0L)).as("a_rows"),
-        coalesce(col("b_sum"), lit(0L)).as("b_sum"),
-        coalesce(col("a_sum"), lit(0L)).as("a_sum"))
-      .filter(col("b_rows") =!= col("a_rows") || col("b_sum") =!= col("a_sum"))
+  /** Checksum lanes of a Merkle bucket summary: given a side's value
+    * columns, each lane's name and its per-row 64-bit hash. */
+  type Lanes = Seq[String] => Seq[(String, Column)]
+
+  /** One lane, the md5-derived 60-bit [[graft.functions.Hashing.hash64]]
+    * of the packed row. DuckDB computes the same hashes, so a summary over
+    * this lane is itself oracle-checked (`diff_merkle_dirty`). */
+  val Md5Lane: Lanes = cols => Seq("sum" -> graft.functions.Hashing.hash64(RowCodec.pack(cols)))
+
+  /** The production profile: the two xxhash64 lanes of
+    * [[RowCodec.fingerprint128]], no MessageDigest on the hot path. Two
+    * 60-bit-sum lanes put a false-clean bucket at ~2⁻¹²⁰, negligible at
+    * any lake size, where one lane's 2⁻⁶⁰ is not. These sums never
+    * surface in an oracle-checked output (the pruned diffs' oracle is the
+    * UNPRUNED diff), so no cross-engine hash parity constrains them. */
+  val Lanes128: Lanes = cols => {
+    val (h1, h2) = RowCodec.fingerprint128(cols)
+    Seq("s1" -> h1, "s2" -> h2)
   }
 
   private def bucketOf(key: Column, nBuckets: Int): Column =
     pmod(graft.functions.Hashing.hash64(key), lit(nBuckets.toLong))
 
-  /** The PRODUCTION checksum profile [[merkleSummary]]'s doc promises: the
-    * same bucket summary with a 128-bit checksum — the two xxhash64 lanes
-    * of [[RowCodec.fingerprint128]] (no MessageDigest on the hot path),
-    * each lane an exact decimal sum reduced mod 10¹⁸ per bucket. Two
-    * 60-bit-sum lanes put a false-clean bucket at ~2⁻¹²⁰ — negligible at
-    * any lake size, where one lane's 2⁻⁶⁰ is not. These checksums never
-    * surface in an oracle-checked output (the pruned diff's oracle is the
-    * UNPRUNED diff), so no cross-engine hash parity constrains the choice —
-    * [[merkleSummary]] keeps the md5-derived single lane exactly so the
-    * summary itself stays DuckDB-replayable (`diff_merkle_dirty`).
-    * Returns dirty buckets only, as `bucket` plus per-side row counts. */
-  def merkleDirty128(bn: DataFrame, an: DataFrame, nBuckets: Int): DataFrame = {
-    def side(df: DataFrame, p: String): DataFrame = {
-      val (h1, h2) = RowCodec.fingerprint128(RowCodec.valueCols(df))
-      df.select(
-          bucketOf(col(Normalize.KeyCol), nBuckets).as("bucket"),
-          h1.cast("decimal(38,0)").as("__h1"),
-          h2.cast("decimal(38,0)").as("__h2"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as(s"${p}_rows"),
-          (sum(col("__h1")) % lit(1000000000000000000L)).cast("long").as(s"${p}_s1"),
-          (sum(col("__h2")) % lit(1000000000000000000L)).cast("long").as(s"${p}_s2"))
-    }
-    side(bn, "b").join(side(an, "a"), Seq("bucket"), "full_outer")
-      .filter(coalesce(col("b_rows"), lit(0L)) =!= coalesce(col("a_rows"), lit(0L)) ||
-        coalesce(col("b_s1"), lit(0L)) =!= coalesce(col("a_s1"), lit(0L)) ||
-        coalesce(col("b_s2"), lit(0L)) =!= coalesce(col("a_s2"), lit(0L)))
-      .select(col("bucket"))
+  /** One side's bucket summary: bucket = hash(`__key`) mod nBuckets, and
+    * per bucket `rows` plus one column per lane holding that lane's exact
+    * decimal sum reduced mod 10¹⁸ — commutative, so partition order and
+    * parallelism can't perturb it. A narrow projection and one
+    * map-side-combined aggregation; at most nBuckets rows whatever the
+    * input size. */
+  private def bucketSummary(df: DataFrame, nBuckets: Int, lanes: Lanes): DataFrame = {
+    val hs = lanes(RowCodec.valueCols(df)).zipWithIndex
+    df.select(bucketOf(col(Normalize.KeyCol), nBuckets).as("bucket") +:
+        hs.map { case ((_, h), i) => h.cast("decimal(38,0)").as(s"__h${i + 1}") }: _*)
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).as("rows"), hs.map { case ((name, _), i) =>
+        (sum(col(s"__h${i + 1}")) % lit(1000000000000000000L)).cast("long").as(name)
+      }: _*)
+  }
+
+  /** The dirty buckets of two side summaries: those whose row count or any
+    * lane's sum disagrees (a bucket absent on one side reads as zeros).
+    * Output `bucket`, then each summary column as its `b_`/`a_` pair. */
+  private def dirtyBuckets(b: DataFrame, a: DataFrame): DataFrame = {
+    val stats = b.columns.filterNot(_ == "bucket").toSeq
+    def side(s: DataFrame, p: String): DataFrame =
+      s.select(col("bucket") +: stats.map(c => col(c).as(s"${p}_$c")): _*)
+    val pairs = stats.map(c => (s"b_$c", s"a_$c"))
+    side(b, "b").join(side(a, "a"), Seq("bucket"), "full_outer")
+      .select(col("bucket") +: pairs.flatMap { case (bc, ac) => Seq(bc, ac) }
+        .map(c => coalesce(col(c), lit(0L)).as(c)): _*)
+      .filter(pairs.map { case (bc, ac) => col(bc) =!= col(ac) }.reduce(_ || _))
+  }
+
+  /** Merkle-style bucket summary — the repeat-diff accelerator for very
+    * large snapshots. Each side reduces to at most `nBuckets` rows of
+    * (count, checksum lanes); a bucket whose row count and every lane sum
+    * agree on both sides provably holds no net change worth scanning*, so
+    * only the disagreeing ("dirty") buckets need the full-outer-join pass.
+    * At 100 TB this is the difference between re-joining the whole lake on
+    * every diff cycle and re-joining only the touched fraction: no row
+    * data reaches a join, and the summary is KB-sized regardless of input
+    * size. (*modulo checksum collisions — the standard anti-entropy trade,
+    * cf. Merkle-tree replica repair.)
+    *
+    * `lanes` picks the checksum profile: [[Md5Lane]] (the default) keeps
+    * the summary DuckDB-replayable; the pruned diffs use [[Lanes128]].
+    * Output (dirty buckets only): `bucket, b_rows, a_rows`, then `b_<lane>,
+    * a_<lane>` per lane — `b_sum, a_sum` for [[Md5Lane]]. Empty ⇔ the
+    * snapshots are (checksum-)identical, so `diff(A, A)` prunes to nothing
+    * before any join runs. */
+  def merkleSummary(bn: DataFrame, an: DataFrame, nBuckets: Int,
+      lanes: Lanes = Md5Lane): DataFrame =
+    dirtyBuckets(bucketSummary(bn, nBuckets, lanes), bucketSummary(an, nBuckets, lanes))
+
+  /** The diff of the two sides' rows in the dirty buckets of the
+    * [[Lanes128]] summary, each side reduced by `dedup` after its prune.
+    * The dirty list (at most nBuckets longs, the size class of a
+    * broadcast-join build side) is collected to the driver by one eager
+    * summary job, and each side prunes with a codegen'd `In`/`InSet` filter
+    * before any shuffle of row data. Nothing is persisted, so a standing
+    * loop that never clears caches cannot leak them. */
+  private def prunedDiff(before: DataFrame, after: DataFrame, pk: Seq[String],
+      nBuckets: Int, dedup: DataFrame => DataFrame): DataFrame = {
+    val bn = Normalize.withKey(before, pk)
+    val an = Normalize.withKey(after, pk)
+    val dirty: Seq[Long] = merkleSummary(bn, an, nBuckets, Lanes128).select(col("bucket"))
+      .collect().map(_.getLong(0)).toIndexedSeq
+    def prune(df: DataFrame): DataFrame =
+      dedup(df.filter(bucketOf(col(Normalize.KeyCol), nBuckets).isInCollection(dirty)))
+    diffNormalized(prune(bn), prune(an))
   }
 
   /** [[diff]] restricted to the dirty buckets of [[merkleSummary]] — the
     * pruned repeat-diff. Lossless by construction: every changed key lands
     * in a bucket whose count or checksum disagrees, so the pruned result
-    * EQUALS the full diff (the oracle pins exactly that). The dirty-bucket
-    * list is tiny (≤ nBuckets rows), so it broadcasts and each side prunes
-    * with a broadcast semi-join before any shuffle of row data. The dirty
-    * frame is persisted so the summary aggregation runs once, not once per
-    * side — the harness (Verify/Bench) clears caches between queries; a
-    * standing loop should use [[diffOneWinnerPruned]], which caches
-    * nothing. */
+    * EQUALS the full diff (the oracle pins exactly that). */
   def merklePrunedDiff(before: DataFrame, after: DataFrame, pk: Seq[String],
-      nBuckets: Int): DataFrame = {
-    val bn = Normalize.withKey(before, pk)
-    val an = Normalize.withKey(after, pk)
-    val dirty = merkleDirty128(bn, an, nBuckets)
-      .select(col("bucket").as("__bkt")).transform(CacheScope.cached)
-    def prune(df: DataFrame): DataFrame =
-      df.withColumn("__bkt", bucketOf(col(Normalize.KeyCol), nBuckets))
-        .join(broadcast(dirty), Seq("__bkt"), "left_semi")
-        .drop("__bkt")
-    diffNormalized(prune(bn), prune(an))
-  }
+      nBuckets: Int): DataFrame =
+    prunedDiff(before, after, pk, nBuckets, identity)
+
+  /** [[diffOneWinner]] behind the same prune — the application loop's
+    * fast path for repeat diffs. Sound composition: every row's key
+    * columns are part of its content, so bucket-checksum equality means
+    * the bucket's full row multiset (and hence EVERY key's sub-multiset)
+    * is unchanged — those keys cannot produce one-winner diff rows. The
+    * dedup runs after the prune, so clean buckets skip the per-key
+    * aggregation too, not just the join. */
+  def diffOneWinnerPruned(before: DataFrame, after: DataFrame, pk: Seq[String],
+      nBuckets: Int): DataFrame =
+    prunedDiff(before, after, pk, nBuckets, oneRowPerKey)
 
   /** Per-key single-row reduction of a one-winner diff: status plus the
     * BEFORE/AFTER rows as nullable structs (null side ⇔ absent). */
@@ -496,35 +471,10 @@ object SnapshotDiff {
         col("__r.side").as("side")) ++ cols.map(c => col(s"__r.$c").as(c)): _*)
   }
 
-  /** [[diffOneWinner]] behind the Merkle prune — the application loop's
-    * fast path for repeat diffs. Sound composition: every row's key
-    * columns are part of its content, so bucket-checksum equality means
-    * the bucket's full row multiset (and hence EVERY key's sub-multiset)
-    * is unchanged — those keys cannot produce one-winner diff rows. The
-    * dedup runs after the prune, so clean buckets skip the per-key
-    * aggregation too, not just the join.
-    *
-    * Built for STANDING loops: the dirty-bucket list is materialized to
-    * the driver eagerly (≤ nBuckets longs — the same size class as a
-    * broadcast-join build side) and pruned with a codegen'd `InSet`
-    * filter, so nothing is ever persisted — a loop that never clears
-    * caches cannot leak them. Eagerness is deliberate here: the caller is
-    * an application ITERATION (already full of actions), not a
-    * lazily-registered query. */
-  def diffOneWinnerPruned(before: DataFrame, after: DataFrame, pk: Seq[String],
-      nBuckets: Int): DataFrame = {
-    val bn = Normalize.withKey(before, pk)
-    val an = Normalize.withKey(after, pk)
-    val dirty: Seq[Long] = merkleDirty128(bn, an, nBuckets)
-      .collect().map(_.getLong(0)).toIndexedSeq
-    def prune(df: DataFrame): DataFrame =
-      df.filter(bucketOf(col(Normalize.KeyCol), nBuckets).isInCollection(dirty))
-    diffNormalized(oneRowPerKey(prune(bn)), oneRowPerKey(prune(an)))
-  }
-
-  /** Fast report path: per-status distinct-key counts straight off the
-    * classification join — skips building, exploding and re-aggregating the
-    * stringified per-row output entirely. Distinct, not plain count: keys
+  /** Per-status distinct-key counts straight off the classification join —
+    * no per-row output is built, exploded or re-aggregated. The reference
+    * count that `FusedReportSpec` checks [[fusedReport]] against and
+    * `DerbyJdbcSpec` counts JDBC snapshots with. Distinct, not plain count: keys
     * need not be unique per snapshot (fixture lineitem has duplicate PKs,
     * and the separator-less key concat can collide — SURVEY §7.4.1/3). */
   def statusCounts(before: DataFrame, after: DataFrame, pk: Seq[String]): DataFrame =

@@ -165,9 +165,10 @@ object JdbcSnapshots {
 
   /** Catalog introspection: (table, pk columns) pairs, all on one
     * driver-side connection — the table list and each table's PK query
-    * return catalog-sized results, so no Spark job runs. The PK-less
-    * fallback (all columns as key, `dbutil.go:136-141`) is applied by the
-    * caller via `TableDef.keyless` once the snapshot's schema is known. */
+    * return catalog-sized results, so no Spark job runs. A PK-less table
+    * comes back with an empty key list; `DbDiffApp.jdbcTables` applies the
+    * all-columns fallback (`dbutil.go:136-141`) once the snapshot's schema
+    * is known. */
   def catalog(dialect: String, url: String, schema: String,
       props: Map[String, String] = Map.empty): Seq[(String, Seq[String])] =
     withConnection(url, props) { conn =>

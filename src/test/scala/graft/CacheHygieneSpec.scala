@@ -81,6 +81,24 @@ class CacheHygieneSpec extends SparkTestBase {
         left.values.map(r => s"${r.id}:${r.name}").mkString("; "))
   }
 
+  test("the merkle-pruned diffs register nothing: no cache entry, no persistent RDD") {
+    import graft.operators.{DiffQueries, SnapshotDiff}
+    CacheScope.releaseSession()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    spark.catalog.clearCache()
+    val t = Tables.lineitem
+    val built = Seq(
+      SparkEntry.queries("diff_merkle_pruned")(spark, Sf),
+      SnapshotDiff.diffOneWinnerPruned(Tables.load(spark, Sf, t.name),
+        DiffQueries.after(spark, Sf, t), t.pk, DiffQueries.MerkleBuckets))
+    built.foreach(_.write.format("noop").mode("overwrite").save())
+    // no releaseAll yet: whatever the builds registered is still here
+    assert(spark.sharedState.cacheManager.isEmpty, "a pruned diff cached a frame")
+    val standing = spark.sparkContext.getPersistentRDDs
+    assert(standing.isEmpty, "a pruned diff persisted RDDs: " +
+      standing.values.map(r => s"${r.id}:${r.name}").mkString("; "))
+  }
+
   test("survivor frame is computed once per session and shared by both consumers") {
     CacheScope.releaseSession()
     val first = graft.operators.DedupQueries.survivorFrame(spark, Sf)

@@ -36,6 +36,17 @@ class MerkleDiffSpec extends SparkTestBase {
       s"pruning should skip most buckets: $dirty dirty of $populated populated")
   }
 
+  test("both checksum profiles pick the same dirty buckets") {
+    val bn = Normalize.withKey(before, t.pk)
+    val an = Normalize.withKey(after, t.pk)
+    def buckets(lanes: SnapshotDiff.Lanes): Set[Long] =
+      SnapshotDiff.merkleSummary(bn, an, DiffQueries.MerkleBuckets, lanes)
+        .select("bucket").collect().map(_.getLong(0)).toSet
+    val oneLane = buckets(SnapshotDiff.Md5Lane)
+    assert(oneLane.nonEmpty)
+    assert(buckets(SnapshotDiff.Lanes128) == oneLane)
+  }
+
   test("summary of identical snapshots is empty") {
     val bn = Normalize.withKey(before, t.pk)
     assert(SnapshotDiff.merkleSummary(bn, bn, DiffQueries.MerkleBuckets).isEmpty)

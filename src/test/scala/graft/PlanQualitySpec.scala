@@ -162,14 +162,37 @@ class PlanQualitySpec extends SparkTestBase {
     assert(pruned.contains(1), s"expected 1 selected partition, got $pruned")
   }
 
-  test("merkle-pruned diff: dirty-bucket list broadcasts into semi joins") {
-    val p = SparkEntry.queries("diff_merkle_pruned")(spark, Sf)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("LeftSemi"), p.take(2000))
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
-      p.take(2000))
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-      p.take(2000))
+  test("merkle-pruned diff: each side filters its buckets before its Exchange") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, In, InSet, Pmod}
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val physical = SparkEntry.queries("diff_merkle_pruned")(spark, Sf).queryExecution.executedPlan
+    val p = physical.toString
+    val root = physical match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    def onBucket(e: Expression): Boolean = e.find(_.isInstanceOf[Pmod]).isDefined
+    def prunesBuckets(plan: SparkPlan): Boolean = plan match {
+      case f: FilterExec => f.condition.find {
+        case i: In => onBucket(i.value)
+        case i: InSet => onBucket(i.child)
+        case _ => false
+      }.isDefined
+      case _ => false
+    }
+    // the diff join's key exchanges, one per side; each side's rows are
+    // pruned to the dirty buckets before they shuffle
+    val exchanges = root.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 2, s"expected 2 Exchanges, got ${exchanges.size}\n" + p.take(2000))
+    exchanges.foreach { e =>
+      assert(e.child.find(prunesBuckets).isDefined,
+        "side shuffles unpruned rows:\n" + e.treeString.take(2000))
+    }
+    Seq("LeftSemi", "BroadcastNestedLoopJoin", "CartesianProduct").foreach { op =>
+      assert(!p.contains(op), s"$op in:\n" + p.take(2000))
+    }
   }
 
   test("incremental dedup and basket pairs: equi-joins only, no nested loop") {
@@ -480,7 +503,7 @@ class PlanQualitySpec extends SparkTestBase {
     val bn = graft.operators.Normalize.withKey(Tables.load(spark, Sf, t.name), t.pk)
     val an = graft.operators.Normalize.withKey(
       Tables.load(spark, Sf, t.name).withColumn("p_size", col("p_size") + 1), t.pk)
-    val d = SnapshotDiff.merkleDirty128(bn, an, 64)
+    val d = SnapshotDiff.merkleSummary(bn, an, 64, SnapshotDiff.Lanes128).select(col("bucket"))
     val p = d.queryExecution.executedPlan.toString
     // two xxhash64 lanes in the summary projection
     assert(p.contains("xxhash64"), p.take(1500))

@@ -120,38 +120,6 @@ class RelationalExtrasSpec extends SparkTestBase {
     assert(dupOpen == 0)
   }
 
-  test("scd2Chain: pairwise-consistent, and delete+reinsert yields two intervals") {
-    import graft.operators.{DiffQueries, SnapshotDiff}
-    val t = Tables.nation
-    val v0 = Tables.load(spark, Sf, t.name)
-    val v1 = DiffQueries.after(spark, Sf, t)
-    // two versions == the pairwise operator, row for row
-    val chain2 = SnapshotDiff.scd2Chain(Seq(v0, v1), t.pk)
-      .collect().map(_.toSeq).toSet
-    val pairSet = SnapshotDiff.scd2(v0, v1, t.pk)
-      .select(SnapshotDiff.scd2Chain(Seq(v0, v1), t.pk).columns.map(col): _*)
-      .collect().map(_.toSeq).toSet
-    assert(chain2 == pairSet && chain2.nonEmpty)
-    // three versions, last = the original again: keys DELETED by the
-    // mutation come back → exactly two intervals [0,1) and [2,NULL)
-    val hist = SnapshotDiff.scd2Chain(Seq(v0, v1, v0), t.pk).collect()
-      .map(r => (r.getString(0), r.getAs[Long]("valid_from"),
-        Option(r.getAs[java.lang.Long]("valid_to")).map(_.toLong)))
-    val byKey = hist.groupBy(_._1)
-    val reborn = byKey.filter { case (_, iv) =>
-      iv.map(v => (v._2, v._3)).toSet == Set((0L, Some(1L)), (2L, None))
-    }
-    assert(reborn.nonEmpty, byKey.toString)
-    // intervals per key never overlap
-    byKey.values.foreach { iv =>
-      val spans = iv.toSeq.map(v => (v._2, v._3.getOrElse(3L))).sortBy(_._1)
-      spans.sliding(2).foreach {
-        case Seq((_, e1), (s2, _)) => assert(e1 <= s2)
-        case _ =>
-      }
-    }
-  }
-
   test("q_window_range: band counts include value ties, single window exchange") {
     val df = SparkEntry.queries("q_window_range")(spark, Sf)
     val rows = df.as[(Long, String, Double, Long, Double)].collect()

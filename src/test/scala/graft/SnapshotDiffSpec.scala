@@ -151,4 +151,16 @@ class SnapshotDiffSpec extends SparkTestBase {
       assert(pruned == full, s"nBuckets=$nb")
     }
   }
+
+  test("both merkle checksum profiles pick the same dirty buckets on random pairs") {
+    val rnd = new scala.util.Random(13)
+    for (nb <- Seq(1, 4, 64); _ <- 0 until 2) {
+      val (bn, an) = (Normalize.withKey(df(randSnap(rnd)), Seq("id")),
+        Normalize.withKey(df(randSnap(rnd)), Seq("id")))
+      def buckets(lanes: SnapshotDiff.Lanes): Set[Long] =
+        SnapshotDiff.merkleSummary(bn, an, nb, lanes)
+          .select("bucket").collect().map(_.getLong(0)).toSet
+      assert(buckets(SnapshotDiff.Lanes128) == buckets(SnapshotDiff.Md5Lane), s"nBuckets=$nb")
+    }
+  }
 }
