@@ -168,13 +168,14 @@ object Bench {
     // queries round-5's ~2.1 kB compact line itself overflowed the
     // driver's 2,000-char tail window. The final line is therefore
     // queries-free (~80 chars) — whatever window survives, it parses
-    // whole; per-query detail lives in the longer lines above it.
+    // whole; per-query detail lives in the longer lines above it. The
+    // session stops first, so no shutdown log line follows the JSON.
+    CacheScope.releaseSession() // drop the standing-index tier at session end
+    spark.stop()
     val compact =
       s"""{"metric":"total","value":$total,"unit":"sec","timeouts":$timeouts,"sf":"$sfDir","health":$health,"queries":$qs}"""
     println(compact)
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"attempts":$att,"warm":$warm,"timeouts":$timeouts,"sf":"$sfDir","health":$health}""")
     println(s"""{"metric":"total","value":${num(total)},"unit":"sec","timeouts":$timeouts,"n_queries":${results.size}}""")
-    CacheScope.releaseSession() // drop the standing-index tier at session end
-    spark.stop()
   }
 }

@@ -28,7 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           classOf[QuantizedVec.QuantizedDot].getName, "qdot"),
         (args: Seq[Expression]) => {
           requireArity("qdot(arr, arr)", args, 2)
-          QuantizedVec.QuantizedDot(args.head, args(1), QuantizedVec.DefaultScale)
+          QuantizedVec.QuantizedDot(args.head, args(1))
         }))
     e.injectFunction(
       (org.apache.spark.sql.catalyst.FunctionIdentifier("qnormsq"),
@@ -36,7 +36,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           classOf[QuantizedVec.QuantizedNormSq].getName, "qnormsq"),
         (args: Seq[Expression]) => {
           requireArity("qnormsq(arr)", args, 1)
-          QuantizedVec.QuantizedNormSq(args.head, QuantizedVec.DefaultScale)
+          QuantizedVec.QuantizedNormSq(args.head)
         }))
     e.injectFunction(
       (org.apache.spark.sql.catalyst.FunctionIdentifier("zorder2"),

@@ -49,9 +49,7 @@ object RecallProbe {
         .select(col("vec_id").as("neighbor_id"), col("embedding").as("__eb"))
         .join(broadcast(probes), col("probe_id") =!= col("neighbor_id"))
         .select(col("probe_id"), col("neighbor_id"),
-          (graft.functions.QuantizedVec.qnormsq(col("__ea"))
-            - lit(2L) * graft.functions.QuantizedVec.qdot(col("__ea"), col("__eb"))
-            + graft.functions.QuantizedVec.qnormsq(col("__eb"))).as("l2"))
+          graft.functions.QuantizedVec.ql2(col("__ea"), col("__eb")).as("l2"))
       val w = Window.partitionBy(col("probe_id")).orderBy(col("l2"), col("neighbor_id"))
       d2.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= SimilarityQueries.TopK)

@@ -66,25 +66,12 @@ object HllSketch {
     override def nullable: Boolean = false
     override def prettyName: String = "hll_distinct"
 
-    @transient private lazy val md = java.security.MessageDigest.getInstance("MD5")
-
-    /** Top 60 bits of md5(bytes) — identical to [[KmvSketch]]'s hash and
-      * DuckDB's `CAST(concat('0x', substr(md5(x),1,15)) AS BIGINT)`. */
-    private def hash60(bytes: Array[Byte]): Long = {
-      md.reset()
-      val d = md.digest(bytes)
-      var be = 0L
-      var i = 0
-      while (i < 8) { be = (be << 8) | (d(i) & 0xffL); i += 1 }
-      be >>> 4
-    }
-
     override def createAggregationBuffer(): Array[Byte] = new Array[Byte](M)
 
     override def update(b: Array[Byte], input: InternalRow): Array[Byte] = {
       val v = child.eval(input)
       if (v != null) {
-        val h = hash60(v.asInstanceOf[UTF8String].getBytes)
+        val h = Hashing.hash60(v.asInstanceOf[UTF8String].getBytes)
         val bucket = (h >>> WBits).toInt                 // top 8 bits
         val w = h & ((1L << WBits) - 1)
         val rho =
@@ -139,7 +126,7 @@ object HllSketch {
     * empty buckets joined in from range(m), exact S/V, and the SAME
     * pinned double expression for the raw estimate. */
   def oracleSql(valueExpr: String, src: String): String = {
-    val hv = KmvSketch.hashSql(valueExpr)
+    val hv = Hashing.hash60Sql(valueExpr)
     s"""SELECT
        |  CAST(SUM(1::BIGINT << (53 - m)) AS BIGINT) AS s,
        |  CAST(SUM(CASE WHEN m = 0 THEN 1 ELSE 0 END) AS BIGINT) AS zero_regs,

@@ -55,19 +55,6 @@ object KmvSketch {
     override def nullable: Boolean = false
     override def prettyName: String = "kmv_distinct"
 
-    @transient private lazy val md = java.security.MessageDigest.getInstance("MD5")
-
-    /** Top 60 bits of md5(bytes) — equals the DuckDB-expressible
-      * `CAST(concat('0x', substr(md5(x),1,15)) AS BIGINT)`. */
-    private def hash60(bytes: Array[Byte]): Long = {
-      md.reset()
-      val d = md.digest(bytes)
-      var be = 0L
-      var i = 0
-      while (i < 8) { be = (be << 8) | (d(i) & 0xffL); i += 1 }
-      be >>> 4
-    }
-
     override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
       new java.util.TreeSet[java.lang.Long]()
 
@@ -80,7 +67,7 @@ object KmvSketch {
         : java.util.TreeSet[java.lang.Long] = {
       val v = child.eval(input)
       if (v != null) {
-        val h = hash60(v.asInstanceOf[UTF8String].getBytes)
+        val h = Hashing.hash60(v.asInstanceOf[UTF8String].getBytes)
         // only insert when it can make the k-smallest set
         if (b.size < k || h < b.last()) { b.add(h); trim(b) }
       }
@@ -130,8 +117,4 @@ object KmvSketch {
     * oracle's `md5(CAST(x AS VARCHAR))`. */
   def kmvDistinct(c: Column, k: Int): Column =
     ColumnShim.column(KmvDistinct(ColumnShim.expression(c), k).toAggregateExpression())
-
-  /** DuckDB oracle SQL fragment for the same hash (60-bit md5 prefix). */
-  def hashSql(e: String): String =
-    s"CAST(concat('0x', substr(md5($e),1,15)) AS BIGINT)"
 }

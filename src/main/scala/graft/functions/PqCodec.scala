@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import graft.functions.QuantizedVec.{elem, elemType, isFloat, quantize, quantizeCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -22,113 +23,108 @@ import org.apache.spark.sql.types._
   *
   * Bit-equivalence with the relational formulation (which the DuckDB
   * oracle still replays): quantization is the identical
-  * `floor(x·scale + 0.5)`, distances are exact long arithmetic, the
+  * [[QuantizedVec.quantize]], distances are exact long arithmetic, the
   * argmin keeps the LOWEST codeword id on ties (`<`, not `<=` — matching
   * `min(struct(dist2, c))`), and dimensions beyond the array's length are
   * skipped exactly as the component join's inner semantics skip them.
   */
 object PqCodec {
 
-  private def quantize(x: Double, scale: Double): Long =
-    math.floor(x * scale + 0.5).toLong
-
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
-  private def elemAsDouble(a: ArrayData, et: DataType, i: Int): Double = et match {
-    case FloatType => a.getFloat(i).toDouble
-    case DoubleType => a.getDouble(i)
-    case _ => throw new IllegalArgumentException(s"unsupported element type $et")
-  }
-
-  /** argmin codes per subspace: array<long> of length PqM = codebook.length.
-    * `codebook(m)(c)(j)` is the already-quantized codeword component. */
-  case class PqEncode(child: Expression, codebook: Array[Array[Array[Long]]],
-      scale: Double) extends UnaryExpression {
+  /** A codec kernel: one embedding child, a codebook with
+    * `codebook(m)(c)(j)` the already-quantized component j of codeword c in
+    * subspace m, and an `array<long>` result. */
+  sealed trait CodebookExpr extends UnaryExpression {
+    def codebook: Array[Array[Array[Long]]]
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
     // The synthesized case-class equals compares the array field by
-    // REFERENCE, so two structurally identical encodes never compare
+    // REFERENCE, so two structurally identical kernels never compare
     // equal — defeating Catalyst common-subexpression elimination /
     // canonicalization. Compare the codebook by value.
     override def equals(other: Any): Boolean = other match {
-      case PqEncode(c, cb, s) => c == child && s == scale &&
+      case o: CodebookExpr => o.getClass == getClass && o.child == child &&
         java.util.Arrays.deepEquals(
-          cb.asInstanceOf[Array[AnyRef]], codebook.asInstanceOf[Array[AnyRef]])
+          o.codebook.asInstanceOf[Array[AnyRef]], codebook.asInstanceOf[Array[AnyRef]])
       case _ => false
     }
-    override def hashCode(): Int = 31 * (31 * child.hashCode +
-      java.util.Arrays.deepHashCode(codebook.asInstanceOf[Array[AnyRef]])) + scale.##
+    override def hashCode(): Int = 31 * child.hashCode +
+      java.util.Arrays.deepHashCode(codebook.asInstanceOf[Array[AnyRef]])
 
-    override def nullSafeEval(v: Any): Any = {
-      val a = v.asInstanceOf[ArrayData]
-      val et = elemType(child)
-      val n = a.numElements()
-      val pqm = codebook.length
-      val codes = new Array[Long](pqm)
-      var m = 0
-      while (m < pqm) {
-        val sub = codebook(m)(0).length
-        var best = Long.MaxValue
-        var bc = 0L
-        var c = 0
-        while (c < codebook(m).length) {
-          var s = 0L
-          var j = 0
-          while (j < sub) {
-            val idx = m * sub + j
-            if (idx < n) {
-              val diff = quantize(elemAsDouble(a, et, idx), scale) - codebook(m)(c)(j)
-              s += diff * diff
-            }
-            j += 1
-          }
-          if (s < best) { best = s; bc = c.toLong }
-          c += 1
+    /** Quantized squared L2 between subvector m of `a` and codeword c;
+      * dimensions past the array's length are skipped. */
+    protected def dist2(a: ArrayData, fl: Boolean, m: Int, c: Int): Long = {
+      val cw = codebook(m)(c)
+      var s = 0L
+      var j = 0
+      while (j < cw.length) {
+        val idx = m * cw.length + j
+        if (idx < a.numElements()) {
+          val diff = quantize(elem(a, fl, idx)) - cw(j)
+          s += diff * diff
         }
-        codes(m) = bc
-        m += 1
+        j += 1
       }
-      new GenericArrayData(codes)
+      s
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    /** Generated twin of [[dist2]] inside the (m, c) loops. The kernel's
+      * Java fragments, given the codebook, m, c and the distance `s`: before
+      * the loops, at the head of subspace m, after each distance, at the
+      * end of subspace m, and the result array. */
+    protected def genLoops(ctx: CodegenContext, ev: ExprCode)(
+        parts: (String, String, String, String) => (String, String, String, String, String))
+        : ExprCode =
       nullSafeCodeGen(ctx, ev, arr => {
         val cb = ctx.addReferenceObj("pqcb", codebook, "long[][][]")
-        val i = ctx.freshName("i")
+        val Seq(i, m, c, j, s, sub, n) = Seq("i", "m", "c", "j", "s", "sub", "n").map(ctx.freshName)
         val get = CodeGenerator.getValue(arr, elemType(child), i)
-        val codes = ctx.freshName("codes")
-        val m = ctx.freshName("m")
-        val c = ctx.freshName("c")
-        val j = ctx.freshName("j")
-        val s = ctx.freshName("s")
-        val best = ctx.freshName("best")
-        val bc = ctx.freshName("bc")
-        val sub = ctx.freshName("sub")
-        val n = ctx.freshName("n")
+        val (before, openM, onDist, closeM, result) = parts(cb, m, c, s)
         s"""
            |int $n = $arr.numElements();
-           |long[] $codes = new long[$cb.length];
+           |$before
            |for (int $m = 0; $m < $cb.length; $m++) {
            |  int $sub = $cb[$m][0].length;
-           |  long $best = Long.MAX_VALUE; long $bc = 0L;
+           |  $openM
            |  for (int $c = 0; $c < $cb[$m].length; $c++) {
            |    long $s = 0L;
            |    for (int $j = 0; $j < $sub; $j++) {
            |      int $i = $m * $sub + $j;
            |      if ($i < $n) {
-           |        long __q = (long) java.lang.Math.floor(((double) $get) * $scale + 0.5);
-           |        long __df = __q - $cb[$m][$c][$j];
+           |        long __df = ${quantizeCode(get)} - $cb[$m][$c][$j];
            |        $s += __df * __df;
            |      }
            |    }
-           |    if ($s < $best) { $best = $s; $bc = (long) $c; }
+           |    $onDist
            |  }
-           |  $codes[$m] = $bc;
+           |  $closeM
            |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
+           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($result);
          """.stripMargin
       })
+  }
+
+  /** argmin codes per subspace: array<long> of length PqM = codebook.length,
+    * the lowest codeword id on ties. The generated code keeps the running
+    * argmin in two locals: no per-row distance table. */
+  case class PqEncode(child: Expression, codebook: Array[Array[Array[Long]]])
+      extends CodebookExpr {
+    override def nullSafeEval(v: Any): Any = {
+      val a = v.asInstanceOf[ArrayData]
+      val fl = isFloat(child)
+      new GenericArrayData(Array.tabulate(codebook.length) { m =>
+        codebook(m).indices.minBy(dist2(a, fl, m, _)).toLong // first of ties
+      })
+    }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val Seq(codes, best, bc) = Seq("codes", "best", "bc").map(ctx.freshName)
+      genLoops(ctx, ev)((cb, m, c, s) => (
+        s"long[] $codes = new long[$cb.length];",
+        s"long $best = Long.MAX_VALUE; long $bc = 0L;",
+        s"if ($s < $best) { $best = $s; $bc = (long) $c; }",
+        s"$codes[$m] = $bc;",
+        codes))
+    }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -137,85 +133,24 @@ object PqCodec {
   /** Full ADC lookup table for a PROBE vector: array<long> of length
     * PqM × pqk, entry m·pqk + c = quantized L2 between the probe's m-th
     * subvector and codeword c. Runs only on the ~200-row probe batch. */
-  case class PqDistTable(child: Expression, codebook: Array[Array[Array[Long]]],
-      scale: Double) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-    // Value equality over the array field — see [[PqEncode.equals]].
-    override def equals(other: Any): Boolean = other match {
-      case PqDistTable(c, cb, s) => c == child && s == scale &&
-        java.util.Arrays.deepEquals(
-          cb.asInstanceOf[Array[AnyRef]], codebook.asInstanceOf[Array[AnyRef]])
-      case _ => false
-    }
-    override def hashCode(): Int = 31 * (31 * child.hashCode +
-      java.util.Arrays.deepHashCode(codebook.asInstanceOf[Array[AnyRef]])) + scale.##
-
+  case class PqDistTable(child: Expression, codebook: Array[Array[Array[Long]]])
+      extends CodebookExpr {
     override def nullSafeEval(v: Any): Any = {
       val a = v.asInstanceOf[ArrayData]
-      val et = elemType(child)
-      val n = a.numElements()
-      val pqm = codebook.length
-      val pqk = codebook(0).length
-      val out = new Array[Long](pqm * pqk)
-      var m = 0
-      while (m < pqm) {
-        val sub = codebook(m)(0).length
-        var c = 0
-        while (c < pqk) {
-          var s = 0L
-          var j = 0
-          while (j < sub) {
-            val idx = m * sub + j
-            if (idx < n) {
-              val diff = quantize(elemAsDouble(a, et, idx), scale) - codebook(m)(c)(j)
-              s += diff * diff
-            }
-            j += 1
-          }
-          out(m * pqk + c) = s
-          c += 1
-        }
-        m += 1
-      }
-      new GenericArrayData(out)
+      val fl = isFloat(child)
+      new GenericArrayData(for (m <- codebook.indices.toArray;
+        c <- codebook(m).indices) yield dist2(a, fl, m, c))
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, arr => {
-        val cb = ctx.addReferenceObj("pqcb", codebook, "long[][][]")
-        val i = ctx.freshName("i")
-        val get = CodeGenerator.getValue(arr, elemType(child), i)
-        val out = ctx.freshName("out")
-        val m = ctx.freshName("m")
-        val c = ctx.freshName("c")
-        val j = ctx.freshName("j")
-        val s = ctx.freshName("s")
-        val sub = ctx.freshName("sub")
-        val n = ctx.freshName("n")
-        val pqk = ctx.freshName("pqk")
-        s"""
-           |int $n = $arr.numElements();
-           |int $pqk = $cb[0].length;
-           |long[] $out = new long[$cb.length * $pqk];
-           |for (int $m = 0; $m < $cb.length; $m++) {
-           |  int $sub = $cb[$m][0].length;
-           |  for (int $c = 0; $c < $pqk; $c++) {
-           |    long $s = 0L;
-           |    for (int $j = 0; $j < $sub; $j++) {
-           |      int $i = $m * $sub + $j;
-           |      if ($i < $n) {
-           |        long __q = (long) java.lang.Math.floor(((double) $get) * $scale + 0.5);
-           |        long __df = __q - $cb[$m][$c][$j];
-           |        $s += __df * __df;
-           |      }
-           |    }
-           |    $out[$m * $pqk + $c] = $s;
-           |  }
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
-      })
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val Seq(out, pqk) = Seq("out", "pqk").map(ctx.freshName)
+      genLoops(ctx, ev)((cb, m, c, s) => (
+        s"int $pqk = $cb[0].length; long[] $out = new long[$cb.length * $pqk];",
+        "",
+        s"$out[$m * $pqk + $c] = $s;",
+        "",
+        out))
+    }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -223,11 +158,9 @@ object PqCodec {
 
   import org.apache.spark.sql.graftshim.ColumnShim
 
-  def pqEncode(emb: Column, codebook: Array[Array[Array[Long]]],
-      scale: Double = QuantizedVec.DefaultScale): Column =
-    ColumnShim.column(PqEncode(ColumnShim.expression(emb), codebook, scale))
+  def pqEncode(emb: Column, codebook: Array[Array[Array[Long]]]): Column =
+    ColumnShim.column(PqEncode(ColumnShim.expression(emb), codebook))
 
-  def pqDistTable(emb: Column, codebook: Array[Array[Array[Long]]],
-      scale: Double = QuantizedVec.DefaultScale): Column =
-    ColumnShim.column(PqDistTable(ColumnShim.expression(emb), codebook, scale))
+  def pqDistTable(emb: Column, codebook: Array[Array[Array[Long]]]): Column =
+    ColumnShim.column(PqDistTable(ColumnShim.expression(emb), codebook))
 }

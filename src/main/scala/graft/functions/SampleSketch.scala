@@ -80,19 +80,6 @@ object SampleSketch {
     override def nullable: Boolean = false
     override def prettyName: String = "bottomk_sample"
 
-    @transient private lazy val md = java.security.MessageDigest.getInstance("MD5")
-
-    /** Top 60 bits of md5(bytes) — same rendering as
-      * [[KmvSketch.hashSql]]: `CAST(concat('0x', substr(md5(x),1,15)) AS BIGINT)`. */
-    private def hash60(bytes: Array[Byte]): Long = {
-      md.reset()
-      val d = md.digest(bytes)
-      var be = 0L
-      var i = 0
-      while (i < 8) { be = (be << 8) | (d(i) & 0xffL); i += 1 }
-      be >>> 4
-    }
-
     override def createAggregationBuffer(): java.util.TreeSet[Pair] =
       new java.util.TreeSet[Pair](PairOrder)
 
@@ -106,7 +93,7 @@ object SampleSketch {
       val v = left.eval(input)
       val id = right.eval(input)
       if (v != null && id != null) {
-        val p = (hash60(id.asInstanceOf[UTF8String].getBytes),
+        val p = (Hashing.hash60(id.asInstanceOf[UTF8String].getBytes),
           v.asInstanceOf[java.lang.Double].doubleValue())
         // only insert when it can make the bottom-k set
         if (b.size < k || PairOrder.compare(p, b.last()) < 0) { b.add(p); trim(b) }

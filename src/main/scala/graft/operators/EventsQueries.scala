@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.CacheScope
 import graft.Tables
+import graft.functions.QuantizedVec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -709,10 +710,10 @@ object EventsQueries {
     // per-(type, hour-of-day) mean over a training window becomes the
     // forecast for a held-out test window, and the report is the exact
     // integer MAE of that forecast. Values quantize to micro-units
-    // (floor(v·1e6 + 0.5), the QuantizedVec convention) so means (floor
-    // division) and absolute errors are engine-exact; the train/test cut
-    // derives from MAX(day) lazily (broadcast scalar frame, no driver
-    // action). One aggregation per side + a broadcast-sized baseline join.
+    // ([[QuantizedVec.quantized]]) so means (floor division) and absolute
+    // errors are engine-exact; the train/test cut derives from MAX(day)
+    // lazily (broadcast scalar frame, no driver action). One aggregation
+    // per side + a broadcast-sized baseline join.
     "events_seasonal_forecast" -> ((spark, sfDir) => {
       val ev = seasonalBucketed(Tables.load(spark, sfDir, "events"))
         .select(col("event_type"), col("day"), col("hod"), col("q"))
@@ -740,7 +741,7 @@ object EventsQueries {
     col("*"),
     expr("CAST(datediff(ts, DATE'2024-01-01') AS BIGINT)").as("day"),
     expr("(unix_micros(ts) div 3600000000) % 24").as("hod"),
-    expr("CAST(floor(value * 1000000 + 0.5) AS BIGINT)").as("q"))
+    QuantizedVec.quantized(col("value")).as("q"))
 
   private val sessionizeSql: String =
     s"""SELECT *, CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.Hashing
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -138,7 +139,7 @@ object Multimodal {
     * PCM byte-rate consistency, then derive sample count and duration from
     * the parsed fields with integer (floor) arithmetic — the oracle
     * reproduces both with `//` floor division and never sees the binary. */
-  def decodeWav(md: java.security.MessageDigest, id: Long, bytes: Array[Byte]): AudioFeature = {
+  def decodeWav(id: Long, bytes: Array[Byte]): AudioFeature = {
     require(bytes.length >= 44, s"payload too short for WAV: ${bytes.length}")
     require(new String(bytes, 0, 4, "US-ASCII") == "RIFF" &&
       new String(bytes, 8, 4, "US-ASCII") == "WAVE", "WAV: bad RIFF/WAVE tags")
@@ -156,11 +157,8 @@ object Multimodal {
     require(dataLen == bytes.length - 44, "WAV: data length mismatch")
     val nSamples = dataLen.toLong / blockAlign
     val durationMs = nSamples * 1000L / rate
-    md.reset()
-    md.update(bytes, 44, dataLen)
-    val hex = md.digest().map("%02x".format(_)).mkString
     AudioFeature(id, rate.toLong, channels.toLong, bits.toLong, nSamples, durationMs,
-      bytes.length.toLong, hex)
+      bytes.length.toLong, Hashing.md5Hex(bytes, 44, dataLen))
   }
 
   /** Audio synthesis + decode pipeline twin of [[synthesizeMedia]] /
@@ -169,12 +167,9 @@ object Multimodal {
     import spark.implicits._
     docs.select(col("doc_id"), col("text").cast("binary").as("content"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, content) =>
-          decodeWav(md, id, wavBytes(rateOf(id), channelsOf(id), content))
-        }
-      }
+      .mapPartitions(_.map { case (id, content) =>
+        decodeWav(id, wavBytes(rateOf(id), channelsOf(id), content))
+      })
   }
 
   // ---- video: ISO-BMFF / MP4 (ftyp + moov[mvhd, trak[tkhd]] + mdat) ----
@@ -233,7 +228,7 @@ object Multimodal {
     * is validated — a mis-walked offset fails loudly rather than reading
     * garbage, and the oracle hash-gate would catch any silent skew because
     * it predicts every field from doc_id alone. */
-  def decodeMp4(md: java.security.MessageDigest, id: Long, bytes: Array[Byte]): VideoFeature = {
+  def decodeMp4(id: Long, bytes: Array[Byte]): VideoFeature = {
     var brand: String = null
     var timescale = -1L; var durTicks = -1L
     var width = -1L; var height = -1L
@@ -275,11 +270,8 @@ object Multimodal {
     }
     require(brand != null && timescale > 0 && durTicks >= 0 && width >= 0 && mdatOff >= 0,
       "MP4: missing required box")
-    md.reset()
-    md.update(bytes, mdatOff, mdatLen)
-    val hex = md.digest().map("%02x".format(_)).mkString
     VideoFeature(id, brand, timescale, durTicks, durTicks * 1000L / timescale,
-      width, height, bytes.length.toLong, hex)
+      width, height, bytes.length.toLong, Hashing.md5Hex(bytes, mdatOff, mdatLen))
   }
 
   /** Video synthesis + decode pipeline twin of [[audioFeatures]]: same
@@ -288,13 +280,10 @@ object Multimodal {
     import spark.implicits._
     docs.select(col("doc_id"), col("text").cast("binary").as("content"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, content) =>
-          decodeMp4(md, id, mp4Bytes(vTimescaleOf(id), vDurTicksOf(id),
-            vWidthOf(id), vHeightOf(id), content))
-        }
-      }
+      .mapPartitions(_.map { case (id, content) =>
+        decodeMp4(id, mp4Bytes(vTimescaleOf(id), vDurTicksOf(id),
+          vWidthOf(id), vHeightOf(id), content))
+      })
   }
 
   /** Container parse shared by [[decodeMedia]] and [[phashes]]: sniff the
@@ -346,12 +335,10 @@ object Multimodal {
     * magic and BITMAPINFOHEADER size then reads little-endian dims; JPEG
     * walks the marker segments to SOF). The fingerprint is an md5 of the
     * content region (the bytes after the container header). */
-  def decodeMedia(md: java.security.MessageDigest, id: Long, bytes: Array[Byte]): MediaFeature = {
+  def decodeMedia(id: Long, bytes: Array[Byte]): MediaFeature = {
     val (format, w, h, contentOff) = parseContainer(bytes)
-    md.reset()
-    md.update(bytes, contentOff, bytes.length - contentOff)
-    val hex = md.digest().map("%02x".format(_)).mkString
-    MediaFeature(id, format, bytes.length.toLong, w.toLong, h.toLong, hex)
+    MediaFeature(id, format, bytes.length.toLong, w.toLong, h.toLong,
+      Hashing.md5Hex(bytes, contentOff, bytes.length - contentOff))
   }
 
   /** The decode pipeline: binary payload column → per-partition decoder →
@@ -362,11 +349,7 @@ object Multimodal {
     payloads
       .select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition init: stands in for opening a codec/model handle
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, bytes) => decodeMedia(md, id, bytes) }
-      }
+      .mapPartitions(_.map { case (id, bytes) => decodeMedia(id, bytes) })
   }
 
   /** dHash perceptual signature over the decoded content region: sample an
@@ -481,20 +464,15 @@ object Multimodal {
     import spark.implicits._
     docs.select(col("doc_id"), col("text").cast("binary").as("content"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, content) =>
-          val bytes = mp4Bytes(vTimescaleOf(id), vDurTicksOf(id),
-            vWidthOf(id), vHeightOf(id), content)
-          val (mo, ml) = mdatRegion(bytes)
-          (0 until ml / FrameChunk).map { k =>
-            md.reset()
-            md.update(bytes, mo + k * FrameChunk, FrameChunk)
-            FrameHash(id, k.toLong,
-              md.digest().map("%02x".format(_)).mkString.substring(0, 15))
-          }
+      .mapPartitions(_.flatMap { case (id, content) =>
+        val bytes = mp4Bytes(vTimescaleOf(id), vDurTicksOf(id),
+          vWidthOf(id), vHeightOf(id), content)
+        val (mo, ml) = mdatRegion(bytes)
+        (0 until ml / FrameChunk).map { k =>
+          FrameHash(id, k.toLong,
+            Hashing.md5Hex(bytes, mo + k * FrameChunk, FrameChunk).substring(0, 15))
         }
-      }
+      })
   }
 
   val queries: Map[String, Q] = Map(

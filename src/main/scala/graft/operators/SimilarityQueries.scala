@@ -234,15 +234,11 @@ object SimilarityQueries {
     * are identical. `nPlanes` > [[NumPlanes]] extends the SAME sequence
     * (plane p is identical at every width), so the banded rung's first
     * band reuses exactly the single-band signature planes. */
-  def planeRowsN(nPlanes: Int): Seq[(Int, Int, Int)] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+  def planeRowsN(nPlanes: Int): Seq[(Int, Int, Int)] =
     for (p <- 0 until nPlanes; d <- 0 until Dim) yield {
-      md.reset()
-      val hex = md.digest(s"plane:$p:$d".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val h = java.lang.Long.parseLong(hex.take(15), 16)
+      val h = Hashing.hash60(s"plane:$p:$d".getBytes("UTF-8"))
       (p, d, if (h % 2 == 1) 1 else -1)
     }
-  }
 
   /** Bands for the scale rung of `ann_lsh_near_dup`: 6 independent 16-bit
     * signature bands (96 planes). The single 16-bit band measured 0.4525
@@ -302,15 +298,11 @@ object SimilarityQueries {
     emb.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
       col("nsq").as("p_nsq"))
 
-  /** floor(x · scale + 0.5) as BIGINT, the oracle's own quantization. */
-  private def quantized(x: Column): Column =
-    floor(x.cast("double") * QuantizedVec.DefaultScale + 0.5).cast("long")
-
   /** Quantized per-dimension components: the `keys` columns, `d`, and the
     * quantized component named `q`. */
   private def components(df: DataFrame, keys: Seq[String], q: String): DataFrame =
     df.select(keys.map(col) :+ posexplode(col("embedding")).as(Seq("d", "v")): _*)
-      .select(keys.map(col) ++ Seq(col("d"), quantized(col("v")).as(q)): _*)
+      .select(keys.map(col) ++ Seq(col("d"), QuantizedVec.quantized(col("v")).as(q)): _*)
 
   /** Floor of a BIGINT column's group mean (exact while sums stay < 2^53,
     * so the IEEE double division is correctly rounded in both engines). */
@@ -690,7 +682,7 @@ object SimilarityQueries {
     * whole family's dominant stage), where the same arithmetic is
     * PqM × pqk × (Dim/PqM) primitive long ops per row inside whole-stage
     * codegen. Bit-equivalence with the relational chain the DuckDB oracle
-    * replays: identical floor(x·scale+0.5) quantization, exact long
+    * replays: identical [[QuantizedVec.quantize]] quantization, exact long
     * distances, argmin ties to the LOWEST codeword id exactly like
     * `min(struct(dist2, c))`. The full per-(vector, m, c) distance frame
     * no longer exists — both consumers only ever used it filtered to the
@@ -755,9 +747,7 @@ object SimilarityQueries {
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("__eb"))
       .join(broadcast(withProbeVec), "neighbor_id")
       .select(col("probe_id"), col("neighbor_id"),
-        (QuantizedVec.qnormsq(col("__ea"))
-          - lit(2L) * QuantizedVec.qdot(col("__ea"), col("__eb"))
-          + QuantizedVec.qnormsq(col("__eb"))).as("l2"))
+        QuantizedVec.ql2(col("__ea"), col("__eb")).as("l2"))
     topPer(exact, "probe_id", TopK, "rank", keepRank = true)(col("l2"), col("neighbor_id"))
   }
 
@@ -1205,7 +1195,7 @@ object SimilarityQueries {
       Tables.load(spark, sfDir, "embeddings")
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
         .select(col("label"), col("pos").cast("long").as("pos"),
-          expr("CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)").as("q"))
+          QuantizedVec.quantized(col("x")).as("q"))
         .groupBy(col("label"), col("pos"))
         .agg(count(lit(1)).as("n"), sum(col("q")).as("sum_q"))
         .withColumn("centroid_q",
@@ -1652,10 +1642,10 @@ object SimilarityQueries {
 
   val oracleSql: Map[String, String] = oracleSqlTail ++ Map(
     "ann_label_centroids" ->
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT label, unnest(list_transform(range(len(embedding)),
         |    i -> {'pos': i,
-        |          'q': CAST(floor(CAST(embedding[i+1] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)}
+        |          'q': ${QuantizedVec.quantizeSql("CAST(embedding[i+1] AS DOUBLE)")}}
         |    )) AS s
         |  FROM embeddings)
         |SELECT label, s.pos AS pos, COUNT(*) AS n,

@@ -213,10 +213,12 @@ object SketchQueries {
       .groupBy(col("e.row_j").as("row_j"), col("e.bucket").as("bucket"))
       .agg(count(lit(1)).as("c"))
 
-  /** Pairwise KMV Jaccard estimates between the `source` groups of a
-    * (source, text) frame — see the `sketch_kmv_jaccard` entry for the
-    * closure-property design. */
-  def kmvSourceJaccard(docs: DataFrame): DataFrame = {
+  /** The KMV sketches both source-pair queries read, from a (source, text)
+    * frame: `kmin` holds each source's [[SetK]] smallest distinct token
+    * hashes (source, hv); `pairs` holds, per source pair (source_a <
+    * source_b), the union sketch's size `k_used`, the count `n_both` of its
+    * hashes in both sources' sketches, and its kept-max hash `mx_u`. */
+  private def kmvPairSketches(docs: DataFrame): (DataFrame, DataFrame) = {
     val tok = docs
       .select(col("source"), explode(Hashing.tokens(col("text"))).as("token"))
       .select(col("source"), Hashing.hashHex(col("token")).as("hv"))
@@ -234,16 +236,24 @@ object SketchQueries {
       .union(srcPairs.join(b, "source_b").select(col("source_a"), col("source_b"), col("hv")))
       .distinct()
     val wp = Window.partitionBy(col("source_a"), col("source_b")).orderBy(col("hv"))
-    uni.withColumn("__rn", row_number().over(wp)).filter(col("__rn") <= SetK)
+    val pairs = uni.withColumn("__rn", row_number().over(wp)).filter(col("__rn") <= SetK)
       .join(a.withColumn("in_a", lit(1L)), Seq("source_a", "hv"), "left")
       .join(b.withColumn("in_b", lit(1L)), Seq("source_b", "hv"), "left")
       .groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("k_used"),
         sum(when(col("in_a").isNotNull && col("in_b").isNotNull, 1L).otherwise(0L))
-          .as("n_both"))
+          .as("n_both"),
+        max(col("hv")).as("mx_u"))
+    (kmin, pairs)
+  }
+
+  /** Pairwise KMV Jaccard estimates between the `source` groups of a
+    * (source, text) frame — see the `sketch_kmv_jaccard` entry for the
+    * closure-property design. */
+  def kmvSourceJaccard(docs: DataFrame): DataFrame =
+    kmvPairSketches(docs)._2
       .select(col("source_a"), col("source_b"), col("k_used"), col("n_both"),
         (col("n_both").cast("double") / col("k_used")).as("jaccard_est"))
-  }
 
   /** KMV cardinality estimate in milli-units from a sketch's row count `n`
     * and kept-max hash `mx` (15-hex-digit md5 prefix): exact `n·1000` while
@@ -267,34 +277,11 @@ object SketchQueries {
     * the workflow that answers "how much does corpus A overlap corpus B"
     * without ever joining the corpora. */
   def kmvSourceSetops(docs: DataFrame): DataFrame = {
-    val tok = docs
-      .select(col("source"), explode(Hashing.tokens(col("text"))).as("token"))
-      .select(col("source"), Hashing.hashHex(col("token")).as("hv"))
-      .distinct()
-    val w = Window.partitionBy(col("source")).orderBy(col("hv"))
-    val kmin = tok.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= SetK)
-      .select(col("source"), col("hv")).transform(CacheScope.cached)
+    val (kmin, pairs) = kmvPairSketches(docs)
     val per = kmin.groupBy(col("source"))
       .agg(count(lit(1)).as("n_s"), max(col("hv")).as("mx_s"))
       .select(col("source"), kmvMillisFromMax(col("n_s"), col("mx_s")).as("millis_s"))
-    val a = kmin.select(col("source").as("source_a"), col("hv"))
-    val b = kmin.select(col("source").as("source_b"), col("hv"))
-    val srcPairs = a.select(col("source_a")).distinct()
-      .crossJoin(broadcast(b.select(col("source_b")).distinct()))
-      .filter(col("source_a") < col("source_b"))
-    val uni = srcPairs.join(a, "source_a").select(col("source_a"), col("source_b"), col("hv"))
-      .union(srcPairs.join(b, "source_b").select(col("source_a"), col("source_b"), col("hv")))
-      .distinct()
-    val wp = Window.partitionBy(col("source_a"), col("source_b")).orderBy(col("hv"))
-    uni.withColumn("__rn", row_number().over(wp)).filter(col("__rn") <= SetK)
-      .join(a.withColumn("in_a", lit(1L)), Seq("source_a", "hv"), "left")
-      .join(b.withColumn("in_b", lit(1L)), Seq("source_b", "hv"), "left")
-      .groupBy(col("source_a"), col("source_b"))
-      .agg(count(lit(1)).as("k_used"),
-        sum(when(col("in_a").isNotNull && col("in_b").isNotNull, 1L).otherwise(0L))
-          .as("n_both"),
-        max(col("hv")).as("mx_u"))
+    pairs
       .withColumn("union_millis", kmvMillisFromMax(col("k_used"), col("mx_u")))
       .join(broadcast(per.select(col("source").as("source_a"),
         col("millis_s").as("__am"))), "source_a")
@@ -308,8 +295,8 @@ object SketchQueries {
         greatest(col("union_millis") - col("__am"), lit(0L)).as("only_b_millis"))
   }
 
-  private val hv = KmvSketch.hashSql("CAST(l_orderkey AS VARCHAR)")
-  private val hvCust = KmvSketch.hashSql("CAST(o_custkey AS VARCHAR)")
+  private val hv = Hashing.hash60Sql("CAST(l_orderkey AS VARCHAR)")
+  private val hvCust = Hashing.hash60Sql("CAST(o_custkey AS VARCHAR)")
 
   /** HLL register rho for a DuckDB BIGINT hash column named `hv`:
     * 53 − bitlength of the 52-bit tail (53 for a zero tail), via
@@ -343,7 +330,7 @@ object SketchQueries {
     "sketch_hll_sources" ->
       s"""WITH tok AS (
          |  SELECT source, unnest(${Hashing.tokensSql("text")}) AS token FROM documents),
-         |hh AS (SELECT source, ${KmvSketch.hashSql("token")} AS hv FROM tok),
+         |hh AS (SELECT source, ${Hashing.hash60Sql("token")} AS hv FROM tok),
          |mr AS (SELECT source, hv >> 52 AS bucket, MAX($rhoSql) AS m
          |       FROM hh GROUP BY 1, 2),
          |grid AS (
@@ -422,7 +409,7 @@ object SketchQueries {
           s"/ CAST($s AS DOUBLE) * 1000 + 0.5) AS BIGINT)"
       s"""WITH tok AS (
          |  SELECT source, unnest(${Hashing.tokensSql("text")}) AS token FROM documents),
-         |hh AS (SELECT source, token, ${KmvSketch.hashSql("token")} AS hv FROM tok),
+         |hh AS (SELECT source, token, ${Hashing.hash60Sql("token")} AS hv FROM tok),
          |mr AS (SELECT source, hv >> 52 AS bucket, MAX($rhoSql) AS m
          |       FROM hh GROUP BY 1, 2),
          |mm AS (SELECT bucket, MAX(m) AS m FROM mr GROUP BY bucket),
@@ -517,7 +504,7 @@ object SketchQueries {
     "sketch_sample_quantiles" ->
       s"""WITH h AS (
          |  SELECT event_type, value,
-         |         ${KmvSketch.hashSql("CAST(event_id AS VARCHAR)")} AS hv
+         |         ${Hashing.hash60Sql("CAST(event_id AS VARCHAR)")} AS hv
          |  FROM events),
          |d AS (SELECT DISTINCT event_type, hv, value FROM h),
          |r AS (

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.CacheScope
 import graft.Tables
-import graft.functions.{FreqSketch, Hashing}
+import graft.functions.{FreqSketch, Hashing, QuantizedVec}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -180,14 +180,13 @@ object TextQueries {
       .join(broadcast(probes), Seq("shingle"))
       .filter(col("neighbor_id") =!= col("probe_id"))
       .crossJoin(broadcast(stats))
-      .withColumn("c_micro", floor(
-        ((col("__n").cast("double") / col("df")) *
+      .withColumn("c_micro", QuantizedVec.quantized(
+        (col("__n").cast("double") / col("df")) *
           ((col("tf").cast("double") * lit(Bm25K1Plus1)) /
             (col("tf").cast("double") + lit(Bm25K1) *
               (lit(Bm25OneMinusB) + lit(Bm25B) *
                 ((col("dl").cast("double") * col("__n").cast("double"))
-                  / col("__ts").cast("double")))))) * lit(1000000.0) + lit(0.5))
-        .cast("long"))
+                  / col("__ts").cast("double")))))))
     val scored = contrib.groupBy(col("probe_id"), col("neighbor_id"))
       .agg(count(lit(1)).as("n_shared"), sum(col("c_micro")).as("bm25_micro"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1237,7 +1236,7 @@ object TextQueries {
          |  SELECT fl.doc_id, t.lang, fl.fluency
          |  FROM fl JOIN t ON t.doc_id = fl.doc_id),
          |h AS (SELECT lang, fluency,
-         |        ${graft.functions.KmvSketch.hashSql("CAST(doc_id AS VARCHAR)")} AS hv
+         |        ${Hashing.hash60Sql("CAST(doc_id AS VARCHAR)")} AS hv
          |      FROM fll),
          |d2 AS (SELECT DISTINCT lang, hv, fluency FROM h),
          |r AS (

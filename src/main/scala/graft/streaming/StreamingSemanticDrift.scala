@@ -21,7 +21,7 @@ import graft.operators.{SimilarityQueries, SnapshotDiff}
   *     a per-row codegen'd [[QuantizedVec.qcosine]] — no explode, no
   *     aggregation, no streaming state at all on the scoring path;
   *   - change detection is a per-row quantized-array comparison (the
-  *     same floor(v·1e6 + 0.5) integers the batch's component join
+  *     same [[QuantizedVec.quantized]] integers the batch's component join
   *     sums), so stream and batch agree bit-for-bit on UPDATED vs
   *     NOT_MODIFIED, and the cosine is the identical integer dot over
   *     identical norms — the decision thresholds compare equal doubles;
@@ -38,10 +38,9 @@ import graft.operators.{SimilarityQueries, SnapshotDiff}
 object StreamingSemanticDrift {
 
   /** Quantized integer array of a vector column — the same per-element
-    * floor(v·scale + 0.5) the batch component explode applies. */
+    * [[QuantizedVec.quantized]] the batch component explode applies. */
   private def quantArrOf(colName: String): Column =
-    expr(s"""transform($colName, x ->
-      CAST(floor(CAST(x AS DOUBLE) * ${QuantizedVec.DefaultScale} + 0.5) AS BIGINT))""")
+    transform(col(colName), QuantizedVec.quantized(_))
 
   def runDriftOnce(spark: SparkSession, sfDir: String): DataFrame = {
     val before = graft.Tables.load(spark, sfDir, "embeddings")

@@ -13,7 +13,7 @@ class MultimodalSpec extends SparkTestBase {
     val bytes = Multimodal.pngBytes(640, 480, content)
     // spot-pin the big-endian encoding: width 640 = 0x00000280 at offset 16
     assert((bytes(16), bytes(17), bytes(18), bytes(19)) == (0x00.toByte, 0x00.toByte, 0x02.toByte, 0x80.toByte))
-    val f = Multimodal.decodeMedia(md, 42L, bytes)
+    val f = Multimodal.decodeMedia(42L, bytes)
     assert(f.format == "png" && f.width == 640 && f.height == 480)
     assert(f.n_bytes == 33 + content.length)
   }
@@ -22,7 +22,7 @@ class MultimodalSpec extends SparkTestBase {
     val bytes = Multimodal.bmpBytes(640, 480, content)
     // little-endian: width 640 = 80 02 00 00 at offset 18
     assert((bytes(18), bytes(19), bytes(20), bytes(21)) == (0x80.toByte, 0x02.toByte, 0x00.toByte, 0x00.toByte))
-    val f = Multimodal.decodeMedia(md, 43L, bytes)
+    val f = Multimodal.decodeMedia(43L, bytes)
     assert(f.format == "bmp" && f.width == 640 && f.height == 480)
     assert(f.n_bytes == 54 + content.length)
   }
@@ -58,39 +58,38 @@ class MultimodalSpec extends SparkTestBase {
 
   test("content fingerprint is md5 of the bytes after the header, either container") {
     val expected = md.digest(content).map("%02x".format(_)).mkString
-    assert(Multimodal.decodeMedia(md, 1L, Multimodal.pngBytes(20, 20, content)).fingerprint == expected)
-    assert(Multimodal.decodeMedia(md, 2L, Multimodal.bmpBytes(20, 20, content)).fingerprint == expected)
+    assert(Multimodal.decodeMedia(1L, Multimodal.pngBytes(20, 20, content)).fingerprint == expected)
+    assert(Multimodal.decodeMedia(2L, Multimodal.bmpBytes(20, 20, content)).fingerprint == expected)
   }
 
   test("corrupted PNG dims are rejected by the CRC check") {
     val bytes = Multimodal.pngBytes(640, 480, content)
     bytes(19) = 0x81.toByte // flip a width bit without fixing the CRC
-    val e = intercept[IllegalArgumentException](Multimodal.decodeMedia(md, 44L, bytes))
+    val e = intercept[IllegalArgumentException](Multimodal.decodeMedia(44L, bytes))
     assert(e.getMessage.contains("CRC"))
   }
 
   test("truncated or unknown payloads are rejected") {
-    intercept[IllegalArgumentException](Multimodal.decodeMedia(md, 45L, Array.fill[Byte](80)(0x7f)))
+    intercept[IllegalArgumentException](Multimodal.decodeMedia(45L, Array.fill[Byte](80)(0x7f)))
     intercept[IllegalArgumentException](
-      Multimodal.decodeMedia(md, 46L, Multimodal.pngBytes(20, 20, content).take(20)))
+      Multimodal.decodeMedia(46L, Multimodal.pngBytes(20, 20, content).take(20)))
   }
 
   test("JPEG decode walks markers to SOF0 and rejects corrupt segments") {
-    val md = java.security.MessageDigest.getInstance("MD5")
     val content = Array.fill[Byte](100)(7)
-    val f = Multimodal.decodeMedia(md, 2L, Multimodal.jpegBytes(496, 360, content))
+    val f = Multimodal.decodeMedia(2L, Multimodal.jpegBytes(496, 360, content))
     assert(f.format == "jpeg" && f.width == 496 && f.height == 360)
     assert(f.n_bytes == 39 + 100)
     val corrupt = Multimodal.jpegBytes(496, 360, content)
     corrupt(20) = 0x00 // break the SOF0 marker's FF prefix
     intercept[IllegalArgumentException] {
-      Multimodal.decodeMedia(md, 2L, corrupt)
+      Multimodal.decodeMedia(2L, corrupt)
     }
   }
 
   test("MP4 round-trip: box walk recovers brand, timescale/duration, 16.16 dims") {
     val bytes = Multimodal.mp4Bytes(1200, 90000, 1280, 720, content)
-    val f = Multimodal.decodeMp4(md, 7L, bytes)
+    val f = Multimodal.decodeMp4(7L, bytes)
     assert(f.major_brand == "isom")
     assert(f.timescale == 1200 && f.duration_ticks == 90000)
     assert(f.duration_ms == 90000L * 1000 / 1200)
@@ -102,9 +101,9 @@ class MultimodalSpec extends SparkTestBase {
   test("MP4 decode fails loudly on a corrupted box size or missing moov") {
     val bytes = Multimodal.mp4Bytes(600, 600, 320, 240, content)
     bytes(3) = 99.toByte // ftyp's declared size no longer matches the walk
-    intercept[IllegalArgumentException](Multimodal.decodeMp4(md, 8L, bytes))
+    intercept[IllegalArgumentException](Multimodal.decodeMp4(8L, bytes))
     // an mdat-only stream parses no moov → must be rejected, not defaulted
     val mdatOnly = Multimodal.mp4Bytes(600, 600, 320, 240, content).drop(24 + 216)
-    intercept[IllegalArgumentException](Multimodal.decodeMp4(md, 9L, mdatOnly))
+    intercept[IllegalArgumentException](Multimodal.decodeMp4(9L, mdatOnly))
   }
 }

@@ -23,7 +23,7 @@ class PqCodecSpec extends SparkTestBase {
     val comp = raw
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "v")))
       .select(col("vec_id"), col("d"),
-        floor(col("v").cast("double") * QuantizedVec.DefaultScale + 0.5)
+        floor(col("v").cast("double") * QuantizedVec.Scale + 0.5)
           .cast("long").as("qv"))
     val wC = Window.orderBy(col("__h"), col("vec_id"))
     val seedCodes = raw.select(col("vec_id"))
@@ -89,7 +89,7 @@ class PqCodecSpec extends SparkTestBase {
       val expr = PqCodec.PqEncode(
         org.apache.spark.sql.catalyst.expressions.Literal.create(
           emb, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)),
-        arr, QuantizedVec.DefaultScale)
+        arr)
       expr.eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
         .toLongArray().toSeq
     }
@@ -97,5 +97,41 @@ class PqCodecSpec extends SparkTestBase {
       .select(col("vec_id"), PqCodec.pqEncode(col("embedding"), arr).as("codes"))
       .orderBy("vec_id").collect().map(_.getSeq[Long](1).toSeq)
     assert(viaEval.toSeq === viaCodegen.toSeq)
+  }
+
+  test("an embedding shorter than Dim with a tied codebook: interpreted eval matches codegen") {
+    // 20 < Dim components: subspaces past the array's end have no
+    // dimensions (every distance 0, code 0), subspace 2 is cut short, and
+    // codewords 2k and 2k+1 are identical, so every argmin is a tie that
+    // must keep the even id on both paths.
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val arr = Array.tabulate(PqM, Pqk, Sub)((_, c, j) => (c / 2 - 4) * 100000L + j * 1000L)
+    val n = 20
+    val emb = Array.tabulate(n)(i => ((i * 37 % 11) - 5) / 10.0f)
+    val in = InternalRow(ArrayData.toArrayData(emb))
+    val child = BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = false)
+    for (kernel <- Seq(PqCodec.PqEncode(child, arr), PqCodec.PqDistTable(child, arr))) {
+      val viaEval = kernel.eval(in).asInstanceOf[ArrayData].toLongArray().toSeq
+      val viaCodegen = GenerateUnsafeProjection.generate(Seq(kernel)).apply(in)
+        .getArray(0).toLongArray().toSeq
+      assert(viaEval === viaCodegen, kernel.prettyName)
+      val emptyFrom = (n + Sub - 1) / Sub // first subspace with no component
+      kernel match {
+        case _: PqCodec.PqEncode =>
+          assert(viaEval.length == PqM && viaEval.forall(_ % 2 == 0), viaEval)
+          assert(viaEval.drop(emptyFrom).forall(_ == 0L), viaEval)
+        case _ =>
+          assert(viaEval.length == PqM * Pqk && viaEval.drop(emptyFrom * Pqk).forall(_ == 0L))
+      }
+    }
+    // the codebook compares by value, and the two kernels never compare equal
+    val copy = arr.map(_.map(_.clone))
+    assert(PqCodec.PqEncode(child, arr) == PqCodec.PqEncode(child, copy))
+    assert(PqCodec.PqEncode(child, arr).hashCode == PqCodec.PqEncode(child, copy).hashCode)
+    assert(PqCodec.PqEncode(child, arr) != PqCodec.PqDistTable(child, arr))
   }
 }

@@ -34,12 +34,14 @@ class QuantizedVecSpec extends SparkTestBase {
   }
 
   test("quantization is floor(x*scale + 0.5): half-ties round toward +inf") {
-    // scale=2: 1.25*2 = 2.5 (exact) → floor(3.0)=3; -1.25*2 = -2.5 →
-    // floor(-2.0) = -2. Distinguishes floor(x+0.5) from banker's rounding
-    // (2) and from round-half-away (-3).
-    val df = Seq((Seq(1.25f, -1.25f), Seq(1.0f, 1.0f))).toDF("a", "b")
-    val dot = df.select(QuantizedVec.qdot($"a", $"b", scale = 2.0)).as[Long].head()
-    assert(dot == 3L * 2L + -2L * 2L) // q(1.25)=3, q(-1.25)=-2, q(1.0)=2
+    // 2^-7 · 10^6 = 7812.5 exactly: floor(7813.0) = 7813 and floor(-7812.0)
+    // = -7812. Distinguishes floor(x+0.5) from banker's rounding (7812) and
+    // from round-half-away (-7813). q(1e-6) = 1, so a dot product against
+    // a one-hot e_i reads q(a_i).
+    val h = 0.0078125f
+    val df = Seq((Seq(h, -h), Seq(1e-6f, 0f), Seq(0f, 1e-6f))).toDF("a", "e0", "e1")
+    val r = df.select(QuantizedVec.qdot($"a", $"e0"), QuantizedVec.qdot($"a", $"e1")).head()
+    assert(r.getLong(0) == 7813L && r.getLong(1) == -7812L)
   }
 
   test("ann_filtered_topk equals a driver-side exact top-10 over the label % 3 = 0 corpus") {

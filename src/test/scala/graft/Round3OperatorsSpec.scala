@@ -172,15 +172,14 @@ class Round3OperatorsSpec extends SparkTestBase {
   }
 
   test("WAV decode parses synthesized headers and rejects corrupt ones") {
-    val md = java.security.MessageDigest.getInstance("MD5")
     val content = Array.fill[Byte](1001)(42)
-    val f = Multimodal.decodeWav(md, 7L, Multimodal.wavBytes(22050, 2, content))
+    val f = Multimodal.decodeWav(7L, Multimodal.wavBytes(22050, 2, content))
     assert(f.sample_rate == 22050 && f.n_channels == 2 && f.bits_per_sample == 16)
     assert(f.n_samples == 1001 / 4 && f.duration_ms == (1001 / 4) * 1000L / 22050)
     val corrupt = Multimodal.wavBytes(22050, 2, content)
     corrupt(28) = (corrupt(28) ^ 1).toByte // break the byte-rate field
     intercept[IllegalArgumentException] {
-      Multimodal.decodeWav(md, 7L, corrupt)
+      Multimodal.decodeWav(7L, corrupt)
     }
   }
 
