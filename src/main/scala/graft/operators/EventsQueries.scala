@@ -1106,11 +1106,11 @@ object EventsQueries {
         |  MAX(CASE WHEN rn = GREATEST(1, CAST(ceil(0.99 * n) AS BIGINT)) THEN value END) AS p99
         |FROM r GROUP BY event_type""".stripMargin,
     "events_seasonal_forecast" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT event_type,
         |         CAST(datediff('day', DATE '2024-01-01', ts) AS BIGINT) AS day,
         |         (epoch_us(ts) // 3600000000) % 24 AS hod,
-        |         CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS q
+        |         ${QuantizedVec.quantizeSql("value")} AS q
         |  FROM events),
         |cut AS (SELECT MAX(day) - 1 AS c FROM ev),
         |baseline AS (

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Every top-k rung of the ANN ladder is a composition of three stages:
   *   - a ROUTER picks (probe, neighbor) candidates for the probe batch
   *     ([[probeBatch]]): the flat broadcast-probe scan ([[flatScan]],
-  *     every corpus vector), label IVF ([[labelRouted]]), sampled IVF
+  *     every corpus vector), label IVF ([[labelIvfTopk]]), sampled IVF
   *     ([[sampledCandidates]]) or IMI ([[imiCandidates]]);
   *   - an optional SHORTLIST scorer culls them in a compressed domain:
   *     Matryoshka prefix cosine ([[prefixShortlist]]), sign-bit Hamming
@@ -275,11 +275,8 @@ object SimilarityQueries {
     val cand = a.join(b, Seq("band", "sig")).filter(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b")).distinct()
     val n = normed(corpus)
-    cand
-      .join(n.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"),
-        col("nsq").as("nsq_a")), "vec_a")
-      .join(n.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"),
-        col("nsq").as("nsq_b")), "vec_b")
+    cand.join(side(n, "vec_a", "emb_a", "nsq_a"), "vec_a")
+      .join(side(n, "vec_b", "emb_b", "nsq_b"), "vec_b")
       .select(col("vec_a"), col("vec_b"),
         QuantizedVec.qcosine(col("emb_a"), col("emb_b"),
           col("nsq_a"), col("nsq_b")).as("cos"))
@@ -288,15 +285,17 @@ object SimilarityQueries {
 
   // ---- shared stages ---------------------------------------------------
 
-  /** (vec_id, embedding, nsq): the corpus with its quantized squared norm. */
-  private def normed(df: DataFrame): DataFrame =
-    df.select(col("vec_id"), col("embedding"),
-      QuantizedVec.qnormsq(col("embedding")).as("nsq"))
+  /** (vec_id, embedding, nsq): the corpus with its quantized squared norm;
+    * `id` is the vec_id column (the hybrid corpus renames its `id`). */
+  private def normed(df: DataFrame, id: Column = col("vec_id")): DataFrame =
+    df.select(id, col("embedding"), QuantizedVec.qnormsq(col("embedding")).as("nsq"))
 
-  /** (probe_id, p_emb, p_nsq): a [[normed]] frame as the probe side. */
-  private def asProbes(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-      col("nsq").as("p_nsq"))
+  /** One side of a scored pair: the `keep` columns, then a [[normed]]
+    * frame's vec_id, embedding (or `e`) and nsq (or column `n`) under the
+    * side's `id`, `emb` and `nsq` names. */
+  private def side(df: DataFrame, id: String, emb: String, nsq: String,
+      e: Column = col("embedding"), n: String = "nsq", keep: Seq[Column] = Nil): DataFrame =
+    df.select(keep ++ Seq(col("vec_id").as(id), e.as(emb), col(n).as(nsq)): _*)
 
   /** Quantized per-dimension components: the `keys` columns, `d`, and the
     * quantized component named `q`. */
@@ -366,59 +365,45 @@ object SimilarityQueries {
     * `probesFrom` scored against every `corpus` vector. */
   private def flatCosineTopk(probesFrom: DataFrame, corpus: DataFrame, n: Long,
       k: Int, rank: String, extra: Column*): DataFrame =
-    topPer(flatScan(asProbes(probeBatch(probesFrom, n)), corpus,
+    topPer(flatScan(side(probeBatch(probesFrom, n), "probe_id", "p_emb", "p_nsq"), corpus,
         QuantizedVec.qcosine(col("p_emb"), col("embedding"),
           col("p_nsq"), col("nsq")).as("cos"), extra: _*),
       "probe_id", k, rank, keepRank = true)(col("cos").desc, col("neighbor_id"))
 
   /** Exact codegen rerank of (probe_id, neighbor_id) candidates + top-k. */
   private def topkRerank(cand: DataFrame, emb: DataFrame, k: Int = TopK): DataFrame =
-    topPer(scorePairs(cand, asProbes(emb),
-        emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"),
-          col("nsq").as("n_nsq")),
-        QuantizedVec.qcosine(col("p_emb"), col("n_emb"),
-          col("p_nsq"), col("n_nsq")).as("cos")),
+    topPer(scorePairs(cand, side(emb, "probe_id", "p_emb", "p_nsq"),
+        side(emb, "neighbor_id", "n_emb", "n_nsq"),
+        QuantizedVec.qcosine(col("p_emb"), col("n_emb"), col("p_nsq"), col("n_nsq")).as("cos")),
       "probe_id", k, "rank", keepRank = true)(col("cos").desc, col("neighbor_id"))
 
-  // ---- label IVF router (one definition; the inline query, the offline
-  // build, and the persisted-index query path all consume these, so the
-  // centroid arithmetic and tiebreaks cannot drift apart) ---------------
+  // ---- label IVF rung -----------------------------------------------
 
-  /** Per-label quantized-mean centroid table and its norms. */
-  private def centroids(qn: DataFrame): (DataFrame, DataFrame) = {
+  /** Label IVF, the oracle-scale branch of `ann_ivf_topk`: one centroid per
+    * `label` (the quantized per-dimension floor-mean, exact in both engines
+    * while sums stay < 2^53), each vector assigned to its nearest centroid,
+    * each probe routed to its [[NProbe]] nearest, then an exact rerank of
+    * ONLY those labels' members. Vector-vs-centroid cosines come from the
+    * components × the broadcast centroid table (one equi-join on d); every
+    * tiebreak is label-asc. */
+  private def labelIvfTopk(raw: DataFrame, n: Long): DataFrame = {
+    // quantized components feed centroid build, norms and scoring
+    val qn = components(raw, Seq("vec_id", "label"), "qv").transform(CacheScope.cached)
     val cq = qn.groupBy(col("label"), col("d")).agg(floorMean(col("qv")).as("qc"))
     val cnorms = cq.groupBy(col("label")).agg(sum(col("qc") * col("qc")).as("cnsq"))
-    (cq, cnorms)
-  }
-
-  private def vecNorms(comp: DataFrame): DataFrame =
-    comp.groupBy(col("vec_id")).agg(sum(col("qv") * col("qv")).as("nsq"))
-
-  /** Vector-vs-centroid cosine scores: components × the BROADCAST centroid
-    * table (tiny by construction) — one equi-join on d. */
-  private def centroidScores(comp: DataFrame, norms: DataFrame,
-      cq: DataFrame, cnorms: DataFrame): DataFrame =
-    comp.join(broadcast(cq), "d")
+    val ascore = qn.drop("label").join(broadcast(cq), "d")
       .groupBy(col("vec_id"), col("label")).agg(sum(col("qv") * col("qc")).as("dot"))
-      .join(norms, "vec_id").join(broadcast(cnorms), "label")
-      .select(col("vec_id"), col("label"),
-        (col("dot").cast("double") /
-          (sqrt(col("nsq").cast("double")) * sqrt(col("cnsq").cast("double")))).as("ccos"))
-
-  /** Top-k clusters per vector by centroid cosine (label-asc tiebreak). */
-  private def topClusters(ascore: DataFrame, k: Int): DataFrame =
-    topPer(ascore, "vec_id", k, "rn", keepRank = false)(col("ccos").desc, col("label"))
-      .select(col("vec_id"), col("label"))
-
-  /** Label-IVF rung tail: route each probe (`probeScores`, its centroid
-    * cosines) to its NProbe nearest labels, pull ONLY those labels'
-    * members through `assigned` (vec_id, label), exact-rerank. */
-  private def labelRouted(probeScores: DataFrame, assigned: DataFrame,
-      raw: DataFrame): DataFrame = {
-    val probeClusters = topClusters(probeScores, NProbe)
-      .select(col("vec_id").as("probe_id"), col("label"))
-    topkRerank(listCandidates(probeClusters,
-      assigned.select(col("vec_id").as("neighbor_id"), col("label")), "label"), normed(raw))
+      .join(qn.groupBy(col("vec_id")).agg(sum(col("qv") * col("qv")).as("nsq")), "vec_id")
+      .join(broadcast(cnorms), "label")
+      .select(col("vec_id"), col("label"), (col("dot").cast("double") /
+        (sqrt(col("nsq").cast("double")) * sqrt(col("cnsq").cast("double")))).as("ccos"))
+      .transform(CacheScope.cached) // assignment + probe routing: score once
+    // each vector's k nearest labels, as (id, label)
+    def nearest(scores: DataFrame, k: Int, id: String): DataFrame =
+      topPer(scores, "vec_id", k, "rn", keepRank = false)(col("ccos").desc, col("label"))
+        .select(col("vec_id").as(id), col("label"))
+    topkRerank(listCandidates(nearest(probeBatch(ascore, n), NProbe, "probe_id"),
+      nearest(ascore, 1, "neighbor_id"), "label"), normed(raw))
   }
 
   // ---- sampled-IVF and IMI routers ----------------------------------
@@ -474,9 +459,7 @@ object SimilarityQueries {
       DataFrame) = {
     val k = fineListCount(n)
     val s = math.max(1L, n / k)
-    val fine = emb.filter(col("vec_id") % s === 0)
-      .select(col("vec_id").as("f"), col("embedding").as("f_emb"),
-        col("nsq").as("f_nsq"))
+    val fine = side(emb.filter(col("vec_id") % s === 0), "f", "f_emb", "f_nsq")
     // each vector's fine list: the argmax over its (vector, fine) pairs
     def assignFine(pairs: DataFrame): DataFrame =
       argmax(pairs.select(col("vec_id"), col("f"),
@@ -505,9 +488,7 @@ object SimilarityQueries {
     }
     val c = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong)
     val cf = math.max(1L, k / c)
-    val coarse = emb.filter(col("vec_id") % (s * cf) === 0)
-      .select(col("vec_id").as("c"), col("embedding").as("c_emb"),
-        col("nsq").as("c_nsq"))
+    val coarse = side(emb.filter(col("vec_id") % (s * cf) === 0), "c", "c_emb", "c_nsq")
     // fine centroid → coarse cell: K × C cosines, both sides broadcast-tiny
     val f2c = argmax(fine.crossJoin(broadcast(coarse))
       .select(col("f"), col("c"),
@@ -548,8 +529,8 @@ object SimilarityQueries {
     * [[normed]], PINNED by the caller (six stages consume it). */
   private def sampledCandidates(emb: DataFrame, n: Long): DataFrame = {
     val (fineCells, _, assigned) = twoLevelRouting(emb, n, shareV2c = false)
-    listCandidates(probeLists(
-      asProbes(probeBatch(emb, n)).crossJoin(broadcast(fineCells)), n), assigned, "f")
+    listCandidates(probeLists(side(probeBatch(emb, n), "probe_id", "p_emb", "p_nsq")
+      .crossJoin(broadcast(fineCells)), n), assigned, "f")
   }
 
   /** Each probe's [[nprobeFor]] nearest fine lists (probe_id, f) from its
@@ -576,7 +557,8 @@ object SimilarityQueries {
         keepRank = false)(col("ccos").desc, col("c"))
       .select(col("vec_id").as("probe_id"), col("c"))
     listCandidates(probeLists(
-      pCells.join(broadcast(fineCells), "c").join(asProbes(emb), "probe_id"), n),
+      pCells.join(broadcast(fineCells), "c")
+        .join(side(emb, "probe_id", "p_emb", "p_nsq"), "probe_id"), n),
       assigned, "f")
   }
 
@@ -669,6 +651,13 @@ object SimilarityQueries {
     arr
   }
 
+  /** (id, m, code): each vector's nearest codeword `code` in every
+    * subspace `m` under the collected codebook `cb` (one per-row argmin). */
+  private def pqCodes(df: DataFrame, cb: Array[Array[Array[Long]]], id: Column,
+      m: String): DataFrame =
+    df.select(id, posexplode(PqCodec.pqEncode(col("embedding"), cb)).as(Seq(m, "code")))
+      .withColumn(m, col(m).cast("long"))
+
   /** PQ coding stages shared by the plain full-code ADC scan and the
     * IVFADC rung ([[ivfAdcTopk]]): the PROBE-batch ADC lookup tables and
     * the corpus encoding. One definition so the two paths' codes and ADC
@@ -704,18 +693,12 @@ object SimilarityQueries {
     val tstride = math.max(1L, n / (PqTrainPerCode * pqk))
     val train =
       if (tstride == 1L) raw else raw.filter(col("vec_id") % tstride === 0)
-    val assign0 = train
-      .select(col("vec_id"),
-        posexplode(PqCodec.pqEncode(col("embedding"), cb0Arr)).as(Seq("m", "code")))
-      .select(col("vec_id"), col("m").cast("long").as("m"), col("code"))
+    val assign0 = pqCodes(train, cb0Arr, col("vec_id"), "m")
     val cb = lloydUpdate(cb0, assign0.join(components(train, Seq("vec_id"), "qv"), "vec_id")
       .filter(expr(s"d div ${Dim / PqM}") === col("m")), "code")
     val cbArr = collectCodebook(cb, pqk)
     // the linear-in-n pass: narrow per-row argmin encode, no row explosion
-    val enc = raw
-      .select(col("vec_id").as("neighbor_id"),
-        posexplode(PqCodec.pqEncode(col("embedding"), cbArr)).as(Seq("em", "code")))
-      .select(col("neighbor_id"), col("em").cast("long").as("em"), col("code"))
+    val enc = pqCodes(raw, cbArr, col("vec_id").as("neighbor_id"), "em")
     // probe-batch ADC lookup tables: ~200 rows in, PqM × pqk entries each
     val dt = probeBatch(raw, n)
       .select(col("vec_id").as("probe_id"),
@@ -777,19 +760,16 @@ object SimilarityQueries {
       .join(broadcast(dt), Seq("probe_id", "em", "code")), raw, n)
   }
 
-  /** (vec_id, embedding, pnsq): the corpus with its [[MatPrefDim]]-dim
-    * prefix norm. */
-  private def prefixNormed(df: DataFrame): DataFrame =
-    df.select(col("vec_id"), col("embedding"),
-      QuantizedVec.qnormsq(slice(col("embedding"), 1, MatPrefDim)).as("pnsq"))
+  /** The [[MatPrefDim]]-dim prefix of `embedding`. [[QuantizedVec.QuantizedDot]]
+    * scores over the common prefix of its two arrays, so a probe-side
+    * prefix against the FULL neighbor vector computes the truncated dot
+    * with no second corpus copy. */
+  private def prefix: Column = slice(col("embedding"), 1, MatPrefDim)
 
-  /** (probe_id, p_pref, p_pnsq): a [[prefixNormed]] frame as the probe
-    * side. [[QuantizedVec.QuantizedDot]] scores over the common prefix of
-    * its two arrays, so the probe-side slice against the FULL neighbor
-    * vector computes the truncated dot with no second corpus copy. */
-  private def prefixProbes(pemb: DataFrame): DataFrame =
-    pemb.select(col("vec_id").as("probe_id"),
-      slice(col("embedding"), 1, MatPrefDim).as("p_pref"), col("pnsq").as("p_pnsq"))
+  /** (vec_id, embedding, pnsq): the corpus with its prefix norm; its probe
+    * side is (probe_id, p_pref, p_pnsq). */
+  private def prefixNormed(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), col("embedding"), QuantizedVec.qnormsq(prefix).as("pnsq"))
 
   /** Matryoshka shortlist: the [[MatShortlist]] best candidates per probe
     * by prefix cosine `pcos`. */
@@ -807,7 +787,8 @@ object SimilarityQueries {
     // keeps 50/probe per map partition BEFORE the shuffle). Carrying the
     // vectors through instead measured 35.6 s at sf10 — a 30×-wider
     // shuffle that made the "cheap" stage dearer than the exact scan.
-    val cand = prefixShortlist(flatScan(prefixProbes(probeBatch(pemb, n)), pemb,
+    val cand = prefixShortlist(flatScan(
+      side(probeBatch(pemb, n), "probe_id", "p_pref", "p_pnsq", prefix, "pnsq"), pemb,
       QuantizedVec.qcosine(col("p_pref"), col("embedding"),
         col("p_pnsq"), col("pnsq")).as("pcos")))
     // exact full-dim rerank fetches vectors ONLY for the tiny shortlist
@@ -832,11 +813,10 @@ object SimilarityQueries {
     // shared-frame discipline
     val emb = CacheScope.pinned(normed(raw))
     val pn = prefixNormed(emb)
-    val cand = prefixShortlist(scorePairs(sampledCandidates(emb, n), prefixProbes(pn),
-      pn.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("n_emb"), col("pnsq").as("n_pnsq")),
-      QuantizedVec.qcosine(col("p_pref"), col("n_emb"),
-        col("p_pnsq"), col("n_pnsq")).as("pcos")))
+    val cand = prefixShortlist(scorePairs(sampledCandidates(emb, n),
+      side(pn, "probe_id", "p_pref", "p_pnsq", prefix, "pnsq"),
+      side(pn, "neighbor_id", "n_emb", "n_pnsq", n = "pnsq"),
+      QuantizedVec.qcosine(col("p_pref"), col("n_emb"), col("p_pnsq"), col("n_pnsq")).as("pcos")))
     topkRerank(cand, emb)
   }
 
@@ -848,14 +828,12 @@ object SimilarityQueries {
     * float's sign (`x >= 0`): both engines compare the identical parquet
     * float32 against zero, so signatures are bit-for-bit reproducible
     * with no quantization step. */
-  private def bqSignatures(df: DataFrame): DataFrame =
-    df.select(col("vec_id"),
-      expr("aggregate(sequence(0, 31), 0L, (acc, i) -> acc + " +
-        "(CASE WHEN element_at(embedding, i + 1) >= 0 " +
-        "THEN shiftleft(1L, i) ELSE 0L END))").as("sig_lo"),
-      expr("aggregate(sequence(32, 63), 0L, (acc, i) -> acc + " +
-        "(CASE WHEN element_at(embedding, i + 1) >= 0 " +
-        "THEN shiftleft(1L, i - 32) ELSE 0L END))").as("sig_hi"))
+  private def bqSignatures(df: DataFrame): DataFrame = {
+    def half(lo: Int, bit: String): Column = expr(s"aggregate(sequence($lo, ${lo + 31}), " +
+      "0L, (acc, i) -> acc + (CASE WHEN element_at(embedding, i + 1) >= 0 " +
+      s"THEN shiftleft(1L, $bit) ELSE 0L END))")
+    df.select(col("vec_id"), half(0, "i").as("sig_lo"), half(32, "i - 32").as("sig_hi"))
+  }
 
   /** Binary-quantization ANN (the vector-database "BQ + rescore" serving
     * path; sign-projection similarity per Charikar, STOC 2002): the
@@ -912,19 +890,6 @@ object SimilarityQueries {
 
   // ---- hybrid retrieval (shared legs; plain + indexed rungs) ----------
 
-  /** The joined documents ⋈ embeddings corpus both hybrid branches
-    * retrieve over; callers wrap in CacheScope. */
-  private def hybridCorpus(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").as("id"), col("text"))
-      .join(Tables.load(spark, sfDir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding")), "id")
-
-  /** The hybrid corpus as a [[normed]] frame (id → vec_id). */
-  private def hybridNormed(hybrid: DataFrame): DataFrame =
-    hybrid.select(col("id").as("vec_id"), col("embedding"),
-      QuantizedVec.qnormsq(col("embedding")).as("nsq"))
-
   /** Lexical retrieval leg: df-capped inverted index (tokens with df ∈
     * [2,50] — bounded fan-out), shared-token counts, top-20 per probe.
     * Identical in both hybrid branches — per-probe work is already
@@ -967,7 +932,7 @@ object SimilarityQueries {
     * and every tiebreak are the shared [[rrfFuse]]. */
   def hybridIndexedRrf(hybrid: DataFrame, n: Long): DataFrame = {
     val trank = lexicalLeg(hybrid, probeStride(n))
-    val emb = CacheScope.pinned(hybridNormed(hybrid))
+    val emb = CacheScope.pinned(normed(hybrid, col("id").as("vec_id")))
     val vrank = topkRerank(sampledCandidates(emb, n), emb, 20)
       .select(col("probe_id"), col("neighbor_id"), col("rank").as("vec_rank"))
     rrfFuse(trank, vrank)
@@ -977,7 +942,7 @@ object SimilarityQueries {
     * scores every (probe, vector) pair with the broadcast-probe codegen
     * cosine. */
   private def hybridPlainRrf(hybrid: DataFrame, n: Long): DataFrame = {
-    val nemb = hybridNormed(hybrid)
+    val nemb = normed(hybrid, col("id").as("vec_id"))
     val vrank = flatCosineTopk(nemb, nemb, n, 20, "vec_rank")
       .select(col("probe_id"), col("neighbor_id"), col("vec_rank"))
     rrfFuse(lexicalLeg(hybrid, probeStride(n)), vrank)
@@ -1006,10 +971,8 @@ object SimilarityQueries {
     val assigned = twoLevelRouting(emb, n, shareV2c = false)._3
       .select(col("neighbor_id").as("vec_id"), col("f").as("cluster"))
     val m = assigned.join(emb, "vec_id")
-    val pairs = m.select(col("cluster"), col("vec_id").as("vec_a"),
-        col("embedding").as("emb_a"), col("nsq").as("nsq_a"))
-      .join(m.select(col("cluster"), col("vec_id").as("vec_b"),
-        col("embedding").as("emb_b"), col("nsq").as("nsq_b")), Seq("cluster"))
+    val pairs = side(m, "vec_a", "emb_a", "nsq_a", keep = Seq(col("cluster")))
+      .join(side(m, "vec_b", "emb_b", "nsq_b", keep = Seq(col("cluster"))), Seq("cluster"))
       .filter(col("vec_a") < col("vec_b"))
       .select(col("cluster"), col("vec_a"), col("vec_b"),
         QuantizedVec.qcosine(col("emb_a"), col("emb_b"),
@@ -1152,37 +1115,26 @@ object SimilarityQueries {
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_members"), sum(col("dist2")).as("wcss"))
 
-  /** Offline IVF index build: write the tiny centroid table (+norms) and
-    * the per-vector cluster assignment to `dir` as parquet — the index
-    * lifecycle a production vector store uses (build once offline; every
-    * later query routes against the centroid table and touches only its
-    * NProbe clusters' vectors). Exactly the shared stages the inline
-    * `ann_ivf_topk` runs; [[queryIvfIndex]] reproduces its results from
-    * the persisted index, pinned by spec. */
-  def buildIvfIndex(spark: SparkSession, sfDir: String, dir: String): Unit = {
-    CacheScope.persisting(
-        components(Tables.load(spark, sfDir, "embeddings"), Seq("vec_id", "label"), "qv")) { qn =>
-      val (cq, cnorms) = centroids(qn)
-      val assigned = topClusters(centroidScores(qn.drop("label"), vecNorms(qn), cq, cnorms), 1)
-      cq.write.mode("overwrite").parquet(s"$dir/centroids")
-      cnorms.write.mode("overwrite").parquet(s"$dir/centroid_norms")
-      assigned.write.mode("overwrite").parquet(s"$dir/assignment")
-    }
+  /** A registry entry over the `embeddings` table and its row count. */
+  private def overEmbeddings(f: (DataFrame, Long) => DataFrame): Q = (spark, sfDir) =>
+    f(Tables.load(spark, sfDir, "embeddings"), Tables.countOf(spark, sfDir, "embeddings"))
+
+  /** A registry entry over [[vecCorpusSql]]'s near-dup corpus and its count. */
+  private def overVecCorpus(f: (DataFrame, Long) => DataFrame): Q = (spark, sfDir) => {
+    Tables.load(spark, sfDir, "embeddings").createOrReplaceTempView("embeddings")
+    val corpus = spark.sql(vecCorpusSql)
+    f(corpus, CacheScope.sessionCount("veccorpus", sfDir, spark)(corpus.count()))
   }
 
-  /** Query path against a persisted IVF index: route each probe to its
-    * NProbe nearest centroids (probe components × the broadcast centroid
-    * table — tiny), pull ONLY those clusters' vectors through the
-    * assignment table, exact-rerank with the codegen dot. The corpus scan
-    * cost is NProbe/K of the lake; the index build never re-runs. */
-  def queryIvfIndex(spark: SparkSession, sfDir: String, dir: String): DataFrame = {
-    val raw = Tables.load(spark, sfDir, "embeddings")
-    val cq = spark.read.parquet(s"$dir/centroids")
-    val cnorms = spark.read.parquet(s"$dir/centroid_norms")
-    val pqn = components(probeBatch(raw, Tables.countOf(spark, sfDir, "embeddings")),
-      Seq("vec_id"), "qv")
-    labelRouted(centroidScores(pqn, vecNorms(pqn), cq, cnorms),
-      spark.read.parquet(s"$dir/assignment"), raw)
+  /** A registry entry over the hybrid corpus (documents ⋈ embeddings on
+    * id, cached: both retrieval legs scan it) and its count. */
+  private def overHybrid(f: (DataFrame, Long) => DataFrame): Q = (spark, sfDir) => {
+    val hybrid = Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id").as("id"), col("text"))
+      .join(Tables.load(spark, sfDir, "embeddings")
+        .select(col("vec_id").as("id"), col("embedding")), "id")
+      .transform(CacheScope.cached)
+    f(hybrid, CacheScope.sessionCount("hybrid", sfDir, spark)(hybrid.count()))
   }
 
   val queries: Map[String, Q] = Map(
@@ -1200,9 +1152,7 @@ object SimilarityQueries {
         .agg(count(lit(1)).as("n"), sum(col("q")).as("sum_q"))
         .withColumn("centroid_q",
           expr("(sum_q + 1000000000L * n) div n - 1000000000L"))),
-    "ann_cosine_topk" -> ((spark, sfDir) =>
-      exactCosineTopk(Tables.load(spark, sfDir, "embeddings"),
-        Tables.countOf(spark, sfDir, "embeddings"))),
+    "ann_cosine_topk" -> overEmbeddings(exactCosineTopk),
     // Recall@k as a first-class, continuously-gated query: the exact
     // baseline and the routed sampled-IVF path run in ONE plan, joined on
     // (probe, neighbor), and every probe reports its hit count. This turns
@@ -1213,9 +1163,7 @@ object SimilarityQueries {
     // RecallProbe. Cost = exact + IVF; the exact side is probe-batch ×
     // corpus (the same bill ann_cosine_topk already pays), so the report
     // stays feasible wherever the baseline itself is.
-    "ann_recall_report" -> ((spark, sfDir) => {
-      val raw = Tables.load(spark, sfDir, "embeddings")
-      val n = Tables.countOf(spark, sfDir, "embeddings")
+    "ann_recall_report" -> overEmbeddings { (raw, n) =>
       val exact = exactCosineTopk(raw, n).select(col("probe_id"), col("neighbor_id"))
       val approx = ivfSampledTopk(raw, n)
         .select(col("probe_id"), col("neighbor_id"), lit(1L).as("__hit"))
@@ -1224,20 +1172,15 @@ object SimilarityQueries {
         .agg(count(lit(1)).as("n_exact"),
           sum(coalesce(col("__hit"), lit(0L))).as("n_hit"))
         .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
-    }),
+    },
     // Filtered vector search (the vector-database "metadata predicate +
     // ANN" shape): the label predicate restricts the corpus BEFORE any
     // scoring, so it pushes into the parquet scan and the scored candidate
     // set shrinks with the filter's selectivity. Scoring/top-k are the
     // exact baseline's broadcast-probe + codegen QuantizedDot.
-    "ann_filtered_topk" -> ((spark, sfDir) => {
-      val raw = Tables.load(spark, sfDir, "embeddings")
-      val corpusF = raw.filter(col("label") % 3 === 0)
-        .select(col("vec_id"), col("label"), col("embedding"),
-          QuantizedVec.qnormsq(col("embedding")).as("nsq"))
-      flatCosineTopk(normed(raw), corpusF, Tables.countOf(spark, sfDir, "embeddings"),
-        TopK, "rank", col("label"))
-    }),
+    "ann_filtered_topk" -> overEmbeddings((raw, n) => flatCosineTopk(normed(raw),
+      raw.filter(col("label") % 3 === 0).select(col("vec_id"), col("label"), col("embedding"),
+        QuantizedVec.qnormsq(col("embedding")).as("nsq")), n, TopK, "rank", col("label"))),
     // IVF-style ANN: the 100 TB path next to the brute-force baseline.
     // Index build = one deterministic centroid per `label` cluster (the
     // quantized per-dimension mean — in production this is an offline
@@ -1258,23 +1201,8 @@ object SimilarityQueries {
     // pinning candidates/probe at NProbe × IvfListTarget — constant — so
     // the total returns to linear. Oracle scales (≤ sf1) keep the label
     // path bit-exact.
-    "ann_ivf_topk" -> ((spark, sfDir) => {
-      val raw = Tables.load(spark, sfDir, "embeddings")
-      val nVecs = Tables.countOf(spark, sfDir, "embeddings")
-      bySize(nVecs)(ivfSampledTopk(raw, nVecs), {
-        // quantized components feed centroid build, assignment, and routing
-        val qn = components(raw, Seq("vec_id", "label"), "qv").transform(CacheScope.cached)
-        // --- index build: per-label quantized mean, exact in both engines
-        // (sum < 2^53 so the double division is correctly rounded IEEE)
-        val (cq, cnorms) = centroids(qn)
-        // --- assignment scores: nearest centroids via the d equi-join
-        // (relational index build — the per-query hot path never does this)
-        val ascore = centroidScores(qn.drop("label"), vecNorms(qn), cq, cnorms)
-          .transform(CacheScope.cached) // consumed twice (assignment + probe routing): score once
-        // --- candidate gen (label equi-join) + exact codegen rerank
-        labelRouted(probeBatch(ascore, nVecs), topClusters(ascore, 1), raw)
-      })
-    }),
+    "ann_ivf_topk" -> overEmbeddings((raw, n) =>
+      bySize(n)(ivfSampledTopk(raw, n), labelIvfTopk(raw, n))),
     // The sampled-codebook IVF rung EXERCISED DIRECTLY at oracle scales:
     // same ivfSampledTopk the auto-selected ann_ivf_topk serves with above
     // IvfLabelPathMax rows, called unconditionally so the branch that
@@ -1283,9 +1211,7 @@ object SimilarityQueries {
     // coarse-then-fine assignment, flat probe routing and the exact
     // rerank with parameters computed in SQL from COUNT(*), so it stays
     // in lockstep at EVERY scale, not just where the constants coincide.
-    "ann_ivf_sampled" -> ((spark, sfDir) =>
-      ivfSampledTopk(Tables.load(spark, sfDir, "embeddings"),
-        Tables.countOf(spark, sfDir, "embeddings"))),
+    "ann_ivf_sampled" -> overEmbeddings(ivfSampledTopk),
     // MATRYOSHKA two-stage retrieval (Kusupati et al., NeurIPS 2022 — the
     // adaptive-dimension serving pattern): the corpus-sized stage scores
     // only the first [[MatPrefDim]] of [[Dim]] dims (4× fewer multiplies
@@ -1311,36 +1237,27 @@ object SimilarityQueries {
     // per-probe work constant in n. Oracle scales (≤ sf1) keep this plain
     // path bit-exact; the rung carries its own oracle row
     // (ann_matryoshka_ivf) and recall pin (IvfRecallSpec).
-    "ann_matryoshka_topk" -> ((spark, sfDir) => {
-      val raw = Tables.load(spark, sfDir, "embeddings")
-      val nVecs = Tables.countOf(spark, sfDir, "embeddings")
-      bySize(nVecs)(matryoshkaIvfTopk(raw, nVecs), matryoshkaPlainTopk(raw, nVecs))
-    }),
+    "ann_matryoshka_topk" -> overEmbeddings((raw, n) =>
+      bySize(n)(matryoshkaIvfTopk(raw, n), matryoshkaPlainTopk(raw, n))),
     // Binary-quantization rung — see [[bqTopk]]: 1 sign bit per dim (32×
     // memory compression, XOR+popcount candidate scoring), Hamming
     // shortlist, exact rerank. The fourth memory/compute point on the
     // quantization ladder: raw (exact) / 32-dim prefix (matryoshka) /
     // 8-byte PQ codes (ADC table lookups) / 8-byte sign bits (popcount).
-    "ann_bq_topk" -> ((spark, sfDir) =>
-      bqTopk(Tables.load(spark, sfDir, "embeddings"),
-        Tables.countOf(spark, sfDir, "embeddings"))),
+    "ann_bq_topk" -> overEmbeddings(bqTopk),
     // The Matryoshka-over-IVF rung exercised directly at oracle scales
     // (same pattern as ann_ivf_sampled / ann_ivfadc_topk): the branch that
     // serves ann_matryoshka_topk past IvfLabelPathMax gets its own
     // hash-checked CORRECTNESS row, with routing parameters computed in
     // SQL from COUNT(*).
-    "ann_matryoshka_ivf" -> ((spark, sfDir) =>
-      matryoshkaIvfTopk(Tables.load(spark, sfDir, "embeddings"),
-        Tables.countOf(spark, sfDir, "embeddings"))),
+    "ann_matryoshka_ivf" -> overEmbeddings(matryoshkaIvfTopk),
     // The IMI two-level router exercised directly at oracle scales (same
     // pattern as ann_ivf_sampled): the rung the routing-cost ladder
     // documents ABOVE the flat sampled codebook — coarse-then-fine
     // assignment cuts the router's n × K cosines to n × (√K + K/√K),
     // pre-building the 10⁷-vector decade. Geometry (K, √K cells, strides,
     // probe batch) all derive from COUNT(*) in the oracle too.
-    "ann_imi_topk" -> ((spark, sfDir) =>
-      imiTopk(Tables.load(spark, sfDir, "embeddings"),
-        Tables.countOf(spark, sfDir, "embeddings"))),
+    "ann_imi_topk" -> overEmbeddings(imiTopk),
     // Product-quantization ANN — the MEMORY-COMPRESSED scan (FAISS
     // IndexPQ's ADC search): the corpus is encoded once to PqM=8 codes
     // per vector (64-dim float → 8 bytes, 32×; 4-bit packing → 64×), and a
@@ -1364,18 +1281,12 @@ object SimilarityQueries {
     // constant in n. Oracle scales (≤ sf1) keep this full-scan path
     // bit-exact; the rung itself carries its own oracle row
     // (ann_ivfadc_topk) and recall pin (PqRecallSpec).
-    "ann_pq_topk" -> ((spark, sfDir) => {
-      val raw = Tables.load(spark, sfDir, "embeddings")
-      val n = Tables.countOf(spark, sfDir, "embeddings")
-      bySize(n)(ivfAdcTopk(raw, n), pqPlainTopk(raw, n))
-    }),
+    "ann_pq_topk" -> overEmbeddings((raw, n) => bySize(n)(ivfAdcTopk(raw, n), pqPlainTopk(raw, n))),
     // The IVFADC rung exercised directly at oracle scales (same pattern as
     // ann_ivf_sampled): the branch that serves ann_pq_topk past
     // IvfLabelPathMax gets its own hash-checked CORRECTNESS row, with
     // routing/coding parameters computed in SQL from COUNT(*).
-    "ann_ivfadc_topk" -> ((spark, sfDir) =>
-      ivfAdcTopk(Tables.load(spark, sfDir, "embeddings"),
-        Tables.countOf(spark, sfDir, "embeddings"))),
+    "ann_ivfadc_topk" -> overEmbeddings(ivfAdcTopk),
     // K-MEANS proper — the offline clustering stage the IVF queries model
     // with the pre-labeled `label` column (see ann_ivf_topk's scaladoc):
     // deterministic hash-seeded Lloyd iterations in exact scaled-integer
@@ -1403,18 +1314,11 @@ object SimilarityQueries {
     // routes through the sampled-IVF lists. Oracle scales keep this exact
     // branch bit-for-bit; the rung carries its own oracle row
     // (ann_hybrid_indexed) and overlap pin (IvfRecallSpec).
-    "ann_hybrid_rrf" -> ((spark, sfDir) => {
-      val hybrid = hybridCorpus(spark, sfDir)
-        .transform(CacheScope.cached) // both retrieval legs scan it
-      val n = CacheScope.sessionCount("hybrid", sfDir, spark)(hybrid.count())
-      bySize(n)(hybridIndexedRrf(hybrid, n), hybridPlainRrf(hybrid, n))
-    }),
+    "ann_hybrid_rrf" -> overHybrid((hybrid, n) =>
+      bySize(n)(hybridIndexedRrf(hybrid, n), hybridPlainRrf(hybrid, n))),
     // The indexed-hybrid rung exercised directly at oracle scales (same
     // pattern as ann_ivf_sampled / ann_ivfadc_topk).
-    "ann_hybrid_indexed" -> ((spark, sfDir) => {
-      val hybrid = hybridCorpus(spark, sfDir).transform(CacheScope.cached)
-      hybridIndexedRrf(hybrid, CacheScope.sessionCount("hybrid", sfDir, spark)(hybrid.count()))
-    }),
+    "ann_hybrid_indexed" -> overHybrid(hybridIndexedRrf),
     // Sign-LSH near-dup pairs — [[lshNearDupPairs]]. SCALE RUNG
     // (auto-selected, the IvfLabelPathMax ladder pattern): oracle scales
     // keep the single 16-bit band bit-for-bit; past the threshold the
@@ -1424,12 +1328,8 @@ object SimilarityQueries {
     // equi-joined, never all-pairs) for ~0.97 expected recall.
     // LshBandedRecallSpec pins both geometries' recall on a perturbed
     // fixture where banding actually engages.
-    "ann_lsh_near_dup" -> ((spark, sfDir) => {
-      Tables.load(spark, sfDir, "embeddings").createOrReplaceTempView("embeddings")
-      val corpus = spark.sql(vecCorpusSql)
-      val n = CacheScope.sessionCount("veccorpus", sfDir, spark)(corpus.count())
-      lshNearDupPairs(corpus, bySize(n)(LshBands, 1))
-    }),
+    "ann_lsh_near_dup" -> overVecCorpus((corpus, n) =>
+      lshNearDupPairs(corpus, bySize(n)(LshBands, 1))),
     // Semantic drift diff over the embeddings table — see [[semanticDrift]].
     "diff_semantic_drift" -> ((spark, sfDir) =>
       semanticDrift(Tables.load(spark, sfDir, "embeddings")
@@ -1441,12 +1341,7 @@ object SimilarityQueries {
       graft.streaming.StreamingSemanticDrift.runDriftOnce(spark, sfDir)),
     // SemDeDup over the planted near-dup corpus (embeddings itself has no
     // duplicates) — cluster-bounded semantic dedup, see [[semanticDupes]].
-    "dedup_semantic" -> ((spark, sfDir) => {
-      Tables.load(spark, sfDir, "embeddings").createOrReplaceTempView("embeddings")
-      val corpus = spark.sql(vecCorpusSql)
-      semanticDupes(corpus,
-        CacheScope.sessionCount("veccorpus", sfDir, spark)(corpus.count()))
-    })
+    "dedup_semantic" -> overVecCorpus(semanticDupes)
   )
 
   // ---- oracle SQL ----------------------------------------------------

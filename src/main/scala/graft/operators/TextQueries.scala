@@ -197,76 +197,36 @@ object TextQueries {
         col("bm25_micro"), col("rank"))
   }
 
-  /** PERSISTED BM25 SERVING INDEX — the retrieval twin of the IVF index
-    * lifecycle ([[SimilarityQueries.buildIvfIndex]]) and of
+  /** PERSISTED BM25 SERVING INDEX — the retrieval twin of
     * `dedup_incremental`'s standing LSH index. Layout under `dir`:
     *   - `postings/` — `(doc_id, dl, shingle, tf)`, one row per
-    *     (doc, shingle); appended per delta batch.
-    *   - `df/` — per-segment partial `(shingle, df)` counts.
-    *   - `stats/` — per-segment partial `(ts, n_docs)` totals.
-    * `df` and `stats` are APPEND-ONLY partial segments merged by
-    * aggregation at read time (the HLL relational-merge pattern): an
-    * append writes only the delta's own counts — O(batch) work, standing
-    * segments untouched — and the merged df/avgdl therefore always
-    * reflect the whole corpus; [[compactBm25Index]] periodically folds
-    * segments back to one so read-side merge stays bounded by segment
-    * count, not append count. */
-  def buildBm25Index(spark: SparkSession, sfDir: String, dir: String): Unit =
-    buildBm25IndexFrom(Tables.load(spark, sfDir, "documents"), dir)
-
-  /** Build the index from an arbitrary base-corpus frame (the spec's
-    * split-build path; the production shape where the base corpus is a
-    * curated view rather than a whole fixture table). */
-  def buildBm25IndexFrom(docs: DataFrame, dir: String): Unit =
-    writeBm25Segment(docs, dir, first = true)
-
-  /** Absorb a delta batch: tokenize ONLY the new docs, append their
-    * postings and partial df/stats segments. Nothing rescans the
-    * standing corpus. */
-  def appendToBm25Index(spark: SparkSession, dir: String, newDocs: DataFrame): Unit =
-    writeBm25Segment(newDocs, dir, first = false)
-
-  private def writeBm25Segment(docs: DataFrame, dir: String, first: Boolean): Unit = {
-    val mode = if (first) "overwrite" else "append"
+    *     (doc, shingle);
+    *   - `df/` — `(shingle, df)` over the whole corpus;
+    *   - `stats/` — the one `(__ts, __n)` row (total terms, documents),
+    *     named as [[bm25TopkFrom]] reads it.
+    * The postings frame feeds all three writes, so the corpus is tokenized
+    * once. */
+  def buildBm25Index(spark: SparkSession, sfDir: String, dir: String): Unit = {
+    val docs = Tables.load(spark, sfDir, "documents")
     CacheScope.persisting(bm25Postings(docs)) { post =>
-      post.write.mode(mode).parquet(s"$dir/postings")
+      post.write.mode("overwrite").parquet(s"$dir/postings")
       post.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        .write.mode(mode).parquet(s"$dir/df")
+        .write.mode("overwrite").parquet(s"$dir/df")
       post.select(col("doc_id"), col("dl")).dropDuplicates("doc_id")
-        .agg(coalesce(sum(col("dl")), lit(0L)).as("ts"))
-        .crossJoin(docs.agg(count(lit(1)).as("n_docs")))
-        .write.mode(mode).parquet(s"$dir/stats")
+        .agg(coalesce(sum(col("dl")), lit(0L)).as("__ts"))
+        .crossJoin(docs.agg(count(lit(1)).as("__n")))
+        .write.mode("overwrite").parquet(s"$dir/stats")
     }
   }
 
-  /** Fold the append-only df/stats segments back to one segment each
-    * (postings are already per-doc rows — nothing to fold). Read-side
-    * results are unchanged: the fold is the same aggregation the reader
-    * runs. */
-  def compactBm25Index(spark: SparkSession, dir: String): Unit = {
-    def fold(sub: String, agg: DataFrame => DataFrame): Unit = {
-      val tmp = s"$dir/__compact_$sub"
-      agg(spark.read.parquet(s"$dir/$sub")).write.mode("overwrite").parquet(tmp)
-      val dst = new java.io.File(s"$dir/$sub")
-      org.apache.commons.io.FileUtils.deleteDirectory(dst)
-      require(new java.io.File(tmp).renameTo(dst), s"compaction rename failed: $sub")
-    }
-    fold("df", d => d.groupBy(col("shingle")).agg(sum(col("df")).as("df")))
-    fold("stats", d => d.agg(sum(col("ts")).as("ts"), sum(col("n_docs")).as("n_docs")))
-  }
-
-  /** Serve top-k retrieval from the standing index: merge the df/stats
-    * segments (vocabulary-keyed aggregation; never corpus-sized rework),
-    * band df to [2, [[Bm25DfCap]]], score with [[bm25TopkFrom]]. The one
-    * driver-side read is the merged 1-row stats (bounded control plane —
-    * the probe stride needs N). */
+  /** Serve top-k retrieval from the standing index: band df to
+    * [2, [[Bm25DfCap]]], score with [[bm25TopkFrom]]. The one driver-side
+    * read is the 1-row stats (bounded control plane — the probe stride
+    * needs N). */
   def queryBm25Index(spark: SparkSession, dir: String): DataFrame = {
     val post = spark.read.parquet(s"$dir/postings")
-    val dfTab = spark.read.parquet(s"$dir/df")
-      .groupBy(col("shingle")).agg(sum(col("df")).as("df"))
-      .filter(col("df").between(2, Bm25DfCap))
+    val dfTab = spark.read.parquet(s"$dir/df").filter(col("df").between(2, Bm25DfCap))
     val stats = spark.read.parquet(s"$dir/stats")
-      .agg(sum(col("ts")).as("__ts"), sum(col("n_docs")).as("__n"))
     val nDocs = stats.select(col("__n")).first().getLong(0)
     val idx = post.join(dfTab, "shingle").transform(CacheScope.cached)
     bm25TopkFrom(idx, stats, SimilarityQueries.probeStride(nDocs))
@@ -355,13 +315,11 @@ object TextQueries {
       bm25TopkFrom(idx, stats, stride)
     }),
     // PERSISTED BM25 SERVING: identical scores to the inline build on the
-    // same corpus (the `ann_ivf_topk` index-parity rule — the oracle row
-    // is the same SQL), but the query path reads a STANDING parquet index
-    // (postings + append-only df/stats segments, built once per session
-    // into a temp dir dropped at releaseSession) and never re-tokenizes
-    // the corpus: the plan's only FileScans are index files. Deltas
-    // absorb in O(batch) via [[appendToBm25Index]]; `Bm25Spec` pins
-    // build+append == full-rebuild equality and the no-rescan plan shape.
+    // same corpus (the oracle row is the same SQL), but the query path
+    // reads a STANDING parquet index (postings + df + stats, built once
+    // per session into a temp dir dropped at releaseSession) and never
+    // re-tokenizes the corpus: the plan's only FileScans are index files.
+    // `Bm25Spec` pins inline parity and the no-rescan plan shape.
     "text_bm25_indexed" -> ((spark, sfDir) =>
       queryBm25Index(spark, bm25IndexFor(spark, sfDir))),
     "text_stats" -> ((spark, sfDir) => {
@@ -794,13 +752,6 @@ object TextQueries {
     })
   )
 
-  /** The BPE merge-loop trainer (shared by `text_bpe_merges` and the
-    * encode stage): [[BpeMerges]] relational rounds over the distinct-word
-    * symbol table. Returns (merge table, final symbol table) — the latter
-    * is each word's trained segmentation. */
-  def bpeTrain(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
-    bpeTrain(spark, sfDir, sampleOneIn = 1L)
-
   /** The trained tokenizer as a SESSION-SCOPED STANDING ARTIFACT — the
     * standing-index tier ([[CacheScope.sessionPinnedAll]]; same precedent as
     * the dedup survivor frame, the fitted quality-classifier weights and
@@ -824,112 +775,99 @@ object TextQueries {
     (merges, syms)
   }
 
-  /** [[bpeTrain]] with the 100 TB sampling knob: `sampleOneIn` > 1 trains
-    * on a deterministic hash-threshold sample of the DISTINCT-WORD frame
-    * (hash64(word) mod k == 0 — the engine's standard sampler, the
-    * domain-caps/priority-sample routing), keeping each surviving word's
-    * full corpus frequency. This is how production subword trainers run at
-    * corpus scale anyway — merge statistics come from a word-frequency
-    * sample, not every distinct string — so the knob turns the trainer's
-    * cost from O(distinct words) to O(distinct words / k) per round
-    * without touching the round structure. Default 1 = full corpus, the
-    * oracle-replayed geometry (the unrolled-CTE oracle pins it
-    * bit-for-bit); the sampled geometry's determinism is pinned by
-    * `BpeSampledSpec`. */
-  def bpeTrain(spark: SparkSession, sfDir: String,
-      sampleOneIn: Long): (DataFrame, DataFrame) = {
-      val wfAll = Tables.load(spark, sfDir, "documents")
-        .select(explode(Hashing.tokens(col("text"))).as("word"))
-        .filter(length(col("word")) >= 2)
-        .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      val wf = CacheScope.pinned(
-        if (sampleOneIn > 1L)
-          wfAll.filter(pmod(Hashing.hash64(col("word")), lit(sampleOneIn)) === 0L)
-        else wfAll)
-      // the symbol table CARRIES each word's corpus frequency (one long
-      // column) so the per-round pair count is a plain map-side-combinable
-      // aggregation — the old shape re-joined wf every round (8 shuffled
-      // joins per training run, guide §2.4 "remove shuffles outright")
-      var syms = CacheScope.pinned(wf
-        .select(col("word"), col("freq"), posexplode(
-          expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-          .as(Seq("p0", "sym")))
-        .select(col("word"), col("freq"),
-          (col("p0") + 1).cast("long").as("pos"), col("sym")))
-      var merges: DataFrame = null
-      val wPos = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("word")).orderBy(col("pos"))
-      // running frame over the same (word, pos) spec: consecutive Window
-      // operators on one partitioning/order share a single exchange+sort
-      val wRun = wPos.rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-      var exhausted = false
-      for (step <- 1 to BpeMerges if !exhausted) {
-        val wn = syms.withColumn("nxt", lead(col("sym"), 1).over(wPos))
-        val cnts = wn.filter(col("nxt").isNotNull)
-          .groupBy(col("sym"), col("nxt"))
-          .agg(sum(col("freq")).as("cnt"))
-        // arg-max pair, ONE row: -cnt asc = cnt desc, then (l, r) asc —
-        // the deterministic tiebreak the oracle's ORDER BY replays.
-        // Collected EAGERLY (it's one tiny row): a degenerate corpus can
-        // exhaust adjacent pairs before BpeMerges rounds, where min over
-        // the empty frame is a NULL struct but the oracle's
-        // ORDER BY … LIMIT 1 yields NO row — the trainer must stop, not
-        // emit all-NULL merge rows.
-        val bestRow = cnts
-          .agg(min(struct((-col("cnt")).as("negcnt"),
-            col("sym").as("l"), col("nxt").as("r"))).as("__b"))
-          .head()
-        if (bestRow.isNullAt(0)) exhausted = true
-        else {
-          val b = bestRow.getStruct(0)
-          val (l, r, cnt) = (b.getString(1), b.getString(2), -b.getLong(0))
-          val stepRow = wf.sparkSession.range(1).select(
-            lit(step).cast("long").as("step"),
-            lit(l).as("left_sym"), lit(r).as("right_sym"),
-            lit(l + r).as("merged"), lit(cnt).as("pair_count"))
-          merges = if (merges == null) stepRow else merges.unionByName(stepRow)
-          // greedy left-to-right merge: candidate starts, consecutive runs,
-          // even offsets survive; winners emit l||r, their successors drop,
-          // positions renumber. All of it is window arithmetic over the ONE
-          // (word, pos) spec — a candidate's run starts right after the
-          // last non-candidate position (`__brk`, a running max), so
-          // "even offset within the run" is (pos - __brk - 1) % 2 == 0 and
-          // "successor of a winner" is lag(__valid). The old shape computed
-          // run starts on a filtered frame and joined the winner list back
-          // twice — 2 extra window exchanges + 2 shuffled joins per round
-          // for the same rows (guide §2.4); equality is oracle-gated by the
-          // unrolled-CTE replay of every round.
-          val isCand = coalesce(col("sym") === lit(l) && col("nxt") === lit(r),
-            lit(false))
-          val next = wn
-            .withColumn("__f", isCand)
-            .withColumn("__brk",
-              max(when(!col("__f"), col("pos"))).over(wRun))
-            .withColumn("__valid", col("__f") &&
-              ((col("pos") - coalesce(col("__brk"), lit(0L)) - 1) % 2 === 0))
-            .withColumn("__drop",
-              coalesce(lag(col("__valid"), 1).over(wPos), lit(false)))
-            .filter(!col("__drop"))
-            .select(col("word"), col("freq"), col("pos"),
-              when(col("__valid"), lit(l + r)).otherwise(col("sym")).as("sym"))
-            .withColumn("pos", row_number().over(wPos).cast("long"))
-            .select(col("word"), col("freq"), col("pos"), col("sym"))
-          // round N's table is dead once round N+1's pin materializes —
-          // release it NOW so trainer residency is bounded at 2 symbol
-          // tables, not BpeMerges of them piling up until releaseAll
-          val prev = syms
-          syms = CacheScope.pinned(next)
-          CacheScope.releasePin(prev)
-        }
+  /** The BPE merge-loop trainer (shared by `text_bpe_merges` and the
+    * encode stage): [[BpeMerges]] relational rounds over the distinct-word
+    * symbol table. Returns (merge table, final symbol table) — the latter
+    * is each word's trained segmentation. */
+  def bpeTrain(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    val wf = CacheScope.pinned(Tables.load(spark, sfDir, "documents")
+      .select(explode(Hashing.tokens(col("text"))).as("word"))
+      .filter(length(col("word")) >= 2)
+      .groupBy(col("word")).agg(count(lit(1)).as("freq")))
+    // the symbol table CARRIES each word's corpus frequency (one long
+    // column) so the per-round pair count is a plain map-side-combinable
+    // aggregation — the old shape re-joined wf every round (8 shuffled
+    // joins per training run, guide §2.4 "remove shuffles outright")
+    var syms = CacheScope.pinned(wf
+      .select(col("word"), col("freq"), posexplode(
+        expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
+        .as(Seq("p0", "sym")))
+      .select(col("word"), col("freq"),
+        (col("p0") + 1).cast("long").as("pos"), col("sym")))
+    var merges: DataFrame = null
+    val wPos = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("word")).orderBy(col("pos"))
+    // running frame over the same (word, pos) spec: consecutive Window
+    // operators on one partitioning/order share a single exchange+sort
+    val wRun = wPos.rowsBetween(
+      org.apache.spark.sql.expressions.Window.unboundedPreceding,
+      org.apache.spark.sql.expressions.Window.currentRow)
+    var exhausted = false
+    for (step <- 1 to BpeMerges if !exhausted) {
+      val wn = syms.withColumn("nxt", lead(col("sym"), 1).over(wPos))
+      val cnts = wn.filter(col("nxt").isNotNull)
+        .groupBy(col("sym"), col("nxt"))
+        .agg(sum(col("freq")).as("cnt"))
+      // arg-max pair, ONE row: -cnt asc = cnt desc, then (l, r) asc —
+      // the deterministic tiebreak the oracle's ORDER BY replays.
+      // Collected EAGERLY (it's one tiny row): a degenerate corpus can
+      // exhaust adjacent pairs before BpeMerges rounds, where min over
+      // the empty frame is a NULL struct but the oracle's
+      // ORDER BY … LIMIT 1 yields NO row — the trainer must stop, not
+      // emit all-NULL merge rows.
+      val bestRow = cnts
+        .agg(min(struct((-col("cnt")).as("negcnt"),
+          col("sym").as("l"), col("nxt").as("r"))).as("__b"))
+        .head()
+      if (bestRow.isNullAt(0)) exhausted = true
+      else {
+        val b = bestRow.getStruct(0)
+        val (l, r, cnt) = (b.getString(1), b.getString(2), -b.getLong(0))
+        val stepRow = wf.sparkSession.range(1).select(
+          lit(step).cast("long").as("step"),
+          lit(l).as("left_sym"), lit(r).as("right_sym"),
+          lit(l + r).as("merged"), lit(cnt).as("pair_count"))
+        merges = if (merges == null) stepRow else merges.unionByName(stepRow)
+        // greedy left-to-right merge: candidate starts, consecutive runs,
+        // even offsets survive; winners emit l||r, their successors drop,
+        // positions renumber. All of it is window arithmetic over the ONE
+        // (word, pos) spec — a candidate's run starts right after the
+        // last non-candidate position (`__brk`, a running max), so
+        // "even offset within the run" is (pos - __brk - 1) % 2 == 0 and
+        // "successor of a winner" is lag(__valid). The old shape computed
+        // run starts on a filtered frame and joined the winner list back
+        // twice — 2 extra window exchanges + 2 shuffled joins per round
+        // for the same rows (guide §2.4); equality is oracle-gated by the
+        // unrolled-CTE replay of every round.
+        val isCand = coalesce(col("sym") === lit(l) && col("nxt") === lit(r),
+          lit(false))
+        val next = wn
+          .withColumn("__f", isCand)
+          .withColumn("__brk",
+            max(when(!col("__f"), col("pos"))).over(wRun))
+          .withColumn("__valid", col("__f") &&
+            ((col("pos") - coalesce(col("__brk"), lit(0L)) - 1) % 2 === 0))
+          .withColumn("__drop",
+            coalesce(lag(col("__valid"), 1).over(wPos), lit(false)))
+          .filter(!col("__drop"))
+          .select(col("word"), col("freq"), col("pos"),
+            when(col("__valid"), lit(l + r)).otherwise(col("sym")).as("sym"))
+          .withColumn("pos", row_number().over(wPos).cast("long"))
+          .select(col("word"), col("freq"), col("pos"), col("sym"))
+        // round N's table is dead once round N+1's pin materializes —
+        // release it NOW so trainer residency is bounded at 2 symbol
+        // tables, not BpeMerges of them piling up until releaseAll
+        val prev = syms
+        syms = CacheScope.pinned(next)
+        CacheScope.releasePin(prev)
       }
-      val mergesOut =
-        if (merges != null) merges
-        else wf.sparkSession.range(0).select(
-          lit(0L).as("step"), lit("").as("left_sym"), lit("").as("right_sym"),
-          lit("").as("merged"), lit(0L).as("pair_count"))
-      (mergesOut, syms)
+    }
+    val mergesOut =
+      if (merges != null) merges
+      else wf.sparkSession.range(0).select(
+        lit(0L).as("step"), lit("").as("left_sym"), lit("").as("right_sym"),
+        lit("").as("merged"), lit(0L).as("pair_count"))
+    (mergesOut, syms)
   }
 
   /** Shared by text_vocab and text_encode_ids: min-count-2 vocabulary
@@ -1059,6 +997,15 @@ object TextQueries {
        |  FROM syms$BpeMerges GROUP BY word)
        |SELECT word, n_syms, decoded, (decoded = word) AS roundtrip FROM dec""".stripMargin
 
+  /** DuckDB twin of one BM25 term contribution before quantization. */
+  private val bm25TermSql: String =
+    s"""((CAST(g.n AS DOUBLE) / ix.df) *
+       |      ((CAST(ix.tf AS DOUBLE) * $Bm25K1Plus1) /
+       |       (CAST(ix.tf AS DOUBLE) + $Bm25K1 *
+       |        ($Bm25OneMinusB + $Bm25B *
+       |         ((CAST(ix.dl AS DOUBLE) * CAST(g.n AS DOUBLE))
+       |           / CAST(g.ts AS DOUBLE))))))""".stripMargin
+
   private val bm25TopkSqlStr: String =
     s"""WITH t AS (SELECT doc_id, $toksE AS toks FROM documents),
          |d AS (SELECT doc_id, greatest(len(toks) - 2, 0) AS dl, toks FROM t),
@@ -1074,12 +1021,7 @@ object TextQueries {
          |        FROM tf JOIN kept USING (shingle)),
          |c AS (
          |  SELECT pr.doc_id AS probe_id, ix.doc_id AS neighbor_id,
-         |    CAST(floor(((CAST(g.n AS DOUBLE) / ix.df) *
-         |      ((CAST(ix.tf AS DOUBLE) * $Bm25K1Plus1) /
-         |       (CAST(ix.tf AS DOUBLE) + $Bm25K1 *
-         |        ($Bm25OneMinusB + $Bm25B *
-         |         ((CAST(ix.dl AS DOUBLE) * CAST(g.n AS DOUBLE))
-         |           / CAST(g.ts AS DOUBLE)))))) * 1000000.0 + 0.5) AS BIGINT)
+         |    ${QuantizedVec.quantizeSql(bm25TermSql)}
          |      AS c_micro
          |  FROM idx pr JOIN idx ix USING (shingle), g
          |  WHERE pr.doc_id % greatest(100, g.n // 200) = 0

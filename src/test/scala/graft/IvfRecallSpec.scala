@@ -8,27 +8,6 @@ import org.apache.spark.sql.functions._
   * recall against the exact top-k must stay useful. */
 class IvfRecallSpec extends SparkTestBase {
 
-  test("persisted IVF index: query path reproduces the inline ann_ivf_topk exactly") {
-    import graft.operators.SimilarityQueries
-    val dir = tempDir("graft_ivf_idx")
-    SimilarityQueries.buildIvfIndex(spark, Sf, dir)
-    val fromIndex = SimilarityQueries.queryIvfIndex(spark, Sf, dir)
-      .collect().map(_.toSeq).toSet
-    val inline = SparkEntry.queries("ann_ivf_topk")(spark, Sf)
-      .collect().map(_.toSeq).toSet
-    assert(fromIndex == inline && fromIndex.nonEmpty)
-  }
-
-  test("buildIvfIndex releases its component cache when a write fails") {
-    spark.catalog.clearCache()
-    // a regular file where the index directory should be: the first write throws
-    val file = java.io.File.createTempFile("graft_ivf_file", ".bin")
-    try {
-      intercept[Exception](SimilarityQueries.buildIvfIndex(spark, Sf, file.getPath))
-      assert(spark.sharedState.cacheManager.isEmpty, "component frame left cached")
-    } finally file.delete()
-  }
-
   test("ann_ivf_topk plans with no broadcast nested-loop join") {
     val df = SimilarityQueries.queries("ann_ivf_topk")(spark, Sf)
     val plan = df.queryExecution.executedPlan.toString

@@ -50,4 +50,16 @@ class RuleTwinsSpec extends SparkTestBase {
       assert(dot.eval(in) == jvm(i) && generated == jvm(i), s"$et e_$i")
     }
   }
+
+  test("no file under src/main writes the 10⁶ quantization by hand") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // QuantizedVec spells the rule through Scale; everything else calls it
+    val byHand = """\*\s*(1000000(\.0)?|1e6)\s*\+\s*0\.5""".r
+    val hits = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(Files.isRegularFile(_))
+      .filter(p => byHand.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString).toList.sorted
+    assert(hits.isEmpty, hits)
+  }
 }
