@@ -27,6 +27,13 @@ import java.time.LocalDateTime
   * terminal. This is also what [[DbDiffAppSpec]] pins.
   */
 object DbDiffMain {
+  /** The per-iteration memory line, the reference's heap printout
+    * (`main.go:303-308`): driver heap in use and the heap's ceiling, in MiB
+    * rounded down. In use is read as it stands, without a forced GC, so it
+    * includes garbage not yet collected. */
+  def heapLine(usedBytes: Long, maxBytes: Long): String =
+    s"[MEMORY] Driver heap in use = ${usedBytes >> 20} MiB of ${maxBytes >> 20} MiB"
+
   def main(args: Array[String]): Unit = {
     var conf = DbDiffConfig.DefaultConfigPath
     var outName = ReportSink.DefaultOutputName
@@ -108,6 +115,8 @@ object DbDiffMain {
       println(s"[ResultOutput] See ${r.reportPath.getOrElse("(no report)")} " +
         s"— ${r.totalChanged} changed keys across ${r.changedKeys.count(_._2 > 0)} tables")
       if (open) r.reportPath.foreach(ReportSink.openInViewer(_))
+      val rt = Runtime.getRuntime
+      println(heapLine(rt.totalMemory - rt.freeMemory, rt.maxMemory))
     }
 
     // every exit (`q`/`exit`, end of stdin, end of the demo) releases the

@@ -95,6 +95,13 @@ class DbDiffAppSpec extends SparkTestBase {
     }
   }
 
+  test("heap line: in-use and ceiling in whole MiB, rounded down") {
+    assert(DbDiffMain.heapLine(0L, 1L << 30) ==
+      "[MEMORY] Driver heap in use = 0 MiB of 1024 MiB")
+    assert(DbDiffMain.heapLine((90L << 20) + (1L << 20) - 1, 3L << 30) ==
+      "[MEMORY] Driver heap in use = 90 MiB of 3072 MiB")
+  }
+
   test("S9: timestamped default filename; explicit name passes through") {
     val t = LocalDateTime.of(2026, 8, 12, 13, 4, 5)
     assert(ReportSink.generateOutFilename(ReportSink.DefaultOutputName, t)

@@ -41,6 +41,9 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the engine's Tungsten page size, so specs run the memory layout
+      // every main runs (Spark would derive one from heap ÷ cores)
+      .config("spark.buffer.pageSize", GraftSession.PageSizeBytes.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
